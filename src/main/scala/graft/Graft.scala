@@ -23,6 +23,12 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions default to cluster parallelism when the caller
   *    does not size them: the 200-partition Spark default under-splits
   *    large clusters and over-splits local runs.
+  *  - codegen cache of 2000 entries: Spark keeps compiled whole-stage
+  *    classes in a 100-entry LRU, and one refresh cycle (ingest, dbt
+  *    models, dbt tests) alone generates about 170 classes, each
+  *    20–35 ms of Janino time, so at the default every warm cycle
+  *    recompiled all of them. A static conf: it only takes effect when
+  *    set before the session's first code generation.
   */
 object Graft {
 
@@ -33,7 +39,8 @@ object Graft {
     val base = Map(
       "spark.sql.extensions" -> classOf[GraftExtensions].getName,
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.adaptive.enabled" -> "true")
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "2000")
     shufflePartitions.fold(base)(n =>
       base + ("spark.sql.shuffle.partitions" -> n.toString))
   }

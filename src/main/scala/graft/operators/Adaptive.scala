@@ -69,29 +69,39 @@ object Adaptive {
     * own SQL-execution bookkeeping against the loop's tiny stages.
     * The caller's active session is re-bound explicitly, and a body
     * failure is logged immediately from the thread, so it is visible
-    * even on a caller path that dies before invoking the thunk.
+    * even on a caller path that dies before invoking the thunk. Any
+    * throwable, fatal ones included, completes the result, so the
+    * thunk rethrows it instead of waiting forever; a fatal error is
+    * also rethrown on the overlap thread.
     */
   def overlap[T](body: => T): () => T = {
     import scala.concurrent.{Await, Promise}
-    import scala.util.Try
+    import scala.util.{Failure, Success, Try}
+    import scala.util.control.NonFatal
     val active = org.apache.spark.sql.SparkSession.getActiveSession
     if (active.exists(_.conf.get("spark.graft.overlap", "true")
         == "false")) {
       val v = body
       () => v
     } else {
-      val p = Promise[T]()
+      // The promise carries the Try itself: a Failure completing the
+      // promise directly would box a fatal error, and Try(body) would
+      // not catch one at all, leaving the caller waiting forever.
+      val p = Promise[Try[T]]()
       val t = new Thread(() => {
         active.foreach(
           org.apache.spark.sql.SparkSession.setActiveSession)
-        val r = Try(body)
-        r.failed.foreach(e => System.err.println(
-          s"graft.Adaptive.overlap body failed: $e"))
-        p.complete(r)
+        try p.success(Success(body))
+        catch {
+          case e: Throwable =>
+            System.err.println(s"graft.Adaptive.overlap body failed: $e")
+            p.success(Failure(e))
+            if (!NonFatal(e)) throw e
+        }
       }, s"graft-overlap-${java.util.UUID.randomUUID.toString.take(8)}")
       t.setDaemon(true)
       t.start()
-      () => Await.result(p.future, scala.concurrent.duration.Duration.Inf)
+      () => Await.result(p.future, scala.concurrent.duration.Duration.Inf).get
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** dbt data-test engine (SURVEY.md §2.10): the four declarative test
@@ -14,7 +14,7 @@ object DataTests {
   sealed trait TestSpec { def kind: String }
   /** T1 — column must have no NULLs. */
   final case class NotNull(column: String) extends TestSpec { val kind = "not_null" }
-  /** T2 — column values must be unique. */
+  /** T2 — non-NULL column values must be unique (dbt: NULLs pass). */
   final case class Unique(column: String) extends TestSpec { val kind = "unique" }
   /** T3 — non-NULL values restricted to `values` (dbt: NULLs pass). */
   final case class AcceptedValues(column: String, values: Seq[String])
@@ -52,7 +52,8 @@ object DataTests {
       case NotNull(c) =>
         df.filter(col(c).isNull)
       case Unique(c) =>
-        df.groupBy(col(c)).agg(count(lit(1)).as("n"))
+        df.filter(col(c).isNotNull)
+          .groupBy(col(c)).agg(count(lit(1)).as("n"))
           .filter(col("n") > 1)
       case AcceptedValues(c, vals) =>
         df.filter(col(c).isNotNull && !col(c).isin(vals: _*))
@@ -66,23 +67,92 @@ object DataTests {
   def run(tests: Seq[TestCase], resolve: String => DataFrame): Seq[TestResult] =
     tests.map(tc => TestResult(tc.name, compile(tc, resolve).count()))
 
-  /** Same results as [[run]] in ONE Spark job: every compiled test is
-    * reduced to a (name, failing-count) row and the rows unioned into a
-    * single plan. dbt submits each test as its own query; an engine that
-    * owns the executor can evaluate all independent test subtrees in one
-    * action — one scheduling round-trip instead of N, shared scans where
-    * tables repeat, parallel stage execution across tests.
+  /** Same results as [[run]], in one scan per distinct resolved table
+    * and one keyed aggregation: 3 Spark jobs (two shuffle stages and the
+    * collect) whatever the number of tests, where a union of per-test
+    * aggregates costs a subtree, and generated code, per test.
+    *
+    * Each table's scan emits, through one `explode(array(when(...)))`,
+    * a `(test, key, n, parent)` row for every test row that can fail:
+    *  - not_null / accepted_values: a violating row, key NULL, n = 1;
+    *  - unique: a non-NULL key, n = 1;
+    *  - relationships: a non-NULL child key with n = 1 from the child
+    *    table's scan, and a non-NULL parent key with n = 0 and
+    *    parent = true from the parent table's scan.
+    * Grouping by `(test, key)` with `sum(n)` and `max(parent)` leaves
+    * one row per key; the failing count of a test is then the sum of
+    * `n` (not_null, accepted_values), the number of keys with `n > 1`
+    * (unique), or the sum of `n` over keys with no parent row
+    * (relationships: each orphan child row counts, as in the
+    * anti-join). Keys are compared as strings; a relationships test
+    * must join columns of one type.
     */
   def runBatched(
       tests: Seq[TestCase], resolve: String => DataFrame): Seq[TestResult] = {
-    val counts = tests.map { tc =>
-      compile(tc, resolve)
-        .agg(count(lit(1)).as("failing"))
-        .select(lit(tc.name).as("name"), col("failing"))
+    val failing = batchedPlan(tests, resolve).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    tests.zipWithIndex.map { case (tc, i) =>
+      TestResult(tc.name, failing.getOrElse(i, 0L))
     }
-    val byName = counts.reduce(_ unionByName _).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    tests.map(tc => TestResult(tc.name, byName(tc.name)))
+  }
+
+  /** The plan behind [[runBatched]]: `(test, failing)` rows, `test`
+    * being the index in `tests`; a test with no failing row may be
+    * absent.
+    */
+  private[quality] def batchedPlan(
+      tests: Seq[TestCase], resolve: String => DataFrame): DataFrame = {
+    val tables = tests.flatMap { tc =>
+      tc.table +: (tc.spec match {
+        case r: Relationships => Seq(r.toTable)
+        case _ => Nil
+      })
+    }.distinct
+    val frames = tables.map(t => t -> resolve(t)).toMap
+    def typeOf(t: String, c: String) =
+      frames(t).select(col(c)).schema.head.dataType
+
+    val noKey = lit(null).cast("string")
+    def emit(i: Int, key: Column, n: Long, parent: Boolean): Column =
+      struct(lit(i).as("test"), key.cast("string").as("key"),
+        lit(n).as("n"), lit(parent).as("parent"))
+    val emits: Seq[(String, Column)] = tests.zipWithIndex.flatMap {
+      case (tc, i) => tc.spec match {
+        case NotNull(c) =>
+          Seq(tc.table -> when(col(c).isNull, emit(i, noKey, 1, false)))
+        case AcceptedValues(c, vals) =>
+          Seq(tc.table -> when(col(c).isNotNull && !col(c).isin(vals: _*),
+            emit(i, noKey, 1, false)))
+        case Unique(c) =>
+          Seq(tc.table -> when(col(c).isNotNull, emit(i, col(c), 1, false)))
+        case Relationships(c, toTable, toColumn) =>
+          val (ct, pt) = (typeOf(tc.table, c), typeOf(toTable, toColumn))
+          require(ct == pt,
+            s"${tc.name}: ${tc.table}.$c is $ct but $toTable.$toColumn is $pt")
+          Seq(tc.table -> when(col(c).isNotNull, emit(i, col(c), 1, false)),
+            toTable -> when(col(toColumn).isNotNull,
+              emit(i, col(toColumn), 0, true)))
+      }
+    }
+    val scans = tables.map { t =>
+      frames(t)
+        .select(explode(array(emits.collect { case (`t`, e) => e }: _*)).as("e"))
+        .filter(col("e").isNotNull)
+        .select("e.*")
+    }
+
+    def ofKind(kind: String) = col("test").isin(
+      tests.zipWithIndex.collect { case (tc, i) if tc.spec.kind == kind => i }: _*)
+    val isUnique = ofKind("unique")
+    val isRel = ofKind("relationships")
+    scans.reduce(_ unionByName _)
+      .groupBy("test", "key")
+      .agg(sum("n").as("n"), max("parent").as("parent"))
+      .select(col("test"),
+        when(isUnique, when(col("n") > 1, 1L).otherwise(0L))
+          .when(isRel, when(col("parent"), 0L).otherwise(col("n")))
+          .otherwise(col("n")).as("failing"))
+      .groupBy("test").agg(sum("failing").as("failing"))
   }
 
   /** Compile one test INCREMENTALLY: validate only the rows matched by
@@ -119,7 +189,8 @@ object DataTests {
         df.filter(touched).filter(col(c).isNotNull)
           .join(resolve(toTable).select(col(toColumn).as(c)), Seq(c), "left_anti")
       case Unique(c) =>
-        val batchKeys = df.filter(touched).select(col(c)).distinct()
+        val batchKeys = df.filter(touched).filter(col(c).isNotNull)
+          .select(col(c)).distinct()
         df.select(col(c))
           .join(batchKeys, Seq(c), "left_semi")
           .groupBy(col(c)).agg(count(lit(1)).as("n"))
@@ -127,8 +198,9 @@ object DataTests {
     }
   }
 
-  /** [[runBatched]] over [[compileIncremental]]: the per-ingest-tick
-    * suite, one Spark action, scans pruned to the batch's partitions.
+  /** The per-ingest-tick suite over [[compileIncremental]]: every
+    * test reduced to a (name, failing-count) row and the rows unioned
+    * into one Spark action, scans pruned to the batch's partitions.
     */
   def runIncremental(
       tests: Seq[TestCase], resolve: String => DataFrame,

@@ -302,8 +302,8 @@ object PipelineQueries {
   private def notNullSql(t: String, c: String) =
     s"(SELECT count(*) FROM $t WHERE $c IS NULL)"
   private def uniqueSql(t: String, c: String) =
-    s"(SELECT count(*) FROM (SELECT 1 AS one FROM $t GROUP BY $c" +
-      s" HAVING count(*) > 1))"
+    s"(SELECT count(*) FROM (SELECT 1 AS one FROM $t WHERE $c IS NOT NULL" +
+      s" GROUP BY $c HAVING count(*) > 1))"
   private def relSql(ct: String, fk: String, pt: String, pk: String) =
     s"(SELECT count(*) FROM $ct c WHERE c.$fk IS NOT NULL AND NOT EXISTS" +
       s" (SELECT 1 FROM $pt p WHERE p.$pk = c.$fk))"

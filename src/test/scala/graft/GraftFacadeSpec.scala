@@ -13,8 +13,12 @@ class GraftFacadeSpec extends SparkSpecBase {
     assert(c("spark.sql.shuffle.partitions") === "8")
     // unsized: defer to cluster parallelism, don't pin Spark's 200
     assert(!Graft.confs(None).contains("spark.sql.shuffle.partitions"))
+    // static: the shared session is built through Graft.builder, so the
+    // sized codegen cache is the one this JVM's code generator uses
+    assert(c("spark.sql.codegen.cache.maxEntries") === "2000")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "2000")
     // The named extensions class is EXACTLY the one this suite's shared
-    // session loaded (SparkSpecBase sets the same key) — so the SQL
+    // session loaded (SparkSpecBase builds through Graft.builder) — so the SQL
     // surface check below exercises the class the facade wires in.
     assert(c("spark.sql.extensions") === "graft.GraftExtensions")
     assert(spark.conf.get("spark.sql.extensions") === c("spark.sql.extensions"))

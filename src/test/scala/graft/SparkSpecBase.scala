@@ -7,7 +7,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the suite (one JVM-wide session; specs
-  * must use unique database/view names).
+  * must use unique database/view names), built through [[Graft.builder]]
+  * so the suite runs under the library's conf contract, static confs
+  * included.
   */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
@@ -17,13 +19,10 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpecBase {
   lazy val session: SparkSession = {
     val wh = Files.createTempDirectory("graft-wh").toString
-    val s = SparkSession.builder()
+    val s = Graft.builder(Some(4))
       .master("local[4]")
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

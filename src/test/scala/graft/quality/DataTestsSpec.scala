@@ -30,6 +30,15 @@ class DataTestsSpec extends SparkSpecBase {
     assert(r.head.failingRows === 2) // keys a and b
   }
 
+  test("unique: NULL keys pass, as dbt filters them before grouping") {
+    import spark.implicits._
+    val df = Seq(None, None, Some("a"), Some("a"), Some("b")).toDF("id")
+    val tests = Seq(TestCase("t", Unique("id")))
+    val m = Map("t" -> df)
+    assert(DataTests.run(tests, resolve(m)).head.failingRows === 1) // a only
+    assert(DataTests.runBatched(tests, resolve(m)).head.failingRows === 1)
+  }
+
   test("accepted_values: NULLs pass (dbt semantics), others must match") {
     import spark.implicits._
     val df = Seq(Some("Male"), Some("Female"), None, Some("Other"))
@@ -51,7 +60,7 @@ class DataTestsSpec extends SparkSpecBase {
     assert(r.head.failingRows === 1) // p9 only
   }
 
-  test("runBatched (one job) returns the same results as per-test run") {
+  test("runBatched returns the same results as per-test run") {
     import spark.implicits._
     val child = Seq(("a", Some("p1")), ("b", Some("p9")), ("b", None),
       (null.asInstanceOf[String], Some("p1"))).toDF("id", "fk")
@@ -66,6 +75,52 @@ class DataTestsSpec extends SparkSpecBase {
     val batched = DataTests.runBatched(tests, resolve(m))
     assert(batched === sequential)
     assert(batched.map(_.failingRows) === Seq(1L, 1L, 0L, 1L))
+  }
+
+  test("fused runBatched equals per-test run on every violation kind, " +
+    "one scan per table and at most two shuffles") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // AQE off so the executed plan is the whole static plan
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    import s.implicits._
+    val child = Seq[(String, String, String, String)](
+      ("a", "p1", "p2", "Male"),
+      ("b", "p9", "p1", "Female"), //   orphan fk p9
+      ("b", "p9", null, "Other"), //    dup id b, the same orphan again
+      (null, "p1", "p7", "Male"), //    NULL id, orphan fk2 p7
+      (null, null, "p2", null) //       second NULL id, NULL fk passes
+    ).toDF("id", "fk", "fk2", "gender")
+    // the parent carries its own tests and NULL keys, which match no FK
+    val parent = Seq[String]("p1", "p2", "p2", null, null).toDF("pid")
+    val other = Seq[Option[Int]](Some(1), None).toDF("n")
+    val tests = Seq(
+      TestCase("c", NotNull("id")),
+      TestCase("c", Unique("id")),
+      TestCase("c", AcceptedValues("gender", Seq("Male", "Female"))),
+      TestCase("c", Relationships("fk", "p", "pid")),
+      TestCase("c", Relationships("fk2", "p", "pid")),
+      TestCase("p", NotNull("pid")),
+      TestCase("p", Unique("pid")),
+      TestCase("o", NotNull("n")))
+    val m = Map("c" -> child, "p" -> parent, "o" -> other)
+    val sequential = DataTests.run(tests, resolve(m))
+    val fused = DataTests.runBatched(tests, resolve(m))
+    assert(fused === sequential)
+    // orphans count per row: fk p9 twice, fk2 p7 once
+    assert(fused.map(_.failingRows) === Seq(2L, 1L, 1L, 2L, 1L, 2L, 1L, 1L))
+
+    val plan = DataTests.batchedPlan(tests, resolve(m))
+      .queryExecution.executedPlan
+    assert(plan.collectLeaves().size === m.size, plan)
+    assert(plan.collect { case e: ShuffleExchangeLike => e }.size <= 2, plan)
+  }
+
+  test("fused runBatched rejects a relationships test across key types") {
+    import spark.implicits._
+    val m = Map("c" -> Seq(1, 2).toDF("fk"), "p" -> Seq("1").toDF("id"))
+    intercept[IllegalArgumentException](DataTests.runBatched(
+      Seq(TestCase("c", Relationships("fk", "p", "id"))), resolve(m)))
   }
 
   test("incremental suite prunes to the batch's partitions and matches " +
