@@ -161,16 +161,15 @@ object Models {
     *
     * View materialization is declaration-order sequential but free (no
     * job — a temp view is a plan registration); the mart TABLE writes
-    * are submitted as concurrent jobs when every table's deps are views
-    * or sources (true for this graph: dbt itself would run them as
-    * same-level parallel nodes). A future table-on-table model degrades
-    * to the sequential path rather than racing its dependency.
+    * run as concurrent jobs through [[graft.operators.Adaptive.overlap]],
+    * as dbt runs same-level nodes in parallel. Every table reads only
+    * views and sources (ModelsSpec pins this), so no write depends on
+    * another.
     */
   def dbtRun(
       spark: SparkSession, rawDb: String,
       martDb: String): Map[String, DataFrame] = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $martDb")
-    val byName = all.map(m => m.name -> m).toMap
     var done = Map.empty[String, DataFrame]
 
     def resolve(ref: String): DataFrame =
@@ -192,38 +191,12 @@ object Models {
       df.createOrReplaceTempView(m.name)
       done += m.name -> df
     }
-    val independent = tables.forall(_.deps.forall(d =>
-      d.startsWith("raw.") || byName(d).materialization == AsView))
-    if (independent) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = martEc
-      val writes = tables.map { m =>
-        val df = m.build(m.deps.map(d => d -> resolve(d)).toMap)
-        Future(writeTable(m, df)).map(_ => m.name)
-      }
-      Await.result(Future.sequence(writes), Duration.Inf)
-      tables.foreach(m => done += m.name -> spark.table(s"$martDb.${m.name}"))
-    } else {
-      tables.foreach { m =>
-        val df = m.build(m.deps.map(d => d -> resolve(d)).toMap)
-        writeTable(m, df)
-        done += m.name -> spark.table(s"$martDb.${m.name}")
-      }
+    val writes = tables.map { m =>
+      val df = m.build(m.deps.map(d => d -> resolve(d)).toMap)
+      graft.operators.Adaptive.overlap(writeTable(m, df))
     }
+    writes.foreach(_.apply())
+    tables.foreach(m => done += m.name -> spark.table(s"$martDb.${m.name}"))
     done
   }
-
-  /** Daemon pool for the parallel mart writes (sized to the mart width,
-    * not the cluster — Spark schedules the real work inside each job).
-    */
-  private lazy val martEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(
-        4,
-        (r: Runnable) => {
-          val th = new Thread(r, "graft-mart")
-          th.setDaemon(true)
-          th
-        }))
 }

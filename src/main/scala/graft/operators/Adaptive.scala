@@ -42,31 +42,30 @@ object Adaptive {
     *         broadcast threshold, else df unchanged
     */
   def bcastIfSmall(df: DataFrame, rows: Long, bytesPerRow: Long): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.adaptiveBcast", "true")
-        != "false" &&
-        rows >= 0 && rows * bytesPerRow <= broadcastThreshold(df))
+    if (rows >= 0 && rows * bytesPerRow <= broadcastThreshold(df))
       broadcast(df)
     else df
 
   /** Run an INDEPENDENT action chain on a driver thread so its jobs
     * overlap the caller's (guide §2.6: Spark schedules concurrent jobs
-    * FIFO and back-fills idle executors — an audit leg that shares no
-    * frame with the main chain has no reason to serialize behind it).
-    * The returned thunk blocks for the result; a failure in the body
-    * is rethrown there. Use ONLY for chains with no data dependency on
-    * the caller's in-flight work (CC audit legs, anchor-truth tables).
+    * FIFO and back-fills idle executors — an action chain that shares
+    * no frame with the caller's in-flight work has no reason to
+    * serialize behind it). The returned thunk blocks for the result; a
+    * failure in the body is rethrown there. Use ONLY for chains with no
+    * data dependency on the caller's in-flight work. Callers: the
+    * refresh loop's per-table stage+load ([[graft.pipeline.Ingest]])
+    * and mart table writes ([[graft.models.Models.dbtRun]]), CC audit
+    * legs and anchor-truth tables in the query families, and
+    * [[NeighborhoodFunction]]'s estimate leg.
     *
-    * r18 (ADVICE r17): the body runs on a DEDICATED daemon thread, not
-    * the global ForkJoinPool — pooled threads inherit whatever Spark
-    * localProperties (execution id, job group) were live when the POOL
-    * lazily created them, a STALE snapshot that mislabels and can
-    * mis-cancel the overlap leg's jobs. A fresh per-call thread
-    * inherits the CALLER'S CURRENT properties instead (the correct
-    * labeling, and cancelling the caller's group rightly cancels its
-    * overlap leg); the properties are deliberately NOT cleared —
-    * clearing the execution id measured e147 12.9 s vs 9.1 s cleared
-    * vs not (same box, isolated), every overlapped action paying its
-    * own SQL-execution bookkeeping against the loop's tiny stages.
+    * The body runs on a DEDICATED per-call daemon thread, not a pool:
+    * a pooled thread keeps the Spark local properties (job group, job
+    * tags, execution id) that were live when the pool created it, a
+    * stale snapshot that mislabels the body's jobs and hides them from
+    * the caller's `cancelJobGroup`. A fresh thread inherits the
+    * caller's CURRENT properties. They are deliberately not cleared:
+    * clearing the execution id measured e147 at 12.9 s vs 9.1 s, every
+    * overlapped action paying its own SQL-execution bookkeeping.
     * The caller's active session is re-bound explicitly, and a body
     * failure is logged immediately from the thread, so it is visible
     * even on a caller path that dies before invoking the thunk. Any
@@ -79,29 +78,22 @@ object Adaptive {
     import scala.util.{Failure, Success, Try}
     import scala.util.control.NonFatal
     val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.conf.get("spark.graft.overlap", "true")
-        == "false")) {
-      val v = body
-      () => v
-    } else {
-      // The promise carries the Try itself: a Failure completing the
-      // promise directly would box a fatal error, and Try(body) would
-      // not catch one at all, leaving the caller waiting forever.
-      val p = Promise[Try[T]]()
-      val t = new Thread(() => {
-        active.foreach(
-          org.apache.spark.sql.SparkSession.setActiveSession)
-        try p.success(Success(body))
-        catch {
-          case e: Throwable =>
-            System.err.println(s"graft.Adaptive.overlap body failed: $e")
-            p.success(Failure(e))
-            if (!NonFatal(e)) throw e
-        }
-      }, s"graft-overlap-${java.util.UUID.randomUUID.toString.take(8)}")
-      t.setDaemon(true)
-      t.start()
-      () => Await.result(p.future, scala.concurrent.duration.Duration.Inf).get
-    }
+    // The promise carries the Try itself: a Failure completing the
+    // promise directly would box a fatal error, and Try(body) would
+    // not catch one at all, leaving the caller waiting forever.
+    val p = Promise[Try[T]]()
+    val t = new Thread(() => {
+      active.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
+      try p.success(Success(body))
+      catch {
+        case e: Throwable =>
+          System.err.println(s"graft.Adaptive.overlap body failed: $e")
+          p.success(Failure(e))
+          if (!NonFatal(e)) throw e
+      }
+    }, s"graft-overlap-${java.util.UUID.randomUUID.toString.take(8)}")
+    t.setDaemon(true)
+    t.start()
+    () => Await.result(p.future, scala.concurrent.duration.Duration.Inf).get
   }
 }

@@ -147,15 +147,11 @@ final class Ingest(
     Files.createDirectories(batchDir)
     // The reference fans the per-file stage→copy pairs out as PARALLEL
     // mapped Airflow tasks (refresh_source_data.py:190-192 `.expand`);
-    // the Spark twin submits one stage+load future per table and lets
-    // the scheduler multiplex the concurrent jobs — the per-write commit
-    // protocol overlaps instead of serializing. Tables are independent
+    // the Spark twin starts one stage+load leg per table and lets the
+    // scheduler multiplex the concurrent jobs. Tables are independent
     // (distinct staged dirs, distinct append targets), so this is safe.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = Ingest.stagingEc
     val staged = frames.toSeq.map { case (t, df) =>
-      Future {
+      graft.operators.Adaptive.overlap {
         df.coalesce(1).write // one staged file per table per batch, like the DAG
           .option("sep", "\t").option("header", "true")
           .mode(SaveMode.Overwrite)
@@ -163,7 +159,7 @@ final class Ingest(
         t -> loadFile(t, batchDir.resolve(t).toString)
       }
     }
-    lastLoadCounts = Await.result(Future.sequence(staged), Duration.Inf).toMap
+    lastLoadCounts = staged.map(_.apply()).toMap
     cleanStagedFiles(batchDir)
   }
 
@@ -211,20 +207,6 @@ final class Ingest(
 }
 
 object Ingest {
-  /** Small daemon pool for the parallel stage+load futures (the mapped-
-    * task twin); sized to the table count, not the cluster — Spark's own
-    * scheduler does the real parallelism inside each job.
-    */
-  private lazy val stagingEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(
-        4,
-        (r: Runnable) => {
-          val th = new Thread(r, "graft-staging")
-          th.setDaemon(true)
-          th
-        }))
-
   /** Convenience: run `n` consecutive batches (ST1's fixed-interval loop
     * compressed — the trigger cadence is an env/driver concern, not an
     * engine one).

@@ -224,8 +224,9 @@ object AnalysisQueries {
     // hash — uniform for every document, so range-partition bounds
     // degenerate to min(sz_a, sz_b) and cut nothing.) Both bounds are
     // lossless; keep = both clear the required overlap. Measured at
-    // sf0.1 (tools.E98Cut): 68,602 → 66,214 candidates into
-    // verification (4.5× total vs the raw prefix join), final 256
+    // sf0.1 (a one-off candidate-count probe, see CHANGES.md):
+    // 68,602 → 66,214 candidates into verification (4.5× total vs
+    // the raw prefix join), final 256
     // pairs byte-identical (E98SuffixSpec). The modest marginal cut is
     // itself informative: cp = 1 for most surviving pairs (hash-
     // ordered prefixes rarely share more than the one anchor token

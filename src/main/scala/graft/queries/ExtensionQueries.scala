@@ -1230,17 +1230,10 @@ object ExtensionQueries {
     * matters.
     *
     * The two passes (sketch, then exact count) share the exploded
-    * postings frame only through a cache — they are separate JOBS, so
-    * ReuseExchange cannot help. Whether caching pays is scale-dependent
-    * (VERDICT r7): at bench SF the postings fit in memory and the
-    * persist halves the query; at 100 TB materializing corpus-scale
-    * postings is worse than re-scanning a column-pruned parquet file.
-    * So it is a knob, not a constant:
-    * `spark.graft.heavyHitters.persistPostings` (default true — sized
-    * for the single-node bench; a fleet deployment sets false). In the
-    * persisted branch the ≤ 127-row final answer is computed eagerly so
-    * the cache can be released before returning — no session-lifetime
-    * leak.
+    * postings frame through a cache — they are separate JOBS, so
+    * ReuseExchange cannot help; at bench SF the persist halves the
+    * query. The ≤ 127-row final answer is computed eagerly so the cache
+    * is released before returning — no session-lifetime leak.
     */
   private def e29HeavyHitters = QueryDef.sql(
     "e29_heavy_hitters",
@@ -1252,31 +1245,23 @@ object ExtensionQueries {
        |FROM ex CROSS JOIN tot GROUP BY h, n
        |HAVING count(*) * 128 > n
        |ORDER BY h""".stripMargin) { (s, dir) =>
-    val persistPostings = s.conf
-      .getOption("spark.graft.heavyHitters.persistPostings")
-      .forall(_.toBoolean)
-    val ex = Tables.documents(s, dir)
+    val postings = Tables.documents(s, dir)
       .select(explode(F.word_hashes(col("text"))).as("h"))
-    def exact(postings: DataFrame) = {
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
       val row = postings.agg(
         graft.functions.sketches.misra_gries(col("h"), 127).as("cand"),
         count(lit(1)).as("n")).head()
       val cand = row.getSeq[Long](0)
       val n = row.getLong(1)
+      import s.implicits._
       postings.filter(col("h").isin(cand: _*))
         .groupBy("h").agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") * 128 > n)
         .orderBy("h")
-    }
-    if (persistPostings) {
-      val cached = ex.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        import s.implicits._
-        exact(cached).collect() // ≤ 127 rows by the MG guarantee
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq.toDF("h", "cnt")
-      } finally cached.unpersist(false)
-    } else exact(ex)
+        .collect() // ≤ 127 rows by the MG guarantee
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.toDF("h", "cnt")
+    } finally postings.unpersist(false)
   }
 
   /** Johnson-Lindenstrauss random projection (64 → 16 dims) with a

@@ -119,50 +119,60 @@ object StreamKnnFold {
           .otherwise(lit(0L))
       }.reduce(_ + _)
     }
-    // ONE persisted base frame; the scoring projection is a lazy view
-    // over it (the e172 sigBand rule)
-    val base = mat(normalized(baseVectors)
-      .select(col("vec_id"), col("uv"), array(sigCols: _*).as("gs")))
-    // band tables are CAPPED per bucket (deterministic lowest-id
-    // members kept) and persisted in their capped form: sign-LSH
-    // bucket occupancy is size-BIASED — the expected size of the
-    // bucket an arriving vector lands in is E[size²]/E[size], and the
-    // 100× probe measured 33k candidates per query from exactly that
-    // skew before the cap. With it, per-query work is bounded by
-    // construction at tables·cap seeds + tables·cap·K hop candidates
-    // regardless of corpus or skew — the e147 reverse-cap rule applied
-    // at serving time, with the one-hop graph expansion recovering the
-    // neighbors the truncated bucket hides (spec pins exact
-    // base-top-k coverage on the fixture).
-    val w = org.apache.spark.sql.expressions.Window
-    val bandTables = (0 until tables).map { t =>
-      mat(base
-        .select(element_at(col("gs"), t + 1).as(s"btk$t"),
-          col("vec_id").as("cand_id"))
-        .withColumn("rn", row_number().over(
-          w.partitionBy(col(s"btk$t")).orderBy(col("cand_id"))))
-        .filter(col("rn") <= capPerBucket)
-        .drop("rn"))
+    // A failure mid-wiring (e.g. a frame missing a column) unpersists
+    // whatever this call already persisted before rethrowing: nothing
+    // outside the slot stays pinned.
+    val (edges, baseUv, seeds) = try {
+      // ONE persisted base frame; the scoring projection is a lazy view
+      // over it (the e172 sigBand rule)
+      val base = mat(normalized(baseVectors)
+        .select(col("vec_id"), col("uv"), array(sigCols: _*).as("gs")))
+      // band tables are CAPPED per bucket (deterministic lowest-id
+      // members kept) and persisted in their capped form: sign-LSH
+      // bucket occupancy is size-BIASED — the expected size of the
+      // bucket an arriving vector lands in is E[size²]/E[size], and the
+      // 100× probe measured 33k candidates per query from exactly that
+      // skew before the cap. With it, per-query work is bounded by
+      // construction at tables·cap seeds + tables·cap·K hop candidates
+      // regardless of corpus or skew — the e147 reverse-cap rule applied
+      // at serving time, with the one-hop graph expansion recovering the
+      // neighbors the truncated bucket hides (spec pins exact
+      // base-top-k coverage on the fixture).
+      val w = org.apache.spark.sql.expressions.Window
+      val bandTables = (0 until tables).map { t =>
+        mat(base
+          .select(element_at(col("gs"), t + 1).as(s"btk$t"),
+            col("vec_id").as("cand_id"))
+          .withColumn("rn", row_number().over(
+            w.partitionBy(col(s"btk$t")).orderBy(col("cand_id"))))
+          .filter(col("rn") <= capPerBucket)
+          .drop("rn"))
+      }
+      val edges = mat(storedEdges
+        .select(col("src").as("cand_id"), col("dst").as("hop_id")))
+      val baseUv = base.select(col("vec_id").as("cand_id"),
+        col("uv").as("cuv"))
+      val q = normalized(vectors).select(col("vec_id").as("src"),
+        col("uv"), array(sigCols: _*).as("qs"))
+      // the STREAM side broadcasts, explicitly: a micro-batch of
+      // arriving vectors is small by construction, while the band tables
+      // are corpus-sized — left to the planner, the static side wins the
+      // broadcast and is re-broadcast EVERY trigger (measured 3× the
+      // per-batch latency at the 100× probe: micro-batch plans are fresh
+      // executions, so a static-side broadcast is rebuilt per batch; the
+      // persist above only amortizes the scan under it)
+      val seeds = (0 until tables).map { t =>
+        broadcast(q.select(col("src"), col("uv"),
+            element_at(col("qs"), t + 1).as(s"btk$t")))
+          .join(bandTables(t), Seq(s"btk$t"))
+          .select(col("src"), col("uv"), col("cand_id"))
+      }.reduce(_ unionByName _)
+      (edges, baseUv, seeds)
+    } catch {
+      case e: Throwable =>
+        persisted.result().foreach(_.unpersist(false))
+        throw e
     }
-    val edges = mat(storedEdges
-      .select(col("src").as("cand_id"), col("dst").as("hop_id")))
-    val baseUv = base.select(col("vec_id").as("cand_id"),
-      col("uv").as("cuv"))
-    val q = normalized(vectors).select(col("vec_id").as("src"),
-      col("uv"), array(sigCols: _*).as("qs"))
-    // the STREAM side broadcasts, explicitly: a micro-batch of
-    // arriving vectors is small by construction, while the band tables
-    // are corpus-sized — left to the planner, the static side wins the
-    // broadcast and is re-broadcast EVERY trigger (measured 3× the
-    // per-batch latency at the 100× probe: micro-batch plans are fresh
-    // executions, so a static-side broadcast is rebuilt per batch; the
-    // persist above only amortizes the scan under it)
-    val seeds = (0 until tables).map { t =>
-      broadcast(q.select(col("src"), col("uv"),
-          element_at(col("qs"), t + 1).as(s"btk$t")))
-        .join(bandTables(t), Seq(s"btk$t"))
-        .select(col("src"), col("uv"), col("cand_id"))
-    }.reduce(_ unionByName _)
     // ONE atomic swap (r18, ADVICE r17): the old getAndSet(Nil)-at-
     // start / set-at-end pair let two interleaved wirings orphan one
     // result set outside the slot (pinned forever). Swapping the built

@@ -111,8 +111,9 @@ class ModelsSpec extends SparkSpecBase {
     * DAG file imports cleanly — no unresolvable refs, no cycles. The graft
     * equivalent over the model graph: every `ref()`/`source()` resolves,
     * the graph is acyclic (a topological order exists), names are unique,
-    * and the declaration order [[Models.all]] — which dbtRun's sequential
-    * fallback executes verbatim — is itself a valid topological order.
+    * the declaration order [[Models.all]] is itself a valid topological
+    * order, and every table model reads only views and `raw.*` sources —
+    * dbtRun writes the tables concurrently, so none may read another.
     */
   test("model DAG integrity: refs resolve, acyclic, declaration order topological") {
     val names = Models.all.map(_.name)
@@ -129,6 +130,14 @@ class ModelsSpec extends SparkSpecBase {
     for (m <- Models.all; d <- m.deps if modelNames(d))
       assert(pos(d) < pos(m.name),
         s"${m.name} declared before its dependency $d")
+
+    // tables read only views and sources: the concurrent mart writes
+    // have no dependency among themselves
+    val byName = Models.all.map(m => m.name -> m).toMap
+    for (m <- Models.all if m.materialization == Models.AsTable; d <- m.deps)
+      assert(rawTables(d) ||
+        byName.get(d).exists(_.materialization == Models.AsView),
+        s"table ${m.name} reads $d, which is neither a view nor a source")
 
     // acyclicity independently of declaration order (Kahn's algorithm)
     var remaining = Models.all.map(m => m.name -> m.deps.filter(modelNames)).toMap

@@ -2,6 +2,12 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.SpanSugar._
+
 import graft.SparkSpecBase
 import graft.models.Models
 import graft.quality.DataTests
@@ -10,7 +16,7 @@ import graft.quality.DataTests
   * branch, append-only raw tables, static products, declared data tests
   * green after multiple batches, mart rebuild.
   */
-class IngestSpec extends SparkSpecBase {
+class IngestSpec extends SparkSpecBase with Eventually {
 
   private lazy val staging = Files.createTempDirectory("graft-staging").toString
 
@@ -95,5 +101,61 @@ class IngestSpec extends SparkSpecBase {
     // fct carries order/customer/product attributes resolved via left joins
     assert(fct.filter(fct("customer_id").isNull).isEmpty)
     assert(fct.filter(fct("product_price").isNull).isEmpty)
+  }
+
+  test("every job of a refresh cycle carries the caller's current job group and tag") {
+    val db = "ingest_spec_tags_raw"
+    val mart = "ingest_spec_tags_mart"
+    val sc = spark.sparkContext
+    val t0 = java.time.LocalDateTime.of(2026, 4, 1, 0, 0, 0)
+    val ingest = new Ingest(spark, db, Files.createTempDirectory("graft-tags"))
+    // (group, tags) of every job start, in listener-bus delivery order
+    val seen = mutable.ArrayBuffer.empty[(String, Set[String])]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = seen.synchronized {
+        val p = j.properties
+        seen += ((Option(p).map(_.getProperty("spark.jobGroup.id")).orNull,
+          Option(p).flatMap(q => Option(q.getProperty("spark.job.tags")))
+            .map(_.split(",").toSet).getOrElse(Set.empty)))
+      }
+    }
+    def under(group: String, tag: String)(body: => Unit): Unit = {
+      sc.setJobGroup(group, group)
+      sc.addJobTag(tag)
+      try body finally { sc.clearJobTags(); sc.clearJobGroup() }
+    }
+    // a job under `group` whose start, once delivered, means every job
+    // submitted before it has been delivered too (one ordered queue)
+    def marker(group: String): Unit = {
+      under(group, group)(spark.range(1).count())
+      eventually(timeout(60.seconds), interval(50.millis)) {
+        assert(seen.synchronized(seen.exists(_._1 == group)))
+      }
+    }
+    def cycle(k: Int): Unit = {
+      ingest.runBatch(t0.plusMinutes(10L * k))
+      val results = DataTests.runAll(spark, db, Models.dbtRun(spark, db, mart))
+      assert(results.forall(_.passed), results.filterNot(_.passed))
+    }
+    sc.addSparkListener(listener)
+    try {
+      under("g0", "cycle0")(cycle(0)) // bootstrap
+      marker("m0")
+      under("g1", "cycle1")(cycle(1)) // refresh
+      marker("m1")
+      val jobs = seen.synchronized(seen.toList)
+        .dropWhile(_._1 != "m0").dropWhile(_._1 == "m0").takeWhile(_._1 != "m1")
+      assert(jobs.nonEmpty)
+      val stale = jobs.filterNot { case (g, tags) =>
+        g == "g1" && tags("cycle1") && !tags("cycle0")
+      }
+      assert(stale.isEmpty,
+        s"${stale.size} of ${jobs.size} refresh-cycle jobs carry stale " +
+          "properties: " + stale.map { case (g, tags) =>
+            (g, tags.filter(_.startsWith("cycle"))) }.distinct)
+    } finally {
+      sc.removeSparkListener(listener)
+      Seq(mart, db).foreach(d => spark.sql(s"DROP DATABASE IF EXISTS $d CASCADE"))
+    }
   }
 }

@@ -88,20 +88,18 @@ class ExtensionOpsSpec extends SparkSpecBase {
     bps.sliding(2).foreach { case Array(lo, hi) => assert(lo <= hi) }
   }
 
-  test("e29 persist-vs-rescan knob: both modes return identical hitters") {
+  test("e29 equals a direct exact count over the same exploded postings") {
     val q = ExtensionQueries.all.find(_.name == "e29_heavy_hitters").get
-    def runWith(persist: Boolean) = {
-      spark.conf.set(
-        "spark.graft.heavyHitters.persistPostings", persist.toString)
-      try q.run(spark, dir).collect().map(r => (r.getLong(0), r.getLong(1)))
-        .toSeq.sorted
-      finally spark.conf
-        .unset("spark.graft.heavyHitters.persistPostings")
-    }
-    val persisted = runWith(persist = true)
-    val rescanned = runWith(persist = false)
-    assert(persisted === rescanned)
-    assert(persisted.nonEmpty)
+    val got = q.run(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val ex = Tables.documents(spark, dir)
+      .select(explode(graft.functions.F.word_hashes(col("text"))).as("h"))
+    val n = ex.count()
+    val want = ex.groupBy("h").count()
+      .filter(col("count") * 128 > n)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(got === want)
+    assert(got.nonEmpty)
   }
 
   test("e58 window geometry: counts cover every byte, both activity " +

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheEntries
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpecBase
@@ -168,5 +169,18 @@ class StreamKnnFoldSpec extends SparkSpecBase {
       .flatMap { case (src, ids) => ids.map(src -> _) }.toSet
     assert(rocksEdges === memEdges,
       "RocksDB-provider attach diverged from the default provider")
+  }
+
+  test("a wiring that fails mid-way leaves no cache entry behind") {
+    import spark.implicits._
+    val base = (0 until 8).map(i => (1000L + i, Array(1f, i.toFloat)))
+      .toDF("vec_id", "embedding")
+    // stored edges without a `src` column: the wiring persists the base
+    // and band frames, then fails resolving the edges
+    val noSrc = Seq((1000L, 1001L)).toDF("from", "dst")
+    val before = CacheEntries(spark)
+    intercept[org.apache.spark.sql.AnalysisException](
+      StreamKnnFold.scoredCandidates(base, base, noSrc, d = 2))
+    assert(CacheEntries(spark) === before)
   }
 }
