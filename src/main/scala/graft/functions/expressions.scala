@@ -253,4 +253,20 @@ object F {
   def morton2(x: Column, y: Column, bits: Int = 16): Column =
     c(Morton2(e(x), e(y), bits))
   def avg_hash64(payload: Column): Column = c(AvgHash64(e(payload)))
+
+  /** Exact ⌊√x⌋ of a non-negative BIGINT, bit-identical to the DuckDB
+    * twin `s0 + CASE …` the oracles spell out: floor(IEEE sqrt), then
+    * one ±1 correction that repairs both the >2⁵³ rounding of the
+    * radicand and the perfect-square boundary. The +1 branch squares
+    * s0+1, so it is guarded by s0 < 3037000499 = ⌊√Long.MaxValue⌋:
+    * past that, (s0+1)² overflows BIGINT and the correction is never
+    * needed, so the guard loses nothing.
+    */
+  def isqrt(x: Column): Column = {
+    import org.apache.spark.sql.functions.{floor, sqrt, when}
+    val s0 = floor(sqrt(x.cast("double"))).cast("long")
+    (s0
+      + when(s0 < 3037000499L && (s0 + 1) * (s0 + 1) <= x, 1L).otherwise(0L)
+      - when(s0 * s0 > x, 1L).otherwise(0L))
+  }
 }

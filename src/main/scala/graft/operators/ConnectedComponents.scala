@@ -113,15 +113,15 @@ object ConnectedComponents {
       case d: scala.math.BigDecimal => d.bigDecimal
       case other => new java.math.BigDecimal(other.toString)
     }
-    var prevSum = asBig(obs0.get("s"))
     var rounds = 0
     var converged = false
     def release(df: DataFrame): Unit =
       ConnectedComponents.releaseLocalCheckpoint(df)
-    // try/catch/finally so a non-convergence require or a job failure
-    // inside the loop doesn't leak the cached edge lists or the last
-    // label table for the session's lifetime.
+    // try/catch/finally so a failed init-sum read, a non-convergence
+    // require or a job failure inside the loop doesn't leak the cached
+    // edge lists or the last label table for the session's lifetime.
     try {
+      var prevSum = asBig(obs0.get("s"))
       while (!converged && rounds < maxRounds) {
         val nbrMin = sym
           .join(labels.select(col("node").as("v"), col("comp").as("nc")),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{F, Portable}
-import graft.operators.{BoundedPrefix, MadOutliers, PageRank, QualityPropagate}
+import graft.operators.{Adaptive, BoundedPrefix, MadOutliers, NnDescent, PageRank, QualityPropagate}
 import graft.sources.Tables
 
 /** Round-9 similarity / sketch / corpus-health additions:
@@ -856,15 +856,9 @@ object AnalysisQueries {
             "else 10000 * n_hit div n_cand end").as("efficiency_bp"))
         .withColumn("rt", expr("10000 * (n_hit + 1) div (n_truth + 2)"))
         .withColumn("sx", expr("rt * (10000 - rt) div (n_truth + 2)"))
-        .withColumn("s0", floor(sqrt(col("sx").cast("double"))).cast("long"))
         .select(col("method"), col("n_cand"), col("n_hit"),
           col("n_truth"), col("recall_bp"), col("efficiency_bp"),
-          (col("s0")
-            + when(col("s0") < 3037000499L &&
-                (col("s0") + 1) * (col("s0") + 1) <= col("sx"), 1L)
-              .otherwise(0L)
-            - when(col("s0") * col("s0") > col("sx"), 1L)
-              .otherwise(0L)).as("recall_se_bp"))
+          F.isqrt(col("sx")).as("recall_se_bp"))
         .orderBy("method")
     }
   }
@@ -2652,14 +2646,9 @@ object AnalysisQueries {
     *
     * Bit-exact across engines WITHOUT floats: N_h²σ_h² = N_h·ΣX² −
     * (ΣX)² is an exact integer, so the allocation weight is its INTEGER
-    * square root — computed as floor(IEEE sqrt) then corrected by one
-    * ±1 clamp, which repairs both the >2⁵³ rounding of the radicand and
-    * the perfect-square boundary, making w_h = ⌊√x⌋ exactly in both
-    * engines. The +1 branch squares s0+1, so it is guarded by
-    * s0 < 3037000499 (= isqrt(Long.MaxValue)): past that, (s0+1)²
-    * exceeds BIGINT — DuckDB would error, non-ANSI Spark would wrap
-    * negative and mis-correct upward — and the correction is provably
-    * never needed, so the guard loses nothing. The budget is hit EXACTLY by largest-remainder rounding
+    * square root ([[graft.functions.F.isqrt]]: floor(IEEE sqrt) plus
+    * one guarded ±1 correction), so w_h = ⌊√x⌋ exactly in both
+    * engines. The budget is hit EXACTLY by largest-remainder rounding
     * (floor shares + distribute the deficit by remainder rank, ties by
     * source) — the Hamilton apportionment step, windowed over the
     * per-source table. A corpus where EVERY source has zero variance
@@ -2725,21 +2714,8 @@ object AnalysisQueries {
         .localCheckpoint(true)
       val w0 = m.select(col("source"), col("n_docs"),
         (col("n_docs") * col("s2") - col("s1") * col("s1")).as("x"))
-      // The +1 clamp branch squares s0+1, which wraps negative in
-      // non-ANSI Spark once x is within ~6e9 of Long.MaxValue and
-      // would mis-correct w UPWARD; isqrt(Long.MaxValue) = 3037000499,
-      // so past that s0 the +1 correction is never valid (3037000500²
-      // > Long.MaxValue ≥ x) and the guard is exact, not a clamp.
-      val iw = w0
-        .withColumn("s0",
-          floor(sqrt(col("x").cast("double"))).cast("long"))
-        .select(col("source"), col("n_docs"),
-          (col("s0")
-            + when(col("s0") < 3037000499L &&
-                (col("s0") + 1) * (col("s0") + 1) <= col("x"), 1L)
-              .otherwise(0L)
-            - when(col("s0") * col("s0") > col("x"), 1L)
-              .otherwise(0L)).as("w"))
+      val iw = w0.select(col("source"), col("n_docs"),
+        F.isqrt(col("x")).as("w"))
       val t = iw.agg(sum(col("w")).as("tw"), sum(col("n_docs")).as("tn"))
       // Degenerate corpus guard: if EVERY source has zero length
       // variance (Σw = 0 — fixed-width record feeds), Neyman is
@@ -4475,101 +4451,25 @@ object AnalysisQueries {
 
   // ---- e147: NN-Descent kNN-graph construction with recall audit ----------
 
-  /** e147's PRODUCTION build, shared by the oracle-checked query and
-    * its buildOnly probe plan: ring-init NN-Descent over the float
-    * vectors — K best per vertex by 4-dp-rounded cosine, `rounds`
-    * refinement rounds with the reverse-cap hub bound. Returns the
-    * checkpointed normalized-vector table `r`, the per-round scored
-    * graphs knns(0..rounds), and the per-round candidate pools.
+  /** e147/e147b's run: ring init + `rounds` plain rounds under
+    * `kernel`, one audit row per round against the float anchor truth,
+    * whose leg reads only the vector table and so runs on a driver
+    * thread overlapped with the build rounds.
     */
-  private def e147BuildGraph(s: SparkSession, dir: String, K: Int,
-      rounds: Int, onIndex: DataFrame => Unit = _ => ())
-      : (DataFrame, Vector[DataFrame], Vector[Long]) = {
-    import graft.operators.Indexing
-    val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>")
-        .as("v"))
-      .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
-      .filter(col("nrm") > 0)
-      .withColumn("uv", transform(col("v"), x => x / col("nrm")))
-      .select(col("vec_id"), col("uv"))
-    // reused by every round's score join and the truth side; eager
-    // checkpoint so the zipWithIndex rank runs once (bounded: N rows)
-    val r = Indexing.withGlobalIndex(emb, col("vec_id"), "rid")
-      .localCheckpoint(true)
-    // measured size (one bounded job over the checkpoint) drives the
-    // per-round build-side choice: a checkpoint-backed frame has no
-    // stats, so Catalyst would SMJ every loop join and AQE's runtime
-    // BHJ conversion still pays r's exchange map stage EVERY round
-    // (profiled ~0.3-0.6 s/round at sf0.1). bcastIfSmall broadcasts
-    // only under the session threshold — at 100 TB this degrades to
-    // exactly the previous shuffle plan. ~600 B/row: vec_id + rid +
-    // 64-double uv + row overhead.
-    val n = r.count()
-    onIndex(r) // lets the caller overlap the independent truth leg (r17)
-    def rB(sel: DataFrame, bytesPerRow: Long): DataFrame =
-      graft.operators.Adaptive.bcastIfSmall(sel, n, bytesPerRow)
-    // dst join first, src join last: the downstream per-src top-K
-    // window then reuses the LAST join's hash(src) partitioning in the
-    // shuffle-join regime (one exchange fewer at scale; irrelevant
-    // under broadcast, where edges keep their incoming partitioning)
-    def scoreEdges(edges: DataFrame): DataFrame =
-      edges
-        .join(rB(r.select(col("vec_id").as("dst"), col("uv").as("uc")),
-          600L), "dst")
-        .join(rB(r.select(col("vec_id").as("src"), col("uv").as("ua")),
-          600L), "src")
-        .select(col("src"), col("dst"),
-          (round(F.array_dot(col("ua"), col("uc")), 4) + lit(0d))
-            .as("cos"))
-    val knn0 = r.select(col("vec_id").as("src"), col("rid"))
-      .select(col("src"), col("rid"), lit(n).as("n"),
-        explode(sequence(lit(1), lit(K))).as("o"))
-      .withColumn("nbr", (col("rid") + col("o")) % col("n"))
-      .join(rB(r.select(col("vec_id").as("dst"), col("rid").as("rid2")),
-        48L), col("rid2") === col("nbr"))
-      .select("src", "dst")
-    val knns = scala.collection.mutable.ArrayBuffer(
-      scoreEdges(knn0).localCheckpoint(true))
-    val pools = scala.collection.mutable.ArrayBuffer.empty[Long]
-    for (_ <- 1 to rounds) {
-      val knn = knns.last
-      // reverse lists capped at K (lowest-id — deterministic): the
-      // paper's reverse-sample knob. Bounds every und degree at 2K,
-      // so candidate generation is <= N·(2K)² REGARDLESS of hubs —
-      // without it the 100× dense-clone probe OOMed (every clone
-      // set funnels its reverse edges onto the 10 lowest-id clones,
-      // reverse degree ~N_clones, candidates ~N_clones² per witness)
-      val rev = knn
-        .withColumn("rr", row_number().over(
-          Window.partitionBy(col("dst")).orderBy(col("src"))))
-        .filter(col("rr") <= K)
-        .select(col("dst").as("src"), col("src").as("dst"))
-      val und = knn.select("src", "dst").unionByName(rev)
-      // no inner distinct: pool's own distinct dedups the union, so
-      // distinct(cand) ∪ knn → distinct is set-identical with one
-      // fewer full exchange of the round's largest intermediate
-      val cand = und.select(col("src").as("w"), col("dst").as("a"))
-        .join(und.select(col("src").as("w"), col("dst").as("c")), "w")
-        .filter(col("a") =!= col("c"))
-        .select(col("a").as("src"), col("c").as("dst"))
-      // pool count observed INSIDE the round's own checkpoint
-      // materialization: the audit's n_scored used to re-execute every
-      // round's lazy candidate pipeline a second time in the final
-      // consuming job (profiled ~0.8-1 s per round, single-task)
-      val obs = new org.apache.spark.sql.Observation(
-        s"e147_pool_${java.util.UUID.randomUUID}")
-      val pool = cand.unionByName(knn.select("src", "dst")).distinct()
-        .observe(obs, count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("cos").desc, col("dst"))
-      knns += scoreEdges(pool)
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= K)
-        .select("src", "dst", "cos").localCheckpoint(true)
-      pools += obs.get("n").asInstanceOf[Long]
-    }
-    (r, knns.toVector, pools.toVector)
+  private def nndPlainRun(kernel: NnDescent.Kernel, K: Int, rounds: Int,
+      anchors: Int)(s: SparkSession, dir: String): DataFrame = {
+    val v = NnDescent.vectors(Tables.embeddings(s, dir), kernel)
+    val truth = Adaptive.overlap(NnDescent.anchorTruth(v.r, K, anchors))
+    val (knns, pools) = NnDescent.plainBuild(v, K, rounds)
+    NnDescent.roundMetrics(knns, kernel.score, truth(), K,
+      "n_scored" -> (0L +: pools))
   }
+
+  /** e147/e147b's production plan: the final graph, no truth leg. */
+  private def nndPlainGraph(kernel: NnDescent.Kernel, K: Int,
+      rounds: Int)(s: SparkSession, dir: String): DataFrame =
+    NnDescent.plainBuild(NnDescent.vectors(Tables.embeddings(s, dir),
+      kernel), K, rounds)._1.last
 
   /** NN-Descent (Dong, Moses Charikar, Li, WWW'11): build the
     * all-vectors k-nearest-neighbor graph by ITERATIVE REFINEMENT —
@@ -4592,9 +4492,9 @@ object AnalysisQueries {
     * anchor slice: the 64 lowest multiplicative-hash vec_ids (the
     * e103b deterministic-slice posture, plus its Agresti–Coull
     * adjusted-SE column `recall_se_bp`). Constant, not proportional:
-    * r11 shipped a vec_id % 50 slice whose truth leg was N²/50 — the
-    * measured scale-killer that forced a 48 GiB heap at the 100× probe
-    * (an ~800M-row ranking window) while the BUILD stayed bounded.
+    * a vec_id % 50 slice makes the truth leg N²/50, which forced a
+    * 48 GiB heap at the 100× probe (an ~800M-row ranking window) while
+    * the BUILD stayed bounded.
     * 64 anchors cost B·N at ANY corpus size and estimate the same
     * recall unbiasedly; the SE column (±~60 bp at 640 truth edges)
     * prices the budget honestly. Measured at sf0.01
@@ -4645,10 +4545,6 @@ object AnalysisQueries {
   private def e147NnDescent = {
     val K = 10
     val rounds = 8
-    def dotD(x: String, y: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, 65), i -> $x[i] * $y[i])),
-         |      (s, v) -> s + v)""".stripMargin
     val roundCtes = (0 until rounds).map { i =>
       s"""rev$i AS (SELECT dst AS src, src AS dst
          |  FROM (SELECT src, dst, row_number() OVER (PARTITION BY dst
@@ -4662,7 +4558,7 @@ object AnalysisQueries {
          |pool$i AS MATERIALIZED (SELECT src, dst FROM cand$i
          |  UNION SELECT src, dst FROM knn$i),
          |sc$i AS (SELECT p.src, p.dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos
+         |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos
          |  FROM pool$i p JOIN r a ON a.vec_id = p.src
          |  JOIN r c ON c.vec_id = p.dst),
          |knn${i + 1} AS MATERIALIZED (SELECT src, dst, cos FROM sc$i
@@ -4687,7 +4583,7 @@ object AnalysisQueries {
       s"""WITH b AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |  FROM embeddings),
-         |n0 AS (SELECT vec_id, v, sqrt(${dotD("v", "v")}) AS nrm FROM b),
+         |n0 AS (SELECT vec_id, v, sqrt(${vecDotDuck("v", "v")}) AS nrm FROM b),
          |u AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS uv
          |  FROM n0 WHERE nrm > 0),
          |r AS MATERIALIZED (SELECT vec_id, uv,
@@ -4698,197 +4594,24 @@ object AnalysisQueries {
          |  CROSS JOIN (SELECT unnest(range(1, ${K + 1})) AS o) os
          |  JOIN r c ON c.rid = (a.rid + os.o) % nn.n),
          |sc_init AS (SELECT k.src, k.dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos
+         |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos
          |  FROM knn0 k JOIN r a ON a.vec_id = k.src
          |  JOIN r c ON c.vec_id = k.dst),
          |$roundCtes
-         |anch AS MATERIALIZED (SELECT vec_id FROM (
-         |    SELECT vec_id,
-         |      ((vec_id % 1000003) * 2654435761) % 1000000007 AS ah
-         |    FROM r) t
-         |  QUALIFY row_number() OVER (ORDER BY ah, vec_id)
-         |    <= $anchorBudget),
-         |tr0 AS (SELECT a.vec_id AS src, c.vec_id AS dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos
-         |  FROM anch an JOIN r a ON a.vec_id = an.vec_id
-         |  JOIN r c ON c.vec_id <> a.vec_id),
-         |truth AS MATERIALIZED (SELECT src, dst FROM tr0
-         |  QUALIFY row_number() OVER (PARTITION BY src
-         |    ORDER BY cos DESC, dst) <= $K),
+         |${anchorTruthDuck("r", "", K, anchorBudget)}
          |na AS (SELECT count(DISTINCT src) AS n_anchors FROM truth),
          |mraw AS ($metricSelects),
-         |m1 AS (SELECT *,
-         |    CAST(hits * 10000 // (n_anchors * $K) AS BIGINT)
-         |      AS recall_bp,
-         |    10000 * (hits + 1) // (n_anchors * $K + 2) AS rt FROM mraw),
-         |m2 AS (SELECT *,
-         |    rt * (10000 - rt) // (n_anchors * $K + 2) AS sx FROM m1),
-         |m3 AS (SELECT *,
-         |    CAST(floor(sqrt(CAST(sx AS DOUBLE))) AS BIGINT) AS s0
-         |  FROM m2)
+         |${recallDuck(K)}
          |SELECT round, n_scored, avg_cos_t, recall_bp,
          |  s0 + CASE WHEN s0 < 3037000499 AND (s0 + 1) * (s0 + 1) <= sx
          |         THEN 1 ELSE 0 END
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END AS recall_se_bp
-         |FROM m3 ORDER BY round""".stripMargin) { (s, dir) =>
-      // Constant anchor budget (the e103b posture applied to the truth
-      // harness): 64 anchors = the lowest multiplicative-hash values,
-      // via a distributed top-k (TakeOrderedAndProject — never a full
-      // sort), so the exact-truth leg costs B·N REGARDLESS of corpus
-      // size. r11's proportional vec_id % 50 slice made the audit
-      // N²/50 — the measured scale-killer that forced a 48 GiB heap at
-      // the 100× probe while the BUILD itself stayed bounded.
-      // The leg depends only on the vector index, so it runs on a
-      // driver thread OVERLAPPED with the 8 build rounds (r17).
-      var truthT: () => DataFrame = null
-      val (r, knns, pools) = e147BuildGraph(s, dir, K, rounds, r0 => {
-        truthT = graft.operators.Adaptive.overlap {
-          val anchors = r0
-            .withColumn("ah",
-              expr("((vec_id % 1000003) * 2654435761) % 1000000007"))
-            .orderBy(col("ah"), col("vec_id")).limit(anchorBudget)
-            .select(col("vec_id").as("src"), col("uv").as("ua"))
-          r0.select(col("vec_id").as("dst"), col("uv").as("uc"))
-            .join(broadcast(anchors), col("dst") =!= col("src"))
-            .select(col("src"), col("dst"),
-              (round(F.array_dot(col("ua"), col("uc")), 4) + lit(0d))
-                .as("cos"))
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("src"))
-                .orderBy(col("cos").desc, col("dst"))))
-            .filter(col("rk") <= K).select("src", "dst")
-            .localCheckpoint(true)
-        }
-      })
-      val truth = truthT()
-      val na = truth.select("src").distinct()
-        .agg(count(lit(1)).as("n_anchors"))
-      val rows = (0 to rounds).map { i =>
-        val g = knns(i)
-        val avg = g.agg(
-            sum(round(col("cos") * 10000).cast("long")).as("sc"),
-            count(lit(1)).as("ne"))
-          .select(expr("sc div ne").as("avg_cos_t"))
-        // n_scored is the pool count OBSERVED during the round's own
-        // checkpoint materialization (same value, no re-execution of
-        // the lazy candidate pipeline in the consuming job)
-        val nscored = if (i == 0) 0L else pools(i - 1)
-        // truth is anchor-bounded by construction (≤ 64·K rows at any
-        // corpus size) — broadcast it instead of shuffling the graph
-        val hits = g.join(broadcast(truth), Seq("src", "dst"))
-          .agg(count(lit(1)).as("hits"))
-        avg.crossJoin(hits).crossJoin(na)
-          .select(lit(i.toLong).as("round"),
-            lit(nscored).as("n_scored"),
-            col("avg_cos_t"), col("hits"), col("n_anchors"))
-      }
-      // Agresti–Coull adjusted SE on the sampled recall (the e103b
-      // columns): the 64-anchor estimate is unbiased for the full-graph
-      // recall, and the SE prices the sampling honestly — a slice that
-      // happens to hit everything must not read as "certainly 10000".
-      rows.reduce(_ unionByName _)
-        .withColumn("recall_bp",
-          expr(s"hits * 10000 div (n_anchors * $K)"))
-        .withColumn("rt",
-          expr(s"10000 * (hits + 1) div (n_anchors * $K + 2)"))
-        .withColumn("sx",
-          expr(s"rt * (10000 - rt) div (n_anchors * $K + 2)"))
-        .withColumn("s0",
-          floor(sqrt(col("sx").cast("double"))).cast("long"))
-        .select(col("round"), col("n_scored"), col("avg_cos_t"),
-          col("recall_bp"),
-          (col("s0")
-            + when(col("s0") < 3037000499L &&
-                (col("s0") + 1) * (col("s0") + 1) <= col("sx"), 1L)
-              .otherwise(0L)
-            - when(col("s0") * col("s0") > col("sx"), 1L)
-              .otherwise(0L)).as("recall_se_bp"))
-        .orderBy("round")
-    }.withBuildOnly((s, dir) =>
-      // production plan: the kNN graph itself, no anchor-truth leg
-      e147BuildGraph(s, dir, K, rounds)._2.last)
+         |FROM m3 ORDER BY round""".stripMargin)(
+      nndPlainRun(NnDescent.Float, K, rounds, anchorBudget))
+      .withBuildOnly(nndPlainGraph(NnDescent.Float, K, rounds))
   }
 
   // ---- e147b: NN-Descent in the int8 domain --------------------------------
-
-  /** e147b's PRODUCTION build (the e147BuildGraph twin): identical
-    * round/candidate structure, but every score join ships the 64-byte
-    * Int8Pack code + scale instead of the 512 B double array, and
-    * scoring is the codegen'd Int8Dot corrected by the two scales.
-    */
-  private def e147bBuildGraph(s: SparkSession, dir: String, K: Int,
-      rounds: Int, onIndex: DataFrame => Unit = _ => ())
-      : (DataFrame, Vector[DataFrame], Vector[Long]) = {
-    import graft.operators.Indexing
-    val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>")
-        .as("v"))
-      .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
-      .filter(col("nrm") > 0)
-      .withColumn("uv", transform(col("v"), x => x / col("nrm")))
-      .withColumn("scale", F.int8_scale(col("uv")))
-      .filter(col("scale") > 0)
-      .select(col("vec_id"), col("uv"), col("scale"),
-        F.int8_pack(col("uv")).as("code"))
-    val r = Indexing.withGlobalIndex(emb, col("vec_id"), "rid")
-      .localCheckpoint(true)
-    // measured-size build-side choice, the e147 rule (see its note):
-    // broadcast r's (code, scale) projection into the loop joins only
-    // when it fits the session threshold; at 100 TB this stays the
-    // shuffle plan. ~150 B/row: vec_id + 64-byte code + scale + slack.
-    val n = r.count()
-    onIndex(r) // overlap hook for the truth leg (e147 rule)
-    def rB(sel: DataFrame, bytesPerRow: Long): DataFrame =
-      graft.operators.Adaptive.bcastIfSmall(sel, n, bytesPerRow)
-    // the pair-scale joins ship ONLY (code, scale) — 72 B per vector
-    // side instead of e147's 512 B double array; dst first, src last
-    // (the e147 window-partitioning note)
-    def scoreEdges(edges: DataFrame): DataFrame =
-      edges
-        .join(rB(r.select(col("vec_id").as("dst"), col("code").as("cc"),
-          col("scale").as("sc")), 150L), "dst")
-        .join(rB(r.select(col("vec_id").as("src"), col("code").as("ca"),
-          col("scale").as("sa")), 150L), "src")
-        .select(col("src"), col("dst"),
-          (round(F.int8_dot(col("ca"), col("cc")).cast("double")
-            * col("sa") * col("sc"), 4) + lit(0d)).as("qcos"))
-    val knn0 = r.select(col("vec_id").as("src"), col("rid"))
-      .select(col("src"), col("rid"), lit(n).as("n"),
-        explode(sequence(lit(1), lit(K))).as("o"))
-      .withColumn("nbr", (col("rid") + col("o")) % col("n"))
-      .join(rB(r.select(col("vec_id").as("dst"), col("rid").as("rid2")),
-        48L), col("rid2") === col("nbr"))
-      .select("src", "dst")
-    val knns = scala.collection.mutable.ArrayBuffer(
-      scoreEdges(knn0).localCheckpoint(true))
-    val pools = scala.collection.mutable.ArrayBuffer.empty[Long]
-    for (_ <- 1 to rounds) {
-      val knn = knns.last
-      val rev = knn
-        .withColumn("rr", row_number().over(
-          Window.partitionBy(col("dst")).orderBy(col("src"))))
-        .filter(col("rr") <= K)
-        .select(col("dst").as("src"), col("src").as("dst"))
-      val und = knn.select("src", "dst").unionByName(rev)
-      // no inner distinct (the e147 rule): pool's distinct dedups
-      val cand = und.select(col("src").as("w"), col("dst").as("a"))
-        .join(und.select(col("src").as("w"), col("dst").as("c")), "w")
-        .filter(col("a") =!= col("c"))
-        .select(col("a").as("src"), col("c").as("dst"))
-      // pool count observed inside the round's checkpoint (e147 note)
-      val obs = new org.apache.spark.sql.Observation(
-        s"e147b_pool_${java.util.UUID.randomUUID}")
-      val pool = cand.unionByName(knn.select("src", "dst")).distinct()
-        .observe(obs, count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("qcos").desc, col("dst"))
-      knns += scoreEdges(pool)
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= K)
-        .select("src", "dst", "qcos").localCheckpoint(true)
-      pools += obs.get("n").asInstanceOf[Long]
-    }
-    (r, knns.toVector, pools.toVector)
-  }
 
   /** e147's graph build with the SCORING PAYLOAD quantized — the
     * measured remedy for the measured bottleneck: the e147 probe put
@@ -4922,10 +4645,6 @@ object AnalysisQueries {
   private def e147bNnDescentInt8 = {
     val K = 10
     val rounds = 8
-    def dotD(x: String, y: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, 65), i -> $x[i] * $y[i])),
-         |      (s, v) -> s + v)""".stripMargin
     def qdotD(x: String, y: String): String =
       s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
          |      list_transform(range(1, 65), i -> $x[i] * $y[i])),
@@ -4969,7 +4688,7 @@ object AnalysisQueries {
       s"""WITH b AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |  FROM embeddings),
-         |n0 AS (SELECT vec_id, v, sqrt(${dotD("v", "v")}) AS nrm FROM b),
+         |n0 AS (SELECT vec_id, v, sqrt(${vecDotDuck("v", "v")}) AS nrm FROM b),
          |u AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS uv
          |  FROM n0 WHERE nrm > 0),
          |qsc AS (SELECT vec_id, uv,
@@ -4993,231 +4712,39 @@ object AnalysisQueries {
          |  FROM knn0 k JOIN r a ON a.vec_id = k.src
          |  JOIN r c ON c.vec_id = k.dst),
          |$roundCtes
-         |anch AS MATERIALIZED (SELECT vec_id FROM (
-         |    SELECT vec_id,
-         |      ((vec_id % 1000003) * 2654435761) % 1000000007 AS ah
-         |    FROM r) t
-         |  QUALIFY row_number() OVER (ORDER BY ah, vec_id)
-         |    <= $anchorBudget),
-         |tr0 AS (SELECT a.vec_id AS src, c.vec_id AS dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos
-         |  FROM anch an JOIN r a ON a.vec_id = an.vec_id
-         |  JOIN r c ON c.vec_id <> a.vec_id),
-         |truth AS MATERIALIZED (SELECT src, dst FROM tr0
-         |  QUALIFY row_number() OVER (PARTITION BY src
-         |    ORDER BY cos DESC, dst) <= $K),
+         |${anchorTruthDuck("r", "", K, anchorBudget)}
          |na AS (SELECT count(DISTINCT src) AS n_anchors FROM truth),
          |mraw AS ($metricSelects),
-         |m1 AS (SELECT *,
-         |    CAST(hits * 10000 // (n_anchors * $K) AS BIGINT)
-         |      AS recall_bp,
-         |    10000 * (hits + 1) // (n_anchors * $K + 2) AS rt FROM mraw),
-         |m2 AS (SELECT *,
-         |    rt * (10000 - rt) // (n_anchors * $K + 2) AS sx FROM m1),
-         |m3 AS (SELECT *,
-         |    CAST(floor(sqrt(CAST(sx AS DOUBLE))) AS BIGINT) AS s0
-         |  FROM m2)
+         |${recallDuck(K)}
          |SELECT round, n_scored, avg_qcos_t, recall_bp,
          |  s0 + CASE WHEN s0 < 3037000499 AND (s0 + 1) * (s0 + 1) <= sx
          |         THEN 1 ELSE 0 END
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END AS recall_se_bp
-         |FROM m3 ORDER BY round""".stripMargin) { (s, dir) =>
-      // Constant 64-anchor budget + AC SE — see e147's comment; the
-      // float-exact truth side is the ONLY place uv rides a join, and
-      // it is B·N bounded by construction. Overlapped with the build
-      // rounds (the e147 rule).
-      var truthT: () => DataFrame = null
-      val (r, knns, pools) = e147bBuildGraph(s, dir, K, rounds, r0 => {
-        truthT = graft.operators.Adaptive.overlap {
-          val anchors = r0
-            .withColumn("ah",
-              expr("((vec_id % 1000003) * 2654435761) % 1000000007"))
-            .orderBy(col("ah"), col("vec_id")).limit(anchorBudget)
-            .select(col("vec_id").as("src"), col("uv").as("ua"))
-          r0.select(col("vec_id").as("dst"), col("uv").as("uc"))
-            .join(broadcast(anchors), col("dst") =!= col("src"))
-            .select(col("src"), col("dst"),
-              (round(F.array_dot(col("ua"), col("uc")), 4) + lit(0d))
-                .as("cos"))
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("src"))
-                .orderBy(col("cos").desc, col("dst"))))
-            .filter(col("rk") <= K).select("src", "dst")
-            .localCheckpoint(true)
-        }
-      })
-      val truth = truthT()
-      val na = truth.select("src").distinct()
-        .agg(count(lit(1)).as("n_anchors"))
-      val rows = (0 to rounds).map { i =>
-        val g = knns(i)
-        val avg = g.agg(
-            sum(round(col("qcos") * 10000).cast("long")).as("sc"),
-            count(lit(1)).as("ne"))
-          .select(expr("sc div ne").as("avg_qcos_t"))
-        // n_scored: the observed pool count (e147 note)
-        val nscored = if (i == 0) 0L else pools(i - 1)
-        // truth is anchor-bounded by construction (≤ 64·K rows at any
-        // corpus size) — broadcast it instead of shuffling the graph
-        val hits = g.join(broadcast(truth), Seq("src", "dst"))
-          .agg(count(lit(1)).as("hits"))
-        avg.crossJoin(hits).crossJoin(na)
-          .select(lit(i.toLong).as("round"),
-            lit(nscored).as("n_scored"),
-            col("avg_qcos_t"), col("hits"), col("n_anchors"))
-      }
-      rows.reduce(_ unionByName _)
-        .withColumn("recall_bp",
-          expr(s"hits * 10000 div (n_anchors * $K)"))
-        .withColumn("rt",
-          expr(s"10000 * (hits + 1) div (n_anchors * $K + 2)"))
-        .withColumn("sx",
-          expr(s"rt * (10000 - rt) div (n_anchors * $K + 2)"))
-        .withColumn("s0",
-          floor(sqrt(col("sx").cast("double"))).cast("long"))
-        .select(col("round"), col("n_scored"), col("avg_qcos_t"),
-          col("recall_bp"),
-          (col("s0")
-            + when(col("s0") < 3037000499L &&
-                (col("s0") + 1) * (col("s0") + 1) <= col("sx"), 1L)
-              .otherwise(0L)
-            - when(col("s0") * col("s0") > col("sx"), 1L)
-              .otherwise(0L)).as("recall_se_bp"))
-        .orderBy("round")
-    }.withBuildOnly((s, dir) =>
-      // production plan: the int8-scored kNN graph, no float truth leg
-      e147bBuildGraph(s, dir, K, rounds)._2.last)
+         |FROM m3 ORDER BY round""".stripMargin)(
+      nndPlainRun(NnDescent.Int8, K, rounds, anchorBudget))
+      .withBuildOnly(nndPlainGraph(NnDescent.Int8, K, rounds))
   }
 
   // ---- e158: NN-Descent with new/old flags and a convergence stop ----------
 
-  /** e158's PRODUCTION build — e147's loop upgraded with the TWO
-    * remaining knobs of the paper (Dong/Charikar/Li WWW'11 §2.3):
-    *
-    *  1. NEW/OLD INCREMENTAL FLAGS: an edge is `new` while it has not
-    *     yet participated in a local join. Candidate generation keeps
-    *     only witness pairs where AT LEAST ONE side is new — an
-    *     old×old pair shared its witness last round too (both edges
-    *     and the witness relation existed), so it was already
-    *     proposed; re-proposing it is pure waste. Additionally the
-    *     current graph's edges are NOT re-scored (e147 rescored its
-    *     own K·N edges every round): fresh candidates are anti-joined
-    *     against the graph and only THEY pay a dot product — the
-    *     graph's scores ride along by union.
-    *  2. CONVERGENCE STOP: the loop ends when a round changes NOTHING
-    *     (n_updates = 0 — the paper's δ→0 termination). That is a true
-    *     fixpoint under rule 1: with no new edges, the next candidate
-    *     set is empty by construction, so every later round is a
-    *     no-op. maxRounds bounds the loop regardless.
-    *
-    * Returns (r, knnf per round 0..R, fresh-candidate frames per round
-    * 1..R, n_updates per round) where R ≤ maxRounds is the realized
-    * round count. ONLY the post-top-K graph is checkpointed each round
-    * (small by construction: N·K rows) — the fresh candidate set, the
-    * round's LARGEST intermediate, stays lazy exactly like e147's
-    * pools; materializing it is what OOMed the first 100× probe of
-    * this operator (putIteratorAsValues on an N·(2K)²-row frame).
-    * Its count (the n_scored metric) is an audit-side recompute the
-    * caller pays at metrics time; buildOnly never pays it. n_updates
-    * IS counted eagerly per round — the convergence stop needs it, and
-    * it is one cheap action on the checkpointed graph.
+  /** e158's build: ring init (every edge new), then flagged rounds
+    * ([[NnDescent.flaggedRound]]) until a round changes nothing — a
+    * true fixpoint under the new/old rule, since with no new edge the
+    * next candidate set is empty — or `maxRounds`. Returns the
+    * checkpointed graphs 0..R, the fresh counts of rounds 1..R and the
+    * update counts of rounds 0..R (round 0's is the init graph's size).
     */
-  private[queries] def e158BuildGraph(s: SparkSession, dir: String, K: Int,
-      maxRounds: Int, onIndex: DataFrame => Unit = _ => ())
-      : (DataFrame, Vector[DataFrame], Vector[Long], Vector[Long]) = {
-    import graft.operators.Indexing
-    val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>")
-        .as("v"))
-      .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
-      .filter(col("nrm") > 0)
-      .withColumn("uv", transform(col("v"), x => x / col("nrm")))
-      .select(col("vec_id"), col("uv"))
-    val r = Indexing.withGlobalIndex(emb, col("vec_id"), "rid")
-      .localCheckpoint(true)
-    // measured-size build-side choice (the e147 rule — see its note):
-    // checkpoint-backed frames have no stats, so every loop join would
-    // SMJ and re-shuffle r per round; broadcast under the session
-    // threshold only, so at 100 TB the plan is unchanged.
-    val n = r.count()
-    onIndex(r) // overlap hook for the truth leg (e147 rule)
-    def rB(sel: DataFrame, bytesPerRow: Long): DataFrame =
-      graft.operators.Adaptive.bcastIfSmall(sel, n, bytesPerRow)
-    def knnB(sel: DataFrame): DataFrame =
-      graft.operators.Adaptive.bcastIfSmall(sel, n * K, 48L)
-    def scoreEdges(edges: DataFrame): DataFrame =
-      edges
-        .join(rB(r.select(col("vec_id").as("dst"), col("uv").as("uc")),
-          600L), "dst")
-        .join(rB(r.select(col("vec_id").as("src"), col("uv").as("ua")),
-          600L), "src")
-        .select(col("src"), col("dst"),
-          (round(F.array_dot(col("ua"), col("uc")), 4) + lit(0d))
-            .as("cos"))
-    val knn0 = r.select(col("vec_id").as("src"), col("rid"))
-      .select(col("src"), col("rid"), lit(n).as("n"),
-        explode(sequence(lit(1), lit(K))).as("o"))
-      .withColumn("nbr", (col("rid") + col("o")) % col("n"))
-      .join(rB(r.select(col("vec_id").as("dst"), col("rid").as("rid2")),
-        48L), col("rid2") === col("nbr"))
-      .select("src", "dst")
-    val knns = scala.collection.mutable.ArrayBuffer(
-      scoreEdges(knn0).withColumn("is_new", lit(true))
-        .localCheckpoint(true))
-    val nUpdates = scala.collection.mutable.ArrayBuffer(knns.head.count())
-    val freshes = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var converged = false
-    for (_ <- 1 to maxRounds if !converged) {
-      val knn = knns.last
-      val rev = knn
-        .withColumn("rr", row_number().over(
-          Window.partitionBy(col("dst")).orderBy(col("src"))))
-        .filter(col("rr") <= K)
-        .select(col("dst").as("src"), col("src").as("dst"),
-          col("is_new"))
-      // union can carry the same edge forward-old and reverse-new:
-      // max() keeps it new — conservative (a few extra candidates,
-      // never a missed one), and identical on both engines
-      val und = knn.select("src", "dst", "is_new").unionByName(rev)
-        .groupBy("src", "dst").agg(max(col("is_new")).as("is_new"))
-      val cand = und.select(col("src").as("w"), col("dst").as("a"),
-          col("is_new").as("na"))
-        .join(und.select(col("src").as("w"), col("dst").as("c"),
-          col("is_new").as("nc")), "w")
-        .filter(col("a") =!= col("c") && (col("na") || col("nc")))
-        .select(col("a").as("src"), col("c").as("dst")).distinct()
-      // the anti/left probes against the N·K-row checkpointed graph
-      // ride the same measured-size broadcast rule; the fresh count
-      // and the round's update count are OBSERVED inside the round's
-      // own checkpoint materialization (e147's pool-count rule — no
-      // audit-side re-execution of the lazy candidate pipeline, and
-      // no separate per-round count job)
-      val obsF = new org.apache.spark.sql.Observation(
-        s"e158_fresh_${java.util.UUID.randomUUID}")
-      val fresh = cand.join(knnB(knn.select("src", "dst")),
-        Seq("src", "dst"), "left_anti")
-        .observe(obsF, count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("src"))
-        .orderBy(col("cos").desc, col("dst"))
-      val top = knn.select("src", "dst", "cos")
-        .unionByName(scoreEdges(fresh))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= K)
-        .select("src", "dst", "cos")
-      val obsU = new org.apache.spark.sql.Observation(
-        s"e158_upd_${java.util.UUID.randomUUID}")
-      val next = top
-        .join(knnB(knn.select(col("src"), col("dst"),
-          lit(true).as("was"))), Seq("src", "dst"), "left")
-        .withColumn("is_new", col("was").isNull).drop("was")
-        .observe(obsU, count(when(col("is_new"), lit(1))).as("u"))
-        .localCheckpoint(true)
-      freshes += obsF.get("n").asInstanceOf[Long]
-      val nUpd = obsU.get("u").asInstanceOf[Long]
-      nUpdates += nUpd
-      knns += next
-      if (nUpd == 0L) converged = true
+  private[queries] def e158Graph(v: NnDescent.Vectors, K: Int,
+      maxRounds: Int): (Vector[DataFrame], Vector[Long], Vector[Long]) = {
+    val knn0 = v.score(NnDescent.ringInit(v.r, v.r, v.n, K))
+      .withColumn("is_new", lit(true)).localCheckpoint(true)
+    var (knns, freshes, updates) =
+      (Vector(knn0), Vector.empty[Long], Vector(knn0.count()))
+    while (knns.size <= maxRounds && (knns.size == 1 || updates.last > 0)) {
+      val (next, fresh, upd) = NnDescent.flaggedRound(v, knns.last, K)
+      knns :+= next; freshes :+= fresh; updates :+= upd
     }
-    (r, knns.toVector, freshes.toVector, nUpdates.toVector)
+    (knns, freshes, updates)
   }
 
   /** NN-Descent WITH the paper's incremental machinery — what e147
@@ -5229,7 +4756,7 @@ object AnalysisQueries {
     * and the 64-anchor recall ± Agresti–Coull SE (the e147 harness).
     * The loop STOPS at the first round with n_updates = 0 (a true
     * fixpoint under new/old candidate generation — see
-    * [[e158BuildGraph]]); the oracle unrolls all maxRounds rounds
+    * [[e158Graph]]); the oracle unrolls all maxRounds rounds
     * statically and cuts its output at the same data-driven round, so
     * the dynamic operator and the static SQL emit identical rows.
     *
@@ -5258,10 +4785,6 @@ object AnalysisQueries {
     val K = 10
     val maxRounds = 8
     val anchorBudget = 64
-    def dotD(x: String, y: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      list_transform(range(1, 65), i -> $x[i] * $y[i])),
-         |      (s, v) -> s + v)""".stripMargin
     val roundCtes = (0 until maxRounds).map { i =>
       s"""rev$i AS (SELECT dst AS src, src AS dst, is_new
          |  FROM (SELECT src, dst, is_new, row_number() OVER (
@@ -5279,7 +4802,7 @@ object AnalysisQueries {
          |  LEFT JOIN knnf$i k ON k.src = c.src AND k.dst = c.dst
          |  WHERE k.src IS NULL),
          |sc$i AS (SELECT f.src, f.dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos
+         |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos
          |  FROM fresh$i f JOIN r a ON a.vec_id = f.src
          |  JOIN r c ON c.vec_id = f.dst),
          |top$i AS (SELECT src, dst, cos FROM (
@@ -5311,7 +4834,7 @@ object AnalysisQueries {
       s"""WITH b AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |  FROM embeddings),
-         |n0 AS (SELECT vec_id, v, sqrt(${dotD("v", "v")}) AS nrm FROM b),
+         |n0 AS (SELECT vec_id, v, sqrt(${vecDotDuck("v", "v")}) AS nrm FROM b),
          |u AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS uv
          |  FROM n0 WHERE nrm > 0),
          |r AS MATERIALIZED (SELECT vec_id, uv,
@@ -5322,107 +4845,36 @@ object AnalysisQueries {
          |  CROSS JOIN (SELECT unnest(range(1, ${K + 1})) AS o) os
          |  JOIN r c ON c.rid = (a.rid + os.o) % nn.n),
          |knnf0 AS MATERIALIZED (SELECT k.src, k.dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos,
+         |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos,
          |    TRUE AS is_new
          |  FROM knn0 k JOIN r a ON a.vec_id = k.src
          |  JOIN r c ON c.vec_id = k.dst),
          |$roundCtes
-         |anch AS MATERIALIZED (SELECT vec_id FROM (
-         |    SELECT vec_id,
-         |      ((vec_id % 1000003) * 2654435761) % 1000000007 AS ah
-         |    FROM r) t
-         |  QUALIFY row_number() OVER (ORDER BY ah, vec_id)
-         |    <= $anchorBudget),
-         |tr0 AS (SELECT a.vec_id AS src, c.vec_id AS dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos
-         |  FROM anch an JOIN r a ON a.vec_id = an.vec_id
-         |  JOIN r c ON c.vec_id <> a.vec_id),
-         |truth AS MATERIALIZED (SELECT src, dst FROM tr0
-         |  QUALIFY row_number() OVER (PARTITION BY src
-         |    ORDER BY cos DESC, dst) <= $K),
+         |${anchorTruthDuck("r", "", K, anchorBudget)}
          |na AS (SELECT count(DISTINCT src) AS n_anchors FROM truth),
          |mraw AS ($metricSelects),
          |stp AS (SELECT coalesce(min(round), $maxRounds) AS sr
          |  FROM mraw WHERE round >= 1 AND n_updates = 0),
-         |m1 AS (SELECT *,
-         |    CAST(hits * 10000 // (n_anchors * $K) AS BIGINT)
-         |      AS recall_bp,
-         |    10000 * (hits + 1) // (n_anchors * $K + 2) AS rt FROM mraw),
-         |m2 AS (SELECT *,
-         |    rt * (10000 - rt) // (n_anchors * $K + 2) AS sx FROM m1),
-         |m3 AS (SELECT *,
-         |    CAST(floor(sqrt(CAST(sx AS DOUBLE))) AS BIGINT) AS s0
-         |  FROM m2)
+         |${recallDuck(K)}
          |SELECT round, n_scored, n_updates, avg_cos_t, recall_bp,
          |  s0 + CASE WHEN s0 < 3037000499 AND (s0 + 1) * (s0 + 1) <= sx
          |         THEN 1 ELSE 0 END
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END AS recall_se_bp
          |FROM m3 CROSS JOIN stp WHERE round <= stp.sr
          |ORDER BY round""".stripMargin) { (s, dir) =>
-      // anchor-truth leg overlapped with the build rounds (e147 rule)
-      var truthT: () => DataFrame = null
-      val (r, knns, freshCounts, nUpdates) =
-        e158BuildGraph(s, dir, K, maxRounds, r0 => {
-          truthT = graft.operators.Adaptive.overlap {
-            val anchors = r0
-              .withColumn("ah",
-                expr("((vec_id % 1000003) * 2654435761) % 1000000007"))
-              .orderBy(col("ah"), col("vec_id")).limit(anchorBudget)
-              .select(col("vec_id").as("src"), col("uv").as("ua"))
-            r0.select(col("vec_id").as("dst"), col("uv").as("uc"))
-              .join(broadcast(anchors), col("dst") =!= col("src"))
-              .select(col("src"), col("dst"),
-                (round(F.array_dot(col("ua"), col("uc")), 4) + lit(0d))
-                  .as("cos"))
-              .withColumn("rk", row_number().over(
-                Window.partitionBy(col("src"))
-                  .orderBy(col("cos").desc, col("dst"))))
-              .filter(col("rk") <= K).select("src", "dst")
-              .localCheckpoint(true)
-          }
-        })
-      val truth = truthT()
-      val na = truth.select("src").distinct()
-        .agg(count(lit(1)).as("n_anchors"))
-      val rows = knns.indices.map { i =>
-        val g = knns(i)
-        val avg = g.agg(
-            sum(round(col("cos") * 10000).cast("long")).as("sc"),
-            count(lit(1)).as("ne"))
-          .select(expr("sc div ne").as("avg_cos_t"))
-        val hits = g.join(broadcast(truth), Seq("src", "dst"))
-          .agg(count(lit(1)).as("hits"))
-        // n_scored: round 0 paid for the init graph itself (its row
-        // count equals nUpdates(0), counted at build); round i for its
-        // anti-joined fresh candidates, OBSERVED at build (e147 rule)
-        val nscored = if (i == 0) nUpdates(0) else freshCounts(i - 1)
-        avg.crossJoin(hits).crossJoin(na)
-          .select(lit(i.toLong).as("round"),
-            lit(nscored).as("n_scored"),
-            lit(nUpdates(i)).as("n_updates"),
-            col("avg_cos_t"), col("hits"), col("n_anchors"))
-      }
-      rows.reduce(_ unionByName _)
-        .withColumn("recall_bp",
-          expr(s"hits * 10000 div (n_anchors * $K)"))
-        .withColumn("rt",
-          expr(s"10000 * (hits + 1) div (n_anchors * $K + 2)"))
-        .withColumn("sx",
-          expr(s"rt * (10000 - rt) div (n_anchors * $K + 2)"))
-        .withColumn("s0",
-          floor(sqrt(col("sx").cast("double"))).cast("long"))
-        .select(col("round"), col("n_scored"), col("n_updates"),
-          col("avg_cos_t"), col("recall_bp"),
-          (col("s0")
-            + when(col("s0") < 3037000499L &&
-                (col("s0") + 1) * (col("s0") + 1) <= col("sx"), 1L)
-              .otherwise(0L)
-            - when(col("s0") * col("s0") > col("sx"), 1L)
-              .otherwise(0L)).as("recall_se_bp"))
-        .orderBy("round")
+      val v = NnDescent.vectors(Tables.embeddings(s, dir), NnDescent.Float)
+      // anchor-truth leg overlapped with the build rounds
+      val truth = Adaptive.overlap(
+        NnDescent.anchorTruth(v.r, K, anchorBudget))
+      val (knns, freshes, updates) = e158Graph(v, K, maxRounds)
+      // n_scored: round 0 scored the init graph (updates(0) edges),
+      // round i its anti-joined fresh candidates
+      NnDescent.roundMetrics(knns, "cos", truth(), K,
+        "n_scored" -> (updates.head +: freshes), "n_updates" -> updates)
     }.withBuildOnly((s, dir) =>
       // production plan: the converged graph, no anchor-truth leg
-      e158BuildGraph(s, dir, K, maxRounds)._2.last)
+      e158Graph(NnDescent.vectors(Tables.embeddings(s, dir),
+        NnDescent.Float), K, maxRounds)._1.last)
   }
 
   // ---- e173: the kNN graph PERSISTED and folded across the boundary -------
@@ -5441,8 +4893,8 @@ object AnalysisQueries {
       scratchFinal: DataFrame,
       scratchInitCount: Long, scratchFreshCounts: Vector[Long])
 
-  /** e173's build — NN-Descent (e158's new/old-flag loop body, FIXED
-    * round counts so the oracle unrolls statically) run three ways:
+  /** e173's build — NN-Descent ([[NnDescent.flaggedRound]] for FIXED
+    * round counts, so the oracle unrolls statically) run three ways:
     *
     *  1. BASE: ring-init + `baseRounds` over the base generation
     *     (hash-mod-5 ≠ 4 of vec_id, ~80 %), final graph WRITTEN TO
@@ -5460,10 +4912,9 @@ object AnalysisQueries {
     * (where fold and scratch both reach the exact kNN graph and must
     * agree edge-for-edge) through the same code.
     *
-    * `production = true` is the steady-state maintenance posture
-    * (VERDICT r14 #5's lesson applied up front): the base build +
-    * persist is FINGERPRINT-AMORTIZED ([[graft.sources.Layout
-    * .amortize]] — when the store already matches the source scan, the
+    * `production = true` is the steady-state maintenance posture: the
+    * base build + persist is FINGERPRINT-AMORTIZED ([[graft.sources
+    * .Layout.amortize]] — when the store already matches the source scan, the
     * base loop never even runs and the invocation is fold-only, which
     * IS the per-delta cost the stored posture buys), the scratch
     * reference leg is skipped entirely (it is the audit), and every
@@ -5478,105 +4929,31 @@ object AnalysisQueries {
       storePath: String, production: Boolean = false): E173Legs = {
     import graft.operators.Indexing
     import graft.operators.ConnectedComponents.releaseLocalCheckpoint
-    val u = emb
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
-      .filter(col("nrm") > 0)
-      .withColumn("uv", transform(col("v"), x => x / col("nrm")))
-      .select(col("vec_id"), col("uv"))
-    val r = Indexing.withGlobalIndex(u, col("vec_id"), "rid")
-      .localCheckpoint(true)
-    // measured-size build-side choice (the e147 rule): broadcast the
-    // checkpointed vector/graph projections into the loop joins only
-    // under the session threshold — at 100 TB the plan is unchanged.
-    val n = r.count()
-    def rB(sel: DataFrame, bytesPerRow: Long): DataFrame =
-      graft.operators.Adaptive.bcastIfSmall(sel, n, bytesPerRow)
-    def knnB(sel: DataFrame): DataFrame =
-      graft.operators.Adaptive.bcastIfSmall(sel, n * K, 48L)
+    val v = NnDescent.vectors(emb, NnDescent.Float)
+    val r = v.r
     val gens = r.select(col("vec_id"),
       expr("(((vec_id % 1000003) * 2654435761) % 1000000007) % 5 = 4")
         .as("is_fresh"))
-    def scoreEdges(edges: DataFrame): DataFrame =
-      edges
-        .join(rB(r.select(col("vec_id").as("dst"), col("uv").as("uc")),
-          600L), "dst")
-        .join(rB(r.select(col("vec_id").as("src"), col("uv").as("ua")),
-          600L), "src")
-        .select(col("src"), col("dst"),
-          (round(F.array_dot(col("ua"), col("uc")), 4) + lit(0d))
-            .as("cos"))
-    // ring init: srcIdx rows (vec_id, rid — rid in DST-INDEX space)
-    // each propose K successors around the dst index's id ring; the
-    // dst-index count is a bounded collected scalar (one job over a
-    // checkpoint) so the ring arithmetic is a literal, not a
-    // broadcast-crossJoin
-    def ringInit(srcIdx: DataFrame, dstIdx: DataFrame): DataFrame = {
-      val nd = dstIdx.count()
-      srcIdx.select(col("vec_id").as("src"), col("rid"))
-        .select(col("src"), col("rid"), lit(nd).as("n"),
-          explode(sequence(lit(1), lit(K))).as("o"))
-        .withColumn("nbr", (col("rid") + col("o")) % col("n"))
-        .join(graft.operators.Adaptive.bcastIfSmall(
-          dstIdx.select(col("vec_id").as("dst"), col("rid").as("rid2")),
-          nd, 48L), col("rid2") === col("nbr"))
-        .select("src", "dst")
-    }
-    // e158's loop body with the convergence stop dropped (fixed
-    // rounds keep all three legs statically oracle-unrollable); only
-    // the N·K-row post-top-K graph is checkpointed per round — the
-    // fresh candidate set stays lazy (the e158 OOM lesson)
-    def loop(knnf0: DataFrame, rounds: Int)
-        : (DataFrame, Vector[Long]) = {
-      var knn = knnf0.localCheckpoint(true)
-      val freshes =
-        scala.collection.mutable.ArrayBuffer.empty[Long]
-      // production: intermediate rounds are released as soon as the
-      // next one lands, and the fresh frames (which reference them)
-      // are withheld — only the final graph's checkpoint survives
-      for (_ <- 1 to rounds) {
-        val rev = knn
-          .withColumn("rr", row_number().over(
-            Window.partitionBy(col("dst")).orderBy(col("src"))))
-          .filter(col("rr") <= K)
-          .select(col("dst").as("src"), col("src").as("dst"),
-            col("is_new"))
-        val und = knn.select("src", "dst", "is_new").unionByName(rev)
-          .groupBy("src", "dst").agg(max(col("is_new")).as("is_new"))
-        val cand = und.select(col("src").as("w"), col("dst").as("a"),
-            col("is_new").as("na"))
-          .join(und.select(col("src").as("w"), col("dst").as("c"),
-            col("is_new").as("nc")), "w")
-          .filter(col("a") =!= col("c") && (col("na") || col("nc")))
-          .select(col("a").as("src"), col("c").as("dst")).distinct()
-        // anti/left probes against the N·K-row checkpointed graph ride
-        // the measured-size broadcast rule; the fresh count is
-        // OBSERVED during the round's checkpoint (e147's rule: the
-        // audit's n_scored no longer re-executes the lazy candidate
-        // pipeline in the consuming job)
-        val obsF = new org.apache.spark.sql.Observation(
-          s"e173_fresh_${java.util.UUID.randomUUID}")
-        val fresh = cand.join(knnB(knn.select("src", "dst")),
-          Seq("src", "dst"), "left_anti")
-          .observe(obsF, count(lit(1)).as("n"))
-        val w = Window.partitionBy(col("src"))
-          .orderBy(col("cos").desc, col("dst"))
-        val top = knn.select("src", "dst", "cos")
-          .unionByName(scoreEdges(fresh))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= K)
-          .select("src", "dst", "cos")
-        val next = top
-          .join(knnB(knn.select(col("src"), col("dst"),
-            lit(true).as("was"))), Seq("src", "dst"), "left")
-          .withColumn("is_new", col("was").isNull).drop("was")
-          .localCheckpoint(true)
-        freshes += obsF.get("n").asInstanceOf[Long]
+    // one leg: `stored` edges (old) ∪ the scored ring init (new), then
+    // `rounds` flagged rounds; the init size is observed inside the
+    // first checkpoint. In production each dead round is released as
+    // soon as the next lands, so only the final graph stays pinned.
+    def leg(init: DataFrame, stored: Option[DataFrame], rounds: Int)
+        : (Long, DataFrame, Vector[Long]) = {
+      val obs = new org.apache.spark.sql.Observation(
+        s"e173_init_${java.util.UUID.randomUUID}")
+      val fresh = v.score(init.observe(obs, count(lit(1)).as("n")))
+        .withColumn("is_new", lit(true))
+      var knn = stored.fold(fresh)(_.select("src", "dst", "cos")
+          .withColumn("is_new", lit(false)).unionByName(fresh))
+        .localCheckpoint(true)
+      val freshes = (1 to rounds).map { _ =>
+        val (next, nFresh, _) = NnDescent.flaggedRound(v, knn, K)
         if (production) releaseLocalCheckpoint(knn)
         knn = next
+        nFresh
       }
-      (knn, freshes.toVector)
+      (obs.get("n").asInstanceOf[Long], knn, freshes.toVector)
     }
     var baseInitCount: Long = 0L
     var bF: Vector[Long] = Vector.empty
@@ -5585,20 +4962,13 @@ object AnalysisQueries {
         r.join(gens.filter(col("is_fresh") === false).select("vec_id"),
           "vec_id").select("vec_id", "uv"),
         col("vec_id"), "rid").localCheckpoint(true)
-      // init count observed during the loop's first checkpoint (the
-      // fresh-count rule above)
-      val obsI = new org.apache.spark.sql.Observation(
-        s"e173_binit_${java.util.UUID.randomUUID}")
-      val baseInit = ringInit(rb, rb)
-        .observe(obsI, count(lit(1)).as("n"))
-      val (baseFinal, f) =
-        loop(scoreEdges(baseInit).withColumn("is_new", lit(true)),
-          baseRounds)
-      baseInitCount = obsI.get("n").asInstanceOf[Long]
+      val (nInit, baseFinal, f) =
+        leg(NnDescent.ringInit(rb, rb, rb.count(), K), None, baseRounds)
+      baseInitCount = nInit
       bF = f
-      // the storage boundary: the converged base graph leaves the plan
-      // as parquet (N·K rows — one file, the e156b sizing note) and
-      // comes back as a fresh scan the fold cannot see past
+      // the storage boundary: the base graph leaves the plan as parquet
+      // (N·K rows — one file) and comes back as a fresh scan the fold
+      // cannot see past
       baseFinal.select("src", "dst", "cos").coalesce(1)
         .write.mode("overwrite").parquet(storePath)
       if (production) {
@@ -5607,20 +4977,12 @@ object AnalysisQueries {
       }
     }
     // the scratch reference is the AUDIT — production never pays it;
-    // it depends only on r, so it runs on a driver thread OVERLAPPED
-    // with the base build + fold (guide-pattern overlap, r17)
+    // it depends only on r, so it runs on a driver thread overlapped
+    // with the base build + fold
     val scratchT: () => (Long, DataFrame, Vector[Long]) =
       if (production) () => (0L, s.emptyDataFrame, Vector.empty)
-      else graft.operators.Adaptive.overlap {
-        val obsSI = new org.apache.spark.sql.Observation(
-          s"e173_sinit_${java.util.UUID.randomUUID}")
-        val si = ringInit(r.select("vec_id", "rid"), r)
-          .observe(obsSI, count(lit(1)).as("n"))
-        val (sf, sfr) =
-          loop(scoreEdges(si).withColumn("is_new", lit(true)),
-            scratchRounds)
-        (obsSI.get("n").asInstanceOf[Long], sf, sfr)
-      }
+      else graft.operators.Adaptive.overlap(
+        leg(NnDescent.ringInit(r, r, r.count(), K), None, scratchRounds))
     // steady state: skip the base loop entirely when the store already
     // matches the source scan (file-backed sources only — a fixture
     // frame has no files to fingerprint and always rebuilds)
@@ -5635,16 +4997,8 @@ object AnalysisQueries {
     val rf = r
       .join(gens.filter(col("is_fresh")).select("vec_id"), "vec_id")
       .select("vec_id", "rid")
-    val obsFI = new org.apache.spark.sql.Observation(
-      s"e173_finit_${java.util.UUID.randomUUID}")
-    val foldInit = ringInit(rf, r)
-      .observe(obsFI, count(lit(1)).as("n"))
-    val fknnf0 = stored.select("src", "dst", "cos")
-      .withColumn("is_new", lit(false))
-      .unionByName(scoreEdges(foldInit)
-        .withColumn("is_new", lit(true)))
-    val (foldFinal, fF) = loop(fknnf0, foldRounds)
-    val foldInitCount = obsFI.get("n").asInstanceOf[Long]
+    val (foldInitCount, foldFinal, fF) =
+      leg(NnDescent.ringInit(rf, r, r.count(), K), Some(stored), foldRounds)
     val (scratchInitCount, scratchFinal, sF) = scratchT()
     if (production) {
       // r's checkpoint is the last non-returned pin; releasing it
@@ -5752,7 +5106,43 @@ object AnalysisQueries {
     built
   }
 
-  private def e173Dot(x: String, y: String): String =
+  /** DuckDB twin of [[NnDescent.anchorTruth]] over relation `rel`:
+    * CTEs anch<t>, tr<t>0 and truth<t>, ending in a comma.
+    */
+  private def anchorTruthDuck(rel: String, t: String, K: Int,
+      budget: Int): String =
+    s"""anch$t AS MATERIALIZED (SELECT vec_id FROM (
+       |    SELECT vec_id,
+       |      ((vec_id % 1000003) * 2654435761) % 1000000007 AS ah
+       |    FROM $rel) t
+       |  QUALIFY row_number() OVER (ORDER BY ah, vec_id)
+       |    <= $budget),
+       |tr${t}0 AS (SELECT a.vec_id AS src, c.vec_id AS dst,
+       |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos
+       |  FROM anch$t an JOIN $rel a ON a.vec_id = an.vec_id
+       |  JOIN $rel c ON c.vec_id <> a.vec_id),
+       |truth$t AS MATERIALIZED (SELECT src, dst FROM tr${t}0
+       |  QUALIFY row_number() OVER (PARTITION BY src
+       |    ORDER BY cos DESC, dst) <= $K),""".stripMargin
+
+  /** DuckDB twin of [[NnDescent.withRecall]] over `mraw`: CTEs m1..m3
+    * ending in s0 = floor(sqrt(sx)), which the caller corrects.
+    */
+  private def recallDuck(K: Int): String =
+    s"""m1 AS (SELECT *,
+       |    CAST(hits * 10000 // (n_anchors * $K) AS BIGINT)
+       |      AS recall_bp,
+       |    10000 * (hits + 1) // (n_anchors * $K + 2) AS rt FROM mraw),
+       |m2 AS (SELECT *,
+       |    rt * (10000 - rt) // (n_anchors * $K + 2) AS sx FROM m1),
+       |m3 AS (SELECT *,
+       |    CAST(floor(sqrt(CAST(sx AS DOUBLE))) AS BIGINT) AS s0
+       |  FROM m2)""".stripMargin
+
+  /** DuckDB twin of [[F.array_dot]] over 64-dim lists: a sequential
+    * fold, so the doubles match the Spark side bit for bit.
+    */
+  private def vecDotDuck(x: String, y: String): String =
     s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
        |      list_transform(range(1, 65), i -> $x[i] * $y[i])),
        |      (s, v) -> s + v)""".stripMargin
@@ -5781,7 +5171,7 @@ object AnalysisQueries {
          |  LEFT JOIN ${p}knnf$i k ON k.src = c.src AND k.dst = c.dst
          |  WHERE k.src IS NULL),
          |${p}sc$i AS (SELECT f.src, f.dst,
-         |    round(${e173Dot("a.uv", "c.uv")}, 4) + 0 AS cos
+         |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos
          |  FROM ${p}fresh$i f JOIN r a ON a.vec_id = f.src
          |  JOIN r c ON c.vec_id = f.dst),
          |${p}top$i AS (SELECT src, dst, cos FROM (
@@ -5804,7 +5194,7 @@ object AnalysisQueries {
     s"""b AS (SELECT vec_id,
        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
        |  FROM embeddings),
-       |n0 AS (SELECT vec_id, v, sqrt(${e173Dot("v", "v")}) AS nrm
+       |n0 AS (SELECT vec_id, v, sqrt(${vecDotDuck("v", "v")}) AS nrm
        |  FROM b),
        |u AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS uv
        |  FROM n0 WHERE nrm > 0),
@@ -5826,7 +5216,7 @@ object AnalysisQueries {
        |  CROSS JOIN (SELECT unnest(range(1, ${K + 1})) AS o) os
        |  JOIN rb c ON c.rid = (a.rid + os.o) % nb.n),
        |bknnf0 AS MATERIALIZED (SELECT k.src, k.dst,
-       |    round(${e173Dot("a.uv", "c.uv")}, 4) + 0 AS cos,
+       |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos,
        |    TRUE AS is_new
        |  FROM bknn0 k JOIN r a ON a.vec_id = k.src
        |  JOIN r c ON c.vec_id = k.dst),
@@ -5842,7 +5232,7 @@ object AnalysisQueries {
        |  SELECT src, dst, cos, FALSE AS is_new FROM bknnf$B
        |  UNION ALL
        |  SELECT k.src, k.dst,
-       |    round(${e173Dot("a.uv", "c.uv")}, 4) + 0 AS cos,
+       |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos,
        |    TRUE AS is_new
        |  FROM finit k JOIN r a ON a.vec_id = k.src
        |  JOIN r c ON c.vec_id = k.dst),
@@ -5852,7 +5242,6 @@ object AnalysisQueries {
     val K = E173K
     val B = E173B; val Fr = E173F; val S = E173S
     val anchorBudget = 64
-    def dotD(x: String, y: String): String = e173Dot(x, y)
     def legRounds(p: String, rounds: Int): String =
       e173LegRoundsDuck(p, rounds, K)
     def scoredSum(p: String, init: String, rounds: Int): String =
@@ -5889,37 +5278,13 @@ object AnalysisQueries {
          |  CROSS JOIN (SELECT unnest(range(1, ${K + 1})) AS o) os
          |  JOIN r c ON c.rid = (a.rid + os.o) % nn.n),
          |sknnf0 AS MATERIALIZED (SELECT k.src, k.dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos,
+         |    round(${vecDotDuck("a.uv", "c.uv")}, 4) + 0 AS cos,
          |    TRUE AS is_new
          |  FROM sknn0 k JOIN r a ON a.vec_id = k.src
          |  JOIN r c ON c.vec_id = k.dst),
          |${legRounds("s", S)}
-         |anch AS MATERIALIZED (SELECT vec_id FROM (
-         |    SELECT vec_id,
-         |      ((vec_id % 1000003) * 2654435761) % 1000000007 AS ah
-         |    FROM r) t
-         |  QUALIFY row_number() OVER (ORDER BY ah, vec_id)
-         |    <= $anchorBudget),
-         |tr0 AS (SELECT a.vec_id AS src, c.vec_id AS dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos
-         |  FROM anch an JOIN r a ON a.vec_id = an.vec_id
-         |  JOIN r c ON c.vec_id <> a.vec_id),
-         |truth AS MATERIALIZED (SELECT src, dst FROM tr0
-         |  QUALIFY row_number() OVER (PARTITION BY src
-         |    ORDER BY cos DESC, dst) <= $K),
-         |anchb AS MATERIALIZED (SELECT vec_id FROM (
-         |    SELECT vec_id,
-         |      ((vec_id % 1000003) * 2654435761) % 1000000007 AS ah
-         |    FROM rb) t
-         |  QUALIFY row_number() OVER (ORDER BY ah, vec_id)
-         |    <= $anchorBudget),
-         |trb0 AS (SELECT a.vec_id AS src, c.vec_id AS dst,
-         |    round(${dotD("a.uv", "c.uv")}, 4) + 0 AS cos
-         |  FROM anchb an JOIN rb a ON a.vec_id = an.vec_id
-         |  JOIN rb c ON c.vec_id <> a.vec_id),
-         |truthb AS MATERIALIZED (SELECT src, dst FROM trb0
-         |  QUALIFY row_number() OVER (PARTITION BY src
-         |    ORDER BY cos DESC, dst) <= $K),
+         |${anchorTruthDuck("r", "", K, anchorBudget)}
+         |${anchorTruthDuck("rb", "b", K, anchorBudget)}
          |sb AS MATERIALIZED (SELECT k.src, k.dst FROM sknnf$S k
          |  JOIN gens g ON g.vec_id = k.src WHERE NOT g.is_fresh),
          |mraw AS (
@@ -5951,48 +5316,22 @@ object AnalysisQueries {
          |FROM m3 ORDER BY leg""".stripMargin) { (s, dir) =>
       val legs = e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
         Scratch.dir(s, "e173") + "/knn_base")
-      def anchorTruth(idx: DataFrame): DataFrame = {
-        val anchors = idx
-          .withColumn("ah",
-            expr("((vec_id % 1000003) * 2654435761) % 1000000007"))
-          .orderBy(col("ah"), col("vec_id")).limit(anchorBudget)
-          .select(col("vec_id").as("src"), col("uv").as("ua"))
-        idx.select(col("vec_id").as("dst"), col("uv").as("uc"))
-          .join(broadcast(anchors), col("dst") =!= col("src"))
-          .select(col("src"), col("dst"),
-            (round(F.array_dot(col("ua"), col("uc")), 4) + lit(0d))
-              .as("cos"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("src"))
-              .orderBy(col("cos").desc, col("dst"))))
-          .filter(col("rk") <= K).select("src", "dst")
-          .localCheckpoint(true)
-      }
-      val truth = anchorTruth(legs.r.select("vec_id", "uv"))
-      val truthB = anchorTruth(legs.r
+      val truth = NnDescent.anchorTruth(legs.r.select("vec_id", "uv"), K,
+        anchorBudget)
+      val truthB = NnDescent.anchorTruth(legs.r
         .join(legs.gens.filter(col("is_fresh") === false)
           .select("vec_id"), "vec_id")
-        .select("vec_id", "uv"))
+        .select("vec_id", "uv"), K, anchorBudget)
       val sb = legs.scratchFinal.select("src", "dst")
         .join(legs.gens.filter(col("is_fresh") === false)
           .select(col("vec_id").as("src")), "src")
       def legRowDf(leg: String, rounds: Int, init: Long,
           freshes: Seq[Long], fin: DataFrame, truthRel: DataFrame,
           ref: Option[DataFrame]): DataFrame = {
-        // n_scored = init + per-round fresh counts, all OBSERVED at
-        // build time (e147's rule — the consuming job no longer
-        // re-executes any lazy candidate pipeline for the audit)
+        // n_scored = init + per-round fresh counts, all observed at
+        // build time
         val nNodes = fin.select("src").distinct()
           .agg(count(lit(1)).as("n_nodes"))
-        val avg = fin.agg(
-            sum(round(col("cos") * 10000).cast("long")).as("scs"),
-            count(lit(1)).as("ne"))
-          .select(expr("scs div ne").as("avg_cos_t"))
-        // truthRel is anchor-bounded by construction (≤ 64·K rows)
-        val hits = fin.join(broadcast(truthRel), Seq("src", "dst"))
-          .agg(count(lit(1)).as("hits"))
-        val na = truthRel.select("src").distinct()
-          .agg(count(lit(1)).as("n_anchors"))
         val diff = ref match {
           case Some(b) =>
             fin.select("src", "dst")
@@ -6005,8 +5344,9 @@ object AnalysisQueries {
           case None =>
             legs.r.limit(1).select(lit(0L).as("n_edge_diff"))
         }
-        nNodes.crossJoin(avg).crossJoin(hits)
-          .crossJoin(na).crossJoin(diff)
+        nNodes
+          .crossJoin(NnDescent.graphStats(fin, "cos", "avg_cos_t", truthRel))
+          .crossJoin(NnDescent.nAnchors(truthRel)).crossJoin(diff)
           .select(lit(leg).as("leg"), col("n_nodes"),
             lit(rounds.toLong).as("n_rounds"),
             lit(init + freshes.sum).as("n_scored"),
@@ -6021,24 +5361,10 @@ object AnalysisQueries {
           Some(legs.scratchFinal.select("src", "dst"))))
         .unionByName(legRowDf("scratch", S, legs.scratchInitCount,
           legs.scratchFreshCounts, legs.scratchFinal, truth, None))
-      rows
-        .withColumn("recall_bp",
-          expr(s"hits * 10000 div (n_anchors * $K)"))
-        .withColumn("rt",
-          expr(s"10000 * (hits + 1) div (n_anchors * $K + 2)"))
-        .withColumn("sx",
-          expr(s"rt * (10000 - rt) div (n_anchors * $K + 2)"))
-        .withColumn("s0",
-          floor(sqrt(col("sx").cast("double"))).cast("long"))
+      NnDescent.withRecall(rows, K)
         .select(col("leg"), col("n_nodes"), col("n_rounds"),
           col("n_scored"), col("avg_cos_t"), col("recall_bp"),
-          (col("s0")
-            + when(col("s0") < 3037000499L &&
-                (col("s0") + 1) * (col("s0") + 1) <= col("sx"), 1L)
-              .otherwise(0L)
-            - when(col("s0") * col("s0") > col("sx"), 1L)
-              .otherwise(0L)).as("recall_se_bp"),
-          col("n_edge_diff"))
+          col("recall_se_bp"), col("n_edge_diff"))
         .orderBy("leg")
     }.withBuildOnly((s, dir) =>
       // production: fingerprint-amortized base build + persist, then

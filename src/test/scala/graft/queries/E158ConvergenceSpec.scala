@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
-import graft.functions.F
+import graft.operators.NnDescent
 
 /** Pins e158's CONVERGENCE STOP — the code path the shipped testdata
   * never exercises: the synthetic embeddings are isotropic noise (the
@@ -45,8 +45,10 @@ class E158ConvergenceSpec extends SparkSpecBase {
     pts.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     try {
-      val (r, knns, freshes, nUpdates) =
-        AnalysisQueries.e158BuildGraph(spark, dir, K, maxRounds)
+      val v = NnDescent.vectors(
+        graft.sources.Tables.embeddings(spark, dir), NnDescent.Float)
+      val (knns, freshes, nUpdates) =
+        AnalysisQueries.e158Graph(v, K, maxRounds)
       // (a) + (b): a zero-update round happened and ended the loop
       assert(nUpdates.last === 0L,
         s"loop must end on a zero-update round: $nUpdates")
@@ -65,7 +67,7 @@ class E158ConvergenceSpec extends SparkSpecBase {
       } yield (s, d)).toSet
       assert(got === want,
         "converged graph must equal the exact within-cluster kNN graph")
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(r)
+      graft.operators.ConnectedComponents.releaseLocalCheckpoint(v.r)
       knns.foreach(
         graft.operators.ConnectedComponents.releaseLocalCheckpoint)
     } finally {

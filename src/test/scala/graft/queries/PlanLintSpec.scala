@@ -88,14 +88,15 @@ class PlanLintSpec extends SparkSpecBase {
       "e146_isotonic_calibration", // the non-equi (j ≤ i ≤ k) joins
                                    // ride the ≤ 50-row bin grid —
                                    // construction-bounded, e115 pattern
-      "e147_nn_descent", "e147b_nn_descent_int8", // 1-row metric frames (the
-                         // q8 pattern), the 1-row count broadcast under
-                         // the ring init, and the 64-anchor (constant
-                         // budget, r12) truth join — the e5/e110 pattern
+      "e147_nn_descent", "e147b_nn_descent_int8", // operators.NnDescent:
+                         // 1-row metric frames (roundMetrics, the q8
+                         // pattern), the 1-row count broadcast under
+                         // ringInit, and the 64-anchor (constant budget)
+                         // anchorTruth join — the e5/e110 pattern
       "e5b_cosine_topk_int8", // e5's guarded/chunked query broadcast,
                               // carrying int8 codes instead of doubles
-      "e158_nn_descent_inc", // e147's frames: 1-row metrics, ring-init
-                             // count, 64-anchor truth join
+      "e158_nn_descent_inc", // e147's NnDescent frames: 1-row metrics,
+                             // ring-init count, 64-anchor truth join
       "e151_grid_density", // one-row point-total broadcast under the
                            // census, the e133 pattern (the 8-offset
                            // neighbor probes are equi-joins by design)
@@ -131,7 +132,7 @@ class PlanLintSpec extends SparkSpecBase {
       "e170_ivf_resplit_persist", // e167's one-row capacity frame, off
                                   // the persisted index (the codebook
                                   // join is an equi-join on list_id)
-      "e173_knn_persist_fold", // e158's frames three-legged: per-leg
+      "e173_knn_persist_fold", // e158's NnDescent frames three-legged: per-leg
                                // 1-row metric/count crosses, ring-init
                                // count broadcasts, 64-anchor truth
                                // joins (constant budget, the e5/e110
@@ -139,7 +140,7 @@ class PlanLintSpec extends SparkSpecBase {
                                // or the anchor constant
       "e175_modularity", // three one-row frames (m, intra, Σd²)
                          // crossed per method — the q8 pattern
-      "e176_knn_store_clusters", // e173's ring-init 1-row count
+      "e176_knn_store_clusters", // e173's NnDescent.ringInit 1-row count
                                  // broadcasts under the fold replay —
                                  // the e158 bound; the mutual join and
                                  // census are equi-joins

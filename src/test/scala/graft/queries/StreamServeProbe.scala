@@ -28,9 +28,7 @@ object StreamServeProbe {
       (p * xs.size).toInt))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Graft.builder(Some(32)).master("local[32]")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =

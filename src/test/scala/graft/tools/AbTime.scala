@@ -26,9 +26,7 @@ object AbTime {
     val confA = parse("AB_CONF_A")
     val confB = parse("AB_CONF")
     def session(conf: Seq[(String, String)]): SparkSession = {
-      val b = SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
+      val b = graft.Graft.builder(Some(cpus.toInt)).master(s"local[$cpus]")
         .config("spark.ui.enabled", "false")
       conf.foreach { case (k, v) => b.config(k, v) }
       val s = b.getOrCreate()

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool for the optimization rounds: writes each named query's
   * `.explain("formatted")` output to plans/<tag>/<name>_<suffix>.txt so
@@ -20,9 +19,8 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("PLAN_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Graft.builder(Some(cpus.toInt))
+      .master(s"local[$cpus]")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("PLAN_DIR", "/root/testdata/sf0.1")

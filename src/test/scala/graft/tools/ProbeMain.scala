@@ -1,13 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scratch plan/timing probe (dev only, not registered anywhere). */
 object ProbeMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Graft.builder(Some(32)).master("local[32]")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("PROBE_DIR", "/root/testdata/sf0.1")

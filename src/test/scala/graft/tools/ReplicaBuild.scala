@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the dup-heavy replica corpora the SCALING.md probes run on
@@ -20,9 +19,7 @@ object ReplicaBuild {
     val n = if (args.nonEmpty) args(0).toInt else 10
     val out = if (args.length > 1) args(1) else s"/tmp/probe${n}x"
     val src = sys.env.getOrElse("REPLICA_SRC", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Graft.builder(Some(32)).master("local[32]")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def replicate(table: String, idCols: Seq[String]): Unit = {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-stage profiler (r17 optimization rounds): runs named
   * SparkEntry queries once warmed, once timed, and dumps every stage's
@@ -17,9 +16,7 @@ object StageProfileMain {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("PROBE_CPUS", "32")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val b = graft.Graft.builder(Some(cpus.toInt)).master(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
     // PROBE_CONF="k=v;k=v" — A/B candidate session configs
     sys.env.getOrElse("PROBE_CONF", "").split(";")
