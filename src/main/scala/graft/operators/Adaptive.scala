@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
 /** Data-driven build-side selection for joins whose inputs are
-  * checkpoint-backed (LogicalRDD) frames — the r17 optimization round's
-  * shuffle-removal lever for the iterative families (guide §3.1).
+  * checkpoint-backed frames — the shuffle-removal lever for the
+  * iterative families.
   *
   * A localCheckpoint'ed frame reports NO size statistics, so Catalyst
   * plans every join against it as a sort-merge join; AQE converts to a
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions.broadcast
   * go straight to BHJ with no exchange on either side. Results are
   * unaffected (inner/left equi-joins are strategy-independent).
   */
-object Adaptive {
+object Adaptive extends org.apache.spark.internal.Logging {
 
   /** Session broadcast threshold in bytes; <= 0 disables broadcasting
     * (mirrors Spark's own contract for autoBroadcastJoinThreshold).
@@ -55,8 +55,9 @@ object Adaptive {
     * data dependency on the caller's in-flight work. Callers: the
     * refresh loop's per-table stage+load ([[graft.pipeline.Ingest]])
     * and mart table writes ([[graft.models.Models.dbtRun]]), CC audit
-    * legs and anchor-truth tables in the query families, and
-    * [[NeighborhoodFunction]]'s estimate leg.
+    * legs and anchor-truth tables in the query families, and, through
+    * [[Pins.overlap]], [[NeighborhoodFunction]]'s estimate leg and
+    * e173's scratch leg.
     *
     * The body runs on a DEDICATED per-call daemon thread, not a pool:
     * a pooled thread keeps the Spark local properties (job group, job
@@ -87,7 +88,7 @@ object Adaptive {
       try p.success(Success(body))
       catch {
         case e: Throwable =>
-          System.err.println(s"graft.Adaptive.overlap body failed: $e")
+          logWarning(s"graft.Adaptive.overlap body failed: $e")
           p.success(Failure(e))
           if (!NonFatal(e)) throw e
       }

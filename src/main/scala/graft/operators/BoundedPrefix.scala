@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Prefix primitives over construction-bounded frames WITHOUT an
-  * unpartitioned `Window.orderBy` (r18, guide §2 — VERDICT r17 item 4):
-  * a partitionSpec-less WindowExec moves its whole input to ONE task.
+  * unpartitioned `Window.orderBy`: a partitionSpec-less WindowExec
+  * moves its whole input to ONE task.
   * For the codomain-bounded frames these helpers serve (basis-point
   * frequency tables, length-support spines, quantity-bin grids) that
   * single task was never a 100 TB hazard, but it is a single-task sort
@@ -26,6 +26,12 @@ import org.apache.spark.sql.functions._
   * call sites pass GROUP BY results keyed on it), and `bucket` is
   * non-decreasing in `key` (e.g. `key div 64`). Values must be LongType
   * (integer engine arithmetic — the repo-wide rule).
+  *
+  * Both the within-bucket window and the bucket-totals branch read the
+  * input, so it is read twice. When it is an expensive subtree rather
+  * than a checkpoint or a cheap aggregate of one, the caller
+  * checkpoints it first and owns that pin (a [[Pins]] scope, or a
+  * [[Pins.slot]] when the pin rides the returned plan).
   */
 object BoundedPrefix {
 
@@ -37,17 +43,8 @@ object BoundedPrefix {
     * buckets) — exact integer identities.
     */
   def cumsum(df: DataFrame, key: String, bucket: Column,
-      sums: Seq[(String, String)],
-      materialize: Boolean = true): DataFrame = {
-    // eager checkpoint (default): the frame is bounded by contract, and
-    // BOTH the within-bucket window and the bucket-totals branch read
-    // it — the checkpoint pins ONE upstream execution instead of
-    // re-running a corpus-grain subtree per branch. Callers whose input
-    // is ALREADY checkpoint-backed (or a cheap aggregate of one) pass
-    // materialize = false: for them the duplicate read is a bounded
-    // re-aggregation, cheaper than an extra materialization job.
-    val in0 = df.withColumn("__b", bucket.cast("long"))
-    val in = if (materialize) in0.localCheckpoint(true) else in0
+      sums: Seq[(String, String)]): DataFrame = {
+    val in = df.withColumn("__b", bucket.cast("long"))
     val w = Window.partitionBy("__b").orderBy(key)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val within = sums.foldLeft(in) { case (d, (v, out)) =>
@@ -77,11 +74,8 @@ object BoundedPrefix {
     * the next key overall.
     */
   def leadKey(df: DataFrame, key: String, bucket: Column,
-      outName: String, materialize: Boolean = true): DataFrame = {
-    // eager checkpoint: same single-upstream-execution argument (and
-    // same materialize opt-out) as [[cumsum]]
-    val in0 = df.withColumn("__b", bucket.cast("long"))
-    val in = if (materialize) in0.localCheckpoint(true) else in0
+      outName: String): DataFrame = {
+    val in = df.withColumn("__b", bucket.cast("long"))
     val w = Window.partitionBy("__b").orderBy(key)
     val within = in.withColumn("__wl", lead(col(key), 1).over(w))
     val firsts = in.groupBy(col("__b").as("__fb"))

@@ -45,55 +45,52 @@ object KMeans {
     */
   def fit(
       points: DataFrame, idCol: String, vecCol: String, dims: Int,
-      k: Int, iters: Int): Array[Array[Double]] = {
+      k: Int, iters: Int): Array[Array[Double]] = Pins.scope { p =>
     // NULL vectors can't be assigned or averaged — drop them here, the
     // same never-matches semantics as the join operators' NULL keys.
     // Persisted for the fit: the distinct guard + k-1 farthest-point
     // scans + `iters` assignment passes each re-read the input, and the
     // training set is a SAMPLE by contract (codebook training reads a
-    // bounded draw, never the corpus), so it fits executor storage;
-    // released in the finally below.
-    val vecs = points.select(col(idCol).as("id"),
+    // bounded draw, never the corpus), so it fits executor storage; it
+    // is released with the scope.
+    val vecs = p.persist(points.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
-      .where(col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // k DISTINCT vectors, not just k rows: with fewer distinct points
-      // the farthest-point init would silently emit duplicate centroids
-      // (every remaining max-distance is 0), leaving permanently empty
-      // clusters in the codebook.
-      require(vecs.select("v").distinct().limit(k).count() == k,
-        s"need at least $k distinct points")
-      val first = vecs.orderBy("id").limit(1).select("v").head
-        .getSeq[Double](0).toArray
-      var centroids: Array[Array[Double]] = Array(first)
-      while (centroids.length < k) {
-        val dists = centroids.map(c => dist2(col("v"), c))
-        val nearest =
-          if (dists.length == 1) dists.head else least(dists.toIndexedSeq: _*)
-        val far = vecs
-          .agg(max(struct(nearest.as("d"), (-col("id")).as("ni"),
-            col("v").as("v"))).as("m"))
-          .select("m.v").head.getSeq[Double](0).toArray
-        centroids :+= far
-      }
+      .where(col("v").isNotNull))
+    // k DISTINCT vectors, not just k rows: with fewer distinct points
+    // the farthest-point init would silently emit duplicate centroids
+    // (every remaining max-distance is 0), leaving permanently empty
+    // clusters in the codebook.
+    require(vecs.select("v").distinct().limit(k).count() == k,
+      s"need at least $k distinct points")
+    val first = vecs.orderBy("id").limit(1).select("v").head
+      .getSeq[Double](0).toArray
+    var centroids: Array[Array[Double]] = Array(first)
+    while (centroids.length < k) {
+      val dists = centroids.map(c => dist2(col("v"), c))
+      val nearest =
+        if (dists.length == 1) dists.head else least(dists.toIndexedSeq: _*)
+      val far = vecs
+        .agg(max(struct(nearest.as("d"), (-col("id")).as("ni"),
+          col("v").as("v"))).as("m"))
+        .select("m.v").head.getSeq[Double](0).toArray
+      centroids :+= far
+    }
 
-      for (_ <- 0 until iters) {
-        val assigned = assign(vecs, centroids)
-        val sums = assigned
-          .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-          .groupBy("cluster", "dim")
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val next = centroids.map(_.clone())
-        sums.foreach { r =>
-          val c = r.getInt(0); val d = r.getInt(1)
-          next(c)(d) = r.getDouble(2) / r.getLong(3)
-        }
-        centroids = next
+    for (_ <- 0 until iters) {
+      val assigned = assign(vecs, centroids)
+      val sums = assigned
+        .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
+        .groupBy("cluster", "dim")
+        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+        .collect()
+      val next = centroids.map(_.clone())
+      sums.foreach { r =>
+        val c = r.getInt(0); val d = r.getInt(1)
+        next(c)(d) = r.getDouble(2) / r.getLong(3)
       }
-      centroids
-    } finally vecs.unpersist(false)
+      centroids = next
+    }
+    centroids
   }
 
   /** Squared L2 from array column `v` to the centroid literal `c`. */

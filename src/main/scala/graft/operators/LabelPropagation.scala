@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Synchronous label propagation over an undirected edge list — the
   * COMMUNITY reading of the dup graph, next to
@@ -37,8 +36,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale: per round, one edge⋈label join + two keyed aggregations over
   * the (node, candidate) vote table — bounded by Σ degree + |nodes|,
-  * never corpus-quadratic; per-round eager localCheckpoint with
-  * explicit release, the [[ConnectedComponents]] lineage discipline.
+  * never corpus-quadratic; each round is eagerly checkpointed in a
+  * [[Pins]] scope and the previous one released, the
+  * [[ConnectedComponents]] lineage discipline.
   */
 object LabelPropagation {
 
@@ -74,29 +74,14 @@ object LabelPropagation {
 
   private def run(
       edges: DataFrame, aCol: String, bCol: String,
-      rounds: Int, trackChurn: Boolean): (DataFrame, Seq[Long]) = {
-    require(rounds > 0, s"rounds must be positive, got $rounds")
-    val dir = edges.select(
-      col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-      .localCheckpoint(true)
-    val sym = dir.union(dir.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var labels = sym.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("community"))
-      .localCheckpoint(true)
-    // NO per-round label broadcast (r18): the r17 hint rebuilt a
-    // BroadcastExchange from each round's fresh checkpoint — the
-    // [[ConnectedComponents]] measurement (its scaladoc carries the
-    // A/B numbers); above the threshold it never fired, so removal is
-    // scale-neutral at 100 TB and strictly faster at local core counts.
-    def release(df: DataFrame): Unit =
-      ConnectedComponents.releaseLocalCheckpoint(df)
-    val churn = Seq.newBuilder[Long]
-    try {
+      rounds: Int, trackChurn: Boolean): (DataFrame, Seq[Long]) =
+    Pins.scope { p =>
+      require(rounds > 0, s"rounds must be positive, got $rounds")
+      val sym = p.persist(Pins.undirected(p, edges, aCol, bCol))
+      var labels = p.checkpoint(sym.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("community")))
+      // NO per-round label broadcast: the [[ConnectedComponents]] rule.
+      val churn = Seq.newBuilder[Long]
       for (_ <- 1 to rounds) {
         val votes = sym
           .join(labels.select(col("node").as("v"),
@@ -117,31 +102,21 @@ object LabelPropagation {
         // one job per round instead of two (the CC convergence rule);
         // the node sets agree exactly (argmax's nodes == labels' nodes,
         // both = sym's endpoint set), so the inner join drops nothing
-        val next = if (!trackChurn) argmax.localCheckpoint(true) else {
+        val next = if (!trackChurn) p.checkpoint(argmax) else {
           val obs = new org.apache.spark.sql.Observation(
             s"lpa_churn_${java.util.UUID.randomUUID}")
-          val cp = argmax
+          val cp = p.checkpoint(argmax
             .join(labels.select(col("node"),
               col("community").as("prev")), "node")
             .observe(obs, count(when(
               col("community") =!= col("prev"), lit(1))).as("c"))
-            .select(col("node"), col("community"))
-            .localCheckpoint(true)
-          // cp is materialized: a failing observation read must release
-          // it (the outer catch only sees `labels`) — the CC rule
-          try churn += obs.get("c").asInstanceOf[Long]
-          catch { case t: Throwable => release(cp); throw t }
+            .select(col("node"), col("community")))
+          churn += obs.get("c").asInstanceOf[Long]
           cp
         }
-        release(labels)
+        p.release(labels)
         labels = next
       }
-      (labels, churn.result())
-    } catch {
-      case t: Throwable => release(labels); throw t
-    } finally {
-      sym.unpersist()
-      release(dir)
+      (p.keep(labels), churn.result())
     }
-  }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Portable
 
@@ -44,14 +43,13 @@ import graft.functions.Portable
   *
   * Scale: per round, each leg is one edge⋈state join + one keyed
   * aggregation (max / distinct) — the CC cost class; per-round eager
-  * localCheckpoint cuts lineage (the [[ConnectedComponents]]
-  * discipline). Round frames stay live only until the (rounds+1)-row
-  * summary is eagerly checkpointed, then every one is released
-  * ([[ConnectedComponents.releaseLocalCheckpoint]]) — without that,
-  * each call pins rounds+1 materialized relations (the exact leg's
-  * component-quadratic) in executor storage for the session, the e129
-  * accumulation failure. Production runs [[hllOnly]] — the exact
-  * relation is precisely what a 100 TB graph cannot materialize.
+  * checkpoints cut lineage (the [[ConnectedComponents]] discipline).
+  * Round frames live in a [[Pins]] scope only until the
+  * (rounds+1)-row summary is eagerly checkpointed — otherwise each
+  * call would pin rounds+1 materialized relations (the exact leg's
+  * component-quadratic) in executor storage for the session.
+  * Production runs [[hllOnly]] — the exact relation is precisely what
+  * a 100 TB graph cannot materialize.
   */
 object NeighborhoodFunction {
 
@@ -89,39 +87,34 @@ object NeighborhoodFunction {
     */
   def neighborhood(
       edges: DataFrame, aCol: String, bCol: String,
-      rounds: Int): DataFrame = {
-    val (sym, release) = symmetrize(edges, aCol, bCol)
-    try {
-      // eager cache materialization: both overlapped legs read the
-      // persisted sym — without this count the forked HLL leg and the
-      // exact leg race to compute the cache's partitions, duplicating
-      // the symmetrize work (the count's ONLY remaining job since the
-      // r18 removal of the per-round broadcast rule it used to price)
-      sym.count()
-      val nodes = sym.select(col("u").as("node")).distinct()
-      // both summaries arrive eagerly checkpointed (rounds+1 rows):
-      // `ex` feeds both the round join and the np_last filter, so
-      // without it the component-quadratic tagged pair union would be
-      // aggregated TWICE — and the checkpoint is what lets each leg
-      // release its per-round frames before returning.
-      // The two legs share nothing downstream of (sym, nodes) — the
-      // HLL leg runs on a driver thread overlapped with the exact leg
-      // (guide-pattern overlap, r17).
-      val estT = graft.operators.Adaptive.overlap(
-        iterateHll(sym, nodes, rounds))
-      val ex = iterateExact(sym, nodes, rounds)
-      val est = estT()
-      val last = ex.filter(col("round") === rounds)
-        .select(col("n_pairs").as("np_last"))
-      ex.join(est, "round")
-        .crossJoin(broadcast(last))
-        .select(col("round"), col("n_pairs"), col("est_pairs"),
-          expr("abs(est_pairs - n_pairs) * 10000 div n_pairs")
-            .as("err_bp"),
-          expr("n_pairs * 10000 div np_last").as("frac_bp"),
-          col("z_total"))
-        .orderBy("round")
-    } finally release()
+      rounds: Int): DataFrame = Pins.scope { p =>
+    val sym = p.persist(Pins.undirected(p, edges, aCol, bCol))
+    // eager cache materialization: both overlapped legs read the
+    // persisted sym — without this count the forked HLL leg and the
+    // exact leg race to compute the cache's partitions, duplicating
+    // the symmetrize work
+    sym.count()
+    val nodes = sym.select(col("u").as("node")).distinct()
+    // both summaries arrive eagerly checkpointed (rounds+1 rows):
+    // `ex` feeds both the round join and the np_last filter, so
+    // without it the component-quadratic tagged pair union would be
+    // aggregated TWICE — and the checkpoint is what lets each leg
+    // release its per-round frames before returning.
+    // The two legs share nothing downstream of (sym, nodes) — the
+    // HLL leg runs on a driver thread overlapped with the exact leg.
+    val estT = p.overlap(p.own(iterateHll(sym, nodes, rounds)))
+    val ex = p.own(iterateExact(sym, nodes, rounds))
+    val est = estT()
+    val last = ex.filter(col("round") === rounds)
+      .select(col("n_pairs").as("np_last"))
+    p.keep(ex).join(p.keep(est), "round")
+      .crossJoin(broadcast(last))
+      .select(col("round"), col("n_pairs"), col("est_pairs"),
+        expr("abs(est_pairs - n_pairs) * 10000 div n_pairs")
+          .as("err_bp"),
+        expr("n_pairs * 10000 div np_last").as("frac_bp"),
+        col("z_total"))
+      .orderBy("round")
   }
 
   /** The production leg alone: (round, est_pairs, z_total) from the
@@ -130,105 +123,73 @@ object NeighborhoodFunction {
     */
   def hllOnly(
       edges: DataFrame, aCol: String, bCol: String,
-      rounds: Int): DataFrame = {
-    val (sym, release) = symmetrize(edges, aCol, bCol)
-    try {
-      val nodes = sym.select(col("u").as("node")).distinct()
-      iterateHll(sym, nodes, rounds).orderBy("round")
-    } finally release()
-  }
-
-  private def symmetrize(
-      edges: DataFrame, aCol: String,
-      bCol: String): (DataFrame, () => Unit) = {
-    val dir = edges.select(
-      col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-      .localCheckpoint(true)
-    val sym = dir.union(dir.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (sym, () => {
-      sym.unpersist()
-      ConnectedComponents.releaseLocalCheckpoint(dir)
-    })
+      rounds: Int): DataFrame = Pins.scope { p =>
+    val sym = p.persist(Pins.undirected(p, edges, aCol, bCol))
+    iterateHll(sym, sym.select(col("u").as("node")).distinct(), rounds)
+      .orderBy("round")
   }
 
   /** Exact leg: one (round, n_pairs) row per round from the iterated
     * sparse reachable relation; one job (the tagged union's aggregate)
-    * counts every round. Returns the summary eagerly checkpointed, with
-    * every per-round reach frame released — a failed job releases them
-    * via the finally.
+    * counts every round. Returns the summary eagerly checkpointed; the
+    * per-round reach frames die with the scope.
     */
   private def iterateExact(
-      sym: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      var reach = nodes.select(col("node"), col("node").as("r"))
-        .localCheckpoint(true)
-      frames += reach
+      sym: DataFrame, nodes: DataFrame, rounds: Int): DataFrame =
+    Pins.scope { p =>
+      var reach = p.checkpoint(nodes.select(col("node"), col("node").as("r")))
       val tagged = Seq.newBuilder[DataFrame]
       tagged += reach.select(lit(0L).as("round"), col("node"))
       for (t <- 1 to rounds) {
-        // NO per-round edge broadcast (r18): even for the
-        // round-invariant cached edge table, each round's job rebuilt
-        // its own BroadcastExchange — the [[ConnectedComponents]]
-        // per-round-broadcast lesson (interleaved A/B: e169 5.18 s
-        // hinted vs 5.00 s unhinted). The shuffle join plan is the one
-        // the 100 TB regime runs anyway.
-        reach = reach
+        // NO per-round edge broadcast: each round's job would rebuild
+        // its own BroadcastExchange (the [[ConnectedComponents]] rule;
+        // e169 5.18 s hinted vs 5.00 s unhinted).
+        reach = p.checkpoint(reach
           .unionByName(reach.select(col("node").as("v"), col("r"))
             .join(sym, "v")
             .select(col("u").as("node"), col("r")))
-          .distinct()
-          .localCheckpoint(true)
-        frames += reach
+          .distinct())
         tagged += reach.select(lit(t.toLong).as("round"), col("node"))
       }
-      tagged.result().reduce(_ unionByName _)
-        .groupBy("round").agg(count(lit(1)).as("n_pairs"))
-        .localCheckpoint(true)
-    } finally frames.foreach(ConnectedComponents.releaseLocalCheckpoint)
-  }
+      p.keep(p.checkpoint(tagged.result().reduce(_ unionByName _)
+        .groupBy("round").agg(count(lit(1)).as("n_pairs"))))
+    }
 
-  /** HLL leg: one (round, est_pairs, z_total) row per round from the
-    * iterated sparse register relation (node, j, mr). Returns the
-    * summary eagerly checkpointed, with every per-round register frame
-    * released (the exact leg's discipline). The tagged union is built
-    * LAZILY over the checkpointed round frames and aggregated straight
-    * into the summary — the production path never materializes a
-    * second full copy of the registers (that eager union exists only
-    * behind [[hllRegisters]], whose whole purpose is persisting it).
+  /** HLL leg: one (round, est_pairs, z_total) row per round, summarized
+    * from the [[registers]] union into an eager checkpoint; the
+    * per-round register frames die with the scope, and the production
+    * path never materializes a second full copy of the registers (that
+    * copy exists only behind [[hllRegisters]], whose whole purpose is
+    * persisting it).
     */
   private def iterateHll(
-      sym: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      var regs = selfRegs(nodes).localCheckpoint(true)
-      frames += regs
-      val tagged = Seq.newBuilder[DataFrame]
-      tagged += regs.withColumn("round", lit(0L))
-      for (t <- 1 to rounds) {
-        regs = hllRound(sym, regs)
-        frames += regs
-        tagged += regs.withColumn("round", lit(t.toLong))
-      }
-      summarizeHll(tagged.result().reduce(_ unionByName _))
-        .localCheckpoint(true)
-    } finally frames.foreach(ConnectedComponents.releaseLocalCheckpoint)
-  }
+      sym: DataFrame, nodes: DataFrame, rounds: Int): DataFrame =
+    Pins.scope { p =>
+      p.keep(p.checkpoint(summarizeRegisters(registers(p, sym, nodes, rounds))))
+    }
 
-  /** One register max-merge round, eagerly checkpointed; shuffle join
-    * deliberately (the iterateExact rule — no per-round broadcast). */
-  private def hllRound(sym: DataFrame, regs: DataFrame): DataFrame =
-    regs
-      .unionByName(regs
-        .select(col("node").as("v"), col("j"), col("mr"))
-        .join(sym, "v")
-        .select(col("u").as("node"), col("j"), col("mr")))
-      .groupBy("node", "j").agg(max(col("mr")).as("mr"))
-      .localCheckpoint(true)
+  /** The register loop: round 0 is [[selfRegs]], and each round
+    * max-merges the neighbors' previous registers, eagerly checkpointed
+    * in `p` (shuffle join deliberately — the iterateExact rule, no
+    * per-round broadcast). Returns the LAZY tagged union (round, node,
+    * j, mr) over the round frames.
+    */
+  private def registers(p: Pins, sym: DataFrame, nodes: DataFrame,
+      rounds: Int): DataFrame = {
+    var regs = p.checkpoint(selfRegs(nodes))
+    val tagged = Seq.newBuilder[DataFrame]
+    tagged += regs.withColumn("round", lit(0L))
+    for (t <- 1 to rounds) {
+      regs = p.checkpoint(regs
+        .unionByName(regs
+          .select(col("node").as("v"), col("j"), col("mr"))
+          .join(sym, "v")
+          .select(col("u").as("node"), col("j"), col("mr")))
+        .groupBy("node", "j").agg(max(col("mr")).as("mr")))
+      tagged += regs.withColumn("round", lit(t.toLong))
+    }
+    tagged.result().reduce(_ unionByName _)
+  }
 
   /** The tagged sparse register relation of every round — (round, node,
     * j, mr), ≤ 64·|V|·(rounds+1) rows at any corpus size — eagerly
@@ -237,41 +198,21 @@ object NeighborhoodFunction {
     * writes it to parquet once per generation and re-derives the whole
     * N(r) curve later with ONE scan ([[summarizeRegisters]]) instead of
     * re-iterating the generation's graph (e169's posture). The caller
-    * owns the returned checkpoint — write it out, then release it via
-    * [[ConnectedComponents.releaseLocalCheckpoint]].
+    * owns the returned checkpoint: write it out, then release it by
+    * owning it in a [[Pins]] scope.
     */
   def hllRegisters(
       edges: DataFrame, aCol: String, bCol: String,
-      rounds: Int): DataFrame = {
-    val (sym, release) = symmetrize(edges, aCol, bCol)
-    try taggedRegisters(
-      sym, sym.select(col("u").as("node")).distinct(), rounds)
-    finally release()
+      rounds: Int): DataFrame = Pins.scope { p =>
+    val sym = p.persist(Pins.undirected(p, edges, aCol, bCol))
+    p.keep(p.checkpoint(registers(
+      p, sym, sym.select(col("u").as("node")).distinct(), rounds)))
   }
 
   /** One-scan summary of a (possibly persisted) [[hllRegisters]]
     * relation: (round, est_pairs, z_total), the production columns.
     */
-  def summarizeRegisters(regs: DataFrame): DataFrame = summarizeHll(regs)
-
-  private def taggedRegisters(
-      sym: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      var regs = selfRegs(nodes).localCheckpoint(true)
-      frames += regs
-      val tagged = Seq.newBuilder[DataFrame]
-      tagged += regs.withColumn("round", lit(0L))
-      for (t <- 1 to rounds) {
-        regs = hllRound(sym, regs)
-        frames += regs
-        tagged += regs.withColumn("round", lit(t.toLong))
-      }
-      tagged.result().reduce(_ unionByName _).localCheckpoint(true)
-    } finally frames.foreach(ConnectedComponents.releaseLocalCheckpoint)
-  }
-
-  private def summarizeHll(tagged: DataFrame): DataFrame =
+  def summarizeRegisters(tagged: DataFrame): DataFrame =
     tagged
       .groupBy("round", "node")
       .agg(count(lit(1)).as("cnt"),

@@ -108,9 +108,12 @@ object NnDescent {
       .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
       .filter(col("nrm") > 0)
       .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("uv"))
-    val r = Indexing.withGlobalIndex(kernel.encode(u), col("vec_id"), "rid")
-      .localCheckpoint(true)
-    Vectors(r, r.count(), kernel)
+    Pins.scope { p =>
+      val r = p.checkpoint(
+        Indexing.withGlobalIndex(kernel.encode(u), col("vec_id"), "rid"))
+      val n = r.count()
+      Vectors(p.keep(r), n, kernel)
+    }
   }
 
   /** Ring init: each `srcIdx` row (vec_id, rid — rid in dstIdx's index
@@ -129,24 +132,27 @@ object NnDescent {
       .select("src", "dst")
 
   /** Ring init followed by `rounds` plain rounds: the checkpointed
-    * graphs 0..rounds and the pool sizes of rounds 1..rounds.
+    * graphs 0..rounds, all handed to the caller, and the pool sizes of
+    * rounds 1..rounds.
     */
   def plainBuild(v: Vectors, K: Int, rounds: Int)
-      : (Vector[DataFrame], Vector[Long]) = {
-    val knn0 = v.score(ringInit(v.r, v.r, v.n, K)).localCheckpoint(true)
-    (1 to rounds).foldLeft((Vector(knn0), Vector.empty[Long])) {
-      case ((knns, pools), _) =>
-        val (next, pool) = plainRound(v, knns.last, K)
-        (knns :+ next, pools :+ pool)
+      : (Vector[DataFrame], Vector[Long]) = Pins.scope { p =>
+    var knns = Vector(p.checkpoint(v.score(ringInit(v.r, v.r, v.n, K))))
+    val pools = Vector.fill(rounds) {
+      val (next, pool) = plainRound(p, v, knns.last, K)
+      knns :+= next
+      pool
     }
+    (knns.map(p.keep), pools)
   }
 
   /** One plain round on `knn` (src, dst, score): the pool is every
     * witness-sharing pair of knn ∪ capped reverse, plus knn itself; the
     * whole pool is scored and each src keeps its top K. Returns the
-    * checkpointed next graph and the pool size.
+    * next graph, checkpointed in `p`, and the pool size.
     */
-  def plainRound(v: Vectors, knn: DataFrame, K: Int): (DataFrame, Long) = {
+  def plainRound(p: Pins, v: Vectors, knn: DataFrame, K: Int)
+      : (DataFrame, Long) = {
     val und = knn.select("src", "dst").unionByName(reverse(knn, K, Nil))
     // no inner distinct: the pool's distinct dedups the union, one
     // exchange of the round's largest intermediate fewer
@@ -157,7 +163,7 @@ object NnDescent {
     val obs = observation("pool")
     val pool = cand.unionByName(knn.select("src", "dst")).distinct()
       .observe(obs, count(lit(1)).as("n"))
-    val next = topK(v.score(pool), v.kernel.score, K).localCheckpoint(true)
+    val next = p.checkpoint(topK(v.score(pool), v.kernel.score, K))
     (next, obs.get("n").asInstanceOf[Long])
   }
 
@@ -166,12 +172,12 @@ object NnDescent {
     * pairs with at least one new side are proposed (an old×old pair
     * was proposed when it last shared that witness). Candidates already
     * in knn are anti-joined away, so only fresh pairs are scored; the
-    * graph's own scores ride along by union. Returns the checkpointed
-    * next graph (is_new = edge not in knn), the fresh-candidate count
-    * and the update count; no new edge means every later round is a
-    * no-op.
+    * graph's own scores ride along by union. Returns the next graph
+    * (is_new = edge not in knn), checkpointed in `p`, the
+    * fresh-candidate count and the update count; no new edge means
+    * every later round is a no-op.
     */
-  def flaggedRound(v: Vectors, knn: DataFrame, K: Int)
+  def flaggedRound(p: Pins, v: Vectors, knn: DataFrame, K: Int)
       : (DataFrame, Long, Long) = {
     // the union can carry one edge forward-old and reverse-new: max()
     // keeps it new — a few extra candidates, never a missed one
@@ -194,12 +200,11 @@ object NnDescent {
     val top = topK(knn.select("src", "dst", s).unionByName(v.score(fresh)),
       s, K)
     val obsU = observation("upd")
-    val next = top
+    val next = p.checkpoint(top
       .join(graphB(knn.select(col("src"), col("dst"), lit(true).as("was"))),
         Seq("src", "dst"), "left")
       .withColumn("is_new", col("was").isNull).drop("was")
-      .observe(obsU, count(when(col("is_new"), lit(1))).as("u"))
-      .localCheckpoint(true)
+      .observe(obsU, count(when(col("is_new"), lit(1))).as("u")))
     (next, obsF.get("n").asInstanceOf[Long], obsU.get("u").asInstanceOf[Long])
   }
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Fixed-iteration integer PageRank over an undirected edge list — the
   * CENTRALITY-based canonical pick for dedup clusters, completing the
@@ -33,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   * iteration: one src-keyed join of ranks to the cached adjacency (the
   * adjacency is repartitioned by src ONCE and reused all k rounds) and
   * one dst-keyed aggregation — 2 bounded shuffles × k, never a corpus
-  * pass. Each round is eagerly `localCheckpoint`ed, the
+  * pass. Each round is eagerly checkpointed in a [[Pins]] scope, the
   * [[ConnectedComponents]] discipline: lineage would otherwise double
   * per round and recomputation would be exponential in k. Rank magnitude
   * is conserved-in-expectation (Σr ≤ N · 10⁶), so a long accumulator
@@ -53,39 +52,23 @@ object PageRank {
     */
   def ranks(
       edges: DataFrame, aCol: String, bCol: String,
-      iterations: Int = 5): DataFrame = {
+      iterations: Int = 5): DataFrame = Pins.scope { p =>
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    // Eager checkpoint before the self-union, as in ConnectedComponents:
-    // `dir` feeds both branches and the caller's edge derivation (e120
-    // feeds the whole LSH pair pipeline) must not execute twice.
-    val dir = edges.select(
-        col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-      .localCheckpoint(true)
-    val sym = dir
-      .union(dir.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
+    val sym = Pins.undirected(p, edges, aCol, bCol)
       .select(col("u").as("src"), col("v").as("dst"))
     // deg feeds the adjacency build, the rank init, every round's
     // rebuild of the node list, and the final degree join — persist it
     // so the union+distinct+groupBy pipeline runs once, not per use.
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("dg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = p.persist(sym.groupBy("src").agg(count(lit(1)).as("dg")))
     // Adjacency with out-degree attached, partitioned by src once:
     // every iteration's contribution join then reads this exact cached
     // layout with no further shuffle of the edge list.
-    val adj = sym.join(deg, "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = p.persist(sym.join(deg, "src").repartition(col("src")))
 
-    var r = deg.select(col("src").as("node"), lit(1000000L).as("rank"))
-      .localCheckpoint(true)
-    // NO per-round rank broadcast (r18): the r17 hint rebuilt a
-    // BroadcastExchange from each round's fresh rank checkpoint — the
-    // [[ConnectedComponents]] measurement; interleaved A/B at local[32]
-    // read 3.60 s hinted vs 3.41 s unhinted (e120), and at 100 TB the
-    // rank table blows the threshold so the hint never fired there.
+    var r = p.checkpoint(
+      deg.select(col("src").as("node"), lit(1000000L).as("rank")))
+    // NO per-round rank broadcast: the [[ConnectedComponents]] rule
+    // (interleaved A/B at local[32]: e120 3.60 s hinted vs 3.41 s).
     for (_ <- 1 to iterations) {
       val contrib = adj
         .join(r, col("src") === col("node"))
@@ -96,30 +79,16 @@ object PageRank {
       // to 0 still contributes rows of c = 0, never NULL groups.
       // contrib is a DERIVED frame — never hinted (the CC rule: a
       // broadcast build re-executes the subplan and loses stage reuse)
-      val next = deg.select(col("src").as("node"))
+      val next = p.checkpoint(deg.select(col("src").as("node"))
         .join(contrib, col("node") === col("dst"), "left")
         .select(col("node"),
-          (lit(150000L) + coalesce(col("cin"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-      // previous round's rank table is dead once `next` materializes —
-      // release it (ConnectedComponents' checkpoint-leak discipline)
-      ConnectedComponents.releaseLocalCheckpoint(r)
+          (lit(150000L) + coalesce(col("cin"), lit(0L))).as("rank")))
+      p.release(r) // the previous round is dead once `next` materializes
       r = next
     }
-    // Materialize the node-bounded result BEFORE releasing the caches:
-    // the final join is lazy, and unpersisting first would force the
-    // degree pipeline to recompute from the edge checkpoint. Once it
-    // is, everything upstream is dead — release the last rank round
-    // and the edge checkpoint too, or each ranks() call leaks them for
-    // the session (`out` itself stays checkpointed: the caller reads
-    // it, and it is node-bounded).
-    val out = r.join(deg, r("node") === deg("src"))
-      .select(col("node"), col("dg").as("degree"), col("rank"))
-      .localCheckpoint(true)
-    adj.unpersist()
-    deg.unpersist()
-    ConnectedComponents.releaseLocalCheckpoint(r)
-    ConnectedComponents.releaseLocalCheckpoint(dir)
-    out
+    // Materialize the node-bounded result while the caches are still
+    // held; the scope then releases everything upstream.
+    p.keep(p.checkpoint(r.join(deg, r("node") === deg("src"))
+      .select(col("node"), col("dg").as("degree"), col("rank"))))
   }
 }

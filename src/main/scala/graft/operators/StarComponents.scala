@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Connected components by alternating large-star / small-star edge
@@ -62,27 +62,18 @@ object StarComponents {
     */
   def components(
       edges: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-
-    // Release a dead localCheckpoint's backing RDD (the
-    // ConnectedComponents discipline): without it the loop accumulates
-    // one edge-table copy per round in executor storage.
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(false))
-
+      maxRounds: Int = 50): DataFrame = Pins.scope { p =>
     // Orient (u = larger, v = smaller); checkpoint so the caller's
-    // (potentially expensive) edge derivation runs once.
-    var cur = edges.select(
+    // (potentially expensive) edge derivation runs once. Each dead
+    // round is released once the next lands; otherwise the loop would
+    // hold one edge-table copy per round in executor storage.
+    var cur = p.checkpoint(edges.select(
       col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
     // Order-independent edge-set fingerprint; DECIMAL(38,0) sums so a
     // fleet-scale edge table can't overflow BIGINT.
@@ -121,27 +112,21 @@ object StarComponents {
     var prevSig = signature(cur)
     var rounds = 0
     var converged = false
-    try {
-      while (!converged && rounds < maxRounds) {
-        val next = smallStar(largeStar(cur)).localCheckpoint(true)
-        val sig =
-          try signature(next)
-          catch { case t: Throwable => release(next); throw t }
-        converged = sig == prevSig
-        prevSig = sig
-        release(cur)
-        cur = next
-        rounds += 1
-      }
-      require(converged,
-        s"star components did not converge in $maxRounds rounds")
-      // Fixpoint is a star forest (u = member, v = component min);
-      // add the centers' self-labels.
-      cur.select(col("u").as("node"), col("v").as("comp"))
-        .union(cur.select(col("v").as("node"), col("v").as("comp")))
-        .distinct()
-    } catch {
-      case t: Throwable => release(cur); throw t
+    while (!converged && rounds < maxRounds) {
+      val next = p.checkpoint(smallStar(largeStar(cur)))
+      val sig = signature(next)
+      converged = sig == prevSig
+      prevSig = sig
+      p.release(cur)
+      cur = next
+      rounds += 1
     }
+    require(converged,
+      s"star components did not converge in $maxRounds rounds")
+    // Fixpoint is a star forest (u = member, v = component min);
+    // add the centers' self-labels.
+    p.keep(cur).select(col("u").as("node"), col("v").as("comp"))
+      .union(cur.select(col("v").as("node"), col("v").as("comp")))
+      .distinct()
   }
 }

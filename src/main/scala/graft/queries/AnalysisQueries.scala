@@ -5,10 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{F, Portable}
-import graft.operators.{Adaptive, BoundedPrefix, MadOutliers, NnDescent, PageRank, QualityPropagate}
+import graft.operators.{Adaptive, BoundedPrefix, MadOutliers, NnDescent, PageRank, Pins, QualityPropagate}
 import graft.sources.Tables
 
-/** Round-9 similarity / sketch / corpus-health additions:
+/** Similarity / sketch / corpus-health families:
   *
   *  - e98 prefix-filter similarity self-join (Bayardo/Ma/Srikant
   *    "Scaling Up All Pairs", WWW'07; Xiao et al. PPJoin, WWW'08): the
@@ -63,7 +63,7 @@ import graft.sources.Tables
   *    source — post-aggregation data is vocabulary-sized, never
   *    corpus-sized.
   *
-  * Later round-9 additions (each documents its own scale design):
+  * Further families (each documents its own scale design):
   *  - e104 product-quantization ADC ANN (codes + lookup-table scoring —
   *    the memory-side ANN scale path; 64× smaller scored representation).
   *  - e105 hop-decayed quality propagation over the e3 near-dup graph
@@ -645,10 +645,10 @@ object AnalysisQueries {
   /** Spark twin of [[recallAuditCtesDuck]]: (method, n_cand, n_hit,
     * n_truth) for the three detectors over `docs`.
     */
-  private def recallAuditStats(docs: DataFrame): DataFrame = {
+  private def recallAuditStats(docs: DataFrame): DataFrame = Pins.scope { p =>
     val P = Portable.P
-    // Eagerly materialized ONCE (r18, guide §2.4 duplicated-subtree
-    // removal): `sets` feeds THREE independent pipelines (the prefix
+    // Eagerly materialized ONCE (duplicated-subtree removal): `sets`
+    // feeds THREE independent pipelines (the prefix
     // detector's token explode, the truth verifier's pair joins, and
     // the LSH detector's minhash signatures). Uncheckpointed, Catalyst
     // plans each consumer against its own copy of the subtree and the
@@ -656,13 +656,12 @@ object AnalysisQueries {
     // 4 executions of the shingle scan per invocation. At 100 TB the
     // trade is storing the hash arrays (ints, strictly smaller than
     // the text they derive from) once vs re-shingling the corpus 4×.
-    val sets = docs
+    val sets = p.checkpoint(docs
       .select(col("doc_id"),
         array_sort(F.shingle_hashes(col("text"))).as("ts"))
       .filter(size(col("ts")) > 0)
       .filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), col("ts"), size(col("ts")).cast("long").as("sz"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("ts"), size(col("ts")).cast("long").as("sz")))
     val tok = sets
       .select(col("doc_id"), col("sz"), explode(col("ts")).as("h"))
       .repartition(col("h"))
@@ -674,7 +673,9 @@ object AnalysisQueries {
       .filter(col("r") <= col("sz") - expr("(3 * sz + 4) div 5") + 1)
       .select(col("doc_id"), col("h"), col("r"), col("sz"))
       .repartition(col("h"))
-    val candp = pre.as("a")
+    // pair-grain, candidate-bounded; feeds the truth verifier AND the
+    // 'prefix' audit leg — one materialization, not two
+    val candp = p.checkpoint(pre.as("a")
       .join(pre.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -690,24 +691,20 @@ object AnalysisQueries {
       .filter(col("cp")
         + least(col("sa") - col("mra"), col("sb") - col("mrb"))
         >= expr("(3 * (sa + sb) + 7) div 8"))
-      .select("doc_a", "doc_b")
-      // pair-grain, candidate-bounded; feeds the truth verifier AND
-      // the 'prefix' audit leg — one materialization, not two (r18)
-      .localCheckpoint(true)
+      .select("doc_a", "doc_b"))
     val ov = size(array_intersect(col("sa.ts"), col("sb.ts"))).cast("long")
     // The exact-Jaccard truth set is THE shared fact of the audit:
     // every detector leg joins against it and the n_truth scalar
     // aggregates it. Uncheckpointed it re-verified (array_intersect
     // over the full shingle arrays) once per consumer — 4 executions
-    // of the most expensive join in the query (VERDICT r17 item 5).
-    val truth = candp
+    // of the most expensive join in the query.
+    val truth = p.checkpoint(candp
       .join(sets.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sets.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(col("doc_a"), col("doc_b"), ov.as("ov"),
         col("sa.sz").as("za"), col("sb.sz").as("zb"))
       .filter(lit(5) * col("ov") >= lit(3) * (col("za") + col("zb") - col("ov")))
-      .select("doc_a", "doc_b")
-      .localCheckpoint(true)
+      .select("doc_a", "doc_b"))
     val sig = sets.select(col("doc_id"), F.min_hashes(col("ts")).as("sig"))
     val bandKeys = array((0 until 6).map(k =>
       element_at(col("sig"), 2 * k + 1) * P +
@@ -745,22 +742,13 @@ object AnalysisQueries {
       .select(lit(name).as("method"), col("n_cand"), col("n_hit"))
     val tc = truth.agg(count(lit(1)).as("n_truth"))
     // Materialize the 3-row summary eagerly so every corpus-grain pin
-    // above (sets, candp, truth) can be released NOW instead of riding
-    // the returned plan for the session (the e176Census discipline —
-    // leaked pins across bench passes are the e129 accumulation
-    // failure). A failure mid-audit must release them too.
-    import graft.operators.ConnectedComponents.releaseLocalCheckpoint
-    try {
-      audit("prefix", candp)
-        .union(audit("lsh", lshc))
-        .union(audit("winnow", winc))
-        .crossJoin(broadcast(tc))
-        .localCheckpoint(true)
-    } finally {
-      releaseLocalCheckpoint(truth)
-      releaseLocalCheckpoint(candp)
-      releaseLocalCheckpoint(sets)
-    }
+    // above (sets, candp, truth) dies with the scope instead of riding
+    // the returned plan for the session.
+    audit("prefix", candp)
+      .union(audit("lsh", lshc))
+      .union(audit("winnow", winc))
+      .crossJoin(broadcast(tc))
+      .localCheckpoint(true)
   }
 
   private def e103DedupRecall = QueryDef.sql(
@@ -1410,7 +1398,7 @@ object AnalysisQueries {
     // One fact exchange: the order-keyed repartition satisfies the
     // (orderkey, brand) rollup (subset rule) AND both pair-join sides.
     // part is fact-proportional, so it stays UNHINTED (threshold/AQE
-    // broadcast it while it fits — the q2/q50 rule; r11: de-hinted).
+    // broadcast it while it fits — the q2/q50 rule).
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"))
       .join(Tables.part(s, dir)
@@ -2157,10 +2145,13 @@ object AnalysisQueries {
         val jr = cal.agg(count(lit(1)).as("n_calib"))
           .select(col("n_calib"),
             expr("(n_calib + 10) div 10").as("j"))
-        val freq = cal.groupBy("bp").agg(count(lit(1)).as("c"))
         // bp ∈ [0, 10000] → ≤ 157 buckets of 64 bp: the partitioned
-        // two-level prefix (r18) replaces the unpartitioned cumulative
-        // window (single-task sort + WindowExec warning)
+        // two-level prefix replaces the unpartitioned cumulative window
+        // (single-task sort + WindowExec warning). Both prefix branches
+        // read the frequency table, so it is checkpointed once; the pin
+        // rides the returned plan, one per query, not one per call.
+        val freq = Pins.slot("e117_conformal_select")(
+          cal.groupBy("bp").agg(count(lit(1)).as("c")).localCheckpoint(true))
         val cum = BoundedPrefix.cumsum(
           freq, "bp", expr("bp div 64"), Seq("c" -> "cum"))
         val tau = cum.crossJoin(broadcast(jr))
@@ -2604,20 +2595,20 @@ object AnalysisQueries {
          |    // u.n_universe AS BIGINT) AS cov_bp
          |FROM sel CROSS JOIN u ORDER BY round""".stripMargin) {
       (s, dir) =>
-        val post = Tables.documents(s, dir)
-          .select(col("doc_id"), F.shingle_hashes(col("text")).as("shs"))
-          .filter(size(col("shs")) > 0)
-          .select(col("doc_id"), explode(col("shs")).as("h"))
-          .localCheckpoint(true)
-        val universe = post.select(col("h")).distinct().count()
-        // Incremental-gain greedy (operators.CoverageGreedy): identical
-        // picks to the plain recount form (CoverageGreedySpec pins
-        // this), but the per-round postings recount + corpus-scale
-        // remainder rebuild are replaced by one broadcast decrement
-        // join against the newly covered delta — the CELF lever,
-        // batch-exact.
-        val picks = graft.operators.CoverageGreedy.incremental(post, k)
-        graft.operators.ConnectedComponents.releaseLocalCheckpoint(post)
+        val (universe, picks) = Pins.scope { p =>
+          val post = p.checkpoint(Tables.documents(s, dir)
+            .select(col("doc_id"), F.shingle_hashes(col("text")).as("shs"))
+            .filter(size(col("shs")) > 0)
+            .select(col("doc_id"), explode(col("shs")).as("h")))
+          val universe = post.select(col("h")).distinct().count()
+          // Incremental-gain greedy (operators.CoverageGreedy):
+          // identical picks to the plain recount form
+          // (CoverageGreedySpec pins this), but the per-round postings
+          // recount + corpus-scale remainder rebuild are replaced by
+          // one broadcast decrement join against the newly covered
+          // delta — the CELF lever, batch-exact.
+          (universe, graft.operators.CoverageGreedy.incremental(post, k))
+        }
         val rows = picks.scanLeft((0, 0L, 0L, 0L)) {
           case ((_, _, _, cum), (r, doc, gain)) =>
             (r, doc, gain, cum + gain)
@@ -2703,7 +2694,7 @@ object AnalysisQueries {
        |  CAST(prop_bp AS BIGINT) AS prop_bp
        |FROM rk ORDER BY source""".stripMargin) {
     (s, dir) =>
-      // #sources-row aggregate, materialized ONCE (r18): base feeds the
+      // #sources-row aggregate, materialized ONCE: base feeds the
       // floor-sum, the rank pairing, and the output — uncheckpointed,
       // each consumer re-ran the corpus aggregation.
       val m = Tables.documents(s, dir)
@@ -2732,7 +2723,7 @@ object AnalysisQueries {
           expr("ew * 10000 div ed").as("share_bp"),
           expr("n_docs * 10000 div tn").as("prop_bp"))
       // Largest-remainder rank WITHOUT the unpartitioned row_number
-      // window (r18): rn = 1 + |rows sorting strictly earlier by
+      // window: rn = 1 + |rows sorting strictly earlier by
       // (rem DESC, source ASC)| — exact for the duplicate-free source
       // key, and the pairing rides the #sources-row frame (bounded by
       // the source fan, never the corpus). The floor-sum deficit stays
@@ -3011,25 +3002,25 @@ object AnalysisQueries {
 
   /** Spark-side fixed-round k=3 peel over a SYMMETRIZED edge frame
     * (u, v): per round one degree census + two semi-joins against the
-    * keep set, localCheckpoint per round with the CC release
-    * discipline (in the dense regime nothing peels, so 8 retained
-    * full-size edge checkpoints are a measured executor-storage OOM).
-    * Returns the surviving directed edge set.
+    * keep set, each round checkpointed and the previous one released
+    * (in the dense regime nothing peels, so 8 retained full-size edge
+    * checkpoints are a measured executor-storage OOM). Returns the
+    * surviving directed edge set.
     */
-  private def kcorePeelSpark(e0: DataFrame, rounds: Int): DataFrame = {
-    var e = e0.localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val keep = e.groupBy("u").agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= 3).select(col("u").as("ku"))
-      val next = e
-        .join(keep, col("u") === col("ku"), "left_semi")
-        .join(keep, col("v") === col("ku"), "left_semi")
-        .localCheckpoint(true)
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(e)
-      e = next
+  private def kcorePeelSpark(e0: DataFrame, rounds: Int): DataFrame =
+    Pins.scope { p =>
+      var e = p.checkpoint(e0)
+      for (_ <- 1 to rounds) {
+        val keep = e.groupBy("u").agg(count(lit(1)).as("dg"))
+          .filter(col("dg") >= 3).select(col("u").as("ku"))
+        val next = p.checkpoint(e
+          .join(keep, col("u") === col("ku"), "left_semi")
+          .join(keep, col("v") === col("ku"), "left_semi"))
+        p.release(e)
+        e = next
+      }
+      p.keep(e)
     }
-    e
-  }
 
   private def e129KCore = {
     val rounds = 8
@@ -3059,10 +3050,10 @@ object AnalysisQueries {
   // ---- e129b: the 3-core peel on a constructed fixture graph --------------
 
   /** The e129 peel on a CONSTRUCTED graph that is non-degenerate at
-    * EVERY scale factor (the e131b pattern): VERDICT r10 found e129's
-    * oracle row matches on 0 rows at sf0.01 — no 3-core exists in the
-    * small corpus's dup graph, so the oracle compared two empty sets
-    * and proved nothing about peel semantics (the driver-side fixpoint
+    * EVERY scale factor (the e131b pattern): e129's oracle row
+    * matches on 0 rows at sf0.01 — no 3-core exists in the small
+    * corpus's dup graph, so the oracle compares two empty sets and
+    * proves nothing about peel semantics (the driver-side fixpoint
     * spec in CurationOpsSpec pins the operator, but the cross-engine
     * row should too). The fixture derives deterministically from the
     * fixed 25-row nation table: same-region pairs form five disjoint
@@ -4260,12 +4251,12 @@ object AnalysisQueries {
   private[queries] def isotonicFromBins(bins: DataFrame): DataFrame = {
     val b = bins.localCheckpoint(true) // grid-bounded; feeds the
                                        // prefix, pairs, and final join
-    // two-level prefix over the ≤ 50-row quantity grid (r18): no
+    // two-level prefix over the ≤ 50-row quantity grid: no
     // unpartitioned cumulative window; b is already checkpoint-backed,
-    // so the helper skips its own materialization
+    // so the helper's two reads of it are cheap
     val p = BoundedPrefix.cumsum(b, "q", expr("q div 8"),
-      Seq("n" -> "cn", "pos" -> "cp"), materialize = false)
-    // explicit broadcast on the grid-bounded non-equi pairings (r18):
+      Seq("n" -> "cn", "pos" -> "cp"))
+    // explicit broadcast on the grid-bounded non-equi pairings:
     // the BoundedPrefix join output carries no small-size estimate, so
     // without the hint the planner degrades these inner non-equi joins
     // to CartesianProductExec (the lint's hard ban)
@@ -4418,9 +4409,6 @@ object AnalysisQueries {
        |FROM pc JOIN cc ON cc.thr_bp = pc.thr_bp
        |ORDER BY thr_bp""".stripMargin) {
     (s, dir) =>
-      val vp = ExtensionQueries.minhashVerifiedPairs(s, dir)
-        .filter(col("jaccard") >= 0.3)
-        .localCheckpoint(true) // feeds the sweep join + both cov legs
       import s.implicits._
       val thrDf = (3000L to 9000L by 1000L).toDF("thr_bp")
       // Checkpoint the swept pair set: pc and BOTH cov union legs read
@@ -4428,11 +4416,14 @@ object AnalysisQueries {
       // threshold join — three scans where the docstring promises one
       // (the DuckDB side's pt AS MATERIALIZED is the same cut). vp is
       // dead once pt materializes.
-      val pt = vp.join(broadcast(thrDf),
-          col("jaccard") >= col("thr_bp").cast("double") / 10000)
-        .select(col("thr_bp"), col("doc_a"), col("doc_b"))
-        .localCheckpoint(true)
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(vp)
+      val pt = Pins.scope { p =>
+        val vp = p.checkpoint(ExtensionQueries.minhashVerifiedPairs(s, dir)
+          .filter(col("jaccard") >= 0.3))
+        vp.join(broadcast(thrDf),
+            col("jaccard") >= col("thr_bp").cast("double") / 10000)
+          .select(col("thr_bp"), col("doc_a"), col("doc_b"))
+          .localCheckpoint(true)
+      }
       val cov = pt.select(col("thr_bp"), col("doc_a").as("doc"))
         .unionByName(pt.select(col("thr_bp"), col("doc_b").as("doc")))
         .groupBy("thr_bp", "doc").agg(count(lit(1)).as("_n"))
@@ -4735,17 +4726,18 @@ object AnalysisQueries {
     * update counts of rounds 0..R (round 0's is the init graph's size).
     */
   private[queries] def e158Graph(v: NnDescent.Vectors, K: Int,
-      maxRounds: Int): (Vector[DataFrame], Vector[Long], Vector[Long]) = {
-    val knn0 = v.score(NnDescent.ringInit(v.r, v.r, v.n, K))
-      .withColumn("is_new", lit(true)).localCheckpoint(true)
-    var (knns, freshes, updates) =
-      (Vector(knn0), Vector.empty[Long], Vector(knn0.count()))
-    while (knns.size <= maxRounds && (knns.size == 1 || updates.last > 0)) {
-      val (next, fresh, upd) = NnDescent.flaggedRound(v, knns.last, K)
-      knns :+= next; freshes :+= fresh; updates :+= upd
+      maxRounds: Int): (Vector[DataFrame], Vector[Long], Vector[Long]) =
+    Pins.scope { p =>
+      val knn0 = p.checkpoint(v.score(NnDescent.ringInit(v.r, v.r, v.n, K))
+        .withColumn("is_new", lit(true)))
+      var (knns, freshes, updates) =
+        (Vector(knn0), Vector.empty[Long], Vector(knn0.count()))
+      while (knns.size <= maxRounds && (knns.size == 1 || updates.last > 0)) {
+        val (next, fresh, upd) = NnDescent.flaggedRound(p, v, knns.last, K)
+        knns :+= next; freshes :+= fresh; updates :+= upd
+      }
+      (knns.map(p.keep), freshes, updates)
     }
-    (knns, freshes, updates)
-  }
 
   /** NN-Descent WITH the paper's incremental machinery — what e147
     * deliberately omits so its oracle can pin the plain algorithm.
@@ -4917,39 +4909,37 @@ object AnalysisQueries {
     * .Layout.amortize]] — when the store already matches the source scan, the
     * base loop never even runs and the invocation is fold-only, which
     * IS the per-delta cost the stored posture buys), the scratch
-    * reference leg is skipped entirely (it is the audit), and every
-    * intermediate per-round checkpoint is RELEASED as soon as the next
-    * round lands (the e170/iterateExact discipline — repeated
-    * maintenance must not pin one frame per round per invocation). The
-    * audit frames of [[E173Legs]] come back empty in this mode.
+    * reference leg is skipped entirely (it is the audit), and the
+    * audit frames of [[E173Legs]] come back empty. In both modes every
+    * dead round, the base graph and the base index are released as
+    * soon as they are dead: repeated calls must not pin one frame per
+    * round per call.
     */
   private[queries] def e173Core(
       s: SparkSession, emb: DataFrame, K: Int,
       baseRounds: Int, foldRounds: Int, scratchRounds: Int,
-      storePath: String, production: Boolean = false): E173Legs = {
+      storePath: String, production: Boolean = false): E173Legs = Pins.scope { p =>
     import graft.operators.Indexing
-    import graft.operators.ConnectedComponents.releaseLocalCheckpoint
     val v = NnDescent.vectors(emb, NnDescent.Float)
-    val r = v.r
+    val r = p.own(v.r)
     val gens = r.select(col("vec_id"),
       expr("(((vec_id % 1000003) * 2654435761) % 1000000007) % 5 = 4")
         .as("is_fresh"))
     // one leg: `stored` edges (old) ∪ the scored ring init (new), then
     // `rounds` flagged rounds; the init size is observed inside the
-    // first checkpoint. In production each dead round is released as
-    // soon as the next lands, so only the final graph stays pinned.
+    // first checkpoint. Each dead round is released as soon as the
+    // next lands, so only the leg's final graph stays pinned.
     def leg(init: DataFrame, stored: Option[DataFrame], rounds: Int)
         : (Long, DataFrame, Vector[Long]) = {
       val obs = new org.apache.spark.sql.Observation(
         s"e173_init_${java.util.UUID.randomUUID}")
       val fresh = v.score(init.observe(obs, count(lit(1)).as("n")))
         .withColumn("is_new", lit(true))
-      var knn = stored.fold(fresh)(_.select("src", "dst", "cos")
-          .withColumn("is_new", lit(false)).unionByName(fresh))
-        .localCheckpoint(true)
+      var knn = p.checkpoint(stored.fold(fresh)(_.select("src", "dst", "cos")
+        .withColumn("is_new", lit(false)).unionByName(fresh)))
       val freshes = (1 to rounds).map { _ =>
-        val (next, nFresh, _) = NnDescent.flaggedRound(v, knn, K)
-        if (production) releaseLocalCheckpoint(knn)
+        val (next, nFresh, _) = NnDescent.flaggedRound(p, v, knn, K)
+        p.release(knn)
         knn = next
         nFresh
       }
@@ -4958,10 +4948,10 @@ object AnalysisQueries {
     var baseInitCount: Long = 0L
     var bF: Vector[Long] = Vector.empty
     def buildBase(): Unit = {
-      val rb = Indexing.withGlobalIndex(
+      val rb = p.checkpoint(Indexing.withGlobalIndex(
         r.join(gens.filter(col("is_fresh") === false).select("vec_id"),
           "vec_id").select("vec_id", "uv"),
-        col("vec_id"), "rid").localCheckpoint(true)
+        col("vec_id"), "rid"))
       val (nInit, baseFinal, f) =
         leg(NnDescent.ringInit(rb, rb, rb.count(), K), None, baseRounds)
       baseInitCount = nInit
@@ -4971,18 +4961,16 @@ object AnalysisQueries {
       // cannot see past
       baseFinal.select("src", "dst", "cos").coalesce(1)
         .write.mode("overwrite").parquet(storePath)
-      if (production) {
-        releaseLocalCheckpoint(baseFinal)
-        releaseLocalCheckpoint(rb)
-      }
+      p.release(baseFinal)
+      p.release(rb)
     }
     // the scratch reference is the AUDIT — production never pays it;
     // it depends only on r, so it runs on a driver thread overlapped
     // with the base build + fold
     val scratchT: () => (Long, DataFrame, Vector[Long]) =
       if (production) () => (0L, s.emptyDataFrame, Vector.empty)
-      else graft.operators.Adaptive.overlap(
-        leg(NnDescent.ringInit(r, r, r.count(), K), None, scratchRounds))
+      else p.overlap(
+        leg(NnDescent.ringInit(r, r, v.n, K), None, scratchRounds))
     // steady state: skip the base loop entirely when the store already
     // matches the source scan (file-backed sources only — a fixture
     // frame has no files to fingerprint and always rebuilds)
@@ -4998,29 +4986,25 @@ object AnalysisQueries {
       .join(gens.filter(col("is_fresh")).select("vec_id"), "vec_id")
       .select("vec_id", "rid")
     val (foldInitCount, foldFinal, fF) =
-      leg(NnDescent.ringInit(rf, r, r.count(), K), Some(stored), foldRounds)
+      leg(NnDescent.ringInit(rf, r, v.n, K), Some(stored), foldRounds)
     val (scratchInitCount, scratchFinal, sF) = scratchT()
+    p.keep(foldFinal)
     if (production) {
-      // r's checkpoint is the last non-returned pin; releasing it
-      // makes every frame derived from it unusable, so the production
-      // legs hand back EMPTY audit frames rather than live-looking
-      // ones that would crash on first action (only `stored` and
-      // `foldFinal` — a parquet scan and a surviving checkpoint — are
-      // real in this mode)
-      releaseLocalCheckpoint(r)
+      // r dies with the scope, so every frame derived from it is
+      // unusable: the audit frames come back EMPTY, not live-looking
       val e = s.emptyDataFrame
       E173Legs(e, e, stored, baseInitCount, bF, foldFinal,
         foldInitCount, fF, e, 0L, Vector.empty)
     } else
-      E173Legs(r, gens, stored, baseInitCount, bF, foldFinal,
-        foldInitCount, fF, scratchFinal, scratchInitCount, sF)
+      E173Legs(p.keep(r), gens, stored, baseInitCount, bF, foldFinal,
+        foldInitCount, fF, p.keep(scratchFinal), scratchInitCount, sF)
   }
 
   /** The kNN graph across the PROCESS BOUNDARY — the stored-artifact
     * posture (labels e156b, IVF e170, gate artifacts e172, HyperANF
-    * registers e169) brought to the NN-Descent family, which until now
-    * restarted its incremental loop from scratch every invocation
-    * (VERDICT r14 #1). Three legs, one summary row each:
+    * registers e169) brought to the NN-Descent family, so a call does
+    * not restart its incremental loop from scratch. Three legs, one
+    * summary row each:
     *
     *  - `base`: the graph built on the base generation (~80 % of
     *    vectors) and PERSISTED; its metrics are read from the
@@ -5077,33 +5061,6 @@ object AnalysisQueries {
       .digest(dir.getBytes("UTF-8")).take(8)
       .map("%02x".format(_)).mkString
     Scratch.dir(s, s"e173-steady-$tag") + "/knn_base"
-  }
-
-  /** One-slot registry of the PREVIOUS steady-state invocation's
-    * pinned checkpoint, keyed per (query, artifact path): repeated
-    * timed invocations (Bench's median-of-3, ProbeMain's passes) would
-    * otherwise accumulate one returned-frame checkpoint EACH for the
-    * session (r15 ADVICE — e173's foldFinal and e176's census are
-    * N·K- and cluster-grain, but "bounded per invocation" is not
-    * "bounded per session"). The swap releases the prior invocation's
-    * frame BEFORE the new build starts — safe because same-key
-    * invocations are sequential by construction (Bench and ProbeMain
-    * re-invoke only after fully consuming the prior result; Verify
-    * builds each query once) — so at any moment at most one frame per
-    * key is pinned. Cross-KEY concurrency (Verify's 4-queries-per-JVM)
-    * never touches another key's slot.
-    */
-  private val steadyPins =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[queries] def steadyPinSwap(key: String)(
-      build: => DataFrame): DataFrame = {
-    val prev = steadyPins.remove(key)
-    if (prev != null)
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(prev)
-    val built = build
-    steadyPins.put(key, built)
-    built
   }
 
   /** DuckDB twin of [[NnDescent.anchorTruth]] over relation `rel`:
@@ -5372,10 +5329,8 @@ object AnalysisQueries {
       // audit is the oracle row's), intermediate checkpoints released;
       // on a fresh store the timed pass is FOLD-ONLY, the steady-state
       // per-delta cost the persisted posture buys. The returned fold
-      // graph's checkpoint rides the one-slot [[steadyPinSwap]]: the
-      // prior timed pass's N·K-row frame is released before this one
-      // builds, so repeated maintenance pins exactly one.
-      steadyPinSwap("e173:" + knnStorePath(s, dir)) {
+      // graph rides a [[Pins.slot]], so repeated calls pin one.
+      Pins.slot("e173:" + knnStorePath(s, dir)) {
         e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
           knnStorePath(s, dir), production = true).foldFinal
       })
@@ -5446,15 +5401,16 @@ object AnalysisQueries {
     // amortized, so the warmed pass never runs the fold at all), and
     // the consumer pays ONLY the mutual join + CC + census over stored
     // id-pair edges — the true consumer-only margin SCALING.md prices
-    // beside the fold-bearing oracle row (VERDICT r15 #8)
+    // beside the fold-bearing oracle row
     val foldPath = knnStorePath(s, dir) + "_folded"
     graft.sources.Layout.amortize(s, foldPath,
       graft.sources.Layout.scanFingerprint(Tables.embeddings(s, dir))) {
-      val f = e173Core(s, Tables.embeddings(s, dir), E173K, E173B,
-        E173F, E173S, knnStorePath(s, dir), production = true).foldFinal
-      f.select("src", "dst", "cos").coalesce(1)
-        .write.mode("overwrite").parquet(foldPath)
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(f)
+      Pins.scope { p =>
+        p.own(e173Core(s, Tables.embeddings(s, dir), E173K, E173B,
+          E173F, E173S, knnStorePath(s, dir), production = true).foldFinal)
+          .select("src", "dst", "cos").coalesce(1)
+          .write.mode("overwrite").parquet(foldPath)
+      }
     }
     e176Census(s, s.read.parquet(foldPath),
       "e176b:" + knnStorePath(s, dir))
@@ -5463,52 +5419,39 @@ object AnalysisQueries {
   /** e176's mutual-kNN census over a fold graph frame — shared by the
     * oracle-checked run (fold built in-plan) and the buildOnly leg
     * (fold read from its persisted store), so the two postures cannot
-    * drift. Releases every upstream pin once the cluster-grain census
-    * materializes; the surviving frame rides [[steadyPinSwap]].
+    * drift. Takes ownership of `fold` and releases every upstream pin
+    * once the cluster-grain census materializes; the surviving census
+    * rides the [[Pins.slot]] under `pinKey`.
     */
   private def e176Census(
-      s: SparkSession, fold: DataFrame, pinKey: String): DataFrame = {
-    import graft.operators.ConnectedComponents
-    import ConnectedComponents.releaseLocalCheckpoint
-    val mp = fold.as("a")
-      .join(fold.as("b"),
-        col("b.src") === col("a.dst") && col("b.dst") === col("a.src"))
-      .filter(col("a.src") < col("a.dst") && col("a.cos") >= 0.35)
-      .select(col("a.src").as("u"), col("a.dst").as("v"),
-        col("a.cos").as("cos"))
-      .localCheckpoint(true) // feeds the CC leg and the census twice
-    // mp is materialized — the fold graph's checkpoint is dead NOW,
-    // not at session end (r15 verdict nit: this was the one unpaired
-    // pin left after the e170 fix); a no-op when `fold` is the
-    // buildOnly leg's parquet scan
-    releaseLocalCheckpoint(fold)
-    // a CC failure below must not strand mp for the session — the
-    // same try/finally contract components() applies internally
-    val census =
-      try {
-        val comp = ConnectedComponents.components(mp, "u", "v")
-          .select(col("node"), col("comp").as("cluster"))
-        val mem = comp.groupBy("cluster")
-          .agg(count(lit(1)).as("n_members"))
-        try
-          // the census is cluster-grain tiny; materializing it lets
-          // every upstream pin (mp, the CC label table) be released
-          // within the invocation instead of riding the returned plan
-          mp.join(comp.withColumnRenamed("node", "u"), "u")
-            .groupBy("cluster")
-            .agg(count(lit(1)).as("n_edges"),
-              sum(round(col("cos") * 10000).cast("long")).as("sc"))
-            .join(mem, "cluster")
-            .select(col("cluster"), col("n_members"), col("n_edges"),
-              expr("sc div n_edges").as("avg_cos_t"))
-            .localCheckpoint(true)
-        finally releaseLocalCheckpoint(comp)
-      } finally releaseLocalCheckpoint(mp)
-    // the one surviving pin (cluster-grain) rides the one-slot swap:
-    // repeated invocations release the prior census before building
-    steadyPinSwap(pinKey)(census)
-      .orderBy("cluster")
-  }
+      s: SparkSession, fold: DataFrame, pinKey: String): DataFrame =
+    Pins.slot(pinKey)(Pins.scope { p =>
+      val mp = p.checkpoint(p.own(fold).as("a")
+        .join(fold.as("b"),
+          col("b.src") === col("a.dst") && col("b.dst") === col("a.src"))
+        .filter(col("a.src") < col("a.dst") && col("a.cos") >= 0.35)
+        .select(col("a.src").as("u"), col("a.dst").as("v"),
+          col("a.cos").as("cos"))) // feeds the CC leg and the census twice
+      // mp is materialized — the fold graph's checkpoint is dead NOW
+      // (a no-op when `fold` is the buildOnly leg's parquet scan)
+      p.release(fold)
+      val comp = p.own(graft.operators.ConnectedComponents
+          .components(mp, "u", "v"))
+        .select(col("node"), col("comp").as("cluster"))
+      val mem = comp.groupBy("cluster")
+        .agg(count(lit(1)).as("n_members"))
+      // the census is cluster-grain tiny; materializing it lets every
+      // upstream pin (mp, the CC label table) die with the scope
+      // instead of riding the returned plan
+      mp.join(comp.withColumnRenamed("node", "u"), "u")
+        .groupBy("cluster")
+        .agg(count(lit(1)).as("n_edges"),
+          sum(round(col("cos") * 10000).cast("long")).as("sc"))
+        .join(mem, "cluster")
+        .select(col("cluster"), col("n_members"), col("n_edges"),
+          expr("sc div n_edges").as("avg_cos_t"))
+        .localCheckpoint(true)
+    }).orderBy("cluster")
 
   // ---- e178: generational data-card diff -----------------------------------
 
@@ -5524,8 +5467,8 @@ object AnalysisQueries {
   }
 
   /** RELEASE-GATE card diff between consecutive crawl generations —
-    * the artifact an operator reads before shipping a new crawl
-    * (VERDICT r15 #5): per source, volume growth, exact-duplicate-rate
+    * the artifact an operator reads before shipping a new crawl:
+    * per source, volume growth, exact-duplicate-rate
     * delta, median-length movement, and vocabulary growth, where
     * generation A contributes ONLY its PERSISTED data card (one
     * #sources-row parquet holding counts, the 42-bucket log₂ length
@@ -6017,16 +5960,16 @@ object AnalysisQueries {
          |sel AS ($sel)
          |SELECT pick, center_id, radius_t FROM sel
          |ORDER BY pick""".stripMargin) { (s, dir) =>
-      val pts = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("v"))
-        .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
-        .filter(col("nrm") > 0)
-        .withColumn("uv", transform(col("v"), x => x / col("nrm")))
-        .select(col("vec_id"), col("uv"))
-        .localCheckpoint(true)
-      val picks = graft.operators.KCenter.gonzalez(pts, k)
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(pts)
+      val picks = Pins.scope { p =>
+        graft.operators.KCenter.gonzalez(p.checkpoint(
+          Tables.embeddings(s, dir)
+            .select(col("vec_id"), col("embedding").cast("array<double>")
+              .as("v"))
+            .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
+            .filter(col("nrm") > 0)
+            .withColumn("uv", transform(col("v"), x => x / col("nrm")))
+            .select(col("vec_id"), col("uv"))), k)
+      }
       import s.implicits._
       picks.map { case (p, c, rad) => (p.toLong, c, rad) }
         .toDF("pick", "center_id", "radius_t")
@@ -6182,7 +6125,7 @@ object AnalysisQueries {
         .agg(count(lit(1)).as("n_cells"), sum(col("n")).as("n_core_pts"))
       val bstats = border.groupBy("cluster")
         .agg(sum(col("n")).as("n_border_pts"))
-      // np from the CHECKPOINTED cell table (r18, guide §2.4): p has no
+      // np from the CHECKPOINTED cell table: p has no
       // filter between the scan and the cell groupBy, so Σ n over cells
       // = count(p) exactly — the former p.agg(count) re-ran the corpus
       // scan plus both 64-term JL projections just to count rows.
@@ -6272,24 +6215,22 @@ object AnalysisQueries {
       def simT(a: org.apache.spark.sql.Column,
           b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         round((round(F.array_dot(a, b), 4) + lit(0d)) * 10000).cast("long")
-      val pts = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("v"))
-        .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
-        .filter(col("nrm") > 0)
-        .withColumn("uv", transform(col("v"), x => x / col("nrm")))
-        .select(col("vec_id"), col("uv"))
-        .localCheckpoint(true)
-      val qid = pts.select(min(col("vec_id"))).head().getLong(0)
-      val q = pts.filter(col("vec_id") === qid).select(col("uv").as("qu"))
-      val cands = pts.filter(col("vec_id") =!= qid)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), col("uv"),
-          simT(col("uv"), col("qu")).as("rel_t"))
-        .localCheckpoint(true)
-      val picks = graft.operators.MmrSelect.select(cands, k, lamN)
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(pts)
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(cands)
+      val picks = Pins.scope { p =>
+        val pts = p.checkpoint(Tables.embeddings(s, dir)
+          .select(col("vec_id"), col("embedding").cast("array<double>")
+            .as("v"))
+          .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
+          .filter(col("nrm") > 0)
+          .withColumn("uv", transform(col("v"), x => x / col("nrm")))
+          .select(col("vec_id"), col("uv")))
+        val qid = pts.select(min(col("vec_id"))).head().getLong(0)
+        val q = pts.filter(col("vec_id") === qid).select(col("uv").as("qu"))
+        val cands = p.checkpoint(pts.filter(col("vec_id") =!= qid)
+          .crossJoin(broadcast(q))
+          .select(col("vec_id"), col("uv"),
+            simT(col("uv"), col("qu")).as("rel_t")))
+        graft.operators.MmrSelect.select(cands, k, lamN)
+      }
       import s.implicits._
       picks.map { case (p, id, rel, mmr) => (p.toLong, id, rel, mmr) }
         .toDF("pick", "vec_id", "rel_t", "mmr_t10")
@@ -6480,13 +6421,13 @@ object AnalysisQueries {
       .localCheckpoint(true) // (source, length) grain: bounded table
     val g = counts.groupBy("v").agg(sum(col("c")).as("gc"))
     // support grain (codomain-bounded): two-level prefix + bucketed
-    // lead (r18) replace the unpartitioned window pair; g is a bounded
+    // lead replace the unpartitioned window pair; g is a bounded
     // aggregate of the checkpointed counts table, so the duplicate
-    // branch reads are cheap re-aggregations (materialize = false)
+    // branch reads are cheap re-aggregations
     val support = BoundedPrefix.leadKey(
       BoundedPrefix.cumsum(g, "v", expr("v div 4096"),
-        Seq("gc" -> "cumg"), materialize = false),
-      "v", expr("v div 4096"), "nxt", materialize = false)
+        Seq("gc" -> "cumg")),
+      "v", expr("v div 4096"), "nxt")
     val nsrc = counts.groupBy("source").agg(sum(col("c")).as("ns"))
     val ntot = g.agg(sum(col("gc")).as("nt"))
     val ws = Window.partitionBy(col("source")).orderBy(col("v"))
@@ -6568,11 +6509,11 @@ object AnalysisQueries {
       .groupBy(col("source"), col("n_chars").as("v"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(true) // (source, length) grain: bounded table
-    // support grain (codomain-bounded): bucketed lead (r18), no
+    // support grain (codomain-bounded): bucketed lead, no
     // unpartitioned window; rides the checkpointed counts table
     val support = BoundedPrefix.leadKey(
       counts.groupBy("v").agg(count(lit(1)).as("_g")).select("v"),
-      "v", expr("v div 4096"), "nxt", materialize = false)
+      "v", expr("v div 4096"), "nxt")
     val nsrc = counts.groupBy("source").agg(sum(col("c")).as("ns"))
     val ws = Window.partitionBy(col("source")).orderBy(col("v"))
     val cums = counts.select("source").distinct()
@@ -6733,10 +6674,10 @@ object AnalysisQueries {
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(true) // (source, length) grain: bounded table
     val g = counts.groupBy("v").agg(sum(col("c")).as("gc"))
-    // support grain (codomain-bounded): two-level prefix (r18), no
+    // support grain (codomain-bounded): two-level prefix, no
     // unpartitioned window; rides the checkpointed counts table
     val support = BoundedPrefix.cumsum(g, "v", expr("v div 4096"),
-      Seq("gc" -> "cumg"), materialize = false).select("v", "cumg")
+      Seq("gc" -> "cumg")).select("v", "cumg")
     val nsrc = counts.groupBy("source").agg(sum(col("c")).as("ns"))
     val ntot = g.agg(sum(col("gc")).as("nt"))
     val ws = Window.partitionBy(col("source")).orderBy(col("v"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.functions.{F, Portable}
 import graft.functions.Portable.P
-import graft.operators.{Indexing, Media}
+import graft.operators.{Indexing, Media, Pins}
 import graft.sources.Tables
 
 /** LLM-training-data pipeline operators over the `documents` and
@@ -1245,10 +1245,9 @@ object ExtensionQueries {
        |FROM ex CROSS JOIN tot GROUP BY h, n
        |HAVING count(*) * 128 > n
        |ORDER BY h""".stripMargin) { (s, dir) =>
-    val postings = Tables.documents(s, dir)
-      .select(explode(F.word_hashes(col("text"))).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Pins.scope { p =>
+      val postings = p.persist(Tables.documents(s, dir)
+        .select(explode(F.word_hashes(col("text"))).as("h")))
       val row = postings.agg(
         graft.functions.sketches.misra_gries(col("h"), 127).as("cand"),
         count(lit(1)).as("n")).head()
@@ -1261,7 +1260,7 @@ object ExtensionQueries {
         .orderBy("h")
         .collect() // ≤ 127 rows by the MG guarantee
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.toDF("h", "cnt")
-    } finally postings.unpersist(false)
+    }
   }
 
   /** Johnson-Lindenstrauss random projection (64 → 16 dims) with a
@@ -1439,8 +1438,8 @@ object ExtensionQueries {
   }
 
   /** e5's exact cosine top-k with the PAIR-SCALE payload quantized —
-    * the e147b int8 lever extended to the exact-cosine family (VERDICT
-    * r11 item 8): e5/e125 ship 512 B ARRAY<DOUBLE> per vector per side
+    * the e147b int8 lever extended to the exact-cosine family: e5/e125
+    * ship 512 B ARRAY<DOUBLE> per vector per side
     * of every query×corpus score row, and the e147b probe measured
     * that payload as ~all of the shuffle (4.7× cut with 64-byte
     * Int8Pack codes). Here the corpus-scale scoring join carries ONLY
@@ -1676,7 +1675,7 @@ object ExtensionQueries {
     * the corpus; neighbors are searched only inside the bucket (self-join
     * on the signature), top-`k` per vector.
     *
-    * Scale levers, both parameterized (VERDICT r2 item 1):
+    * Scale levers, both parameterized:
     *  - `bits` — signature width. 2^bits buckets; raise it as the corpus
     *    grows so expected bucket size (N / 2^bits) stays bounded.
     *  - `bucketCap` — hard cap on the within-bucket self-join: buckets
@@ -1851,7 +1850,7 @@ object ExtensionQueries {
 
   /** e125's mutual-kNN with the BUCKET-JOIN payload quantized — the
     * int8 lever applied to the family's genuinely SHUFFLE-shaped
-    * member (completing VERDICT r11 item 8's e5/e125 pair): e125's
+    * member (completing the e5/e125 pair): e125's
     * sig-keyed pair exchange ships 512 B of ARRAY<DOUBLE> per vector
     * per side; here the same exchange carries the 64-byte Int8Pack
     * code + one scale (72 B — ~8× off the wire, where e5b's
@@ -2619,17 +2618,16 @@ object ExtensionQueries {
     // eager checkpoint: mem (the hot cells' members — the bounded
     // maintenance working set) feeds THREE consumers (far, moved, and
     // transitively the census mapping); without it the full-index
-    // scoring join re-executes per action. Released in the finally
-    // below once the rewrite (the last eager consumer) has run — the
-    // iterateExact discipline, so repeated maintenance invocations
-    // don't pin one hot-cell frame per run for the session (r14
-    // ADVICE). `far` is checkpointed too — it is hot-CELL-grain tiny
-    // (one row per split cell) and the lazily-returned census still
-    // needs it after mem is gone.
-    val mem = scored.join(hot, "list_id").localCheckpoint(true)
+    // scoring join re-executes per action. It dies with the scope once
+    // the rewrite (the last eager consumer) has run, so repeated
+    // maintenance invocations don't pin one hot-cell frame per run for
+    // the session. `far` is checkpointed too — it is hot-CELL-grain
+    // tiny (one row per split cell) and the lazily-returned census
+    // still needs it after mem is gone.
     val postPath = prePath + "_split"
     val far =
-      try {
+      Pins.scope { p =>
+        val mem = p.checkpoint(scored.join(hot, "list_id"))
         val farCk = mem.groupBy("list_id")
           .agg(min(struct(col("cs"), col("vec_id"))).as("f"))
           .select(col("list_id"), col("f.vec_id").as("far_id"))
@@ -2650,8 +2648,7 @@ object ExtensionQueries {
         graft.sources.Layout.writePartitioned(postIdx, postPath,
           Seq("list_id"))
         farCk
-      } finally graft.operators.ConnectedComponents
-        .releaseLocalCheckpoint(mem)
+      }
     // census read BACK from the rewritten table — the roundtrip proof
     val mapping = far
       .select(col("list_id").as("src_cid"), col("list_id").as("cid"),
@@ -3671,7 +3668,7 @@ object ExtensionQueries {
     "e172_gate_verify_stored", gateVerifyDuckSql) { (s, dir) =>
     gateVerifyImpl(s, dir, store = Some("e172-admission"))
   }.withBuildOnly((s, dir) =>
-    // the STEADY-STATE admission leg (VERDICT r14 #5): artifact writes
+    // the STEADY-STATE admission leg: artifact writes
     // are fingerprint-amortized, so the first invocation builds the
     // store and every later one reads only — ProbeMain's warmup pays
     // the build, the timed pass prices what a crawl operator pays per
@@ -3974,7 +3971,7 @@ object ExtensionQueries {
     }
 
   /** Newman modularity of a labeling over an undirected simple pair
-    * graph, in EXACT INTEGER arithmetic (VERDICT r14 #8): with m =
+    * graph, in EXACT INTEGER arithmetic: with m =
     * |edges|, e_c = intra-partition edges and d_c = summed degree of
     * partition c, Q = Σ_c [e_c/m − d_c²/(4m²)] =
     * (4·m·Σe_c − Σd_c²) / (4m²) — so `modularity_num` alone ranks
@@ -4171,9 +4168,13 @@ object ExtensionQueries {
       }.mkString("\n  UNION ALL\n")}
          |) ORDER BY round""".stripMargin) { (s, dir) =>
       val edges = regionCliqueEdges(s, dir)
-      val (labels, churn) = graft.operators.LabelPropagation
-        .communitiesWithChurn(edges, "u", "v", rounds = rounds)
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(labels)
+      // only the churn counts are reported; the labels die here
+      val churn = Pins.scope { p =>
+        val (labels, counts) = graft.operators.LabelPropagation
+          .communitiesWithChurn(edges, "u", "v", rounds = rounds)
+        p.own(labels)
+        counts
+      }
       import s.implicits._
       churn.zipWithIndex
         .map { case (c, i) => ((i + 1).toLong, c) }
@@ -4183,7 +4184,7 @@ object ExtensionQueries {
   }
 
   /** COMMUNITY-SCOPED dedup apply — the operator that ACTS on e163's
-    * split signal (VERDICT r12 #1). e45/e155 keep one survivor per
+    * split signal. e45/e155 keep one survivor per
     * reachability component (min id), which on an over-merged graph —
     * two boilerplate templates linked by a few hybrid docs — deletes a
     * whole template. Here the survivor rule is one per LPA COMMUNITY:
@@ -4207,7 +4208,7 @@ object ExtensionQueries {
     * (text, source) counts, so the one corpus-keyed exchange is the
     * e163 collapse exchange (~30 MB at the 1000× dense replicas,
     * vs 1.48 GB for the doc-grain digest join this replaced — the
-    * measured lever in SCALING.md r13). Survivor selection is one
+    * measured lever in SCALING.md). Survivor selection is one
     * keyed min per community plus one |reps|-row status frame; no
     * per-cluster sort, nothing pair-grain beyond the banded candidate
     * join e3 already pays.
@@ -4249,7 +4250,7 @@ object ExtensionQueries {
          |  CAST(sum(resc) AS BIGINT) AS n_rescued
          |FROM cls GROUP BY source ORDER BY source""".stripMargin) {
       (s, dir) =>
-        // (text, source)-GRAIN classification (measured lever, r13):
+        // (text, source)-GRAIN classification (measured lever):
         // the report is per-source AGGREGATES, so no per-doc row ever
         // needs to move — the first form joined every doc to a digest
         // map and probed 1.48 GB shuffle at the 1000× dense replicas
@@ -4523,14 +4524,14 @@ object ExtensionQueries {
       s: SparkSession, leaf: String,
       edgesA: DataFrame, edgesB: DataFrame,
       aCol: String, bCol: String, rounds: Int): DataFrame = {
-    import graft.operators.{ConnectedComponents, NeighborhoodFunction}
+    import graft.operators.NeighborhoodFunction
     val regPath = Scratch.dir(s, leaf)
-    val regsA = NeighborhoodFunction
-      .hllRegisters(edgesA, aCol, bCol, rounds)
-    // finally, not sequence: a failed write (scratch disk full) must
-    // not pin the largest relation of the leg for the session
-    try regsA.write.mode("overwrite").parquet(regPath)
-    finally ConnectedComponents.releaseLocalCheckpoint(regsA)
+    // the largest relation of the leg dies with the scope, even when
+    // the write fails
+    Pins.scope { p =>
+      p.own(NeighborhoodFunction.hllRegisters(edgesA, aCol, bCol, rounds))
+        .write.mode("overwrite").parquet(regPath)
+    }
     val estA = NeighborhoodFunction
       .summarizeRegisters(s.read.parquet(regPath))
     val estB = NeighborhoodFunction.hllOnly(edgesB, aCol, bCol, rounds)

@@ -397,8 +397,8 @@ object ReferenceQueries {
     * ceil(0.05·P)) instead of `df.sample`, whose acceptance set is the
     * engine's RNG-stream implementation detail: same 5% seeded-sample
     * contract, but replayable bit-for-bit by ANY engine, so the query
-    * gains a DuckDB twin and a hash-green CORRECTNESS row (it was the
-    * suite's one `no_oracle` entry through r12). The LIMIT leg is made
+    * gains a DuckDB twin and a hash-green CORRECTNESS row. The LIMIT
+    * leg is made
     * order-deterministic the q13 way — smallest 50 keys of the sample,
     * which Spark executes as TakeOrderedAndProject (per-partition top-k
     * + driver merge, no global sort). SamplingSpec keeps the rate pin
@@ -443,8 +443,8 @@ object ReferenceQueries {
         .limit(10)
   }
 
-  /** Generator scalar family, oracle-proven (SURVEY §2.3 F4-F10; VERDICT
-    * r2 item 5): the ACTUAL [[graft.gen.MockData]] primitives — seeded
+  /** Generator scalar family, oracle-proven (SURVEY §2.3 F4-F10): the
+    * ACTUAL [[graft.gen.MockData]] primitives — seeded
     * UUID4-shaped id (F4), raw uniform draw (F5), trailing-30-day date
     * arithmetic (F6), Gaussian pdf as column math (F8), weighted
     * categorical choice (F9), and Faker-style pooled lookup (F10) —
@@ -736,7 +736,8 @@ object ReferenceQueries {
   }
 
   /** String/composite-keyed uuid generation (F4's uuidFromParts path,
-    * the ADVICE r3 collision fix) proven against a full DuckDB twin:
+    * whose independent per-draw reductions keep composite keys from
+    * colliding) proven against a full DuckDB twin:
     * each of the three draws reduces the raw (c_name, c_custkey) parts
     * under its own polynomial family before the cube-affine — so this
     * row-for-row hash compare demonstrates the independent reductions,
@@ -1203,9 +1204,9 @@ object ReferenceQueries {
     * operator needed at scale.
     *
     * The split date sits MID-RANGE (testdata orders span 1995-01-01..
-    * 2001-08-01): VERDICT r10 found the original 1995-01-01 cut made
-    * the "early" set empty at sf0.01 — both branches returned 0 rows
-    * and the hash match proved nothing about set-op semantics. With
+    * 2001-08-01): a 1995-01-01 cut would leave the "early" set empty
+    * at sf0.01 — both branches would return 0 rows and the hash match
+    * would prove nothing about set-op semantics. With
     * the 1998-07-01 cut both the INTERSECT and the EXCEPT branch are
     * non-empty at every shipped SF, so the oracle row exercises the
     * distinct-set machinery it claims to.
@@ -1803,15 +1804,17 @@ object ReferenceQueries {
       val spine = s.range(hr0, hrN).select(col("id").as("hr"))
       val j = spine.join(obs, Seq("hr"), "left")
         .select(col("hr"), col("obs_cents"))
-      // Day-bucketed segmented scan (r18): every window is PARTITIONED
+      // Day-bucketed segmented scan: every window is PARTITIONED
       // by hr div 24 (≤ 30 day buckets over the 720-hour spine literal)
       // instead of the former unpartitioned single-task pair; cross-day
       // carry rides the per-day observation summary via two bounded
       // non-equi extrema joins — hr is unique, so max/min over
       // (hr, value) structs are exactly the last/first observations.
       // 720-row spine, materialized once: the within-window, day-summary
-      // and day-spine branches all read it
-      val jd = j.withColumn("__d", expr("hr div 24")).localCheckpoint(true)
+      // and day-spine branches all read it. The pin rides the returned
+      // plan, one per query, not one per call.
+      val jd = graft.operators.Pins.slot("q44_interpolate")(
+        j.withColumn("__d", expr("hr div 24")).localCheckpoint(true))
       val back = Window.partitionBy("__d").orderBy("hr")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val fwd = Window.partitionBy("__d").orderBy("hr")
@@ -2013,7 +2016,7 @@ object ReferenceQueries {
     val mx = rev.agg(max(col("rev_t")).as("m"))
     // The argmax survivors (≤ #ties rows by construction) are the side
     // to broadcast — supplier is fact-proportional, so hinting IT is
-    // the q2/q50 scale mistake (r11: flipped).
+    // the q2/q50 scale mistake.
     val winners = rev.crossJoin(broadcast(mx))
       .filter(col("rev_t") === col("m"))
     Tables.supplier(s, dir)
@@ -2682,7 +2685,7 @@ object ReferenceQueries {
     * unit price = extendedprice/quantity in exact integer
     * ten-thousandths via `cents·100 div qty` — floor division agrees
     * on both engines, no float boundary). This completes the
-    * decorrelation census's missing Q2 shape (VERDICT r14 #3): unlike
+    * decorrelation census's missing Q2 shape: unlike
     * q51 (compare vs ONE global scalar) and q52 (per-group AVG at FACT
     * grain), the correlated aggregate here lives at DIMENSION grain
     * (part × supplier) and the correlation re-applies the SAME
@@ -2753,7 +2756,7 @@ object ReferenceQueries {
     * total quantity exceeds 250 units — Q18's
     * `o_orderkey IN (SELECT l_orderkey ... HAVING sum(l_quantity) >
     * T)` grouped-IN subquery, the last textbook decorrelation shape
-    * the census lacked (VERDICT r14 #3). The duplicate-safety trap is
+    * the census lacked. The duplicate-safety trap is
     * the point: the outer query re-joins LINEITEM and re-aggregates
     * per order, so a naive rewrite that inner-joins the HAVING set's
     * ROWS would be correct only because the set is already grouped —
@@ -2805,7 +2808,7 @@ object ReferenceQueries {
     * CASE-conditioned share-of-a-grouped-total over the two-sided
     * nation-role join (customer's nation gates the region, supplier's
     * nation is the share dimension), the last textbook census member
-    * (VERDICT r15 #6). The oracle keeps Q8's shape verbatim: the
+    * The oracle keeps Q8's shape verbatim: the
     * `all_nations` derived table, then
     * `sum(CASE nation THEN volume)/sum(volume)` per year.
     *

@@ -2139,11 +2139,16 @@ object TrainingQueries {
         expr(s"size(filter(${Portable.wordsSpark}," +
           " w -> w IN ('the', 'a'))) * 10000L" +
           s" div size(${Portable.wordsSpark})").as("score_bp"))
-    val freq = sc.groupBy("score_bp")
-      .agg(count(lit(1)).as("cnt"), sum(col("n_words")).as("wsum"))
     // cumulative prefix over the score FREQUENCY table — bounded at
     // 10 001 rows by the basis-point codomain, never the corpus; the
-    // two-level bucketed prefix (r18) keeps it off a single task
+    // two-level bucketed prefix keeps it off a single task. The table
+    // feeds both prefix branches, the totals and the binning, so it is
+    // checkpointed once; the pin rides the returned plan, one per
+    // query, not one per call.
+    val freq = graft.operators.Pins.slot("e76_curriculum_bins")(
+      sc.groupBy("score_bp")
+        .agg(count(lit(1)).as("cnt"), sum(col("n_words")).as("wsum"))
+        .localCheckpoint(true))
     val cum = graft.operators.BoundedPrefix.cumsum(
       freq, "score_bp", expr("score_bp div 64"), Seq("cnt" -> "cum"))
     val tot = freq.agg(sum(col("cnt")).as("n"))

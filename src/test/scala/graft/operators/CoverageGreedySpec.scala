@@ -26,7 +26,7 @@ class CoverageGreedySpec extends SparkSpecBase {
       .localCheckpoint(true)
     val a = CoverageGreedy.plain(post, 5)
     val b = CoverageGreedy.incremental(post, 5)
-    ConnectedComponents.releaseLocalCheckpoint(post)
+    Pins.scope(_.own(post))
     assert(b === a)
     assert(a.size === 5)
     // submodularity signature: marginal gains never increase

@@ -48,7 +48,7 @@ class KCenterSpec extends SparkSpecBase {
     val got = KCenter.gonzalez(pts, 6)
     val raw = pts.collect().map(r =>
       r.getLong(0) -> r.getSeq[Double](1).toArray).toSeq
-    ConnectedComponents.releaseLocalCheckpoint(pts)
+    Pins.scope(_.own(pts))
     assert(got === bruteForce(raw, 6))
     // covering radius never increases as centers are added
     val radii = got.map(_._3)
@@ -74,7 +74,7 @@ class KCenterSpec extends SparkSpecBase {
       }
     }.toDF("vec_id", "uv").localCheckpoint(true)
     val got = KCenter.gonzalez(pts, 6)
-    ConnectedComponents.releaseLocalCheckpoint(pts)
+    Pins.scope(_.own(pts))
     assert(got.map(_._2).take(4).toSet === Set(0L, 3L, 6L, 9L),
       s"first four picks must hit the four modes: $got")
     // while modes remain uncovered the radius stays at orthogonality
@@ -103,6 +103,6 @@ class KCenterSpec extends SparkSpecBase {
     // k > N: a further round would have to duplicate a pick
     val e2 = intercept[IllegalArgumentException](KCenter.gonzalez(three, 4))
     assert(e2.getMessage.contains("exceeds"))
-    ConnectedComponents.releaseLocalCheckpoint(three)
+    Pins.scope(_.own(three))
   }
 }

@@ -70,8 +70,7 @@ class MmrSelectSpec extends SparkSpecBase {
       r.getLong(2))).toSeq
     val want = bruteForce(local, k = 6, lamN = 7)
     assert(got === want)
-    ConnectedComponents.releaseLocalCheckpoint(pts)
-    ConnectedComponents.releaseLocalCheckpoint(cands)
+    Pins.scope { p => p.own(pts); p.own(cands) }
   }
 
   test("redundancy penalty separates a duplicate pair that pure " +
@@ -114,6 +113,6 @@ class MmrSelectSpec extends SparkSpecBase {
       .toDF("vec_id", "uv", "rel_t").localCheckpoint(true)
     val e2 = intercept[IllegalArgumentException](MmrSelect.select(two, 3))
     assert(e2.getMessage.contains("exceeds"))
-    ConnectedComponents.releaseLocalCheckpoint(two)
+    Pins.scope(_.own(two))
   }
 }

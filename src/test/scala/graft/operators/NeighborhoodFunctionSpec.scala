@@ -83,7 +83,7 @@ class NeighborhoodFunctionSpec extends SparkSpecBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_anf_regs").toString + "/regs"
     regs.write.parquet(dir)
-    ConnectedComponents.releaseLocalCheckpoint(regs)
+    Pins.scope(_.own(regs))
     val fromDisk = NeighborhoodFunction
       .summarizeRegisters(spark.read.parquet(dir))
       .select("round", "est_pairs", "z_total")
@@ -95,7 +95,7 @@ class NeighborhoodFunctionSpec extends SparkSpecBase {
     assert(fromDisk.toSeq === direct.toSeq)
     // only hllOnly's (rounds+1)-row summary may remain persisted: the
     // register build's checkpoint was released above and every
-    // per-round frame inside both calls self-releases (ADVICE r13)
+    // per-round frame inside both calls self-releases
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after - before <= 1,
       s"leaked checkpoints: $before -> $after")

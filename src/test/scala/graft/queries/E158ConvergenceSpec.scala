@@ -67,9 +67,7 @@ class E158ConvergenceSpec extends SparkSpecBase {
       } yield (s, d)).toSet
       assert(got === want,
         "converged graph must equal the exact within-cluster kNN graph")
-      graft.operators.ConnectedComponents.releaseLocalCheckpoint(v.r)
-      knns.foreach(
-        graft.operators.ConnectedComponents.releaseLocalCheckpoint)
+      graft.operators.Pins.scope(p => (v.r +: knns).foreach(p.own))
     } finally {
       import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._

@@ -4,12 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
 
-/** e176 — checkpoint discipline of the stored-kNN-graph consumer
-  * (r15 verdict nit #1 / ADVICE): a single invocation must release
+/** e176 — checkpoint discipline of the stored-kNN-graph consumer: a
+  * single invocation must release
   * every upstream pin (the e173 fold graph, the mutual-pair edge list,
   * the CC label table) once the cluster-grain census is materialized,
   * and REPEATED invocations (Bench's median-of-3, ProbeMain passes)
-  * must not accumulate one frame each — the one-slot steadyPinSwap
+  * must not accumulate one frame each — the one-per-key Pins.slot
   * releases the prior invocation's census before the next builds. Same
   * contract pinned for e173's buildOnly (production) plan, whose
   * returned fold graph rides the same swap.

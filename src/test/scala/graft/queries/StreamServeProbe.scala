@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Serving-latency probe for the round-16 online legs (dev only, not
+/** Serving-latency probe for the online legs (dev only, not
   * registered): feeds micro-batches of query/fresh vectors through
   * [[graft.streaming.StreamKnnFold]] (attach against a freshly built
   * persisted kNN base graph) and — when the corpus's codebook is
@@ -47,8 +47,7 @@ object StreamServeProbe {
     val legs = AnalysisQueries.e173Core(spark, emb, 10,
       baseRounds = 3, foldRounds = 2, scratchRounds = 3, store,
       production = true)
-    graft.operators.ConnectedComponents
-      .releaseLocalCheckpoint(legs.foldFinal)
+    graft.operators.Pins.scope(_.own(legs.foldFinal))
     val buildS = (System.nanoTime() - t0) / 1e9
     val freshExpr =
       "(((vec_id % 1000003) * 2654435761) % 1000000007) % 5 = 4"
