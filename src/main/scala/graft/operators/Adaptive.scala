@@ -55,9 +55,9 @@ object Adaptive extends org.apache.spark.internal.Logging {
     * data dependency on the caller's in-flight work. Callers: the
     * refresh loop's per-table stage+load ([[graft.pipeline.Ingest]])
     * and mart table writes ([[graft.models.Models.dbtRun]]), CC audit
-    * legs and anchor-truth tables in the query families, and, through
-    * [[Pins.overlap]], [[NeighborhoodFunction]]'s estimate leg and
-    * e173's scratch leg.
+    * legs in the query families, and, through [[Pins.overlap]],
+    * [[NeighborhoodFunction]]'s estimate leg, e173's scratch leg and the
+    * NN-Descent anchor-truth leg.
     *
     * The body runs on a DEDICATED per-call daemon thread, not a pool:
     * a pooled thread keeps the Spark local properties (job group, job

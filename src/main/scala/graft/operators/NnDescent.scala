@@ -212,9 +212,11 @@ object NnDescent {
     * lowest multiplicative-hash vec_ids of `idx` (vec_id, uv), picked by
     * a distributed top-k (never a full sort), each ranked against every
     * other vector of idx by [[Float]] cosine. Costs budget·N at any
-    * corpus size. Returns the checkpointed (src, dst) truth edges.
+    * corpus size. Returns the (src, dst) truth edges, checkpointed in
+    * `p`.
     */
-  def anchorTruth(idx: DataFrame, K: Int, budget: Int): DataFrame = {
+  def anchorTruth(p: Pins, idx: DataFrame, K: Int, budget: Int)
+      : DataFrame = {
     val anchors = idx
       .withColumn("ah",
         expr("((vec_id % 1000003) * 2654435761) % 1000000007"))
@@ -224,7 +226,7 @@ object NnDescent {
       .join(broadcast(anchors), col("dst") =!= col("src"))
       .select(col("src"), col("dst"),
         (round(F.array_dot(col("ua"), col("uc")), 4) + lit(0d)).as("cos"))
-    topK(tr, "cos", K).select("src", "dst").localCheckpoint(true)
+    p.checkpoint(topK(tr, "cos", K).select("src", "dst"))
   }
 
   /** One row for graph `g`: `avgCol`, the mean edge score in integer

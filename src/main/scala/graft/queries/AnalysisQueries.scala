@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{F, Portable}
-import graft.operators.{Adaptive, BoundedPrefix, MadOutliers, NnDescent, PageRank, Pins, QualityPropagate}
+import graft.operators.{BoundedPrefix, MadOutliers, NnDescent, PageRank, Pins, QualityPropagate}
 import graft.sources.Tables
 
 /** Similarity / sketch / corpus-health families:
@@ -1901,9 +1901,7 @@ object AnalysisQueries {
     *
     * Scale (100 TB): one (type, week)-keyed exchange serves both the
     * bucket counts and the week totals (subset rule); everything after
-    * is #types × #weeks × 10 rows against broadcast spines. Streaming
-    * twin: the bucket counters are linear, so `StreamCms`-style keyed
-    * state carries them incrementally.
+    * is #types × #weeks × 10 rows against broadcast spines.
     */
   private def e115PsiDrift = QueryDef.sql(
     "e115_psi_drift",
@@ -3357,7 +3355,7 @@ object AnalysisQueries {
     * the union-algebra path: registers merge by element-wise MAX, so
     * per-shard sketches roll up to any grouping with no re-scan and
     * re-inserting an element is a no-op (at-least-once-replay-proof —
-    * the property counting sketches lack, StreamCms docstring).
+    * the property counting sketches lack).
     *
     * Everything hash-compared is INTEGER: registers are exact integer
     * state (affine rehash, bucket = h mod 64, trailing-zero rank —
@@ -4442,25 +4440,57 @@ object AnalysisQueries {
 
   // ---- e147: NN-Descent kNN-graph construction with recall audit ----------
 
-  /** e147/e147b's run: ring init + `rounds` plain rounds under
-    * `kernel`, one audit row per round against the float anchor truth,
-    * whose leg reads only the vector table and so runs on a driver
-    * thread overlapped with the build rounds.
+  /** An NN-Descent run with its recall audit (e147, e147b, e158):
+    * `build` makes the checkpointed graphs 0..R from the vector table
+    * of `emb` and names its per-round counts, and each graph gets one
+    * audit row against the float anchor truth, whose leg reads only
+    * the vector table and so overlaps the build rounds. The returned
+    * plan reads every graph and the truth, so they ride the
+    * [[Pins.slot]] `key`; the vector table is released on return, and
+    * everything, the truth leg included, when a job fails.
     */
-  private def nndPlainRun(kernel: NnDescent.Kernel, K: Int, rounds: Int,
-      anchors: Int)(s: SparkSession, dir: String): DataFrame = {
-    val v = NnDescent.vectors(Tables.embeddings(s, dir), kernel)
-    val truth = Adaptive.overlap(NnDescent.anchorTruth(v.r, K, anchors))
-    val (knns, pools) = NnDescent.plainBuild(v, K, rounds)
-    NnDescent.roundMetrics(knns, kernel.score, truth(), K,
-      "n_scored" -> (0L +: pools))
-  }
+  private[queries] def nndAudit(key: String, emb: DataFrame,
+      kernel: NnDescent.Kernel, K: Int, anchors: Int)(
+      build: NnDescent.Vectors => (Seq[DataFrame], Seq[(String, Seq[Long])]))
+      : DataFrame =
+    Pins.slot(key)(Pins.scope { p =>
+      val v = NnDescent.vectors(emb, kernel)
+      p.own(v.r)
+      val truth = p.overlap(NnDescent.anchorTruth(p, v.r, K, anchors))
+      val (knns, counts) = build(v)
+      knns.foreach(p.own)
+      val t = truth()
+      val out = NnDescent.roundMetrics(knns, kernel.score, t, K, counts: _*)
+      (t +: knns).foreach(p.keep)
+      out
+    })
 
-  /** e147/e147b's production plan: the final graph, no truth leg. */
-  private def nndPlainGraph(kernel: NnDescent.Kernel, K: Int,
-      rounds: Int)(s: SparkSession, dir: String): DataFrame =
-    NnDescent.plainBuild(NnDescent.vectors(Tables.embeddings(s, dir),
-      kernel), K, rounds)._1.last
+  /** An NN-Descent production plan: the last graph of `build`, no
+    * truth leg. It rides the [[Pins.slot]] `key`; the vector table and
+    * the earlier rounds are released on return.
+    */
+  private def nndGraph(key: String, emb: DataFrame,
+      kernel: NnDescent.Kernel)(build: NnDescent.Vectors => Seq[DataFrame])
+      : DataFrame =
+    Pins.slot(key)(Pins.scope { p =>
+      val v = NnDescent.vectors(emb, kernel)
+      p.own(v.r)
+      p.keep(build(v).map(p.own).last)
+    })
+
+  /** e147/e147b's two forms: ring init + `rounds` plain rounds under
+    * `kernel`, audited per round, or the final graph alone.
+    */
+  private def nndPlain(q: String, sql: String, kernel: NnDescent.Kernel,
+      K: Int, rounds: Int, anchors: Int): QueryDef =
+    QueryDef.sql(q, sql) { (s, dir) =>
+      nndAudit(q, Tables.embeddings(s, dir), kernel, K, anchors) { v =>
+        val (knns, pools) = NnDescent.plainBuild(v, K, rounds)
+        (knns, Seq("n_scored" -> (0L +: pools)))
+      }
+    }.withBuildOnly((s, dir) =>
+      nndGraph(q + ":graph", Tables.embeddings(s, dir), kernel)(
+        NnDescent.plainBuild(_, K, rounds)._1))
 
   /** NN-Descent (Dong, Moses Charikar, Li, WWW'11): build the
     * all-vectors k-nearest-neighbor graph by ITERATIVE REFINEMENT —
@@ -4569,7 +4599,7 @@ object AnalysisQueries {
          |  na.n_anchors AS n_anchors
          |FROM na""".stripMargin
     }.mkString("\nUNION ALL\n")
-    QueryDef.sql(
+    nndPlain(
       "e147_nn_descent",
       s"""WITH b AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -4597,9 +4627,8 @@ object AnalysisQueries {
          |  s0 + CASE WHEN s0 < 3037000499 AND (s0 + 1) * (s0 + 1) <= sx
          |         THEN 1 ELSE 0 END
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END AS recall_se_bp
-         |FROM m3 ORDER BY round""".stripMargin)(
-      nndPlainRun(NnDescent.Float, K, rounds, anchorBudget))
-      .withBuildOnly(nndPlainGraph(NnDescent.Float, K, rounds))
+         |FROM m3 ORDER BY round""".stripMargin,
+      NnDescent.Float, K, rounds, anchorBudget)
   }
 
   // ---- e147b: NN-Descent in the int8 domain --------------------------------
@@ -4674,7 +4703,7 @@ object AnalysisQueries {
          |  na.n_anchors AS n_anchors
          |FROM na""".stripMargin
     }.mkString("\nUNION ALL\n")
-    QueryDef.sql(
+    nndPlain(
       "e147b_nn_descent_int8",
       s"""WITH b AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -4711,9 +4740,8 @@ object AnalysisQueries {
          |  s0 + CASE WHEN s0 < 3037000499 AND (s0 + 1) * (s0 + 1) <= sx
          |         THEN 1 ELSE 0 END
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END AS recall_se_bp
-         |FROM m3 ORDER BY round""".stripMargin)(
-      nndPlainRun(NnDescent.Int8, K, rounds, anchorBudget))
-      .withBuildOnly(nndPlainGraph(NnDescent.Int8, K, rounds))
+         |FROM m3 ORDER BY round""".stripMargin,
+      NnDescent.Int8, K, rounds, anchorBudget)
   }
 
   // ---- e158: NN-Descent with new/old flags and a convergence stop ----------
@@ -4854,19 +4882,18 @@ object AnalysisQueries {
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END AS recall_se_bp
          |FROM m3 CROSS JOIN stp WHERE round <= stp.sr
          |ORDER BY round""".stripMargin) { (s, dir) =>
-      val v = NnDescent.vectors(Tables.embeddings(s, dir), NnDescent.Float)
-      // anchor-truth leg overlapped with the build rounds
-      val truth = Adaptive.overlap(
-        NnDescent.anchorTruth(v.r, K, anchorBudget))
-      val (knns, freshes, updates) = e158Graph(v, K, maxRounds)
-      // n_scored: round 0 scored the init graph (updates(0) edges),
-      // round i its anti-joined fresh candidates
-      NnDescent.roundMetrics(knns, "cos", truth(), K,
-        "n_scored" -> (updates.head +: freshes), "n_updates" -> updates)
+      nndAudit("e158_nn_descent_inc", Tables.embeddings(s, dir),
+          NnDescent.Float, K, anchorBudget) { v =>
+        val (knns, freshes, updates) = e158Graph(v, K, maxRounds)
+        // n_scored: round 0 scored the init graph (updates(0) edges),
+        // round i its anti-joined fresh candidates
+        (knns, Seq("n_scored" -> (updates.head +: freshes),
+          "n_updates" -> updates))
+      }
     }.withBuildOnly((s, dir) =>
       // production plan: the converged graph, no anchor-truth leg
-      e158Graph(NnDescent.vectors(Tables.embeddings(s, dir),
-        NnDescent.Float), K, maxRounds)._1.last)
+      nndGraph("e158_nn_descent_inc:graph", Tables.embeddings(s, dir),
+        NnDescent.Float)(e158Graph(_, K, maxRounds)._1))
   }
 
   // ---- e173: the kNN graph PERSISTED and folded across the boundary -------
@@ -5273,12 +5300,13 @@ object AnalysisQueries {
          |FROM m3 ORDER BY leg""".stripMargin) { (s, dir) =>
       val legs = e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
         Scratch.dir(s, "e173") + "/knn_base")
-      val truth = NnDescent.anchorTruth(legs.r.select("vec_id", "uv"), K,
-        anchorBudget)
-      val truthB = NnDescent.anchorTruth(legs.r
+      def anchorTruth(idx: DataFrame): DataFrame = Pins.scope(p =>
+        p.keep(NnDescent.anchorTruth(p, idx, K, anchorBudget)))
+      val truth = anchorTruth(legs.r.select("vec_id", "uv"))
+      val truthB = anchorTruth(legs.r
         .join(legs.gens.filter(col("is_fresh") === false)
           .select("vec_id"), "vec_id")
-        .select("vec_id", "uv"), K, anchorBudget)
+        .select("vec_id", "uv"))
       val sb = legs.scratchFinal.select("src", "dst")
         .join(legs.gens.filter(col("is_fresh") === false)
           .select(col("vec_id").as("src")), "src")
@@ -5742,7 +5770,7 @@ object AnalysisQueries {
     * answer the production question "which overlap sketch do I
     * materialize": KMV (e102) answers intersections at the
     * INTERSECTION's scale, HLL answers union-algebra rollups (e137)
-    * and replay-idempotent streams (StreamRollingDistinct) — a fleet
+    * and replay-idempotent streams — a fleet
     * wanting both keeps both, and this matrix is the measured cost of
     * pretending one suffices.
     *

@@ -2277,8 +2277,7 @@ object CurationQueries {
       .agg(count(lit(1)).as("votes"))
     // winner AND runner-up by (votes DESC, cand ASC, delta ASC) in one
     // keyed aggregation: sort the clip's own candidate histogram —
-    // bounded by its distinct (cand, delta) entries, the exact per-clip
-    // working set StreamFingerprint holds in state — and slice the top
+    // bounded by its distinct (cand, delta) entries — and slice the top
     // 2; no re-shuffling window. The runner-up gives `margin` (winner
     // votes − runner-up votes), and margin 0 — a deterministic vote
     // TIE, which is what every measured miss is — reads 'abstain': for
@@ -2309,9 +2308,8 @@ object CurationQueries {
 
   /** e166 probed through its PERSISTED index — the production split of
     * the retrieval member, the e64-vs-e17 pattern applied to the
-    * multimodal family: the df-capped inverted index `pdc` (the table
-    * [[graft.streaming.StreamFingerprint]]'s dfCap = 0 contract names
-    * as "what the batch pipeline materializes") is written ONCE as a
+    * multimodal family: the df-capped inverted index `pdc` is written
+    * ONCE as a
     * BLOOM-FILTERED parquet layout keyed on the pair hash `h`
     * ([[graft.sources.Layout.writeBloomFiltered]] — `h` is hash-shaped,
     * so directory pruning and min/max clustering both fail it; a
@@ -2319,10 +2317,8 @@ object CurationQueries {
     * hash possibly here?" probe a clip lookup runs), and the vote join
     * reads the table back from disk. Results are e166's verbatim —
     * same oracle SQL — because the index is a LAYOUT, not an
-    * approximation. FingerprintIndexSpec pins the roundtrip identity,
-    * the recorded bloom contract, and the stream side: a
-    * StreamFingerprint wired to THIS stored table (dfCap = 0, the
-    * documented fleet posture) emits the batch verdicts.
+    * approximation. FingerprintIndexSpec pins the roundtrip identity
+    * and the recorded bloom contract.
     *
     * Scale: the index build amortizes across probe workloads (the
     * e64 argument); each clip's probe touches the posting lists its

@@ -16,7 +16,7 @@ import graft.sources.Tables
   * analysis (corpus stats, per-doc quality filtering, language-ID, token
   * counting, vocabulary top-k, fingerprinting, a composed prep
   * pipeline) and multimodal-column plumbing (metadata + frame
-  * sampling). Streaming counterparts (first-arrival dedup, keyed state,
+  * sampling). Streaming counterparts (the admission gate, keyed top-k,
   * interval join) live in [[graft.streaming]]; the curation-stage
   * operators (scrub/decontaminate/score/split/chunk/shuffle) in
   * [[TrainingQueries]].
@@ -3599,8 +3599,7 @@ object ExtensionQueries {
     *     lucky band among 6 — is REJECTED back to 'kept', proven
     *     harmless rather than auto-dropped.
     *
-    * Union identity (spec-pinned, the StreamSessionOverlap handoff
-    * pattern): `verdict` equals e41's full two-tier verdict on the
+    * Union identity (spec-pinned): `verdict` equals e41's full two-tier verdict on the
     * same delta row-for-row — gate-then-verify loses nothing and
     * admits nothing extra, because the gate's band rule IS e41's
     * candidate rule (same signatures, same 6×2 banding) and

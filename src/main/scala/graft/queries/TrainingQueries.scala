@@ -2494,7 +2494,7 @@ object TrainingQueries {
     * (never float log2 — its rounding at 2^k boundaries is the classic
     * cross-engine trap), rank math is e35's ceil-division, err_bp the
     * one-sided (est − exact)·10⁴ // exact. Counters ADD, so replay
-    * inflates them (the StreamCms caveat, opposite of HLL's max-merge
+    * inflates them (the count-min caveat, opposite of HLL's max-merge
     * idempotence) — the honest delivery contract is stated where it
     * belongs.
     *

@@ -25,23 +25,18 @@ import graft.functions.Portable.P
   * explode-then-regroup that would force a stateful per-doc
   * aggregation). The spec pins `stateOperators` EMPTY on the running
   * query: this gate cannot accumulate memory no matter how long it
-  * runs, which is the property that distinguishes it from
-  * [[StreamDedup]] (in-stream first-arrival, necessarily stateful).
+  * runs.
   *
   * The corpus index is built ONCE by [[corpusIndex]] (digest set +
   * distinct (band_id, band_key) table — at fleet scale both are
-  * materialized parquet maintained by the batch pipeline, the
-  * [[StreamFingerprint]] convention) and re-read per micro-batch as
-  * any static join side is. In-stream duplicates are NOT this gate's
-  * job (compose [[StreamDedup]] upstream for first-arrival semantics).
+  * materialized parquet maintained by the batch pipeline) and re-read
+  * per micro-batch as any static join side is. In-stream duplicates
+  * are NOT this gate's job: a first-arrival dedup must run upstream.
   */
 object StreamBandGate {
 
-  /** Band key k of a 12-wide MinHash signature — e3's pairing rule.
-    * (`private[streaming]`: [[StreamGateVerify]] keys its verification
-    * tier with the same rule so the two gates cannot drift.)
-    */
-  private[streaming] def bandKey(k: Int) =
+  /** Band key k of a 12-wide MinHash signature — e3's pairing rule. */
+  private def bandKey(k: Int) =
     element_at(col("sig"), 2 * k + 1) * P + element_at(col("sig"), 2 * k + 2)
 
   /** The frozen corpus side: (digests, bands) — digests is one `h`

@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * order-sensitive, so each micro-batch's rows are folded in day order
   * and days ≤ the last processed day are DROPPED — a late or replayed
   * day must degrade to a lost observation, never rewind the prefix into
-  * a poisoned checkpoint (the [[StreamDiurnal]] rule; upstream
+  * a poisoned checkpoint (upstream
   * watermarking owns day completeness, exactly as the batch twin owns
   * it by scanning finished days).
   *

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.F
 
-/** ONLINE serving leg of the persisted IVF index (VERDICT r15 #4):
+/** ONLINE serving leg of the persisted IVF index:
   * streaming query vectors probe the cell-partitioned parquet table
   * e64 builds and e170 maintains, with an nprobe-bounded cell fan-out
   * and a per-query top-k — the retrieval family's batch postures
@@ -26,8 +26,8 @@ import graft.functions.F
   *     exactly the cell the index assigned it to.
   *  2. The nprobe cells EXPLODE into (query, list_id) rows that
   *     equi-join the index on its PARTITION column — the static side
-  *     is deliberately NOT persisted (unlike the StreamGateVerify
-  *     discipline): a cached copy would replace the parquet scan and
+  *     is deliberately NOT persisted (unlike [[StreamKnnFold]]'s
+  *     static sides): a cached copy would replace the parquet scan and
   *     with it the partition pruning that is this operator's whole
   *     economics. Pruning fires in the [[serve]] (foreachBatch)
   *     deployment, where each micro-batch runs the BATCH plan and
@@ -71,9 +71,9 @@ object StreamIvfProbe {
 
   /** The bounded driver pull, exposed so a long-lived deployment
     * ([[serve]]) collects the codebook ONCE at wiring time instead of
-    * re-collecting per micro-batch (r16 ADVICE: each trigger paid a
-    * full column-pruned index scan just to rebuild the codebook,
-    * partially offsetting the DPP pruning serve exists for).
+    * re-collecting per micro-batch: a per-trigger collect pays a full
+    * column-pruned index scan just to rebuild the codebook, partially
+    * offsetting the DPP pruning serve exists for.
     */
   def collectCodebook(
       centroids: DataFrame): Array[(Long, Seq[Double], Double)] =
@@ -167,8 +167,8 @@ object StreamIvfProbe {
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] = {
     // codebook collected ONCE at wiring time (its own docstring's
-    // contract, r16 ADVICE): triggers pay no codebook scan.
-    // CONTRACT (r18, ADVICE r17): the codebook is FROZEN for the
+    // contract): triggers pay no codebook scan.
+    // CONTRACT: the codebook is FROZEN for the
     // stream's lifetime — a deployment that rebuilds the centroids
     // table must re-wire serve() to pick the new codebook up; a
     // long-lived stream over a mutated table silently probes the old

@@ -8,10 +8,9 @@ import graft.functions.{F, Portable}
 
 /** ONLINE attach leg of the persisted-kNN-graph family — arriving
   * vectors join the stored base graph's neighborhoods as they land,
-  * instead of waiting for the next batch fold (VERDICT r15 #3: the
-  * e173 chain build → persist → fold → consume, closed with the
-  * streaming posture every other family already has — StreamGateVerify
-  * for e168, StreamBandGate for e3).
+  * instead of waiting for the next batch fold: the e173 chain
+  * build → persist → fold → consume, closed with a streaming consumer
+  * ([[StreamBandGate]] is e41's).
   *
   * Per micro-batch, each arriving vector:
   *
@@ -43,8 +42,7 @@ import graft.functions.{F, Portable}
   *
   * Static sides (base vectors + signatures, the stored edge list) are
   * MATERIALIZED once at wiring time — a stream-static join re-evaluates
-  * its static side per micro-batch (the StreamGateVerify discipline);
-  * the per-band key tables and the scoring projection are lazy
+  * its static side per micro-batch; the per-band key tables and the scoring projection are lazy
   * projections over the ONE persisted base frame.
   *
   * Scale: per arriving vector the work is `tables` O(1) bucket probes,
@@ -55,16 +53,16 @@ import graft.functions.{F, Portable}
   */
 object StreamKnnFold {
 
-  /** One-slot registry of the PREVIOUS wiring's persisted statics
-    * (r16 ADVICE: materializeStatics persisted up to 6 frames per
-    * wiring with no release path, so repeated wirings in one session —
-    * spec batch replays, probe chunks, bench re-invocations —
-    * accumulated session-lifetime cache entries). Each materializing
-    * wiring atomically SWAPS its built frames in and unpersists
-    * exactly the set the swap displaced (r18: the former
-    * clear-at-start/set-at-end pair could orphan one wiring's frames
-    * outside the slot under interleaving), so at any moment at most
-    * one committed wiring's statics are pinned.
+  /** One-slot registry of the PREVIOUS wiring's persisted statics.
+    * materializeStatics persists up to 6 frames per wiring, so without
+    * a release path repeated wirings in one session — spec batch
+    * replays, probe chunks, bench re-invocations — would accumulate
+    * session-lifetime cache entries. Each materializing wiring
+    * atomically SWAPS its built frames in and unpersists exactly the
+    * set the swap displaced (a clear-at-start/set-at-end pair could
+    * orphan one wiring's frames outside the slot under interleaving),
+    * so at any moment at most one committed wiring's statics are
+    * pinned.
     * Same-slot wirings are sequential in every harness (a stream is
     * wired, run, stopped before the next); if two attach streams are
     * ever LIVE concurrently, the second wiring demotes the first's
@@ -173,9 +171,9 @@ object StreamKnnFold {
         persisted.result().foreach(_.unpersist(false))
         throw e
     }
-    // ONE atomic swap (r18, ADVICE r17): the old getAndSet(Nil)-at-
-    // start / set-at-end pair let two interleaved wirings orphan one
-    // result set outside the slot (pinned forever). Swapping the built
+    // ONE atomic swap: a getAndSet(Nil)-at-start / set-at-end pair
+    // would let two interleaved wirings orphan one result set outside
+    // the slot (pinned forever). Swapping the built
     // frames in and unpersisting exactly what the swap displaced means
     // every persisted set is either IN the slot or already unpersisted,
     // under any interleaving.

@@ -97,7 +97,7 @@ object StreamPrioritySample {
     require(k > 0, "k must be positive")
     import docs.sparkSession.implicits._
     // Weights outside (0, MaxWeight] are DROPPED before the stateful
-    // stage — the StreamDiurnal/StreamPsi rule: a malformed record
+    // stage: a malformed record
     // degrades to a lost observation, never a checkpoint-replaying
     // ArithmeticException loop. (Dropping an over-limit row is visible
     // in n_seen vs producer counts; crashing would lose the stream.)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.model.Schemas
 
 /** Structured-streaming ingestion variant of the staged-file load
-  * (SURVEY §2.11 ST1/ST2 streaming option; VERDICT r2 item 6): a
+  * (SURVEY §2.11 ST1/ST2 streaming option): a
   * file-source `readStream` over a per-table inbox of staged TSV files,
   * drained with `Trigger.AvailableNow` into the same append-only raw
   * tables the batch path ([[graft.pipeline.Ingest]]) writes.
@@ -47,7 +47,7 @@ final class StreamingIngest(spark: SparkSession, db: String, streamRoot: Path) {
     Files.createDirectories(inbox(table))
     // Using(...) closes each directory stream — Files.list holds an open
     // file handle until closed, which leaks per staged table per batch on
-    // a long-running driver (ADVICE r3).
+    // a long-running driver.
     scala.util.Using.resource(Files.list(tmp)) { ls =>
       ls.filter(_.getFileName.toString.startsWith("part-"))
         .forEach { p =>

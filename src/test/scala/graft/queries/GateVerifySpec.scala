@@ -45,6 +45,12 @@ class GateVerifySpec extends SparkSpecBase {
       r._2 == "neardup_candidate" && r._3 == "kept")
     assert(rejected.nonEmpty,
       "expected at least one band-rule false positive at sf0.001")
+    // every delta doc gets a verdict, and the fixture exercises both
+    // final classes
+    val delta = spark.read.parquet(s"$dir/documents.parquet")
+      .filter(col("doc_id") % 5 === 4).count()
+    assert(rows.length.toLong === delta)
+    assert(rows.exists(_._3 == "neardup") && rows.exists(_._3 == "kept"))
     // and every verified candidate stayed inside the quarantine set:
     // verification can only demote, never invent a near-dup
     assert(rows.forall(r => r._3 != "neardup" ||

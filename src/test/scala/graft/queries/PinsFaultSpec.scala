@@ -16,7 +16,9 @@ import graft.operators._
   * job and the last-but-one job of an uninjected run), and the call
   * must throw, leave `getPersistentRDDs` at its baseline and leave no
   * `graft-overlap-*` thread running; an uninjected call made next must
-  * still return the uninjected rows.
+  * still return the uninjected rows. A case may count only the jobs of
+  * one leg, such as the NN-Descent anchor-truth leg that runs on an
+  * overlap thread.
   */
 class PinsFaultSpec extends SparkSpecBase with Eventually {
 
@@ -25,17 +27,20 @@ class PinsFaultSpec extends SparkSpecBase with Eventually {
 
   private def sc: SparkContext = spark.sparkContext
 
-  /** Counts the jobs of one job group; when `cancelAt` > 0 it cancels
-    * the job with that ordinal, or, if that job finishes before the
-    * cancel lands, the next job to start after it.
+  /** Counts the jobs of one job group that `pick` selects; when
+    * `cancelAt` > 0 it cancels the selected job with that ordinal, or,
+    * if that job finishes before the cancel lands, the next selected
+    * job to start after it.
     */
-  private class JobTap(group: String, cancelAt: Int) extends SparkListener {
+  private class JobTap(group: String, cancelAt: Int,
+      pick: SparkListenerJobStart => Boolean) extends SparkListener {
     var started = 0
     private var target = Option.empty[Int]
     var cancelled = Option.empty[Int]
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      if (e.properties.getProperty("spark.jobGroup.id") == group) {
+      if (e.properties.getProperty("spark.jobGroup.id") == group &&
+          pick(e)) {
         started += 1
         if (cancelAt > 0 && started >= cancelAt && target.isEmpty &&
             cancelled.isEmpty) {
@@ -56,10 +61,12 @@ class PinsFaultSpec extends SparkSpecBase with Eventually {
   private var groups = 0
 
   /** Runs `body` under a fresh job group with `tap` listening. */
-  private def tapped[T](cancelAt: Int)(body: => T): (JobTap, scala.util.Try[T]) = {
+  private def tapped[T](cancelAt: Int,
+      pick: SparkListenerJobStart => Boolean)(
+      body: => T): (JobTap, scala.util.Try[T]) = {
     groups += 1
     val group = s"pins-fault-$groups"
-    val tap = new JobTap(group, cancelAt)
+    val tap = new JobTap(group, cancelAt, pick)
     sc.addSparkListener(tap)
     sc.setJobGroup(group, group, interruptOnCancel = false)
     val out = try scala.util.Try(body) finally {
@@ -79,18 +86,20 @@ class PinsFaultSpec extends SparkSpecBase with Eventually {
     */
   private case class Out(frames: Seq[DataFrame], rows: () => Any)
 
-  private def faultTest(name: String)(call: () => Out): Unit =
+  private def faultTest(name: String,
+      pick: SparkListenerJobStart => Boolean = _ => true, minJobs: Int = 3)(
+      call: () => Out): Unit =
     test(s"$name: a cancelled job releases every pin and overlap thread") {
       def read(out: Out): Any =
         try out.rows() finally Pins.scope(p => out.frames.foreach(p.own))
-      val (tap0, first) = tapped(0)(call())
+      val (tap0, first) = tapped(0, pick)(call())
       val rows0 = read(first.get)
       val jobs = tap0.started
-      assert(jobs >= 3, s"$name ran only $jobs jobs")
-      for (k <- Seq(1, jobs / 2, jobs - 1).distinct) {
+      assert(jobs >= minJobs, s"$name ran only $jobs jobs")
+      for (k <- Seq(1, jobs / 2, jobs - 1).filter(_ >= 1).distinct) {
         val baseline = sc.getPersistentRDDs.keySet
         val threads0 = overlapThreads
-        val (tap, out) = tapped(k)(call())
+        val (tap, out) = tapped(k, pick)(call())
         out.foreach(read)
         assert(tap.cancelled.nonEmpty, s"$name: no job cancelled at k = $k")
         assert(out.isFailure, s"$name: call survived a cancelled job (k = $k)")
@@ -103,7 +112,7 @@ class PinsFaultSpec extends SparkSpecBase with Eventually {
           s"$name: k = $k of $jobs left persisted RDDs " +
             leaked.map(sc.getPersistentRDDs(_)).mkString(", "))
       }
-      val (_, again) = tapped(0)(call())
+      val (_, again) = tapped(0, pick)(call())
       assert(read(again.get) == rows0,
         s"$name: rows changed after injected failures")
     }
@@ -178,6 +187,18 @@ class PinsFaultSpec extends SparkSpecBase with Eventually {
     val (knns, pools) =
       try NnDescent.plainBuild(v, 4, 2) finally Pins.scope(_.own(v.r))
     Out(knns, () => (rows(knns.last), pools))
+  }
+
+  // only the anchor-truth leg's jobs (e147, e147b, e158): their call
+  // site runs through NnDescent.anchorTruth on the overlap thread
+  faultTest("AnalysisQueries.nndAudit's anchor-truth leg", minJobs = 1,
+      pick = _.stageInfos.exists(_.details.contains("anchorTruth"))) { () =>
+    val r = AnalysisQueries.nndAudit("pins-fault-nnd", emb, NnDescent.Float,
+        K = 4, anchors = 8) { v =>
+      val (knns, pools) = NnDescent.plainBuild(v, 4, 2)
+      (knns, Seq("n_scored" -> (0L +: pools)))
+    }
+    Out(Seq(r), () => rows(r))
   }
 
   for (production <- Seq(false, true))

@@ -346,184 +346,6 @@ class RecoverySpec extends SparkSpecBase {
     } finally q2.stop()
   }
 
-  test("StreamLogHist buckets survive a stop/restart from checkpoint") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ckpt = Files.createTempDirectory("graft-rec-lh").toString
-    val ms = MemoryStream[StreamLogHist.Obs]
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[StreamLogHist.Quantiles]
-    def start() = StreamLogHist.monitor(ms.toDS())
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[
-          StreamLogHist.Quantiles], _: Long) =>
-        emitted.synchronized { emitted ++= df.collect() }; ()
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    val q1 = start()
-    try {
-      ms.addData(Seq.fill(40)(StreamLogHist.Obs("k", 10L)): _*)
-      q1.processAllAvailable()
-      assert(emitted.synchronized(emitted.last.p50_est) === 15L)
-    } finally q1.stop() // the "kill": bucket-4 mass lives only in state
-    emitted.synchronized(emitted.clear())
-    ms.addData(Seq.fill(10)(StreamLogHist.Obs("k", 1000L)): _*)
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      val rows = emitted.synchronized(emitted.toSeq).filter(_.key == "k")
-      assert(rows.nonEmpty, "no post-restart emission")
-      val last = rows.last
-      // p50 stays in bucket 4 only if the 40 recovered observations
-      // outweigh the 10 post-restart ones — a fresh histogram of the
-      // 10 large values alone would read p50 = 1023
-      assert(last.n_seen === 50L)
-      assert(last.p50_est === 15L && last.p99_est === 1023L)
-      assert(last.n_buckets === 2L)
-      assertRocksEngaged(q2)
-    } finally q2.stop()
-  }
-
-  test("StreamW1 value census survives a stop/restart from checkpoint") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ckpt = Files.createTempDirectory("graft-rec-w1").toString
-    val ref = (100 to 109).map(v => v -> 2L).toMap
-    val ms = MemoryStream[StreamW1.Obs]
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[StreamW1.W1]
-    def start() = StreamW1.monitor(ms.toDS(), ref)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[StreamW1.W1],
-          _: Long) =>
-        emitted.synchronized { emitted ++= df.collect() }; ()
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    val q1 = start()
-    try {
-      // batch 1 matches the reference exactly — W1 is exactly 0
-      ms.addData((100 to 109).flatMap(v =>
-        Seq.fill(2)(StreamW1.Obs("k", v))): _*)
-      q1.processAllAvailable()
-      assert(emitted.synchronized(emitted.last.w1_milli) === 0L)
-    } finally q1.stop() // the "kill": the matching census lives in state
-    emitted.synchronized(emitted.clear())
-    ms.addData(Seq.fill(20)(StreamW1.Obs("k", 130)): _*)
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      val rows = emitted.synchronized(emitted.toSeq).filter(_.key == "k")
-      assert(rows.nonEmpty, "no post-restart emission")
-      val last = rows.last
-      // 12750 = half the mass moved 104.5 -> 130 over the RECOVERED
-      // 40-observation census; a fresh census of only the 20 post-
-      // restart values would read the full 25500 shift instead
-      assert(last.n_obs === 40L)
-      assert(last.w1_milli === 12750L)
-      assertRocksEngaged(q2)
-    } finally q2.stop()
-  }
-
-  test("StreamKs census survives a stop/restart from checkpoint") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ckpt = Files.createTempDirectory("graft-rec-ks").toString
-    val ref = (100 to 109).map(v => v -> 2L).toMap
-    val ms = MemoryStream[StreamW1.Obs]
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[StreamKs.Ks]
-    def start() = StreamKs.monitor(ms.toDS(), ref)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[StreamKs.Ks],
-          _: Long) =>
-        emitted.synchronized { emitted ++= df.collect() }; ()
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    val q1 = start()
-    try {
-      // batch 1 matches the reference exactly — KS is exactly 0
-      ms.addData((100 to 109).flatMap(v =>
-        Seq.fill(2)(StreamW1.Obs("k", v))): _*)
-      q1.processAllAvailable()
-      assert(emitted.synchronized(emitted.last.ks_bp) === 0L)
-    } finally q1.stop() // the "kill": the matching census lives in state
-    emitted.synchronized(emitted.clear())
-    ms.addData(Seq.fill(20)(StreamW1.Obs("k", 130)): _*)
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      val rows = emitted.synchronized(emitted.toSeq).filter(_.key == "k")
-      assert(rows.nonEmpty, "no post-restart emission")
-      val last = rows.last
-      // over the RECOVERED 40-observation census half the mass sits
-      // above the reference — worst split at its top (109), 5000 bp; a
-      // fresh census of only the 20 post-restart values would read
-      // 10000 bp (disjoint support) instead
-      assert(last.n_obs === 40L)
-      assert(last.ks_bp === 5000L)
-      assert(last.ks_at === 109)
-      assertRocksEngaged(q2)
-    } finally q2.stop()
-  }
-
-  test("StreamEmbedDrift component sums survive a stop/restart from " +
-    "checkpoint") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ckpt = Files.createTempDirectory("graft-rec-em").toString
-    val ref = new Array[Long](8)
-    ref(0) = 10L * 1000000L
-    def axis(i: Int) = Array.tabulate(8)(j => if (j == i) 1.0 else 0.0)
-    val ms = MemoryStream[StreamEmbedDrift.Obs]
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[StreamEmbedDrift.Em]
-    def start() = StreamEmbedDrift.monitor(ms.toDS(), ref)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[StreamEmbedDrift.Em],
-            _: Long) =>
-          emitted.synchronized { emitted ++= df.collect() }; ()
-      }
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    val q1 = start()
-    try {
-      ms.addData(Seq.fill(5)(StreamEmbedDrift.Obs("k", axis(0))): _*)
-      q1.processAllAvailable()
-      assert(emitted.synchronized(emitted.last.drift_t) === 0L)
-    } finally q1.stop() // the "kill": the aligned sums live in state
-    emitted.synchronized(emitted.clear())
-    ms.addData(Seq.fill(5)(StreamEmbedDrift.Obs("k", axis(1))): _*)
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      val rows = emitted.synchronized(emitted.toSeq).filter(_.key == "k")
-      assert(rows.nonEmpty, "no post-restart emission")
-      val last = rows.last
-      // 2929 = the 45° centroid of the RECOVERED 10-vector census; a
-      // fresh census of only the 5 post-restart vectors would read the
-      // full orthogonal 10000
-      assert(last.n_obs === 10L)
-      assert(last.drift_t === 2929L)
-      assertRocksEngaged(q2)
-    } finally q2.stop()
-  }
-
   test("StreamFingerprint vote histograms survive a stop/restart from " +
     "checkpoint") {
     val s = rocksSession()

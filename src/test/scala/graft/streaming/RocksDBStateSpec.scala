@@ -247,95 +247,6 @@ class RocksDBStateSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("StreamDrift census accumulates identically on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ref = Map(0 -> 10L, 1 -> 10L)
-    val ms = MemoryStream[StreamDrift.Tok]
-    val q = StreamDrift.tvDrift(ms.toDS(), ref, buckets = 4)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_drift").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      // batch 1: uniform over {0,1} — matches the reference exactly
-      ms.addData(Seq(0, 1, 0, 1).map(StreamDrift.Tok("a", _)): _*)
-      q.processAllAvailable()
-      // batch 2: all mass on bucket 2 → union is (1/4, 1/4, 1/2, 0) vs
-      // (1/2, 1/2, 0, 0) → TV = 1/2
-      ms.addData(Seq(2, 2, 2, 2).map(StreamDrift.Tok("a", _)): _*)
-      q.processAllAvailable()
-      val last = s.table("rocks_drift").as[StreamDrift.Drift]
-        .collect().filter(_.source == "a").maxBy(_.n_tokens)
-      assert(last.n_tokens === 8L)
-      assert(last.tv_bp === 5000L)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamW1 value census accumulates identically on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ref = (100 to 109).map(v => v -> 2L).toMap
-    val ms = MemoryStream[StreamW1.Obs]
-    val q = StreamW1.monitor(ms.toDS(), ref)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_w1").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      // batch 1 matches the reference exactly (W1 = 0); batch 2 moves
-      // half the lifetime mass to 130 → W1 = 12750 milli over the
-      // ACCUMULATED census (a fresh census would read 25500)
-      ms.addData((100 to 109).flatMap(v =>
-        Seq.fill(2)(StreamW1.Obs("a", v))): _*)
-      q.processAllAvailable()
-      ms.addData(Seq.fill(20)(StreamW1.Obs("a", 130)): _*)
-      q.processAllAvailable()
-      val rows = s.table("rocks_w1").as[StreamW1.W1]
-        .collect().filter(_.key == "a").sortBy(_.n_obs)
-      assert(rows.head.w1_milli === 0L)
-      assert(rows.last.n_obs === 40L)
-      assert(rows.last.w1_milli === 12750L)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamKs sup-norm census accumulates identically on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ref = (100 to 109).map(v => v -> 2L).toMap
-    val ms = MemoryStream[StreamW1.Obs]
-    val q = StreamKs.monitor(ms.toDS(), ref)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_ks").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      // same census trajectory as the StreamW1 row above: batch 1
-      // matches the reference (KS = 0); batch 2 puts half the lifetime
-      // mass above it → worst split at the reference top (109), 5000 bp
-      ms.addData((100 to 109).flatMap(v =>
-        Seq.fill(2)(StreamW1.Obs("a", v))): _*)
-      q.processAllAvailable()
-      ms.addData(Seq.fill(20)(StreamW1.Obs("a", 130)): _*)
-      q.processAllAvailable()
-      val rows = s.table("rocks_ks").as[StreamKs.Ks]
-        .collect().filter(_.key == "a").sortBy(_.n_obs)
-      assert(rows.head.ks_bp === 0L)
-      assert(rows.last.n_obs === 40L)
-      assert(rows.last.ks_bp === 5000L)
-      assert(rows.last.ks_at === 109)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
   test("StreamSessionOverlap emits the same final overlaps on RocksDB " +
     "state (the composed Sessionize state rides the provider)") {
     val s = rocksSession()
@@ -363,74 +274,6 @@ class RocksDBStateSpec extends SparkSpecBase {
         .as[(Long, Long, Long, Long, Long)].collect().toSeq
       assert(got === Seq(
         (100L, 1L, us(10, 0), us(10, 10), 120000000L)))
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamEmbedDrift fixed-point sums accumulate identically on " +
-    "RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ref = new Array[Long](8)
-    ref(0) = 10L * 1000000L // reference centroid: axis 0
-    def axis(i: Int) = Array.tabulate(8)(j => if (j == i) 1.0 else 0.0)
-    val ms = MemoryStream[StreamEmbedDrift.Obs]
-    val q = StreamEmbedDrift.monitor(ms.toDS(), ref)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_em").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      // batch 1 aligned (drift 0); batch 2 adds equal orthogonal mass
-      // → the ACCUMULATED centroid sits at 45°: drift 2929 (4-dp cos)
-      ms.addData(Seq.fill(5)(StreamEmbedDrift.Obs("a", axis(0))): _*)
-      q.processAllAvailable()
-      ms.addData(Seq.fill(5)(StreamEmbedDrift.Obs("a", axis(1))): _*)
-      q.processAllAvailable()
-      val rows = s.table("rocks_em").as[StreamEmbedDrift.Em]
-        .collect().filter(_.key == "a").sortBy(_.n_obs)
-      assert(rows.head.drift_t === 0L)
-      assert(rows.last.n_obs === 10L)
-      assert(rows.last.drift_t === 2929L)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamPsi census accumulates identically on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ref = (0 until 10).map(b => b -> 20L).toMap
-    val ms = MemoryStream[StreamPsi.Obs]
-    val q = StreamPsi.monitor(ms.toDS(), ref, buckets = 10)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_psi").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      val b1 = (0 until 10).flatMap(b => Seq.fill(2)(b))
-      ms.addData(b1.map(StreamPsi.Obs("a", _)): _*)
-      q.processAllAvailable()
-      val b2 = Seq.fill(60)(0)
-      ms.addData(b2.map(StreamPsi.Obs("a", _)): _*)
-      q.processAllAvailable()
-      val last = s.table("rocks_psi").as[StreamPsi.Psi]
-        .collect().filter(_.key == "a").maxBy(_.n_obs)
-      assert(last.n_obs === 80L)
-      // same formula, accumulated across both batches (plain Scala twin)
-      val counts = Array.fill(10)(0L)
-      (b1 ++ b2).foreach(b => counts(b) += 1)
-      var acc = 0.0
-      for (i <- 0 until 10) {
-        val qq = (counts(i) + 1.0) / (80 + 10.0)
-        val pp = (20L + 1.0) / (200 + 10.0)
-        acc += (qq - pp) * math.log(qq / pp)
-      }
-      assert(last.psi_bp === (acc * 10000).toLong)
-      assert(last.drifted)
       assertRocksEngaged(q)
     } finally q.stop()
   }
@@ -573,63 +416,6 @@ class RocksDBStateSpec extends SparkSpecBase {
       assert(d2.ctx_first === 0L && d2.ctx_last === 1L &&
         d2.off_in_ctx === 80L && d2.n_sealed === 1L)
       assert(got.count(_.ctx_first == -1L) === 1)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamDiurnal census accumulates identically on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = MemoryStream[StreamDiurnal.Obs]
-    val q = StreamDiurnal.monitor(ms.toDS())
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_diurnal").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      val b1 = (0 until 24).map(h => StreamDiurnal.Obs(7L, h))
-      val b2 = (0 until 48).map(i => StreamDiurnal.Obs(7L, i % 24))
-      ms.addData(b1: _*)
-      q.processAllAvailable()
-      ms.addData(b2: _*)
-      q.processAllAvailable()
-      val last = s.table("rocks_diurnal")
-        .as[StreamDiurnal.Screen].collect()
-        .filter(_.user == 7L).maxBy(_.n_events)
-      // uniform 72-event census: statistic exactly 0, gate open —
-      // identical to the in-memory-provider run in StreamDiurnalSpec
-      assert(last.n_events === 72L && last.active_hours === 24)
-      assert(last.chi24 === 0L && last.screened)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamBenford census accumulates identically on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = MemoryStream[StreamBenford.Obs]
-    val q = StreamBenford.monitor(ms.toDS())
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_benford").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      ms.addData((1 to 60).map(i =>
-        StreamBenford.Obs("k", 9000.0 + i)): _*)
-      q.processAllAvailable()
-      ms.addData((1 to 60).map(i =>
-        StreamBenford.Obs("k", 9100.0 + i)): _*)
-      q.processAllAvailable()
-      val last = s.table("rocks_benford")
-        .as[StreamBenford.Dev].collect().maxBy(_.n_obs)
-      // 120 all-digit-9 amounts: dev = 10^6 − 45757 exactly, flagged —
-      // identical to the in-memory-provider run in StreamBenfordSpec
-      assert(last.n_obs === 120L && last.worst_digit === 9)
-      assert(last.dev_ppm === 1000000L - 45757L && last.flagged)
       assertRocksEngaged(q)
     } finally q.stop()
   }
