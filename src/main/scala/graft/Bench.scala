@@ -6,18 +6,17 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query steady-state
   * seconds. A warmup pass first absorbs JVM/codegen warmup so the timing of
   * whichever query happens to run first isn't inflated; each query is then
-  * timed over THREE passes and reports the median — single-pass timings
-  * inside a 90-query session measured up to 3x steady state from JIT/GC/
-  * codegen-cache interference (r7's e28 "regression" was exactly this:
-  * 5.6 s single-pass vs 1.8 s median on identical query+data), and the
-  * median is robust to one slow outlier pass in a way min/mean are not.
+  * timed over THREE passes and reports the median — a single-pass timing
+  * inside a long session can read up to 3x steady state from JIT/GC/
+  * codegen-cache interference, and the median is robust to one slow
+  * outlier pass in a way min/mean are not.
   * Failures are reported per query (never folded into the total as a fake
   * timing).
   *
   * Even the median-of-3 in-session numbers overstate the ITERATIVE-
   * CHECKPOINT queries (e32/e45/e46: per-round localCheckpoint blocks
-  * compete with the session's accumulated block-manager/GC state — r8
-  * measured up to 2.5x isolated steady state), so after the in-session
+  * compete with the session's accumulated block-manager/GC state, up to
+  * 2.5x isolated steady state), so after the in-session
   * sweep those queries are re-timed each in a FRESH SparkSession (same
   * JVM: JIT/codegen stay warm, which is exactly the part of warmup that
   * is NOT the artifact) and the sidecar carries both numbers under
@@ -37,10 +36,10 @@ import org.apache.spark.sql.SparkSession
   * `calib_flagged` — true when either probe exceeds 1.5× the
   * machine's demonstrated floor FOR ITS POSITION across the history
   * (start probes run JIT-cold and sit ~40 % above end probes on an
-  * idle machine, so the floors are position-matched). r15's six
-  * same-suite runs spanned 116-279 s on machine load alone; the
-  * flag is what lets a consumer tell "this run was slow" from "this
-  * plan got slow" without re-running anything.
+  * idle machine, so the floors are position-matched). Machine load
+  * alone can move a same-suite run by more than 2x; the flag is what
+  * lets a consumer tell "this run was slow" from "this plan got slow"
+  * without re-running anything.
   *
   * Env knobs: SPARK_GRAFT_BENCH_ONLY=name,name restricts the run (dev
   * iteration on one query); SPARK_GRAFT_BENCH_ISOLATED overrides the
@@ -69,9 +68,9 @@ object Bench {
     * job over GENERATED data (no IO, no sf dependence, identical work
     * every run and every round), timed twice with the min taken — the
     * min of two back-to-back runs of fixed work is a load estimate the
-    * suite's own timings can be judged against. r15 measured 2.4×
-    * same-suite swings (116-279 s) from machine load alone, which would
-    * hide a real 30 % regression; the probe makes "this run was slow"
+    * suite's own timings can be judged against. Machine load alone can
+    * swing a same-suite run by more than 2×, which would hide a real
+    * 30 % regression; the probe makes "this run was slow"
     * distinguishable from "this plan got slow" inside the artifact
     * itself.
     */
@@ -109,7 +108,7 @@ object Bench {
     * the END probe (fresh session, warm JVM) on an idle machine, so
     * one pooled floor — the first implementation — flagged every run
     * against its own end probe. The floor is the P10 (not the min) of
-    * the pooled same-position probes (r16 ADVICE): a single
+    * the pooled same-position probes: a single
     * anomalously fast probe — timer glitch, unusually cold cache —
     * would otherwise ratchet the floor down permanently and flag every
     * later healthy run as loaded.
@@ -135,7 +134,7 @@ object Bench {
         scala.jdk.CollectionConverters.ListHasAsScala(
           java.nio.file.Files.readAllLines(p)).asScala.toSeq
           // probes from runs that were THEMSELVES load-flagged are
-          // excluded from the floor pool (r18, ADVICE r17): loaded
+          // excluded from the floor pool: loaded
           // probes entering the pool ratchet the P10 floor UP over
           // time, silently under-flagging later loaded runs — the
           // drift direction the old min floor was immune to
@@ -149,7 +148,7 @@ object Bench {
     * round's verdict is stable for the whole working round, so current
     * = header round + 1). Case-insensitive; any garbage → None, so a
     * reformatted header FAILS SAFE as an omitted field, never a wrong
-    * stamp (r15 verdict #7's contract, now spec-pinned in BenchSpec).
+    * stamp (spec-pinned in BenchSpec).
     */
   private[graft] def deriveRound(headerLine: Option[String]): Option[Int] =
     headerLine.flatMap("(?i)round ([1-9][0-9]*)".r.findFirstMatchIn(_))
@@ -218,9 +217,7 @@ object Bench {
     }
     // Per-query pass spread (max − min over the timed passes): the
     // measured in-session variance next to every median, so a
-    // round-over-round diff can tell a plan regression from pass noise
-    // (r12's ±15 % session variance was a SCALING.md footnote; now it's
-    // a per-query number in the same artifact as the timing).
+    // round-over-round diff can tell a plan regression from pass noise.
     val spreads = allTimes.collect { case (name, ts) if ts.size > 1 =>
       name -> (ts.last - ts.head)
     }
@@ -232,10 +229,9 @@ object Bench {
       "e32_dedup_clusters,e45_dedup_apply,e46_cc_star,e50_bpe_train," +
         "e73_shard_manifest,e77_shard_stability,e120_pagerank," +
         "e122_coverage_select," + // e122: iterative-localCheckpoint-shaped
-        // like e32/e45 — r10 measured its in-session number inflated the
-        // same way (5.7 s in-session vs 11.9 s at the 100x probe's scale)
-        "e147_nn_descent," + // r11's slowest in-session query (11.2 s):
-        // 8 eager-checkpoint rounds, the same iterative shape
+        // like e32/e45, so its in-session number inflates the same way
+        "e147_nn_descent," + // 8 eager-checkpoint rounds, the same
+        // iterative shape
         "e147b_nn_descent_int8," + // e147's int8-scored twin — identical
         // 8-round eager-checkpoint shape, same in-session inflation
         "e158_nn_descent_inc," + // the new/old-flags variant — same
@@ -322,10 +318,10 @@ object Bench {
       case (n, v) if !errs.contains(n) => v
     }.sum
     // default history path anchored to SPARK_GRAFT_REPO_ROOT like the
-    // VERDICT.md round derivation (r16 ADVICE: a bench launched from
-    // another cwd silently read an empty calibration floor and
-    // appended history to a stray file); an explicit env value is
-    // taken verbatim, and empty still disables.
+    // VERDICT.md round derivation (a bench launched from another cwd
+    // would otherwise read an empty calibration floor and append
+    // history to a stray file); an explicit env value is taken
+    // verbatim, and empty still disables.
     val hist = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY",
       java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_REPO_ROOT", "."),
@@ -345,8 +341,8 @@ object Bench {
         s""""load_end":${jnum(loadEnd)},""" +
         s""""calib_flagged":$flagged,"""
     // Field ORDER is load-bearing: the driver's BENCH_rN.json capture
-    // keeps only the TAIL of this line (r8-r10 all lost the leading
-    // "value" field to the 2000-char cut), so the big per-query maps go
+    // keeps only the TAIL of this line (a 2000-char cut loses the
+    // leading fields), so the big per-query maps go
     // FIRST and every scalar the judge reads (value, n_queries,
     // n_failed, sf) goes LAST — JSON objects are unordered, so a full
     // parse is unaffected while a tail capture now always carries the
@@ -358,16 +354,14 @@ object Bench {
         s""""value":${"%.4f".format(total)},""" +
         s""""n_queries":${results.size},""" +
         s""""n_failed":${errs.size},"sf":${jstr(sfDir)}}"""
-    // A second, SHORT summary line carrying only the scalars. Every
-    // round since r06 recorded parsed:null in BENCH_rN.json: the full
-    // line grew past what the driver's line capture survives (terminal
-    // wrap / truncation breaks json.loads), and only r05's ~90-query
-    // line ever parsed. This line is ~150 chars — immune to wrapping
-    // and fully inside any tail window — and it is the ONLY printed
-    // line matching `{"metric"` at position 0 (the full line starts
-    // with `{"queries"`), so a first-match or last-match extraction
-    // both land here. Printed LAST so a tail-of-output capture always
-    // ends with it.
+    // A second, SHORT summary line carrying only the scalars. The full
+    // line is longer than a line capture survives (terminal wrap /
+    // truncation breaks json.loads). This line is ~150 chars — immune
+    // to wrapping and fully inside any tail window — and it is the ONLY
+    // printed line matching `{"metric"` at position 0 (the full line
+    // starts with `{"queries"`), so a first-match or last-match
+    // extraction both land here. Printed LAST so a tail-of-output
+    // capture always ends with it.
     val shortLine =
       s"""{"metric":"total","unit":"sec",""" +
         s""""value":${"%.4f".format(total)},""" +
@@ -376,9 +370,9 @@ object Bench {
         s""""n_isolated":${isolated.size},""" +
         s""""calib_s":${"%.4f".format(calibStart)},""" +
         s""""calib_flagged":$flagged,"sf":${jstr(sfDir)}}"""
-    // Sidecar file first: sbt decorates stdout with "[info] " prefixes the
-    // driver's line-parse can trip on (BENCH_r02 had parsed:null), so the
-    // JSON is also written somewhere log decoration can't reach.
+    // Sidecar file first: sbt decorates stdout with "[info] " prefixes a
+    // line parser can trip on, so the JSON is also written somewhere
+    // log decoration can't reach.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line)
     catch { case _: Throwable => () }
@@ -393,8 +387,8 @@ object Bench {
       // Round stamp: SPARK_GRAFT_ROUND (driver-passed) makes each
       // history line self-describing — without it, correlating a line
       // to its BENCH_rN.json means matching wall-clock timestamps.
-      // The driver does NOT export the env var (r14 verdict nit), so
-      // when it is absent the round is derived from the repo itself:
+      // When the env var is absent the round is derived from the repo
+      // itself:
       // VERDICT.md's header names the PREVIOUS round and is stable for
       // the whole working round (unlike CORRECTNESS_r*.json, which the
       // driver may write mid-wrap-up before or after the bench), so

@@ -74,16 +74,6 @@ object MockData {
     pmod(pmod(x * x, lit(P)) * x, lit(P))
   }
 
-  /** JVM-scalar twin of [[hashLong]] (identical arithmetic) — for
-    * driver-/state-side code that needs the same draw without a Column
-    * (e.g. streaming state updates). Operands stay below 2^60.
-    */
-  def hashLongJvm(seed: Long, tag: String, key: Long): Long = {
-    val (a, b) = mixCoeffs(seed, tag)
-    val x = ((((key % P) + P) % P) * a + b) % P
-    ((x * x % P) * x) % P
-  }
-
   /** Uniform [0,1) for (seed, tag, integral row key). */
   def hashUnit(seed: Long, tag: String, key: Column): Column =
     hashLong(seed, tag, key).cast("double") / P

@@ -11,15 +11,15 @@ import org.apache.spark.storage.StorageLevel
   * releases a dead round with [[release]] once the next is
   * materialized and marks with [[keep]] the frames it hands back. On
   * exit, normal or thrown, the scope waits for the bodies it started
-  * through [[overlap]], then releases everything else. A pin that
-  * rides a returned plan across calls has one owner per key instead:
-  * [[Pins.slot]].
+  * through [[overlap]], then releases everything else. Pins that ride
+  * a result across calls have one owner per key instead: [[Pins.slot]].
   */
 final class Pins private () {
 
-  // (frame, persisted)
+  // (frame, how to free it); a slot drops the frame once its build
+  // returns, so it keeps no returned plan alive
   private val held =
-    scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Boolean)]
+    scala.collection.mutable.ArrayBuffer.empty[(DataFrame, () => Unit)]
   private val forks = scala.collection.mutable.ArrayBuffer.empty[() => Any]
 
   /** Eagerly checkpoints `df` and registers the result. Spark
@@ -57,7 +57,7 @@ final class Pins private () {
   /** Releases a registered frame now, once nothing will read it
     * again; a frame this scope does not own is left alone.
     */
-  def release(df: DataFrame): Unit = take(df).foreach(Pins.free(df, _))
+  def release(df: DataFrame): Unit = take(df).foreach(_())
 
   /** Hands a registered frame to the caller. */
   def keep(df: DataFrame): DataFrame = { take(df); df }
@@ -71,20 +71,23 @@ final class Pins private () {
     t
   }
 
-  private def add(df: DataFrame, persisted: Boolean): DataFrame =
-    synchronized { held += df -> persisted; df }
+  private def add(df: DataFrame, persisted: Boolean): DataFrame = {
+    val free = Pins.freeing(df, persisted)
+    synchronized { held += df -> free; df }
+  }
 
-  private def take(df: DataFrame): Option[Boolean] = synchronized {
+  private def take(df: DataFrame): Option[() => Unit] = synchronized {
     val i = held.indexWhere(_._1 eq df)
     if (i < 0) None else Some(held.remove(i)._2)
   }
 
+  private def dropFrames(): Unit =
+    synchronized(held.mapInPlace { case (_, free) => (null, free) })
+
   private def close(): Unit = {
     // a fork's failure reaches whoever forces its thunk
     synchronized(forks.toList).foreach(t => scala.util.Try(t()))
-    synchronized(held.toList).reverse.foreach { case (df, persisted) =>
-      Pins.free(df, persisted)
-    }
+    synchronized(held.toList).reverse.foreach(_._2())
   }
 }
 
@@ -99,22 +102,28 @@ object Pins {
   }
 
   private val slots =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[String, Pins]()
 
   // names the jobs and RDDs a thread creates while set
   private val CallSiteKey = "callSite.short"
   private val calls = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The one pin per `key` that rides a returned plan across calls:
-    * releases the frame the previous same-key call stored, then builds
-    * and stores the new one. Same-key calls must be sequential, each
+  /** The one owner per `key` of the pins that ride a result across
+    * calls: releases what the previous same-key call pinned, then runs
+    * `build` with a fresh scope that stays open until the next same-key
+    * call instead of closing when `build` returns. When `build` throws,
+    * the scope closes at once. Same-key calls must be sequential, each
     * consuming its result before the next starts.
     */
-  def slot(key: String)(build: => DataFrame): DataFrame = {
+  def slot[T](key: String)(build: Pins => T): T = {
     val prev = slots.remove(key)
-    if (prev != null) free(prev, persisted = false)
-    val built = build
-    slots.put(key, built)
+    if (prev != null) prev.close()
+    val p = new Pins
+    val built = try build(p) catch {
+      case t: Throwable => p.close(); throw t
+    }
+    p.dropFrames()
+    slots.put(key, p)
     built
   }
 
@@ -133,12 +142,16 @@ object Pins {
     dir.union(dir.select(col("v").as("u"), col("u").as("v"))).distinct()
   }
 
-  /** Unpersists a persisted frame, or the RDDs behind a
-    * checkpoint-backed frame's checkpoints.
+  /** How to free a pin: unpersist a persisted frame, or the RDDs behind
+    * a checkpoint-backed frame's checkpoints, found now so that the
+    * frame itself need not be kept.
     */
-  private def free(df: DataFrame, persisted: Boolean): Unit =
-    if (persisted) df.unpersist(false)
-    else df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(false))
+  private def freeing(df: DataFrame, persisted: Boolean): () => Unit =
+    if (persisted) () => df.unpersist(false)
+    else {
+      val rdds = df.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      }
+      () => rdds.foreach(_.unpersist(false))
+    }
 }

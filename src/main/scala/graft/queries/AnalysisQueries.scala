@@ -2149,7 +2149,7 @@ object AnalysisQueries {
         // read the frequency table, so it is checkpointed once; the pin
         // rides the returned plan, one per query, not one per call.
         val freq = Pins.slot("e117_conformal_select")(
-          cal.groupBy("bp").agg(count(lit(1)).as("c")).localCheckpoint(true))
+          _.checkpoint(cal.groupBy("bp").agg(count(lit(1)).as("c"))))
         val cum = BoundedPrefix.cumsum(
           freq, "bp", expr("bp div 64"), Seq("c" -> "cum"))
         val tau = cum.crossJoin(broadcast(jr))
@@ -4453,7 +4453,7 @@ object AnalysisQueries {
       kernel: NnDescent.Kernel, K: Int, anchors: Int)(
       build: NnDescent.Vectors => (Seq[DataFrame], Seq[(String, Seq[Long])]))
       : DataFrame =
-    Pins.slot(key)(Pins.scope { p =>
+    Pins.slot(key)(_.own(Pins.scope { p =>
       val v = NnDescent.vectors(emb, kernel)
       p.own(v.r)
       val truth = p.overlap(NnDescent.anchorTruth(p, v.r, K, anchors))
@@ -4463,7 +4463,7 @@ object AnalysisQueries {
       val out = NnDescent.roundMetrics(knns, kernel.score, t, K, counts: _*)
       (t +: knns).foreach(p.keep)
       out
-    })
+    }))
 
   /** An NN-Descent production plan: the last graph of `build`, no
     * truth leg. It rides the [[Pins.slot]] `key`; the vector table and
@@ -4472,11 +4472,11 @@ object AnalysisQueries {
   private def nndGraph(key: String, emb: DataFrame,
       kernel: NnDescent.Kernel)(build: NnDescent.Vectors => Seq[DataFrame])
       : DataFrame =
-    Pins.slot(key)(Pins.scope { p =>
+    Pins.slot(key)(_.own(Pins.scope { p =>
       val v = NnDescent.vectors(emb, kernel)
       p.own(v.r)
       p.keep(build(v).map(p.own).last)
-    })
+    }))
 
   /** e147/e147b's two forms: ring init + `rounds` plain rounds under
     * `kernel`, audited per round, or the final graph alone.
@@ -5298,59 +5298,68 @@ object AnalysisQueries {
          |    AS recall_se_bp,
          |  n_edge_diff
          |FROM m3 ORDER BY leg""".stripMargin) { (s, dir) =>
-      val legs = e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
-        Scratch.dir(s, "e173") + "/knn_base")
-      def anchorTruth(idx: DataFrame): DataFrame = Pins.scope(p =>
-        p.keep(NnDescent.anchorTruth(p, idx, K, anchorBudget)))
-      val truth = anchorTruth(legs.r.select("vec_id", "uv"))
-      val truthB = anchorTruth(legs.r
-        .join(legs.gens.filter(col("is_fresh") === false)
-          .select("vec_id"), "vec_id")
-        .select("vec_id", "uv"))
-      val sb = legs.scratchFinal.select("src", "dst")
-        .join(legs.gens.filter(col("is_fresh") === false)
-          .select(col("vec_id").as("src")), "src")
-      def legRowDf(leg: String, rounds: Int, init: Long,
-          freshes: Seq[Long], fin: DataFrame, truthRel: DataFrame,
-          ref: Option[DataFrame]): DataFrame = {
-        // n_scored = init + per-round fresh counts, all observed at
-        // build time
-        val nNodes = fin.select("src").distinct()
-          .agg(count(lit(1)).as("n_nodes"))
-        val diff = ref match {
-          case Some(b) =>
-            fin.select("src", "dst")
-              .join(b, Seq("src", "dst"), "left_anti")
-              .agg(count(lit(1)).as("d1"))
-              .crossJoin(b.join(fin.select("src", "dst"),
-                Seq("src", "dst"), "left_anti")
-                .agg(count(lit(1)).as("d2")))
-              .select((col("d1") + col("d2")).as("n_edge_diff"))
-          case None =>
-            legs.r.limit(1).select(lit(0L).as("n_edge_diff"))
+      // the returned plan reads the vector table, the fold and scratch
+      // graphs and both anchor truths: they ride the [[Pins.slot]] under
+      // the query name, and a failed job releases them at once
+      Pins.slot("e173_knn_persist_fold")(_.own(Pins.scope { p =>
+        val legs = e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
+          Scratch.dir(s, "e173") + "/knn_base")
+        val pinned = Seq(legs.r, legs.foldFinal, legs.scratchFinal)
+        pinned.foreach(p.own)
+        def anchorTruth(idx: DataFrame): DataFrame =
+          NnDescent.anchorTruth(p, idx, K, anchorBudget)
+        val truth = anchorTruth(legs.r.select("vec_id", "uv"))
+        val truthB = anchorTruth(legs.r
+          .join(legs.gens.filter(col("is_fresh") === false)
+            .select("vec_id"), "vec_id")
+          .select("vec_id", "uv"))
+        val sb = legs.scratchFinal.select("src", "dst")
+          .join(legs.gens.filter(col("is_fresh") === false)
+            .select(col("vec_id").as("src")), "src")
+        def legRowDf(leg: String, rounds: Int, init: Long,
+            freshes: Seq[Long], fin: DataFrame, truthRel: DataFrame,
+            ref: Option[DataFrame]): DataFrame = {
+          // n_scored = init + per-round fresh counts, all observed at
+          // build time
+          val nNodes = fin.select("src").distinct()
+            .agg(count(lit(1)).as("n_nodes"))
+          val diff = ref match {
+            case Some(b) =>
+              fin.select("src", "dst")
+                .join(b, Seq("src", "dst"), "left_anti")
+                .agg(count(lit(1)).as("d1"))
+                .crossJoin(b.join(fin.select("src", "dst"),
+                  Seq("src", "dst"), "left_anti")
+                  .agg(count(lit(1)).as("d2")))
+                .select((col("d1") + col("d2")).as("n_edge_diff"))
+            case None =>
+              legs.r.limit(1).select(lit(0L).as("n_edge_diff"))
+          }
+          nNodes
+            .crossJoin(
+              NnDescent.graphStats(fin, "cos", "avg_cos_t", truthRel))
+            .crossJoin(NnDescent.nAnchors(truthRel)).crossJoin(diff)
+            .select(lit(leg).as("leg"), col("n_nodes"),
+              lit(rounds.toLong).as("n_rounds"),
+              lit(init + freshes.sum).as("n_scored"),
+              col("avg_cos_t"), col("hits"), col("n_anchors"),
+              col("n_edge_diff"))
         }
-        nNodes
-          .crossJoin(NnDescent.graphStats(fin, "cos", "avg_cos_t", truthRel))
-          .crossJoin(NnDescent.nAnchors(truthRel)).crossJoin(diff)
-          .select(lit(leg).as("leg"), col("n_nodes"),
-            lit(rounds.toLong).as("n_rounds"),
-            lit(init + freshes.sum).as("n_scored"),
-            col("avg_cos_t"), col("hits"), col("n_anchors"),
-            col("n_edge_diff"))
-      }
-      val rows =
-        legRowDf("base", B, legs.baseInitCount, legs.baseFreshCounts,
-          legs.stored, truthB, Some(sb))
-        .unionByName(legRowDf("fold", Fr, legs.foldInitCount,
-          legs.foldFreshCounts, legs.foldFinal, truth,
-          Some(legs.scratchFinal.select("src", "dst"))))
-        .unionByName(legRowDf("scratch", S, legs.scratchInitCount,
-          legs.scratchFreshCounts, legs.scratchFinal, truth, None))
-      NnDescent.withRecall(rows, K)
-        .select(col("leg"), col("n_nodes"), col("n_rounds"),
-          col("n_scored"), col("avg_cos_t"), col("recall_bp"),
-          col("recall_se_bp"), col("n_edge_diff"))
-        .orderBy("leg")
+        val rows =
+          legRowDf("base", B, legs.baseInitCount, legs.baseFreshCounts,
+            legs.stored, truthB, Some(sb))
+          .unionByName(legRowDf("fold", Fr, legs.foldInitCount,
+            legs.foldFreshCounts, legs.foldFinal, truth,
+            Some(legs.scratchFinal.select("src", "dst"))))
+          .unionByName(legRowDf("scratch", S, legs.scratchInitCount,
+            legs.scratchFreshCounts, legs.scratchFinal, truth, None))
+        (pinned :+ truth :+ truthB).foreach(p.keep)
+        NnDescent.withRecall(rows, K)
+          .select(col("leg"), col("n_nodes"), col("n_rounds"),
+            col("n_scored"), col("avg_cos_t"), col("recall_bp"),
+            col("recall_se_bp"), col("n_edge_diff"))
+          .orderBy("leg")
+      }))
     }.withBuildOnly((s, dir) =>
       // production: fingerprint-amortized base build + persist, then
       // the fold — no truth, no scratch reference, no diffs (the
@@ -5358,10 +5367,9 @@ object AnalysisQueries {
       // on a fresh store the timed pass is FOLD-ONLY, the steady-state
       // per-delta cost the persisted posture buys. The returned fold
       // graph rides a [[Pins.slot]], so repeated calls pin one.
-      Pins.slot("e173:" + knnStorePath(s, dir)) {
-        e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
-          knnStorePath(s, dir), production = true).foldFinal
-      })
+      Pins.slot("e173:" + knnStorePath(s, dir))(
+        _.own(e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
+          knnStorePath(s, dir), production = true).foldFinal)))
   }
 
   /** CONSUMER of the stored kNN graph — the chain e173 opens
@@ -5453,7 +5461,7 @@ object AnalysisQueries {
     */
   private def e176Census(
       s: SparkSession, fold: DataFrame, pinKey: String): DataFrame =
-    Pins.slot(pinKey)(Pins.scope { p =>
+    Pins.slot(pinKey)(_.own(Pins.scope { p =>
       val mp = p.checkpoint(p.own(fold).as("a")
         .join(fold.as("b"),
           col("b.src") === col("a.dst") && col("b.dst") === col("a.src"))
@@ -5479,7 +5487,7 @@ object AnalysisQueries {
         .select(col("cluster"), col("n_members"), col("n_edges"),
           expr("sc div n_edges").as("avg_cos_t"))
         .localCheckpoint(true)
-    }).orderBy("cluster")
+    }).orderBy("cluster"))
 
   // ---- e178: generational data-card diff -----------------------------------
 

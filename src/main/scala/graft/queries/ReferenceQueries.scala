@@ -1814,7 +1814,7 @@ object ReferenceQueries {
       // and day-spine branches all read it. The pin rides the returned
       // plan, one per query, not one per call.
       val jd = graft.operators.Pins.slot("q44_interpolate")(
-        j.withColumn("__d", expr("hr div 24")).localCheckpoint(true))
+        _.checkpoint(j.withColumn("__d", expr("hr div 24"))))
       val back = Window.partitionBy("__d").orderBy("hr")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val fwd = Window.partitionBy("__d").orderBy("hr")

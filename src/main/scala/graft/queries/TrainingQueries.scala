@@ -2146,9 +2146,8 @@ object TrainingQueries {
     // checkpointed once; the pin rides the returned plan, one per
     // query, not one per call.
     val freq = graft.operators.Pins.slot("e76_curriculum_bins")(
-      sc.groupBy("score_bp")
-        .agg(count(lit(1)).as("cnt"), sum(col("n_words")).as("wsum"))
-        .localCheckpoint(true))
+      _.checkpoint(sc.groupBy("score_bp")
+        .agg(count(lit(1)).as("cnt"), sum(col("n_words")).as("wsum"))))
     val cum = graft.operators.BoundedPrefix.cumsum(
       freq, "score_bp", expr("score_bp div 64"), Seq("cnt" -> "cum"))
     val tot = freq.agg(sum(col("cnt")).as("n"))

@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{F, Portable}
+import graft.operators.Pins
 
 /** ONLINE attach leg of the persisted-kNN-graph family — arriving
   * vectors join the stored base graph's neighborhoods as they land,
@@ -40,10 +40,14 @@ import graft.functions.{F, Portable}
   * attach ⊆ fold on the convergent fixture under exactly this
   * k < K − max-fresh-per-neighborhood discipline).
   *
-  * Static sides (base vectors + signatures, the stored edge list) are
-  * MATERIALIZED once at wiring time — a stream-static join re-evaluates
-  * its static side per micro-batch; the per-band key tables and the scoring projection are lazy
-  * projections over the ONE persisted base frame.
+  * Static sides (base vectors + signatures, the capped band tables, the
+  * stored edge list) are persisted once at wiring time — a
+  * stream-static join re-evaluates its static side per micro-batch; the
+  * scoring projection is a lazy view over the ONE persisted base frame.
+  * They ride the [[Pins.slot]] `StreamKnnFold`, so a wiring releases
+  * the previous wiring's statics and repeated wirings in one session
+  * pin one set. Nothing is persisted until the whole plan resolves, so
+  * a wiring that fails leaves the cache as it found it.
   *
   * Scale: per arriving vector the work is `tables` O(1) bucket probes,
   * a bounded hop expansion (≤ bucket hits × K edges), and one bounded
@@ -52,25 +56,6 @@ import graft.functions.{F, Portable}
   * nothing is quadratic in either the stream or the store.
   */
 object StreamKnnFold {
-
-  /** One-slot registry of the PREVIOUS wiring's persisted statics.
-    * materializeStatics persists up to 6 frames per wiring, so without
-    * a release path repeated wirings in one session — spec batch
-    * replays, probe chunks, bench re-invocations — would accumulate
-    * session-lifetime cache entries. Each materializing wiring
-    * atomically SWAPS its built frames in and unpersists exactly the
-    * set the swap displaced (a clear-at-start/set-at-end pair could
-    * orphan one wiring's frames outside the slot under interleaving),
-    * so at any moment at most one committed wiring's statics are
-    * pinned.
-    * Same-slot wirings are sequential in every harness (a stream is
-    * wired, run, stopped before the next); if two attach streams are
-    * ever LIVE concurrently, the second wiring demotes the first's
-    * statics to recompute-on-read — a slowdown, never an error
-    * (persist is advisory).
-    */
-  private val staticsSlot =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](Nil)
 
   /** Stateless candidate generation + exact scoring — shared verbatim
     * by the stream plan and its batch replay (the spec's
@@ -90,16 +75,8 @@ object StreamKnnFold {
   def scoredCandidates(
       vectors: DataFrame, baseVectors: DataFrame, storedEdges: DataFrame,
       d: Int = 64, tables: Int = 4, bits: Int = 4,
-      capPerBucket: Int = 64,
-      materializeStatics: Boolean = true): DataFrame = {
+      capPerBucket: Int = 64): DataFrame = {
     require(capPerBucket >= 1, "capPerBucket must be >= 1")
-    val persisted = Seq.newBuilder[DataFrame]
-    def mat(df: DataFrame): DataFrame =
-      if (materializeStatics) {
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted += p
-        p
-      } else df
     def normalized(df: DataFrame): DataFrame = df
       .where(col("vec_id").isNotNull)
       .select(col("vec_id"),
@@ -117,76 +94,63 @@ object StreamKnnFold {
           .otherwise(lit(0L))
       }.reduce(_ + _)
     }
-    // A failure mid-wiring (e.g. a frame missing a column) unpersists
-    // whatever this call already persisted before rethrowing: nothing
-    // outside the slot stays pinned.
-    val (edges, baseUv, seeds) = try {
-      // ONE persisted base frame; the scoring projection is a lazy view
-      // over it (the e172 sigBand rule)
-      val base = mat(normalized(baseVectors)
-        .select(col("vec_id"), col("uv"), array(sigCols: _*).as("gs")))
-      // band tables are CAPPED per bucket (deterministic lowest-id
-      // members kept) and persisted in their capped form: sign-LSH
-      // bucket occupancy is size-BIASED — the expected size of the
-      // bucket an arriving vector lands in is E[size²]/E[size], and the
-      // 100× probe measured 33k candidates per query from exactly that
-      // skew before the cap. With it, per-query work is bounded by
-      // construction at tables·cap seeds + tables·cap·K hop candidates
-      // regardless of corpus or skew — the e147 reverse-cap rule applied
-      // at serving time, with the one-hop graph expansion recovering the
-      // neighbors the truncated bucket hides (spec pins exact
-      // base-top-k coverage on the fixture).
-      val w = org.apache.spark.sql.expressions.Window
-      val bandTables = (0 until tables).map { t =>
-        mat(base
-          .select(element_at(col("gs"), t + 1).as(s"btk$t"),
-            col("vec_id").as("cand_id"))
-          .withColumn("rn", row_number().over(
-            w.partitionBy(col(s"btk$t")).orderBy(col("cand_id"))))
-          .filter(col("rn") <= capPerBucket)
-          .drop("rn"))
-      }
-      val edges = mat(storedEdges
-        .select(col("src").as("cand_id"), col("dst").as("hop_id")))
-      val baseUv = base.select(col("vec_id").as("cand_id"),
-        col("uv").as("cuv"))
-      val q = normalized(vectors).select(col("vec_id").as("src"),
-        col("uv"), array(sigCols: _*).as("qs"))
-      // the STREAM side broadcasts, explicitly: a micro-batch of
-      // arriving vectors is small by construction, while the band tables
-      // are corpus-sized — left to the planner, the static side wins the
-      // broadcast and is re-broadcast EVERY trigger (measured 3× the
-      // per-batch latency at the 100× probe: micro-batch plans are fresh
-      // executions, so a static-side broadcast is rebuilt per batch; the
-      // persist above only amortizes the scan under it)
-      val seeds = (0 until tables).map { t =>
-        broadcast(q.select(col("src"), col("uv"),
-            element_at(col("qs"), t + 1).as(s"btk$t")))
-          .join(bandTables(t), Seq(s"btk$t"))
-          .select(col("src"), col("uv"), col("cand_id"))
-      }.reduce(_ unionByName _)
-      (edges, baseUv, seeds)
-    } catch {
-      case e: Throwable =>
-        persisted.result().foreach(_.unpersist(false))
-        throw e
+    // ONE base frame; the scoring projection is a lazy view over it
+    // (the e172 sigBand rule)
+    val base = normalized(baseVectors)
+      .select(col("vec_id"), col("uv"), array(sigCols: _*).as("gs"))
+    // band tables are CAPPED per bucket (deterministic lowest-id
+    // members kept) and persisted in their capped form: sign-LSH
+    // bucket occupancy is size-BIASED — the expected size of the
+    // bucket an arriving vector lands in is E[size²]/E[size], and the
+    // 100× probe measured 33k candidates per query from exactly that
+    // skew before the cap. With it, per-query work is bounded by
+    // construction at tables·cap seeds + tables·cap·K hop candidates
+    // regardless of corpus or skew — the e147 reverse-cap rule applied
+    // at serving time, with the one-hop graph expansion recovering the
+    // neighbors the truncated bucket hides (spec pins exact
+    // base-top-k coverage on the fixture).
+    val w = org.apache.spark.sql.expressions.Window
+    val bandTables = (0 until tables).map { t =>
+      base
+        .select(element_at(col("gs"), t + 1).as(s"btk$t"),
+          col("vec_id").as("cand_id"))
+        .withColumn("rn", row_number().over(
+          w.partitionBy(col(s"btk$t")).orderBy(col("cand_id"))))
+        .filter(col("rn") <= capPerBucket)
+        .drop("rn")
     }
-    // ONE atomic swap: a getAndSet(Nil)-at-start / set-at-end pair
-    // would let two interleaved wirings orphan one result set outside
-    // the slot (pinned forever). Swapping the built
-    // frames in and unpersisting exactly what the swap displaced means
-    // every persisted set is either IN the slot or already unpersisted,
-    // under any interleaving.
-    if (materializeStatics)
-      staticsSlot.getAndSet(persisted.result()).foreach(_.unpersist(false))
+    val edges = storedEdges
+      .select(col("src").as("cand_id"), col("dst").as("hop_id"))
+    val baseUv = base.select(col("vec_id").as("cand_id"),
+      col("uv").as("cuv"))
+    val q = normalized(vectors).select(col("vec_id").as("src"),
+      col("uv"), array(sigCols: _*).as("qs"))
+    // the STREAM side broadcasts, explicitly: a micro-batch of
+    // arriving vectors is small by construction, while the band tables
+    // are corpus-sized — left to the planner, the static side wins the
+    // broadcast and is re-broadcast EVERY trigger (measured 3× the
+    // per-batch latency at the 100× probe: micro-batch plans are fresh
+    // executions, so a static-side broadcast is rebuilt per batch; the
+    // persist below only amortizes the scan under it)
+    val seeds = (0 until tables).map { t =>
+      broadcast(q.select(col("src"), col("uv"),
+          element_at(col("qs"), t + 1).as(s"btk$t")))
+        .join(bandTables(t), Seq(s"btk$t"))
+        .select(col("src"), col("uv"), col("cand_id"))
+    }.reduce(_ unionByName _)
     val expanded = seeds.join(edges, Seq("cand_id"))
       .select(col("src"), col("uv"), col("hop_id").as("cand_id"))
-    seeds.unionByName(expanded)
+    val scored = seeds.unionByName(expanded)
       .filter(col("src") =!= col("cand_id"))
       .join(baseUv, Seq("cand_id"))
       .select(col("src"), col("cand_id").as("dst"),
         round(F.array_dot(col("uv"), col("cuv")) * 10000)
           .cast("long").as("cos_t"))
+    // the plan has resolved; the base goes first so that each band
+    // table's cache is built over the cached base
+    Pins.slot("StreamKnnFold")(p =>
+      (base +: bandTables :+ edges).foreach(p.persist))
+    scored
   }
 
   /** The streaming attach: candidate scores through [[TopKState]] —
@@ -197,13 +161,12 @@ object StreamKnnFold {
   def attach(
       vectors: DataFrame, baseVectors: DataFrame, storedEdges: DataFrame,
       k: Int, d: Int = 64, tables: Int = 4, bits: Int = 4,
-      capPerBucket: Int = 64,
-      materializeStatics: Boolean = true)
+      capPerBucket: Int = 64)
       : Dataset[TopKState.Leaderboard] = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val scored = scoredCandidates(vectors, baseVectors, storedEdges,
-      d, tables, bits, capPerBucket, materializeStatics)
+      d, tables, bits, capPerBucket)
     TopKState.topK(
       scored.select(col("src").cast("string").as("key"),
         col("dst").as("id"), col("cos_t").as("score"))

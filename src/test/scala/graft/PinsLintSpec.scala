@@ -8,10 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lints.
   *
-  * [[graft.operators.Pins]] is the one owner of the pin lifecycle in the
-  * operators and queries. Outside `Pins.scala`, no code line there
-  * unpersists a frame or an RDD, or reaches into a plan for the RDDs
-  * behind its checkpoints.
+  * [[graft.operators.Pins]] is the one owner of the pin lifecycle. Outside
+  * `Pins.scala`, no code line of `src/main` unpersists a frame or an RDD,
+  * or reaches into a plan for the RDDs behind its checkpoints.
   *
   * Every object in [[graft.streaming]] has a caller: a code line of
   * `src/main` outside that package names it, or a live streaming object
@@ -19,8 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PinsLintSpec extends AnyFunSuite {
 
-  private val roots = Seq("src/main/scala/graft/operators",
-    "src/main/scala/graft/queries").map(Paths.get(_))
+  private val root = Paths.get("src/main/scala/graft")
 
   private val streaming = Paths.get("src/main/scala/graft/streaming")
 
@@ -28,24 +26,17 @@ class PinsLintSpec extends AnyFunSuite {
     * ROADMAP item that decides whether it stays: item 7 measures the
     * serve path (kNN attach and IVF probe), item 5 weighs the
     * `AvailableNow` load against `Ingest.stageAndLoad`, and item 9
-    * deletes the remaining uncalled stateful operators with their specs,
-    * a few specs per change.
+    * deletes the last uncalled stateful operators with their specs.
     */
   private val held = Map(
     "StreamKnnFold" -> 7, "StreamIvfProbe" -> 7, "StreamingIngest" -> 5) ++
-    Seq("CardinalityState", "CustomerState", "Sessionize", "StreamCms",
-      "StreamCusum", "StreamDedup", "StreamFingerprint",
-      "StreamPackContexts", "StreamPrep", "StreamPrioritySample",
-      "StreamRollingDistinct", "StreamSessionOverlap", "StreamShardAssign",
-      "StreamSpaceSaving").map(_ -> 9)
+    Seq("StreamCusum", "StreamDedup", "StreamRollingDistinct").map(_ -> 9)
 
   private def scalaFiles(roots: Seq[Path]): Seq[Path] = roots.flatMap { r =>
     val s = Files.walk(r)
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     finally s.close()
   }
-
-  private def sources: Seq[Path] = scalaFiles(roots)
 
   /** The line without a trailing `//` comment; scaladoc and block
     * comment lines are dropped whole.
@@ -59,8 +50,9 @@ class PinsLintSpec extends AnyFunSuite {
     }
   }
 
-  test("only Pins releases pins in operators and queries") {
-    assert(sources.size > 20, s"source roots not found: $roots")
+  test("only Pins releases pins in src/main") {
+    val sources = scalaFiles(Seq(root))
+    assert(sources.size > 20, s"source root not found: $root")
     val hits = for {
       f <- sources if f.getFileName.toString != "Pins.scala"
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex

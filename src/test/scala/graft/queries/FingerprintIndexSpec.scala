@@ -1,20 +1,11 @@
 package graft.queries
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpecBase
-import graft.streaming.StreamFingerprint
 
 /** e171 — the persisted constellation index: probing the stored
   * bloom-filtered layout must return e166's rows verbatim (the index
-  * is a LAYOUT, not an approximation), the layout must carry the
-  * recorded bloom contract, and a StreamFingerprint wired to the
-  * STORED capped table with dfCap = 0 (the documented fleet posture)
-  * must emit the batch verdicts.
+  * is a LAYOUT, not an approximation), and the layout must carry the
+  * recorded bloom contract.
   */
 class FingerprintIndexSpec extends SparkSpecBase {
 
@@ -33,48 +24,5 @@ class FingerprintIndexSpec extends SparkSpecBase {
     val contract = graft.sources.Layout.readLayoutContract(spark, idxPath)
     assert(contract.exists(c => c.get("kind").contains("bloom") &&
       c.get("cols").contains("h")), contract.toString)
-  }
-
-  test("StreamFingerprint over the stored capped index (dfCap = 0) " +
-    "emits the batch verdicts — the fleet posture, end to end") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    def ts(m: Int) = Timestamp.valueOf(f"2026-01-01 10:$m%02d:00")
-    // build + store the capped index through the e171 query itself,
-    // then read the STORED table as the stream's static side
-    run("e171_fingerprint_indexed").collect()
-    val stored = spark.read
-      .parquet(Scratch.dir(spark, "e171-fpidx") + "/fp_index.parquet")
-      .select(col("doc_id").as("cand"), col("t1").as("t1d"), col("h"))
-      .localCheckpoint(true)
-    val (_, pc, _) = CurationQueries.constellationParts(spark, dir)
-    val pairs = pc.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-
-    val ms = MemoryStream[(Long, Long, Long, Timestamp)]
-    val out = StreamFingerprint.matches(
-      ms.toDF().toDF("clip_id", "t1c", "h", "ts"), stored,
-      watermark = "1 minute", quietSec = 60L, dfCap = 0L)
-    val q = out.writeStream
-      .format("memory").queryName("fp171").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      ms.addData(pairs.map { case (c, t, h) => (c, t, h, ts(0)) }.toSeq)
-      q.processAllAvailable()
-      // watermark pushers to fire every clip's quiet-gap timeout
-      ms.addData(Seq((-1L, 0L, -1L, ts(30))))
-      q.processAllAvailable()
-      ms.addData(Seq((-1L, 1L, -1L, ts(45))))
-      q.processAllAvailable()
-      val streamed = spark.table("fp171")
-        .as[(Long, Long, Long, Long, Long, String)].collect()
-        .filter(_._1 >= 0).toSet
-      val batch = run("e166_audio_fingerprint")
-        .select("clip_id", "matched_doc", "offset_win", "votes",
-          "margin", "verdict")
-        .as[(Long, Long, Long, Long, Long, String)].collect().toSet
-      assert(streamed === batch)
-    } finally q.stop()
   }
 }

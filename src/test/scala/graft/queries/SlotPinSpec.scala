@@ -7,7 +7,7 @@ import graft.SparkSpecBase
   * call releases the previous call's pins, so a benchmark's timed
   * passes hold one set of pins per query instead of one per call. The
   * NN-Descent queries are checked in both forms: the audited run and
-  * the production plan (`buildOnlyQueries`).
+  * the production plan (`buildOnlyQueries`); e173 in its audited form.
   */
 class SlotPinSpec extends SparkSpecBase {
 
@@ -17,8 +17,9 @@ class SlotPinSpec extends SparkSpecBase {
     "e158_nn_descent_inc")
 
   private val forms =
-    (Seq("e117_conformal_select", "e76_curriculum_bins", "q44_interpolate")
-      ++ nnDescent).map(n => n -> graft.SparkEntry.queries(n)) ++
+    (Seq("e117_conformal_select", "e76_curriculum_bins", "q44_interpolate",
+      "e173_knn_persist_fold") ++ nnDescent)
+      .map(n => n -> graft.SparkEntry.queries(n)) ++
     nnDescent.map(n =>
       s"$n (production)" -> graft.SparkEntry.buildOnlyQueries(n))
 

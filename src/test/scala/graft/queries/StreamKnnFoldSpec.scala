@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -182,5 +183,25 @@ class StreamKnnFoldSpec extends SparkSpecBase {
     intercept[org.apache.spark.sql.AnalysisException](
       StreamKnnFold.scoredCandidates(base, base, noSrc, d = 2))
     assert(CacheEntries(spark) === before)
+  }
+
+  test("two wirings in a row leave one wiring's statics cached") {
+    import spark.implicits._
+    val base = (0 until 8).map(i => (1000L + i, Array(1f, i.toFloat)))
+      .toDF("vec_id", "embedding")
+    val stored = Seq((1000L, 1001L)).toDF("src", "dst")
+    // the same inputs twice, as when a stopped attach is wired again
+    def wire() = StreamKnnFold.scoredCandidates(base, base, stored, d = 2)
+    wire()
+    val afterFirst = CacheEntries(spark)
+    val second = wire()
+    assert(CacheEntries(spark) === afterFirst)
+    // the live wiring reads its six statics from the cache: the base,
+    // the four band tables and the edges
+    val cached = second.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cacheBuilder
+    }.distinct
+    assert(cached.size === 6)
+    assert(second.count() > 0)
   }
 }

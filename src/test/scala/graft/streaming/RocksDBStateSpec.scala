@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpecBase
-import graft.streaming.CustomerState.OrderEvent
 import graft.streaming.TopKState.Scored
 
 /** The stateful streaming twins under the RocksDB state store provider —
@@ -47,32 +46,6 @@ class RocksDBStateSpec extends SparkSpecBase {
       s"state operator custom metrics carry no rocksdb keys: $keys")
   }
 
-  test("CustomerState accumulates across batches on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = MemoryStream[OrderEvent]
-    val q = CustomerState.runningStats(ms.toDS())
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_cust").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      ms.addData(OrderEvent("c1", "o1", 10.0), OrderEvent("c2", "o2", 7.0))
-      q.processAllAvailable()
-      ms.addData(OrderEvent("c1", "o3", 5.0))
-      q.processAllAvailable()
-      val got = s.table("rocks_cust")
-        .groupBy("customer_id")
-        .agg(max("n_orders").as("n"), max("total_amount").as("t"))
-        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2))))
-        .toMap
-      assert(got("c1") === ((2L, 15.0)) && got("c2") === ((1L, 7.0)))
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
   test("TopKState leaderboard converges identically on RocksDB state") {
     val s = rocksSession()
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -96,184 +69,6 @@ class RocksDBStateSpec extends SparkSpecBase {
         .collect().head
       assert(last.getSeq[Long](1) === Seq(4L, 2L))
       assert(last.getSeq[Long](2) === Seq(30L, 20L))
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamPrioritySample holds k+1 state and matches batch on RocksDB") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val k = 2
-    val docs = (0L until 12L).map(i =>
-      StreamPrioritySample.Doc("src", i, 100 + i))
-    val ms = MemoryStream[StreamPrioritySample.Doc]
-    val q = StreamPrioritySample.sample(ms.toDS(), k)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_prio").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      ms.addData(docs.take(7): _*)
-      q.processAllAvailable()
-      ms.addData(docs.drop(7): _*)
-      q.processAllAvailable()
-      val scored = docs.map(d => (d.doc_id, d.weight,
-          StreamPrioritySample.priority(7L, d.doc_id, d.weight)))
-        .sortBy(t => (-t._3, t._1))
-      val rows = s.table("rocks_prio")
-        .as[StreamPrioritySample.Sample].collect()
-      val last = rows.last
-      assert(last.ids === scored.take(k).map(_._1))
-      assert(last.tauMilli === scored(k)._3)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("CardinalityState KMV estimates converge identically on RocksDB " +
-    "state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val p = graft.functions.Portable.P
-    def h(v: Long): Long = (v * 2654435761L) % p
-    val ms = MemoryStream[CardinalityState.Obs]
-    val q = CardinalityState.distinctEstimate(ms.toDS(), k = 16)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_card").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      ms.addData((1L to 200L).map(v => CardinalityState.Obs("a", h(v))): _*)
-      q.processAllAvailable()
-      // replay batch 1 in full, grow by 201..300
-      ms.addData((1L to 300L).map(v => CardinalityState.Obs("a", h(v))): _*)
-      q.processAllAvailable()
-      val last = s.table("rocks_card")
-        .as[CardinalityState.Card].collect().filter(_.key == "a").last
-      // same summary as the in-memory-provider spec's invariant: the
-      // state equals the batch aggregate over the union of observations
-      val batchSk = (1L to 300L).map(h).toDF("h")
-        .agg(graft.functions.sketches.kmv_sketch(col("h"), 16))
-        .head().getSeq[Long](0)
-      assert(last.sketch_size === 16)
-      assert(last.estimate === 15L * p / batchSk.last)
-      assert(last.n_seen === 500L)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamCms counters accumulate identically on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val p = graft.functions.Portable.P
-    def h(v: Long): Long = (v * 2654435761L) % p
-    val depth = 4
-    val width = 32
-    val pop = (1L to 30L).flatMap(g => Seq.fill(31 - g.toInt)(h(g)))
-    val probes = Seq(h(1L), h(30L))
-    val ms = MemoryStream[StreamCms.Obs]
-    val q = StreamCms.monitor(ms.toDS(), depth, width, probes)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_cms").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      val (b1, b2) = pop.splitAt(pop.size / 2)
-      ms.addData(b1.map(StreamCms.Obs("a", _)): _*)
-      q.processAllAvailable()
-      ms.addData(b2.map(StreamCms.Obs("a", _)): _*)
-      q.processAllAvailable()
-      val last = s.table("rocks_cms")
-        .as[StreamCms.Freq].collect().filter(_.key == "a").last
-      assert(last.n_seen === pop.size.toLong)
-      // stream state == batch aggregate (linear counters), probed the
-      // same way the e100 query probes
-      val counters = pop.toDF("h")
-        .agg(graft.functions.sketches.cms_sketch(col("h"), depth, width))
-        .head().getSeq[Long](0).toArray
-      val batchEst = probes.map { pr =>
-        (0 until depth).map { i =>
-          val key = Math.floorMod(pr, p)
-          val pos = ((graft.functions.Portable.CmsA(i) * key +
-            graft.functions.Portable.CmsB(i)) % p % width).toInt
-          counters(i * width + pos)
-        }.min
-      }
-      assert(last.estimates === batchEst)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamSpaceSaving keeps its guarantees on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val k = 4
-    val pop = (1L to 20L).flatMap(g => Seq.fill((40 / g).toInt max 1)(g))
-    val exact = pop.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val n = pop.size.toLong
-    val ms = MemoryStream[StreamSpaceSaving.Obs]
-    val q = StreamSpaceSaving.monitor(ms.toDS(), k)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_ss").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      val (b1, b2) = pop.splitAt(pop.size / 2)
-      ms.addData(b1.map(StreamSpaceSaving.Obs("a", _)): _*)
-      q.processAllAvailable()
-      ms.addData(b2.map(StreamSpaceSaving.Obs("a", _)): _*)
-      q.processAllAvailable()
-      val last = s.table("rocks_ss")
-        .as[StreamSpaceSaving.Summary].collect()
-        .filter(_.key == "a").maxBy(_.n_seen)
-      assert(last.n_seen === n)
-      assert(last.items.size <= k)
-      assert(last.counts.sum === n) // conservation across RocksDB state
-      last.items.indices.foreach { i =>
-        val t = exact.getOrElse(last.items(i), 0L)
-        assert(t <= last.counts(i) && last.counts(i) - last.errs(i) <= t)
-      }
-      val tracked = last.items.toSet
-      exact.collect { case (it, c) if c > n / k => it }
-        .foreach(it => assert(tracked(it)))
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamSessionOverlap emits the same final overlaps on RocksDB " +
-    "state (the composed Sessionize state rides the provider)") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    def ts(h: Int, m: Int) =
-      java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
-    def us(h: Int, m: Int): Long = ts(h, m).getTime * 1000L
-    val incidents = Seq((100L, us(10, 2), us(10, 4)))
-      .toDF("incident_id", "i_st", "i_en")
-    val ms = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val q = StreamSessionOverlap.overlaps(
-      ms.toDF().toDF("user_id", "event_id", "ts"), incidents,
-      watermark = "5 minutes", gapSec = 1800L, cell = 300000000L)
-      .writeStream
-      .format("memory").queryName("rocks_sov").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      // session [10:00, 10:10] closed by the 11:00 event's gap
-      ms.addData(Seq((1L, 1L, ts(10, 0)), (1L, 2L, ts(10, 10)),
-        (1L, 3L, ts(11, 0))))
-      q.processAllAvailable()
-      val got = s.table("rocks_sov")
-        .as[(Long, Long, Long, Long, Long)].collect().toSeq
-      assert(got === Seq(
-        (100L, 1L, us(10, 0), us(10, 10), 120000000L)))
       assertRocksEngaged(q)
     } finally q.stop()
   }
@@ -328,94 +123,6 @@ class RocksDBStateSpec extends SparkSpecBase {
         .select("view_id", "buy_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === Set((1L, 10L)))
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("Sessionize gap-splits and timeout-flushes on RocksDB state") {
-    def ts(h: Int, m: Int) =
-      Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val q = Sessionize.sessions(
-      ms.toDF().toDF("user_id", "event_id", "ts"), "5 minutes")
-      .writeStream
-      .format("memory").queryName("rocks_sess").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      // user 1: two sessions split by a >30 min gap inside one batch
-      ms.addData(Seq((1L, 1L, ts(10, 0)), (1L, 2L, ts(10, 10)),
-        (1L, 3L, ts(11, 0))): _*)
-      q.processAllAvailable()
-      // far-future event drives the watermark past everything open
-      ms.addData((9L, 4L, ts(20, 0)))
-      q.processAllAvailable()
-      ms.addData((9L, 5L, ts(23, 0)))
-      q.processAllAvailable()
-      val got = s.table("rocks_sess").as[Sessionize.Session].collect()
-        .map(x => (x.user_id, x.session_start) -> x.n_events).toMap
-      assert(got((1L, ts(10, 0))) === 2L)
-      assert(got((1L, ts(11, 0))) === 1L)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamShardAssign cursor persists across batches on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = MemoryStream[StreamShardAssign.Doc]
-    val q = StreamShardAssign.assign(ms.toDS(), budget = 100L)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_shard").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      ms.addData(StreamShardAssign.Doc("s1", 1L, 80L))
-      q.processAllAvailable()
-      ms.addData(StreamShardAssign.Doc("s1", 2L, 30L),
-        StreamShardAssign.Doc("s1", 1L, 80L)) // replay → quarantine
-      q.processAllAvailable()
-      val got = s.table("rocks_shard")
-        .as[StreamShardAssign.Assigned].collect()
-      // batch-2 doc continues from the batch-1 cursor (cum 80 → shard 0)
-      val d2 = got.find(_.doc_id == 2L).get
-      assert(d2.shard_id === 0L && d2.cum_before === 80L)
-      assert(got.count(_.shard_id == -1L) === 1)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamPackContexts cursor persists across batches on RocksDB " +
-    "state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = MemoryStream[StreamPackContexts.Doc]
-    val q = StreamPackContexts.pack(ms.toDS(), ctxLen = 100L)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_pack").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      ms.addData(StreamPackContexts.Doc("s1", 1L, 80L))
-      q.processAllAvailable()
-      ms.addData(StreamPackContexts.Doc("s1", 2L, 30L),
-        StreamPackContexts.Doc("s1", 1L, 80L)) // replay → quarantine
-      q.processAllAvailable()
-      val got = s.table("rocks_pack")
-        .as[StreamPackContexts.Packed].collect()
-      // batch-2 doc continues from the batch-1 cursor: starts at token
-      // 80 inside ctx 0, runs into ctx 1, sealing ctx 0
-      val d2 = got.find(_.doc_id == 2L).get
-      assert(d2.ctx_first === 0L && d2.ctx_last === 1L &&
-        d2.off_in_ctx === 80L && d2.n_sealed === 1L)
-      assert(got.count(_.ctx_first == -1L) === 1)
       assertRocksEngaged(q)
     } finally q.stop()
   }
@@ -485,41 +192,6 @@ class RocksDBStateSpec extends SparkSpecBase {
         .selectExpr(s"${709L * (1L << 37)} div (1000 * s2) AS est")
         .head().getLong(0)
       assert(got(ts(0).getTime) === batch)
-      assertRocksEngaged(q)
-    } finally q.stop()
-  }
-
-  test("StreamFingerprint folds a cross-batch clip and emits its final " +
-    "verdict on RocksDB state") {
-    val s = rocksSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$m%02d:00")
-    val idx = Seq((5L, 10L, 77L), (5L, 14L, 88L), (7L, 3L, 77L))
-      .toDF("cand", "t1d", "h")
-    val ms = MemoryStream[(Long, Long, Long, java.sql.Timestamp)]
-    val q = StreamFingerprint
-      .matches(ms.toDF().toDF("clip_id", "t1c", "h", "ts"), idx,
-        watermark = "1 minute", quietSec = 120L)
-      .toDF()
-      .writeStream
-      .format("memory").queryName("rocks_fp").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      ms.addData((1L, 2L, 77L, ts(0)))
-      q.processAllAvailable()
-      ms.addData((1L, 6L, 88L, ts(1))) // second half of the same clip
-      q.processAllAvailable()
-      ms.addData((8L, 0L, 1L, ts(30)))
-      q.processAllAvailable()
-      ms.addData((8L, 1L, 1L, ts(45)))
-      q.processAllAvailable()
-      val got = s.table("rocks_fp")
-        .as[(Long, Long, Long, Long, Long, String)].collect().toSeq
-      // same as the in-memory spec: doc 5's 2 aligned votes beat doc
-      // 7's 1 -> margin 1, a confident 'match'
-      assert(got === Seq((1L, 5L, 8L, 2L, 1L, "match")))
       assertRocksEngaged(q)
     } finally q.stop()
   }
