@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpecBase
+import graft.streaming.CustomerState.OrderEvent
 import graft.streaming.TopKState.Scored
 
 /** The stateful streaming twins under the RocksDB state store provider —
@@ -44,6 +45,32 @@ class RocksDBStateSpec extends SparkSpecBase {
       .toArray(Array.empty[String]))
     assert(keys.exists(_.toLowerCase.contains("rocksdb")),
       s"state operator custom metrics carry no rocksdb keys: $keys")
+  }
+
+  test("CustomerState accumulates across batches on RocksDB state") {
+    val s = rocksSession()
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    import s.implicits._
+    val ms = MemoryStream[OrderEvent]
+    val q = CustomerState.runningStats(ms.toDS())
+      .toDF()
+      .writeStream
+      .format("memory").queryName("rocks_cust").outputMode("update")
+      .trigger(Trigger.ProcessingTime(0))
+      .start()
+    try {
+      ms.addData(OrderEvent("c1", "o1", 10.0), OrderEvent("c2", "o2", 7.0))
+      q.processAllAvailable()
+      ms.addData(OrderEvent("c1", "o3", 5.0))
+      q.processAllAvailable()
+      val got = s.table("rocks_cust")
+        .groupBy("customer_id")
+        .agg(max("n_orders").as("n"), max("total_amount").as("t"))
+        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2))))
+        .toMap
+      assert(got("c1") === ((2L, 15.0)) && got("c2") === ((1L, 7.0)))
+      assertRocksEngaged(q)
+    } finally q.stop()
   }
 
   test("TopKState leaderboard converges identically on RocksDB state") {
