@@ -46,8 +46,8 @@ object SparkEntry {
 
   /** Queries whose sf0.01 result is legitimately EMPTY. A 0-row result
     * hash-matches a 0-row oracle no matter how wrong the query is
-    * (VERDICT r10: q34's mis-set split date shipped green for rounds
-    * that way), so the degeneracy gate — DegeneracySpec in sbt, plus
+    * (a mis-set split date that empties both of q34's set-op branches
+    * passes that way), so the degeneracy gate — DegeneracySpec in sbt, plus
     * Verify's row_counts.json / stderr warning — fails any query NOT
     * named here that returns 0 rows at sf0.01. Every allowance must
     * cite its always-populated twin.

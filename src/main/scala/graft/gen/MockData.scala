@@ -125,7 +125,7 @@ object MockData {
     * folds the part hashes mod its own prime — so two distinct part
     * tuples produce the same uuid only if they collide in all three
     * independent families (~2^-90), vs ~2^-30 when a shared reduced key
-    * feeds every draw (the ADVICE r3 Unique-flake).
+    * feeds every draw (a `unique` test then flakes on a collision).
     */
   def uuidFromParts(seed: Long, tag: String, parts: Column*): Column = {
     require(parts.nonEmpty, "uuidFromParts needs at least one key part")

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions.broadcast
   * checkpoint-backed frames — the shuffle-removal lever for the
   * iterative families.
   *
-  * A localCheckpoint'ed frame reports NO size statistics, so Catalyst
+  * A checkpointed frame ([[Pins.checkpoint]], the one way a frame is
+  * checkpointed) reports NO size statistics, so Catalyst
   * plans every join against it as a sort-merge join; AQE converts to a
   * broadcast join at runtime, but only AFTER paying the map side of the
   * checkpoint's exchange — and an iterative loop pays that map stage

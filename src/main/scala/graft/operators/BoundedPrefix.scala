@@ -30,8 +30,9 @@ import org.apache.spark.sql.functions._
   * Both the within-bucket window and the bucket-totals branch read the
   * input, so it is read twice. When it is an expensive subtree rather
   * than a checkpoint or a cheap aggregate of one, the caller
-  * checkpoints it first and owns that pin (a [[Pins]] scope, or a
-  * [[Pins.slot]] when the pin rides the returned plan).
+  * checkpoints it first through its [[Pins]] scope, which owns the pin;
+  * a pin that rides a query's returned plan belongs to the query's
+  * slot (`QueryDef.pinned`).
   */
 object BoundedPrefix {
 

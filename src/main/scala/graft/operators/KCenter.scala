@@ -32,7 +32,7 @@ object KCenter {
 
   /** @param points (vec_id: Long, uv: array<double>) — unit vectors
     *               (caller normalizes; callers reusing the table
-    *               should localCheckpoint it first)
+    *               checkpoint it first through their [[Pins]] scope)
     * @param k      number of centers
     * @return one row per pick in order: (pick 1..k, center vec_id,
     *         covering radius of the first `pick` centers in integer

@@ -37,7 +37,7 @@ object MmrSelect {
   /** @param cands (vec_id: Long, uv: array<double> unit vectors,
     *              rel_t: Long — query relevance in integer
     *              ten-thousandths of cosine; caller computes it once
-    *              and should localCheckpoint the table)
+    *              and checkpoints the table through its [[Pins]] scope)
     * @param k     number of picks (k ≤ candidate count)
     * @param lamN  λ numerator over a fixed denominator of 10
     * @return one row per pick in order: (pick 1..k, vec_id, rel_t,

@@ -6,13 +6,16 @@ import org.apache.spark.storage.StorageLevel
 
 /** The one owner of pinned frames (eager checkpoints and persists).
   * A pin holds executor storage until it is released, so one left per
-  * round or per call accumulates for the session. A scope
-  * ([[Pins.scope]]) registers every pin its body makes; the body
-  * releases a dead round with [[release]] once the next is
-  * materialized and marks with [[keep]] the frames it hands back. On
-  * exit, normal or thrown, the scope waits for the bodies it started
-  * through [[overlap]], then releases everything else. Pins that ride
-  * a result across calls have one owner per key instead: [[Pins.slot]].
+  * round or per call accumulates for the session. The rule: every pin
+  * is made through a scope, and nothing outside this file checkpoints,
+  * persists or unpersists a frame. A scope ([[Pins.scope]]) registers
+  * every pin its body makes; the body releases a dead round with
+  * [[release]] once the next is materialized and marks with [[keep]]
+  * the frames it hands back. On exit, normal or thrown, the scope
+  * waits for the bodies it started through [[overlap]], then releases
+  * everything else. Pins that ride a result across calls have one
+  * owner per key instead, a [[Pins.slot]]; every registered query
+  * runs in the slot named after it (`QueryDef.pinned`).
   */
 final class Pins private () {
 
@@ -126,6 +129,10 @@ object Pins {
     slots.put(key, p)
     built
   }
+
+  /** Closes every slot, as the next same-key call of each would. */
+  private[graft] def closeSlots(): Unit =
+    slots.keySet.forEach(k => Option(slots.remove(k)).foreach(_.close()))
 
   /** The undirected edge set (u, v) of `edges`: endpoints cast to long,
     * NULL endpoints and self-loops dropped, both orientations, distinct.

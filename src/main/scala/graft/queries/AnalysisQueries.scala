@@ -645,7 +645,7 @@ object AnalysisQueries {
   /** Spark twin of [[recallAuditCtesDuck]]: (method, n_cand, n_hit,
     * n_truth) for the three detectors over `docs`.
     */
-  private def recallAuditStats(docs: DataFrame): DataFrame = Pins.scope { p =>
+  private def recallAuditStats(p: Pins, docs: DataFrame): DataFrame = {
     val P = Portable.P
     // Eagerly materialized ONCE (duplicated-subtree removal): `sets`
     // feeds THREE independent pipelines (the prefix
@@ -742,16 +742,17 @@ object AnalysisQueries {
       .select(lit(name).as("method"), col("n_cand"), col("n_hit"))
     val tc = truth.agg(count(lit(1)).as("n_truth"))
     // Materialize the 3-row summary eagerly so every corpus-grain pin
-    // above (sets, candp, truth) dies with the scope instead of riding
-    // the returned plan for the session.
-    audit("prefix", candp)
+    // above (sets, candp, truth) is released now instead of riding the
+    // returned plan.
+    val out = p.checkpoint(audit("prefix", candp)
       .union(audit("lsh", lshc))
       .union(audit("winnow", winc))
-      .crossJoin(broadcast(tc))
-      .localCheckpoint(true)
+      .crossJoin(broadcast(tc)))
+    Seq(sets, candp, truth).foreach(p.release)
+    out
   }
 
-  private def e103DedupRecall = QueryDef.sql(
+  private def e103DedupRecall = QueryDef.pinned(
     "e103_dedup_recall",
     s"""WITH ${recallAuditCtesDuck("documents")}
        |SELECT method, n_cand, n_hit, tc.n_truth,
@@ -760,8 +761,8 @@ object AnalysisQueries {
        |  CAST(CASE WHEN n_cand = 0 THEN 10000
        |    ELSE 10000 * n_hit // n_cand END AS BIGINT) AS efficiency_bp
        |FROM stats CROSS JOIN tc
-       |ORDER BY method""".stripMargin) { (s, dir) =>
-    recallAuditStats(Tables.documents(s, dir))
+       |ORDER BY method""".stripMargin) { (p, s, dir) =>
+    recallAuditStats(p, Tables.documents(s, dir))
       // Dup-free-corpus guard: ANSI div would fail loudly on n_truth=0
       // or an empty candidate set; vacuous ratios report as 10000.
       .select(col("method"), col("n_cand"), col("n_hit"), col("n_truth"),
@@ -809,7 +810,7 @@ object AnalysisQueries {
     val sliceRel =
       "(SELECT * FROM documents WHERE" +
         " (((doc_id % 1000003) * 2654435761) % 1000000007) % 2 = 0)"
-    QueryDef.sql(
+    QueryDef.pinned(
       "e103b_dedup_recall_slice",
       s"""WITH ${recallAuditCtesDuck(sliceRel)},
          |r0 AS (SELECT method, n_cand, n_hit, tc.n_truth,
@@ -833,10 +834,10 @@ object AnalysisQueries {
          |  s0 + CASE WHEN s0 < 3037000499 AND (s0 + 1) * (s0 + 1) <= sx
          |         THEN 1 ELSE 0 END
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END AS recall_se_bp
-         |FROM se1 ORDER BY method""".stripMargin) { (s, dir) =>
+         |FROM se1 ORDER BY method""".stripMargin) { (p, s, dir) =>
       val slice = Tables.documents(s, dir)
         .filter(expr("(((doc_id % 1000003) * 2654435761) % 1000000007) % 2 = 0"))
-      recallAuditStats(slice)
+      recallAuditStats(p, slice)
         .select(col("method"), col("n_cand"), col("n_hit"), col("n_truth"),
           expr("case when n_truth = 0 then 10000L " +
             "else 10000 * n_hit div n_truth end").as("recall_bp"),
@@ -2100,7 +2101,7 @@ object AnalysisQueries {
     val P = Portable.P
     val A = 1103515245L
     val B = 12345L
-    QueryDef.sql(
+    QueryDef.pinned(
       "e117_conformal_select",
       s"""WITH sig AS (SELECT doc_id, len(w) AS n_words,
          |    len(list_filter(w, x -> x IN ('the', 'a'))) AS n_stop
@@ -2128,7 +2129,7 @@ object AnalysisQueries {
          |  tn.n_kept, tn.n_kept * 10000 // tn.n_test AS keep_share_bp,
          |  ck.cal_kept * 10000 // jr.n_calib AS calib_keep_bp
          |FROM jr CROSS JOIN tau CROSS JOIN tn CROSS JOIN ck""".stripMargin) {
-      (s, dir) =>
+      (p, s, dir) =>
         val words = expr(Portable.wordsSpark)
         val q0 = Tables.documents(s, dir)
           .select(col("doc_id"),
@@ -2146,10 +2147,8 @@ object AnalysisQueries {
         // bp ∈ [0, 10000] → ≤ 157 buckets of 64 bp: the partitioned
         // two-level prefix replaces the unpartitioned cumulative window
         // (single-task sort + WindowExec warning). Both prefix branches
-        // read the frequency table, so it is checkpointed once; the pin
-        // rides the returned plan, one per query, not one per call.
-        val freq = Pins.slot("e117_conformal_select")(
-          _.checkpoint(cal.groupBy("bp").agg(count(lit(1)).as("c"))))
+        // read the frequency table, so it is checkpointed once
+        val freq = p.checkpoint(cal.groupBy("bp").agg(count(lit(1)).as("c")))
         val cum = BoundedPrefix.cumsum(
           freq, "bp", expr("bp div 64"), Seq("c" -> "cum"))
         val tau = cum.crossJoin(broadcast(jr))
@@ -2432,7 +2431,7 @@ object AnalysisQueries {
          |    CAST(150000 + coalesce(c$k.cin, 0) AS BIGINT) AS r
          |  FROM n LEFT JOIN c$k ON c$k.dst = n.doc)""".stripMargin
     }.mkString(",\n")
-    QueryDef.sql(
+    QueryDef.pinned(
       "e120_pagerank",
       s"""${ExtensionQueries.minhashPairsDuck},
          |e AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.3),
@@ -2446,10 +2445,10 @@ object AnalysisQueries {
          |SELECT r5.doc AS doc_id, dg.dg AS degree, r5.r AS rank_ppm
          |FROM r5 JOIN dg ON dg.src = r5.doc
          |ORDER BY rank_ppm DESC, doc_id LIMIT 20""".stripMargin) {
-      (s, dir) =>
+      (p, s, dir) =>
         val e = ExtensionQueries.minhashVerifiedPairs(s, dir)
           .filter(col("jaccard") >= 0.3)
-        PageRank.ranks(e, "doc_a", "doc_b", iterations = 5)
+        p.own(PageRank.ranks(e, "doc_a", "doc_b", iterations = 5))
           .select(col("node").as("doc_id"), col("degree"),
             col("rank").as("rank_ppm"))
           .orderBy(col("rank_ppm").desc, col("doc_id"))
@@ -2654,7 +2653,7 @@ object AnalysisQueries {
     * DECIMAL(38,0) swap; sub-stratifying (source × lang) just widens
     * the grouping key.
     */
-  private def e123NeymanAlloc = QueryDef.sql(
+  private def e123NeymanAlloc = QueryDef.pinned(
     "e123_neyman_alloc",
     s"""WITH m AS (SELECT source, count(*) AS n_docs,
        |    CAST(sum(n_chars) AS BIGINT) AS s1,
@@ -2691,16 +2690,15 @@ object AnalysisQueries {
        |  CAST(share_bp AS BIGINT) AS share_bp,
        |  CAST(prop_bp AS BIGINT) AS prop_bp
        |FROM rk ORDER BY source""".stripMargin) {
-    (s, dir) =>
+    (p, s, dir) =>
       // #sources-row aggregate, materialized ONCE: base feeds the
       // floor-sum, the rank pairing, and the output — uncheckpointed,
       // each consumer re-ran the corpus aggregation.
-      val m = Tables.documents(s, dir)
+      val m = p.checkpoint(Tables.documents(s, dir)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars").cast("long")).as("s1"),
-          sum(col("n_chars").cast("long") * col("n_chars")).as("s2"))
-        .localCheckpoint(true)
+          sum(col("n_chars").cast("long") * col("n_chars")).as("s2")))
       val w0 = m.select(col("source"), col("n_docs"),
         (col("n_docs") * col("s2") - col("s1") * col("s1")).as("x"))
       val iw = w0.select(col("source"), col("n_docs"),
@@ -3005,24 +3003,24 @@ object AnalysisQueries {
     * checkpoints are a measured executor-storage OOM). Returns the
     * surviving directed edge set.
     */
-  private def kcorePeelSpark(e0: DataFrame, rounds: Int): DataFrame =
-    Pins.scope { p =>
-      var e = p.checkpoint(e0)
-      for (_ <- 1 to rounds) {
-        val keep = e.groupBy("u").agg(count(lit(1)).as("dg"))
-          .filter(col("dg") >= 3).select(col("u").as("ku"))
-        val next = p.checkpoint(e
-          .join(keep, col("u") === col("ku"), "left_semi")
-          .join(keep, col("v") === col("ku"), "left_semi"))
-        p.release(e)
-        e = next
-      }
-      p.keep(e)
+  private def kcorePeelSpark(p: Pins, e0: DataFrame, rounds: Int)
+      : DataFrame = {
+    var e = p.checkpoint(e0)
+    for (_ <- 1 to rounds) {
+      val keep = e.groupBy("u").agg(count(lit(1)).as("dg"))
+        .filter(col("dg") >= 3).select(col("u").as("ku"))
+      val next = p.checkpoint(e
+        .join(keep, col("u") === col("ku"), "left_semi")
+        .join(keep, col("v") === col("ku"), "left_semi"))
+      p.release(e)
+      e = next
     }
+    e
+  }
 
   private def e129KCore = {
     val rounds = 8
-    QueryDef.sql(
+    QueryDef.pinned(
       "e129_kcore",
       s"""${ExtensionQueries.minhashPairsDuck},
          |ed AS MATERIALIZED (SELECT doc_a, doc_b FROM verified
@@ -3032,14 +3030,14 @@ object AnalysisQueries {
          |${kcorePeelDuck(rounds)}
          |SELECT u AS doc_id, CAST(count(*) AS BIGINT) AS deg_core
          |FROM e$rounds GROUP BY u ORDER BY doc_id""".stripMargin) {
-      (s, dir) =>
-        val ed = ExtensionQueries.minhashVerifiedPairs(s, dir)
+      (p, s, dir) =>
+        val ed = p.checkpoint(ExtensionQueries.minhashVerifiedPairs(s, dir)
           .filter(col("jaccard") >= 0.3)
-          .select(col("doc_a").as("u"), col("doc_b").as("v"))
-          .localCheckpoint(true)
-        val e0 = ed.union(ed.select(col("v").as("u"), col("u").as("v")))
-        kcorePeelSpark(e0, rounds)
-          .groupBy(col("u").as("doc_id"))
+          .select(col("doc_a").as("u"), col("doc_b").as("v")))
+        val core = kcorePeelSpark(p,
+          ed.union(ed.select(col("v").as("u"), col("u").as("v"))), rounds)
+        p.release(ed)
+        core.groupBy(col("u").as("doc_id"))
           .agg(count(lit(1)).as("deg_core"))
           .orderBy(col("doc_id"))
     }
@@ -3068,7 +3066,7 @@ object AnalysisQueries {
     */
   private def e129bKCoreFixture = {
     val rounds = 8
-    QueryDef.sql(
+    QueryDef.pinned(
       "e129b_kcore_fixture",
       s"""WITH ed AS MATERIALIZED (
          |  SELECT CAST(a.n_nationkey AS BIGINT) AS u,
@@ -3089,7 +3087,7 @@ object AnalysisQueries {
          |${kcorePeelDuck(rounds)}
          |SELECT u AS node_id, CAST(count(*) AS BIGINT) AS deg_core
          |FROM e$rounds GROUP BY u ORDER BY node_id""".stripMargin) {
-      (s, dir) =>
+      (p, s, dir) =>
         val n = Tables.nation(s, dir)
           .select(col("n_nationkey").cast("long").as("k"),
             col("n_regionkey").as("r"))
@@ -3102,7 +3100,7 @@ object AnalysisQueries {
           .reduce(_ unionByName _)
         val ed = clique.unionByName(pendant).unionByName(leaves)
         val e0 = ed.unionByName(ed.select(col("v").as("u"), col("u").as("v")))
-        kcorePeelSpark(e0, rounds)
+        kcorePeelSpark(p, e0, rounds)
           .groupBy(col("u").as("node_id"))
           .agg(count(lit(1)).as("deg_core"))
           .orderBy(col("node_id"))
@@ -3879,7 +3877,7 @@ object AnalysisQueries {
     * original content-pair population — R replicas of a near-dup pair
     * are R² id-pairs but ONE digest pair.
     */
-  private def e142SharedRun = QueryDef.sql(
+  private def e142SharedRun = QueryDef.pinned(
     "e142_shared_run",
     s"""WITH ${ExtensionQueries.minhashPairsDuck.stripPrefix("WITH ")},
        |vp AS MATERIALIZED (SELECT doc_a, doc_b, jaccard FROM verified
@@ -3946,13 +3944,13 @@ object AnalysisQueries {
        |SELECT doc_a, doc_b,
        |  CAST(round(jaccard * 10000) AS BIGINT) AS jaccard_bp,
        |  lr AS longest_run_words, nsg AS n_shared_grams
-       |FROM res ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val vp = ExtensionQueries.minhashVerifiedPairs(s, dir)
+       |FROM res ORDER BY doc_a, doc_b""".stripMargin) { (p, s, dir) =>
+    // feeds pd, the diagonal join, and the final left join — the e132
+    // discipline
+    val vp = p.checkpoint(ExtensionQueries.minhashVerifiedPairs(s, dir)
       .filter(col("jaccard") >= 0.3)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .localCheckpoint(true) // feeds pd, the diagonal join, and the
-                             // final left join — the e132 discipline
-    sharedRunStats(s, dir, vp)
+      .select(col("doc_a"), col("doc_b"), col("jaccard")))
+    sharedRunStats(p, s, dir, vp)
   }
 
   /** Core of e142 past pair generation: per `(doc_a, doc_b, jaccard)`
@@ -3962,7 +3960,7 @@ object AnalysisQueries {
     * set over a synthetic corpus, independent of the banding machinery.
     */
   private[queries] def sharedRunStats(
-      s: SparkSession, dir: String, vp: DataFrame): DataFrame = {
+      p: Pins, s: SparkSession, dir: String, vp: DataFrame): DataFrame = {
     val pd = vp.select(explode(array(col("doc_a"), col("doc_b")))
         .as("doc_id")).distinct()
     val docs = Tables.documents(s, dir).join(pd, "doc_id")
@@ -3973,15 +3971,15 @@ object AnalysisQueries {
     // dup-heavy corpus the pair population collapses quadratically
     // (R replicas of a near-dup pair = R² id-pairs but ONE digest
     // pair) and the gram join runs on representative docs only.
-    val dg = docs
-      .select(col("doc_id"), sha2(col("text"), 256).as("dig"))
-      .localCheckpoint(true) // feeds vpe + both branches' rep lookups
-    val vpe = vp
+    // feeds vpe + both branches' rep lookups
+    val dg = p.checkpoint(docs
+      .select(col("doc_id"), sha2(col("text"), 256).as("dig")))
+    // feeds eq/ne splits and both join-backs
+    val vpe = p.checkpoint(vp
       .join(dg.as("da"), col("da.doc_id") === col("doc_a"))
       .join(dg.as("db"), col("db.doc_id") === col("doc_b"))
       .select(col("doc_a"), col("doc_b"), col("jaccard"),
-        col("da.dig").as("dig_a"), col("db.dig").as("dig_b"))
-      .localCheckpoint(true) // feeds eq/ne splits and both join-backs
+        col("da.dig").as("dig_a"), col("db.dig").as("dig_b")))
     val vpNe = vpe.filter(col("dig_a") =!= col("dig_b"))
       .withColumn("d1", least(col("dig_a"), col("dig_b")))
       .withColumn("d2", greatest(col("dig_a"), col("dig_b")))
@@ -4098,7 +4096,7 @@ object AnalysisQueries {
     * adds the mirrored max(P) window; known-rate monitoring replaces
     * tot/nd with the contractual rate.
     */
-  private def e143Cusum = QueryDef.sql(
+  private def e143Cusum = QueryDef.pinned(
     "e143_cusum",
     """WITH e AS (SELECT event_type, CAST(ts AS DATE) AS d FROM events),
       |bounds AS (SELECT min(d) AS d0, max(d) AS d1 FROM e),
@@ -4136,12 +4134,12 @@ object AnalysisQueries {
       |  CASE WHEN st * 10000 // tot > 10000 THEN 1 ELSE 0 END
       |    AS alarmed
       |FROM pick WHERE rn = 1
-      |ORDER BY event_type""".stripMargin) { (s, dir) =>
-    val cnt = Tables.events(s, dir)
+      |ORDER BY event_type""".stripMargin) { (p, s, dir) =>
+    // bounded (#types × #days); feeds bounds, types, and the grid
+    // join — one fact pass
+    val cnt = p.checkpoint(Tables.events(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // bounded (#types × #days); feeds bounds,
-                             // types, and the grid join — one fact pass
+      .agg(count(lit(1)).as("c")))
     val days = cnt.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
       .select(explode(sequence(col("d0"), col("d1"),
         expr("interval 1 day"))).as("d"))
@@ -4153,10 +4151,10 @@ object AnalysisQueries {
     val tot = grid.groupBy("event_type")
       .agg(sum(col("x")).as("tot"), count(lit(1)).as("nd"))
     val wRun = Window.partitionBy(col("event_type")).orderBy(col("d"))
-    val p = grid.join(tot, "event_type")
+    val prefix = grid.join(tot, "event_type")
       .withColumn("pt", sum(col("nd") * col("x") - col("tot")).over(
         wRun.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val st = p.withColumn("st",
+    val st = prefix.withColumn("st",
       col("pt") - least(lit(0L), min(col("pt")).over(
         wRun.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
     val excess = expr("st * 10000 div tot")
@@ -4207,7 +4205,7 @@ object AnalysisQueries {
     * closed form priced at B² pairs — the documented crossover to the
     * driver-side PAV fold that a 10⁴-bin grid would warrant.
     */
-  private def e146IsotonicCalibration = QueryDef.sql(
+  private def e146IsotonicCalibration = QueryDef.pinned(
     "e146_isotonic_calibration",
     """WITH b AS (SELECT CAST(l_quantity AS BIGINT) AS q,
       |    CAST(count(*) AS BIGINT) AS n,
@@ -4231,13 +4229,13 @@ object AnalysisQueries {
       |SELECT b.q AS quantity, b.n, b.pos,
       |  b.pos * 1000000 // b.n AS raw_ppm, f.fit_ppm
       |FROM b JOIN fit f ON f.q = b.q ORDER BY quantity""".stripMargin) {
-    (s, dir) =>
+    (p, s, dir) =>
       val bins = Tables.lineitem(s, dir)
         .groupBy(col("l_quantity").cast("long").as("q"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L))
             .as("pos"))
-      isotonicFromBins(bins)
+      isotonicFromBins(p, bins)
   }
 
   /** Core of e146 past binning: the max-min closed form over a
@@ -4246,25 +4244,26 @@ object AnalysisQueries {
     * bins. The unpartitioned prefix window and the non-equi joins all
     * run on the construction-bounded bin grid, never on fact rows.
     */
-  private[queries] def isotonicFromBins(bins: DataFrame): DataFrame = {
-    val b = bins.localCheckpoint(true) // grid-bounded; feeds the
-                                       // prefix, pairs, and final join
+  private[queries] def isotonicFromBins(p: Pins, bins: DataFrame)
+      : DataFrame = {
+    val b = p.checkpoint(bins) // grid-bounded; feeds the prefix, pairs,
+                               // and final join
     // two-level prefix over the ≤ 50-row quantity grid: no
     // unpartitioned cumulative window; b is already checkpoint-backed,
     // so the helper's two reads of it are cheap
-    val p = BoundedPrefix.cumsum(b, "q", expr("q div 8"),
+    val cum = BoundedPrefix.cumsum(b, "q", expr("q div 8"),
       Seq("n" -> "cn", "pos" -> "cp"))
     // explicit broadcast on the grid-bounded non-equi pairings:
     // the BoundedPrefix join output carries no small-size estimate, so
     // without the hint the planner degrades these inner non-equi joins
     // to CartesianProductExec (the lint's hard ban)
-    val pairs = p.as("pj")
-      .join(broadcast(p.as("pk")), col("pj.q") <= col("pk.q"))
+    val pairs = cum.as("pj")
+      .join(broadcast(cum.as("pk")), col("pj.q") <= col("pk.q"))
       .select(col("pj.q").as("j"), col("pk.q").as("k"),
         expr("(pk.cp - pj.cp + pj.pos) * 1000000" +
           " div (pk.cn - pj.cn + pj.n)").as("a"))
     val mi = pairs
-      .join(broadcast(p.select(col("q").as("i"))),
+      .join(broadcast(cum.select(col("q").as("i"))),
         col("j") <= col("i") && col("k") >= col("i"))
       .groupBy("i", "j").agg(min(col("a")).as("m"))
     val fit = mi.groupBy("i").agg(max(col("m")).as("fit_ppm"))
@@ -4384,7 +4383,7 @@ object AnalysisQueries {
     * counts and a doc-keyed join for the char mass. No per-threshold
     * re-verification, no CC.
     */
-  private def e132DedupSweep = QueryDef.sql(
+  private def e132DedupSweep = QueryDef.pinned(
     "e132_dedup_sweep",
     s"""${ExtensionQueries.minhashPairsDuck},
        |vp AS MATERIALIZED (SELECT doc_a, doc_b, jaccard FROM verified
@@ -4406,7 +4405,7 @@ object AnalysisQueries {
        |  cc.n_docs, cc.chars_touched
        |FROM pc JOIN cc ON cc.thr_bp = pc.thr_bp
        |ORDER BY thr_bp""".stripMargin) {
-    (s, dir) =>
+    (p, s, dir) =>
       import s.implicits._
       val thrDf = (3000L to 9000L by 1000L).toDF("thr_bp")
       // Checkpoint the swept pair set: pc and BOTH cov union legs read
@@ -4414,14 +4413,12 @@ object AnalysisQueries {
       // threshold join — three scans where the docstring promises one
       // (the DuckDB side's pt AS MATERIALIZED is the same cut). vp is
       // dead once pt materializes.
-      val pt = Pins.scope { p =>
-        val vp = p.checkpoint(ExtensionQueries.minhashVerifiedPairs(s, dir)
-          .filter(col("jaccard") >= 0.3))
-        vp.join(broadcast(thrDf),
-            col("jaccard") >= col("thr_bp").cast("double") / 10000)
-          .select(col("thr_bp"), col("doc_a"), col("doc_b"))
-          .localCheckpoint(true)
-      }
+      val vp = p.checkpoint(ExtensionQueries.minhashVerifiedPairs(s, dir)
+        .filter(col("jaccard") >= 0.3))
+      val pt = p.checkpoint(vp.join(broadcast(thrDf),
+          col("jaccard") >= col("thr_bp").cast("double") / 10000)
+        .select(col("thr_bp"), col("doc_a"), col("doc_b")))
+      p.release(vp)
       val cov = pt.select(col("thr_bp"), col("doc_a").as("doc"))
         .unionByName(pt.select(col("thr_bp"), col("doc_b").as("doc")))
         .groupBy("thr_bp", "doc").agg(count(lit(1)).as("_n"))
@@ -4445,51 +4442,49 @@ object AnalysisQueries {
     * of `emb` and names its per-round counts, and each graph gets one
     * audit row against the float anchor truth, whose leg reads only
     * the vector table and so overlaps the build rounds. The returned
-    * plan reads every graph and the truth, so they ride the
-    * [[Pins.slot]] `key`; the vector table is released on return, and
-    * everything, the truth leg included, when a job fails.
+    * plan reads every graph and the truth, so they stay pinned in `p`;
+    * the vector table is released on return.
     */
-  private[queries] def nndAudit(key: String, emb: DataFrame,
+  private[queries] def nndAudit(p: Pins, emb: DataFrame,
       kernel: NnDescent.Kernel, K: Int, anchors: Int)(
       build: NnDescent.Vectors => (Seq[DataFrame], Seq[(String, Seq[Long])]))
-      : DataFrame =
-    Pins.slot(key)(_.own(Pins.scope { p =>
-      val v = NnDescent.vectors(emb, kernel)
-      p.own(v.r)
-      val truth = p.overlap(NnDescent.anchorTruth(p, v.r, K, anchors))
-      val (knns, counts) = build(v)
-      knns.foreach(p.own)
-      val t = truth()
-      val out = NnDescent.roundMetrics(knns, kernel.score, t, K, counts: _*)
-      (t +: knns).foreach(p.keep)
-      out
-    }))
+      : DataFrame = {
+    val v = NnDescent.vectors(emb, kernel)
+    p.own(v.r)
+    val truth = p.overlap(NnDescent.anchorTruth(p, v.r, K, anchors))
+    val (knns, counts) = build(v)
+    knns.foreach(p.own)
+    val out = NnDescent.roundMetrics(knns, kernel.score, truth(), K, counts: _*)
+    p.release(v.r)
+    out
+  }
 
   /** An NN-Descent production plan: the last graph of `build`, no
-    * truth leg. It rides the [[Pins.slot]] `key`; the vector table and
-    * the earlier rounds are released on return.
+    * truth leg. The vector table and the earlier rounds are released
+    * on return.
     */
-  private def nndGraph(key: String, emb: DataFrame,
+  private def nndGraph(p: Pins, emb: DataFrame,
       kernel: NnDescent.Kernel)(build: NnDescent.Vectors => Seq[DataFrame])
-      : DataFrame =
-    Pins.slot(key)(_.own(Pins.scope { p =>
-      val v = NnDescent.vectors(emb, kernel)
-      p.own(v.r)
-      p.keep(build(v).map(p.own).last)
-    }))
+      : DataFrame = {
+    val v = NnDescent.vectors(emb, kernel)
+    p.own(v.r)
+    val knns = build(v).map(p.own)
+    (v.r +: knns.init).foreach(p.release)
+    knns.last
+  }
 
   /** e147/e147b's two forms: ring init + `rounds` plain rounds under
     * `kernel`, audited per round, or the final graph alone.
     */
   private def nndPlain(q: String, sql: String, kernel: NnDescent.Kernel,
       K: Int, rounds: Int, anchors: Int): QueryDef =
-    QueryDef.sql(q, sql) { (s, dir) =>
-      nndAudit(q, Tables.embeddings(s, dir), kernel, K, anchors) { v =>
+    QueryDef.pinned(q, sql) { (p, s, dir) =>
+      nndAudit(p, Tables.embeddings(s, dir), kernel, K, anchors) { v =>
         val (knns, pools) = NnDescent.plainBuild(v, K, rounds)
         (knns, Seq("n_scored" -> (0L +: pools)))
       }
-    }.withBuildOnly((s, dir) =>
-      nndGraph(q + ":graph", Tables.embeddings(s, dir), kernel)(
+    }.withBuildOnly((p, s, dir) =>
+      nndGraph(p, Tables.embeddings(s, dir), kernel)(
         NnDescent.plainBuild(_, K, rounds)._1))
 
   /** NN-Descent (Dong, Moses Charikar, Li, WWW'11): build the
@@ -4849,7 +4844,7 @@ object AnalysisQueries {
          |  na.n_anchors AS n_anchors
          |FROM na""".stripMargin
     }.mkString("\nUNION ALL\n")
-    QueryDef.sql(
+    QueryDef.pinned(
       "e158_nn_descent_inc",
       s"""WITH b AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -4881,8 +4876,8 @@ object AnalysisQueries {
          |         THEN 1 ELSE 0 END
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END AS recall_se_bp
          |FROM m3 CROSS JOIN stp WHERE round <= stp.sr
-         |ORDER BY round""".stripMargin) { (s, dir) =>
-      nndAudit("e158_nn_descent_inc", Tables.embeddings(s, dir),
+         |ORDER BY round""".stripMargin) { (p, s, dir) =>
+      nndAudit(p, Tables.embeddings(s, dir),
           NnDescent.Float, K, anchorBudget) { v =>
         val (knns, freshes, updates) = e158Graph(v, K, maxRounds)
         // n_scored: round 0 scored the init graph (updates(0) edges),
@@ -4890,9 +4885,9 @@ object AnalysisQueries {
         (knns, Seq("n_scored" -> (updates.head +: freshes),
           "n_updates" -> updates))
       }
-    }.withBuildOnly((s, dir) =>
+    }.withBuildOnly((p, s, dir) =>
       // production plan: the converged graph, no anchor-truth leg
-      nndGraph("e158_nn_descent_inc:graph", Tables.embeddings(s, dir),
+      nndGraph(p, Tables.embeddings(s, dir),
         NnDescent.Float)(e158Graph(_, K, maxRounds)._1))
   }
 
@@ -5253,7 +5248,7 @@ object AnalysisQueries {
          |  CAST((SELECT count(DISTINCT src) FROM $truthRel) AS BIGINT)
          |    AS n_anchors,
          |  CAST($diff AS BIGINT) AS n_edge_diff""".stripMargin
-    QueryDef.sql(
+    QueryDef.pinned(
       "e173_knn_persist_fold",
       s"""WITH ${e173FoldDuckCtes(K, B, Fr)}
          |sknn0 AS MATERIALIZED (SELECT a.vec_id AS src,
@@ -5297,79 +5292,72 @@ object AnalysisQueries {
          |     - CASE WHEN s0 * s0 > sx THEN 1 ELSE 0 END
          |    AS recall_se_bp,
          |  n_edge_diff
-         |FROM m3 ORDER BY leg""".stripMargin) { (s, dir) =>
+         |FROM m3 ORDER BY leg""".stripMargin) { (p, s, dir) =>
       // the returned plan reads the vector table, the fold and scratch
-      // graphs and both anchor truths: they ride the [[Pins.slot]] under
-      // the query name, and a failed job releases them at once
-      Pins.slot("e173_knn_persist_fold")(_.own(Pins.scope { p =>
-        val legs = e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
-          Scratch.dir(s, "e173") + "/knn_base")
-        val pinned = Seq(legs.r, legs.foldFinal, legs.scratchFinal)
-        pinned.foreach(p.own)
-        def anchorTruth(idx: DataFrame): DataFrame =
-          NnDescent.anchorTruth(p, idx, K, anchorBudget)
-        val truth = anchorTruth(legs.r.select("vec_id", "uv"))
-        val truthB = anchorTruth(legs.r
-          .join(legs.gens.filter(col("is_fresh") === false)
-            .select("vec_id"), "vec_id")
-          .select("vec_id", "uv"))
-        val sb = legs.scratchFinal.select("src", "dst")
-          .join(legs.gens.filter(col("is_fresh") === false)
-            .select(col("vec_id").as("src")), "src")
-        def legRowDf(leg: String, rounds: Int, init: Long,
-            freshes: Seq[Long], fin: DataFrame, truthRel: DataFrame,
-            ref: Option[DataFrame]): DataFrame = {
-          // n_scored = init + per-round fresh counts, all observed at
-          // build time
-          val nNodes = fin.select("src").distinct()
-            .agg(count(lit(1)).as("n_nodes"))
-          val diff = ref match {
-            case Some(b) =>
-              fin.select("src", "dst")
-                .join(b, Seq("src", "dst"), "left_anti")
-                .agg(count(lit(1)).as("d1"))
-                .crossJoin(b.join(fin.select("src", "dst"),
-                  Seq("src", "dst"), "left_anti")
-                  .agg(count(lit(1)).as("d2")))
-                .select((col("d1") + col("d2")).as("n_edge_diff"))
-            case None =>
-              legs.r.limit(1).select(lit(0L).as("n_edge_diff"))
-          }
-          nNodes
-            .crossJoin(
-              NnDescent.graphStats(fin, "cos", "avg_cos_t", truthRel))
-            .crossJoin(NnDescent.nAnchors(truthRel)).crossJoin(diff)
-            .select(lit(leg).as("leg"), col("n_nodes"),
-              lit(rounds.toLong).as("n_rounds"),
-              lit(init + freshes.sum).as("n_scored"),
-              col("avg_cos_t"), col("hits"), col("n_anchors"),
-              col("n_edge_diff"))
+      // graphs and both anchor truths: all stay pinned in `p`
+      val legs = e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
+        Scratch.dir(s, "e173") + "/knn_base")
+      Seq(legs.r, legs.foldFinal, legs.scratchFinal).foreach(p.own)
+      def anchorTruth(idx: DataFrame): DataFrame =
+        NnDescent.anchorTruth(p, idx, K, anchorBudget)
+      val truth = anchorTruth(legs.r.select("vec_id", "uv"))
+      val truthB = anchorTruth(legs.r
+        .join(legs.gens.filter(col("is_fresh") === false)
+          .select("vec_id"), "vec_id")
+        .select("vec_id", "uv"))
+      val sb = legs.scratchFinal.select("src", "dst")
+        .join(legs.gens.filter(col("is_fresh") === false)
+          .select(col("vec_id").as("src")), "src")
+      def legRowDf(leg: String, rounds: Int, init: Long,
+          freshes: Seq[Long], fin: DataFrame, truthRel: DataFrame,
+          ref: Option[DataFrame]): DataFrame = {
+        // n_scored = init + per-round fresh counts, all observed at
+        // build time
+        val nNodes = fin.select("src").distinct()
+          .agg(count(lit(1)).as("n_nodes"))
+        val diff = ref match {
+          case Some(b) =>
+            fin.select("src", "dst")
+              .join(b, Seq("src", "dst"), "left_anti")
+              .agg(count(lit(1)).as("d1"))
+              .crossJoin(b.join(fin.select("src", "dst"),
+                Seq("src", "dst"), "left_anti")
+                .agg(count(lit(1)).as("d2")))
+              .select((col("d1") + col("d2")).as("n_edge_diff"))
+          case None =>
+            legs.r.limit(1).select(lit(0L).as("n_edge_diff"))
         }
-        val rows =
-          legRowDf("base", B, legs.baseInitCount, legs.baseFreshCounts,
-            legs.stored, truthB, Some(sb))
-          .unionByName(legRowDf("fold", Fr, legs.foldInitCount,
-            legs.foldFreshCounts, legs.foldFinal, truth,
-            Some(legs.scratchFinal.select("src", "dst"))))
-          .unionByName(legRowDf("scratch", S, legs.scratchInitCount,
-            legs.scratchFreshCounts, legs.scratchFinal, truth, None))
-        (pinned :+ truth :+ truthB).foreach(p.keep)
-        NnDescent.withRecall(rows, K)
-          .select(col("leg"), col("n_nodes"), col("n_rounds"),
-            col("n_scored"), col("avg_cos_t"), col("recall_bp"),
-            col("recall_se_bp"), col("n_edge_diff"))
-          .orderBy("leg")
-      }))
-    }.withBuildOnly((s, dir) =>
+        nNodes
+          .crossJoin(
+            NnDescent.graphStats(fin, "cos", "avg_cos_t", truthRel))
+          .crossJoin(NnDescent.nAnchors(truthRel)).crossJoin(diff)
+          .select(lit(leg).as("leg"), col("n_nodes"),
+            lit(rounds.toLong).as("n_rounds"),
+            lit(init + freshes.sum).as("n_scored"),
+            col("avg_cos_t"), col("hits"), col("n_anchors"),
+            col("n_edge_diff"))
+      }
+      val rows =
+        legRowDf("base", B, legs.baseInitCount, legs.baseFreshCounts,
+          legs.stored, truthB, Some(sb))
+        .unionByName(legRowDf("fold", Fr, legs.foldInitCount,
+          legs.foldFreshCounts, legs.foldFinal, truth,
+          Some(legs.scratchFinal.select("src", "dst"))))
+        .unionByName(legRowDf("scratch", S, legs.scratchInitCount,
+          legs.scratchFreshCounts, legs.scratchFinal, truth, None))
+      NnDescent.withRecall(rows, K)
+        .select(col("leg"), col("n_nodes"), col("n_rounds"),
+          col("n_scored"), col("avg_cos_t"), col("recall_bp"),
+          col("recall_se_bp"), col("n_edge_diff"))
+        .orderBy("leg")
+    }.withBuildOnly((p, s, dir) =>
       // production: fingerprint-amortized base build + persist, then
       // the fold — no truth, no scratch reference, no diffs (the
       // audit is the oracle row's), intermediate checkpoints released;
       // on a fresh store the timed pass is FOLD-ONLY, the steady-state
-      // per-delta cost the persisted posture buys. The returned fold
-      // graph rides a [[Pins.slot]], so repeated calls pin one.
-      Pins.slot("e173:" + knnStorePath(s, dir))(
-        _.own(e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
-          knnStorePath(s, dir), production = true).foldFinal)))
+      // per-delta cost the persisted posture buys
+      p.own(e173Core(s, Tables.embeddings(s, dir), K, B, Fr, S,
+        knnStorePath(s, dir), production = true).foldFinal))
   }
 
   /** CONSUMER of the stored kNN graph — the chain e173 opens
@@ -5400,7 +5388,7 @@ object AnalysisQueries {
     * list on (src, dst) — id-pair payload, no vectors; the census is
     * the e32/e46 CC cost class over a graph no larger than the store.
     */
-  private def e176KnnStoreClusters = QueryDef.sql(
+  private def e176KnnStoreClusters = QueryDef.pinned(
     "e176_knn_store_clusters",
     s"""WITH RECURSIVE ${e173FoldDuckCtes(E173K, E173B, E173F)}
        |mp AS MATERIALIZED (SELECT a.src AS u, a.dst AS v, a.cos
@@ -5426,12 +5414,11 @@ object AnalysisQueries {
        |    AS BIGINT) AS avg_cos_t
        |FROM mem JOIN mec m ON m.cluster = mem.cluster
        |GROUP BY mem.cluster, mem.n_members
-       |ORDER BY mem.cluster""".stripMargin) { (s, dir) =>
-    e176Census(s,
+       |ORDER BY mem.cluster""".stripMargin) { (p, s, dir) =>
+    e176Census(p,
       e173Core(s, Tables.embeddings(s, dir), E173K, E173B,
-        E173F, E173S, knnStorePath(s, dir), production = true).foldFinal,
-      "e176:" + knnStorePath(s, dir))
-  }.withBuildOnly { (s, dir) =>
+        E173F, E173S, knnStorePath(s, dir), production = true).foldFinal)
+  }.withBuildOnly { (p, s, dir) =>
     // the production posture once the stream attach (e177) maintains
     // the fold: the FOLDED graph is persisted too (fingerprint-
     // amortized, so the warmed pass never runs the fold at all), and
@@ -5441,53 +5428,51 @@ object AnalysisQueries {
     val foldPath = knnStorePath(s, dir) + "_folded"
     graft.sources.Layout.amortize(s, foldPath,
       graft.sources.Layout.scanFingerprint(Tables.embeddings(s, dir))) {
-      Pins.scope { p =>
-        p.own(e173Core(s, Tables.embeddings(s, dir), E173K, E173B,
-          E173F, E173S, knnStorePath(s, dir), production = true).foldFinal)
-          .select("src", "dst", "cos").coalesce(1)
-          .write.mode("overwrite").parquet(foldPath)
-      }
+      val fold = p.own(e173Core(s, Tables.embeddings(s, dir), E173K,
+        E173B, E173F, E173S, knnStorePath(s, dir), production = true)
+        .foldFinal)
+      fold.select("src", "dst", "cos").coalesce(1)
+        .write.mode("overwrite").parquet(foldPath)
+      p.release(fold)
     }
-    e176Census(s, s.read.parquet(foldPath),
-      "e176b:" + knnStorePath(s, dir))
+    e176Census(p, s.read.parquet(foldPath))
   }
 
   /** e176's mutual-kNN census over a fold graph frame — shared by the
     * oracle-checked run (fold built in-plan) and the buildOnly leg
     * (fold read from its persisted store), so the two postures cannot
     * drift. Takes ownership of `fold` and releases every upstream pin
-    * once the cluster-grain census materializes; the surviving census
-    * rides the [[Pins.slot]] under `pinKey`.
+    * once the cluster-grain census materializes; the census stays
+    * pinned in `p`.
     */
-  private def e176Census(
-      s: SparkSession, fold: DataFrame, pinKey: String): DataFrame =
-    Pins.slot(pinKey)(_.own(Pins.scope { p =>
-      val mp = p.checkpoint(p.own(fold).as("a")
-        .join(fold.as("b"),
-          col("b.src") === col("a.dst") && col("b.dst") === col("a.src"))
-        .filter(col("a.src") < col("a.dst") && col("a.cos") >= 0.35)
-        .select(col("a.src").as("u"), col("a.dst").as("v"),
-          col("a.cos").as("cos"))) // feeds the CC leg and the census twice
-      // mp is materialized — the fold graph's checkpoint is dead NOW
-      // (a no-op when `fold` is the buildOnly leg's parquet scan)
-      p.release(fold)
-      val comp = p.own(graft.operators.ConnectedComponents
-          .components(mp, "u", "v"))
-        .select(col("node"), col("comp").as("cluster"))
-      val mem = comp.groupBy("cluster")
-        .agg(count(lit(1)).as("n_members"))
-      // the census is cluster-grain tiny; materializing it lets every
-      // upstream pin (mp, the CC label table) die with the scope
-      // instead of riding the returned plan
-      mp.join(comp.withColumnRenamed("node", "u"), "u")
-        .groupBy("cluster")
-        .agg(count(lit(1)).as("n_edges"),
-          sum(round(col("cos") * 10000).cast("long")).as("sc"))
-        .join(mem, "cluster")
-        .select(col("cluster"), col("n_members"), col("n_edges"),
-          expr("sc div n_edges").as("avg_cos_t"))
-        .localCheckpoint(true)
-    }).orderBy("cluster"))
+  private def e176Census(p: Pins, fold: DataFrame): DataFrame = {
+    val mp = p.checkpoint(p.own(fold).as("a")
+      .join(fold.as("b"),
+        col("b.src") === col("a.dst") && col("b.dst") === col("a.src"))
+      .filter(col("a.src") < col("a.dst") && col("a.cos") >= 0.35)
+      .select(col("a.src").as("u"), col("a.dst").as("v"),
+        col("a.cos").as("cos"))) // feeds the CC leg and the census twice
+    // mp is materialized — the fold graph's checkpoint is dead NOW
+    // (a no-op when `fold` is the buildOnly leg's parquet scan)
+    p.release(fold)
+    val labels = p.own(graft.operators.ConnectedComponents
+      .components(mp, "u", "v"))
+    val comp = labels.select(col("node"), col("comp").as("cluster"))
+    val mem = comp.groupBy("cluster")
+      .agg(count(lit(1)).as("n_members"))
+    // the census is cluster-grain tiny; materializing it lets every
+    // upstream pin (mp, the CC label table) be released now instead
+    // of riding the returned plan
+    val census = p.checkpoint(mp.join(comp.withColumnRenamed("node", "u"), "u")
+      .groupBy("cluster")
+      .agg(count(lit(1)).as("n_edges"),
+        sum(round(col("cos") * 10000).cast("long")).as("sc"))
+      .join(mem, "cluster")
+      .select(col("cluster"), col("n_members"), col("n_edges"),
+        expr("sc div n_edges").as("avg_cos_t")))
+    Seq(mp, labels).foreach(p.release)
+    census.orderBy("cluster")
+  }
 
   // ---- e178: generational data-card diff -----------------------------------
 
@@ -5895,7 +5880,7 @@ object AnalysisQueries {
           expr("abs(est_a + est_b - union_est - inter_exact) * 10000 " +
             "div (na + nb - inter_exact)").as("err_union_bp"))
         .orderBy(col("src_a"), col("src_b"))
-    }.withBuildOnly { (s, dir) =>
+    }.withBuildOnly { (_, s, dir) =>
       // Production: registers straight off the RAW shingle stream — the
       // HLL update is replay-idempotent (a duplicate only re-touches
       // the same register), so the (source, h)-distinct exchange that
@@ -6060,7 +6045,7 @@ object AnalysisQueries {
         " list_transform(range(1, 65), d -> CAST(embedding[d] AS DOUBLE) * " +
         Portable.hyperplaneWeightDuck(j) +
         s")), (s, v) -> s + v) * $scaleSql)"
-    QueryDef.sql(
+    QueryDef.pinned(
       "e151_grid_density",
       s"""WITH RECURSIVE p AS (SELECT vec_id, ${projDuck(planeX)} AS px,
          |    ${projDuck(planeY)} AS py
@@ -6110,21 +6095,21 @@ object AnalysisQueries {
          |SELECT cluster, n_cells, n_core_pts, n_border_pts,
          |  (n_core_pts + n_border_pts) * 10000 // tot.np AS share_bp
          |FROM u CROSS JOIN tot
-         |ORDER BY cluster""".stripMargin) { (s, dir) =>
+         |ORDER BY cluster""".stripMargin) { (p, s, dir) =>
       val embD = col("embedding").cast("array<double>")
       def proj(plane: Int): org.apache.spark.sql.Column = {
         val w = array((0 until 64).map(d =>
           lit(Portable.hyperplaneWeight(plane, d))): _*)
         F.array_dot(embD, w) * lit(scale)
       }
-      val p = Tables.embeddings(s, dir)
+      val xy = Tables.embeddings(s, dir)
         .select(col("vec_id"), proj(planeX).as("px"), proj(planeY).as("py"))
-      val keyed = p
+      // cell grain: bounded by occupied cells
+      val keyed = p.checkpoint(xy
         .select(floor(col("px") / eps).as("cx"),
           floor(col("py") / eps).as("cy"))
         .groupBy("cx", "cy").agg(count(lit(1)).as("n"))
-        .withColumn("ck", (col("cx") + OFF) * MUL + (col("cy") + OFF))
-        .localCheckpoint(true) // cell grain: bounded by occupied cells
+        .withColumn("ck", (col("cx") + OFF) * MUL + (col("cy") + OFF)))
       // 8-neighborhood probes as an EQUI-join: neighbor coordinates are
       // precomputed on the probing side (explode of the 8 literal
       // offsets — no BNLJ), so both cell joins below hash on (cx, cy).
@@ -6143,14 +6128,14 @@ object AnalysisQueries {
         .join(core.select(col("cx").as("ncx"), col("cy").as("ncy"),
           col("ck").as("v")), Seq("ncx", "ncy"))
         .select(col("ck").as("u"), col("v"))
-      val compe = graft.operators.ConnectedComponents
-        .components(edges, "u", "v")
-        .withColumnRenamed("node", "ck")
+      val labels = p.own(graft.operators.ConnectedComponents
+        .components(edges, "u", "v"))
       // isolated core cells (no core neighbor) are their own cluster
-      val comp = core.join(compe, Seq("ck"), "left")
+      val comp = p.checkpoint(core
+        .join(labels.withColumnRenamed("node", "ck"), Seq("ck"), "left")
         .select(col("ck"), col("cx"), col("cy"),
-          coalesce(col("comp"), col("ck")).as("cluster"), col("n"))
-        .localCheckpoint(true)
+          coalesce(col("comp"), col("ck")).as("cluster"), col("n")))
+      p.release(labels)
       val nonCore = keyed.filter(col("n") < minPts)
       val border = withNbr(nonCore)
         .join(comp.select(col("cx").as("ncx"), col("cy").as("ncy"),
@@ -6161,7 +6146,7 @@ object AnalysisQueries {
         .agg(count(lit(1)).as("n_cells"), sum(col("n")).as("n_core_pts"))
       val bstats = border.groupBy("cluster")
         .agg(sum(col("n")).as("n_border_pts"))
-      // np from the CHECKPOINTED cell table: p has no
+      // np from the CHECKPOINTED cell table: xy has no
       // filter between the scan and the cell groupBy, so Σ n over cells
       // = count(p) exactly — the former p.agg(count) re-ran the corpus
       // scan plus both 64-term JL projections just to count rows.
@@ -6312,7 +6297,7 @@ object AnalysisQueries {
       s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
          |      list_transform(range(1, 65), i -> $x[i] * $y[i])),
          |      (s, v) -> s + v)""".stripMargin
-    QueryDef.sql(
+    QueryDef.pinned(
       "e153_embedding_drift",
       s"""WITH b AS (SELECT vec_id, label,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -6348,7 +6333,7 @@ object AnalysisQueries {
          |FROM j
          |JOIN cnt ca ON ca.label = j.label AND ca.gen_a
          |JOIN cnt cb ON cb.label = j.label AND NOT cb.gen_a
-         |ORDER BY j.label""".stripMargin) { (s, dir) =>
+         |ORDER BY j.label""".stripMargin) { (p, s, dir) =>
       val r = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
           col("embedding").cast("array<double>").as("v"))
@@ -6357,12 +6342,12 @@ object AnalysisQueries {
         .select(col("vec_id"), col("label"),
           transform(col("v"), x => x / col("nrm")).as("uv"),
           expr(genA).as("gen_a"))
-      val sums = r
+      // ≤ #labels·2·64 rows by construction
+      val sums = p.checkpoint(r
         .select(col("label"), col("gen_a"), posexplode(col("uv")))
         .select(col("label"), col("gen_a"), col("pos").as("dim"),
           round(col("col") * 1000000).cast("long").as("q"))
-        .groupBy("label", "gen_a", "dim").agg(sum(col("q")).as("sq"))
-        .localCheckpoint(true) // ≤ #labels·2·64 rows by construction
+        .groupBy("label", "gen_a", "dim").agg(sum(col("q")).as("sq")))
       val cnt = r.groupBy("label", "gen_a").agg(count(lit(1)).as("n"))
       val a = sums.filter(col("gen_a"))
         .select(col("label"), col("dim"), col("sq").as("sa"))
@@ -6418,7 +6403,7 @@ object AnalysisQueries {
     * global-support window is unpartitioned BY DESIGN (bounded rows,
     * the e76 pattern); per-source cumsums partition by source.
     */
-  private def e154WassersteinDrift = QueryDef.sql(
+  private def e154WassersteinDrift = QueryDef.pinned(
     "e154_wasserstein_drift",
     """WITH counts AS (SELECT source, n_chars AS v,
       |    CAST(count(*) AS BIGINT) AS c
@@ -6450,11 +6435,11 @@ object AnalysisQueries {
       |  CAST(round(1000.0 * CAST(sum(num) AS DOUBLE)
       |    / (CAST(ns AS DOUBLE) * nt)) AS BIGINT) AS w1_milli
       |FROM terms GROUP BY source, ns, nt
-      |ORDER BY source""".stripMargin) { (s, dir) =>
-    val counts = Tables.documents(s, dir)
+      |ORDER BY source""".stripMargin) { (p, s, dir) =>
+    // (source, length) grain: bounded table
+    val counts = p.checkpoint(Tables.documents(s, dir)
       .groupBy(col("source"), col("n_chars").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // (source, length) grain: bounded table
+      .agg(count(lit(1)).as("c")))
     val g = counts.groupBy("v").agg(sum(col("c")).as("gc"))
     // support grain (codomain-bounded): two-level prefix + bucketed
     // lead replace the unpartitioned window pair; g is a bounded
@@ -6510,7 +6495,7 @@ object AnalysisQueries {
     * matrix or e154's vs-corpus screen) before the full quadratic
     * matrix; the machinery is unchanged.
     */
-  private def e157W1Matrix = QueryDef.sql(
+  private def e157W1Matrix = QueryDef.pinned(
     "e157_w1_matrix",
     """WITH counts AS (SELECT source, n_chars AS v,
       |    CAST(count(*) AS BIGINT) AS c
@@ -6540,11 +6525,11 @@ object AnalysisQueries {
       |  CAST(round(1000.0 * CAST(sum(num) AS DOUBLE)
       |    / (CAST(n_a AS DOUBLE) * n_b)) AS BIGINT) AS w1_milli
       |FROM pairs GROUP BY src_a, src_b, n_a, n_b
-      |ORDER BY src_a, src_b""".stripMargin) { (s, dir) =>
-    val counts = Tables.documents(s, dir)
+      |ORDER BY src_a, src_b""".stripMargin) { (p, s, dir) =>
+    // (source, length) grain: bounded table
+    val counts = p.checkpoint(Tables.documents(s, dir)
       .groupBy(col("source"), col("n_chars").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // (source, length) grain: bounded table
+      .agg(count(lit(1)).as("c")))
     // support grain (codomain-bounded): bucketed lead, no
     // unpartitioned window; rides the checkpointed counts table
     val support = BoundedPrefix.leadKey(
@@ -6552,15 +6537,15 @@ object AnalysisQueries {
       "v", expr("v div 4096"), "nxt")
     val nsrc = counts.groupBy("source").agg(sum(col("c")).as("ns"))
     val ws = Window.partitionBy(col("source")).orderBy(col("v"))
-    val cums = counts.select("source").distinct()
+    // one cum table feeds both pair sides
+    val cums = p.checkpoint(counts.select("source").distinct()
       .crossJoin(broadcast(support))
       .join(counts, Seq("source", "v"), "left")
       .select(col("source"), col("v"), col("nxt"),
         coalesce(col("c"), lit(0L)).as("c"))
       .withColumn("cum", sum(col("c")).over(ws))
       .filter(col("nxt").isNotNull)
-      .join(nsrc, "source")
-      .localCheckpoint(true) // one cum table feeds both pair sides
+      .join(nsrc, "source"))
     val dec = "decimal(38,0)"
     val a = cums.select(col("source").as("src_a"), col("v"), col("nxt"),
       col("cum").as("ca"), col("ns").as("n_a"))
@@ -6673,7 +6658,7 @@ object AnalysisQueries {
     * localCheckpointed because BOTH the max and the argmax read it —
     * one bounded materialization instead of a recomputed window).
     */
-  private def e160KsDrift = QueryDef.sql(
+  private def e160KsDrift = QueryDef.pinned(
     "e160_ks_drift",
     """WITH counts AS (SELECT source, n_chars AS v,
       |    CAST(count(*) AS BIGINT) AS c
@@ -6703,12 +6688,12 @@ object AnalysisQueries {
       |  CAST(min(gp.v) AS BIGINT) AS ks_at
       |FROM mx m JOIN gaps gp ON gp.source = m.source AND gp.gap = m.mgap
       |GROUP BY m.source, m.ns, m.nt, m.mgap
-      |ORDER BY m.source""".stripMargin) { (s, dir) =>
+      |ORDER BY m.source""".stripMargin) { (p, s, dir) =>
     val dec = "decimal(38,0)"
-    val counts = Tables.documents(s, dir)
+    // (source, length) grain: bounded table
+    val counts = p.checkpoint(Tables.documents(s, dir)
       .groupBy(col("source"), col("n_chars").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // (source, length) grain: bounded table
+      .agg(count(lit(1)).as("c")))
     val g = counts.groupBy("v").agg(sum(col("c")).as("gc"))
     // support grain (codomain-bounded): two-level prefix, no
     // unpartitioned window; rides the checkpointed counts table
@@ -6722,14 +6707,14 @@ object AnalysisQueries {
       .join(counts, Seq("source", "v"), "left")
       .select(col("source"), col("v"), col("cumg"),
         coalesce(col("c"), lit(0L)).as("c"))
-    val gaps = spine
+    // bounded; read by BOTH max and argmax
+    val gaps = p.checkpoint(spine
       .withColumn("cum_s", sum(col("c")).over(ws))
       .join(nsrc, "source")
       .crossJoin(broadcast(ntot))
       .select(col("source"), col("v"), col("ns"), col("nt"),
         abs(col("cum_s").cast(dec) * col("nt")
-          - col("cumg").cast(dec) * col("ns")).as("gap"))
-      .localCheckpoint(true) // bounded; read by BOTH max and argmax
+          - col("cumg").cast(dec) * col("ns")).as("gap")))
     val mx = gaps.groupBy("source", "ns", "nt").agg(max(col("gap")).as("mgap"))
     mx.join(gaps.select(col("source"), col("v"), col("gap")), Seq("source"))
       .filter(col("gap") === col("mgap"))

@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{F, Portable}
 import graft.gen.MockData
+import graft.operators.Pins
 import graft.sources.Tables
 
-/** Round-9 curation additions: the remaining stages a production
-  * training-data pipeline runs that the e1–e85 surface did not yet
-  * cover, each with a DuckDB oracle twin.
+/** Curation stages a production training-data pipeline runs beyond the
+  * e1–e85 surface, each with a DuckDB oracle twin.
   *
   *  - e86 line-level exact dedup with document reassembly (the C4 /
   *    RefinedWeb "dedup at the line level, keep first occurrence, write
@@ -300,7 +300,7 @@ object CurationQueries {
     * factors, because the clone mass dies in the map-side partial of
     * the hash groupBy.
     */
-  private def e155MediaDedupApply = QueryDef.sql(
+  private def e155MediaDedupApply = QueryDef.pinned(
     "e155_media_dedup_apply",
     s"""WITH RECURSIVE ${phashCandDuck(8, 8)},
        |pairs AS (SELECT doc_a, doc_b FROM cand
@@ -319,7 +319,7 @@ object CurationQueries {
        |  CAST(count(l.doc_id) AS BIGINT) AS n_dropped
        |FROM documents d LEFT JOIN losers l ON d.doc_id = l.doc_id
        |WHERE len(d.text) > 0
-       |GROUP BY d.source ORDER BY d.source""".stripMargin) { (s, dir) =>
+       |GROUP BY d.source ORDER BY d.source""".stripMargin) { (p, s, dir) =>
     val bandBits = 8
     val nBands = 8
     val mask = (1L << bandBits) - 1
@@ -329,8 +329,8 @@ object CurationQueries {
         F.avg_hash64(col("text").cast("binary")).as("h"))
     // exact-hash collapse FIRST: reps carry min doc_id per distinct
     // hash; the band join and CC below never see a clone set
-    val reps = d.groupBy("h").agg(min(col("doc_id")).as("rep"))
-      .localCheckpoint(true) // distinct-hash grain; feeds bands + lift
+    // distinct-hash grain; feeds bands + lift
+    val reps = p.checkpoint(d.groupBy("h").agg(min(col("doc_id")).as("rep")))
     val bands = reps.select(col("rep"), col("h"),
       posexplode(array((0 until nBands).map(k =>
         shiftright(col("h"), bandBits * k).bitwiseAND(lit(mask))): _*))
@@ -346,8 +346,8 @@ object CurationQueries {
     // cluster label per rep (isolated reps are their own cluster);
     // rep = min member per hash and comp = min rep, so the label IS
     // the cluster's min doc_id — the naive canonical, exactly
-    val comp = graft.operators.ConnectedComponents
-      .components(pairs, "rep_a", "rep_b")
+    val comp = p.own(graft.operators.ConnectedComponents
+      .components(pairs, "rep_a", "rep_b"))
       .withColumnRenamed("node", "rep")
     val repC = reps.join(comp, Seq("rep"), "left")
       .select(col("h"), coalesce(col("comp"), col("rep")).as("cluster"))
@@ -415,19 +415,20 @@ object CurationQueries {
     * composed labels). The from-scratch recompute and the n_mismatch
     * audit live ONLY in the oracle-checked form.
     */
-  private def e156Build(s: SparkSession, dir: String,
+  private def e156Build(p: Pins, s: SparkSession, dir: String,
       onPe: DataFrame => Unit = _ => ())
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val reps = phashHashes(s, dir)
+    // distinct-hash grain (the e155 collapse)
+    val reps = p.checkpoint(phashHashes(s, dir)
       .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id", "h")
-      .localCheckpoint(true) // distinct-hash grain (the e155 collapse)
-    val newf = reps
+      .select("doc_id", "h"))
+    // node universe; reused by both legs
+    val newf = p.checkpoint(reps
       .select(col("doc_id"),
         expr("(((doc_id % 1000003) * 2654435761) % 1000000007) % 2 = 1")
-          .as("is_new"))
-      .localCheckpoint(true) // node universe; reused by both legs
-    val pe = phashBandPairs(reps, 8, 8)
+          .as("is_new")))
+    // pair grain; feeds all three legs
+    val pe = p.checkpoint(phashBandPairs(reps, 8, 8)
       .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= 14)
       .select("doc_a", "doc_b")
       .join(newf.select(col("doc_id").as("doc_a"),
@@ -435,11 +436,11 @@ object CurationQueries {
       .join(newf.select(col("doc_id").as("doc_b"),
         col("is_new").as("new_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        (col("new_a") || col("new_b")).as("delta"))
-      .localCheckpoint(true) // pair grain; feeds all three legs
-    onPe(pe) // lets the caller overlap an independent audit leg (r17)
-    val compb = graft.operators.ConnectedComponents
-      .components(pe.filter(!col("delta")), "doc_a", "doc_b")
+        (col("new_a") || col("new_b")).as("delta")))
+    p.release(reps)
+    onPe(pe) // pe is final: a leg that reads only pe may overlap the rest
+    val compb = p.own(graft.operators.ConnectedComponents
+      .components(pe.filter(!col("delta")), "doc_a", "doc_b"))
     // contraction: delta-edge endpoints map to their persisted base
     // label (old, clustered), else to themselves (new or isolated)
     val ce = pe.filter(col("delta"))
@@ -449,8 +450,8 @@ object CurationQueries {
         Seq("doc_b"), "left")
       .select(coalesce(col("la"), col("doc_a")).as("u"),
         coalesce(col("lb"), col("doc_b")).as("v"))
-    val comp2 = graft.operators.ConnectedComponents
-      .components(ce, "u", "v")
+    val comp2 = p.own(graft.operators.ConnectedComponents
+      .components(ce, "u", "v"))
     val incr = newf
       .join(compb.withColumnRenamed("node", "doc_id")
         .withColumnRenamed("comp", "lb"), Seq("doc_id"), "left")
@@ -461,7 +462,7 @@ object CurationQueries {
     (newf, pe, ce, incr)
   }
 
-  private def e156IncrementalCc = QueryDef.sql(
+  private def e156IncrementalCc = QueryDef.pinned(
     "e156_incremental_cc",
     s"""WITH RECURSIVE $phashHashDuck,
        |reps AS MATERIALIZED (SELECT min(doc_id) AS doc_id, h FROM ph
@@ -525,15 +526,14 @@ object CurationQueries {
        |    AS n_comp_full,
        |  CAST((SELECT count(*) FROM incr i JOIN fullc f
        |    ON f.doc_id = i.doc_id AND f.lbl <> i.lbl) AS BIGINT)
-       |    AS n_mismatch""".stripMargin) { (s, dir) =>
+       |    AS n_mismatch""".stripMargin) { (p, s, dir) =>
     // the from-scratch audit CC shares nothing with the incremental
     // chain — run it on a driver thread so its rounds back-fill the
-    // base/stage-2 CC legs' idle capacity (guide-pattern overlap, r17)
+    // base/stage-2 CC legs' idle capacity
     var compfT: () => DataFrame = null
-    val (newf, pe, ce, incr) = e156Build(s, dir, pe0 => {
-      compfT = graft.operators.Adaptive.overlap(
-        graft.operators.ConnectedComponents
-          .components(pe0.select("doc_a", "doc_b"), "doc_a", "doc_b"))
+    val (newf, pe, ce, incr) = e156Build(p, s, dir, pe0 => {
+      compfT = p.overlap(p.own(graft.operators.ConnectedComponents
+        .components(pe0.select("doc_a", "doc_b"), "doc_a", "doc_b")))
     })
     val compf = compfT()
     val full = newf
@@ -559,15 +559,15 @@ object CurationQueries {
       .select(col("n_nodes"), col("n_edges_base"), col("n_edges_delta"),
         col("n_stage2_nodes"), col("n_comp_incr"), col("n_comp_full"),
         col("n_mismatch"))
-  }.withBuildOnly((s, dir) =>
+  }.withBuildOnly((p, s, dir) =>
     // production plan: the composed label table — no from-scratch CC,
     // no mismatch audit
-    e156Build(s, dir)._4)
+    e156Build(p, s, dir)._4)
 
   // ---- e156b: incremental CC across PERSISTED label generations -----------
 
   /** e156's maintenance path proven ACROSS STORAGE BOUNDARIES, not just
-    * within one plan (VERDICT r11 item 5): the rep universe splits into
+    * within one plan: the rep universe splits into
     * three deterministic GENERATIONS (multiplicative hash mod 3 — the
     * e138/e156 id-generation stand-in), and the label table is WRITTEN
     * TO PARQUET and READ BACK between folds — twice. Generation-0 edges
@@ -594,7 +594,7 @@ object CurationQueries {
     * same three closures plus the full one — four recursive CTEs, all
     * MATERIALIZED (the e156 DuckDB lesson).
     */
-  private def e156bIncrementalCcPersist = QueryDef.sql(
+  private def e156bIncrementalCcPersist = QueryDef.pinned(
     "e156b_incremental_cc_persist",
     s"""WITH RECURSIVE $phashHashDuck,
        |reps AS MATERIALIZED (SELECT min(doc_id) AS doc_id, h FROM ph
@@ -691,17 +691,15 @@ object CurationQueries {
        |    AS n_comp_full,
        |  CAST((SELECT count(*) FROM l2 i JOIN fullc f
        |    ON f.doc_id = i.doc_id AND f.lbl <> i.lbl) AS BIGINT)
-       |    AS n_mismatch""".stripMargin) { (s, dir) =>
+       |    AS n_mismatch""".stripMargin) { (p, s, dir) =>
     import graft.operators.ConnectedComponents
-    val reps = phashHashes(s, dir)
+    val reps = p.checkpoint(phashHashes(s, dir)
       .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id", "h")
-      .localCheckpoint(true)
-    val gens = reps.select(col("doc_id"),
+      .select("doc_id", "h"))
+    val gens = p.checkpoint(reps.select(col("doc_id"),
         expr("(((doc_id % 1000003) * 2654435761) % 1000000007) % 3")
-          .as("g"))
-      .localCheckpoint(true)
-    val pe = phashBandPairs(reps, 8, 8)
+          .as("g")))
+    val pe = p.checkpoint(phashBandPairs(reps, 8, 8)
       .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= 14)
       .select("doc_a", "doc_b")
       .join(gens.select(col("doc_id").as("doc_a"), col("g").as("ga")),
@@ -709,31 +707,30 @@ object CurationQueries {
       .join(gens.select(col("doc_id").as("doc_b"), col("g").as("gb")),
         "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        greatest(col("ga"), col("gb")).as("eg"))
-      .localCheckpoint(true)
+        greatest(col("ga"), col("gb")).as("eg")))
     // the from-scratch audit CC only needs pe — overlap it with the
-    // three fold legs (r17; the e156 overlap rule)
-    val compfT = graft.operators.Adaptive.overlap(
-      graft.operators.ConnectedComponents
-        .components(pe.select("doc_a", "doc_b"), "doc_a", "doc_b"))
+    // three fold legs (the e156 overlap rule)
+    val compfT = p.overlap(p.own(ConnectedComponents
+      .components(pe.select("doc_a", "doc_b"), "doc_a", "doc_b")))
     // the storage boundary: labels leave the plan as parquet and come
     // back as a fresh scan — the fold below cannot see their lineage
     val scratch = Scratch.dir(s, "e156b")
     def persistLabels(df: org.apache.spark.sql.DataFrame,
         name: String): org.apache.spark.sql.DataFrame = {
-      val p = s"$scratch/$name"
+      val path = s"$scratch/$name"
       // the label table is component-grain tiny at these SFs; writing it
       // at the session's 32-partition default sprays 32 sliver files per
       // generation — the exact small-files accumulation Layout.compact
       // exists to undo, here avoided at write time. A fleet deployment
       // whose labels are doc-grain sizes this with Layout's
       // targetBytes-derived file count instead of a constant.
-      df.coalesce(1).write.mode("overwrite").parquet(p)
-      s.read.parquet(p)
+      df.coalesce(1).write.mode("overwrite").parquet(path)
+      p.release(df)
+      s.read.parquet(path)
     }
-    val comp0 = persistLabels(ConnectedComponents.components(
+    val comp0 = persistLabels(p.own(ConnectedComponents.components(
       pe.filter(col("eg") === 0).select("doc_a", "doc_b"),
-      "doc_a", "doc_b"), "labels_g0")
+      "doc_a", "doc_b")), "labels_g0")
     val c1e = pe.filter(col("eg") === 1)
       .join(comp0.select(col("node").as("doc_a"), col("comp").as("la")),
         Seq("doc_a"), "left")
@@ -741,7 +738,7 @@ object CurationQueries {
         Seq("doc_b"), "left")
       .select(coalesce(col("la"), col("doc_a")).as("u"),
         coalesce(col("lb"), col("doc_b")).as("v"))
-    val comp1 = ConnectedComponents.components(c1e, "u", "v")
+    val comp1 = p.own(ConnectedComponents.components(c1e, "u", "v"))
     val l1 = persistLabels(gens.filter(col("g") <= 1)
       .join(comp0.select(col("node").as("doc_id"), col("comp").as("c0")),
         Seq("doc_id"), "left")
@@ -757,7 +754,7 @@ object CurationQueries {
         Seq("doc_b"), "left")
       .select(coalesce(col("la"), col("doc_a")).as("u"),
         coalesce(col("lb"), col("doc_b")).as("v"))
-    val comp2 = ConnectedComponents.components(c2e, "u", "v")
+    val comp2 = p.own(ConnectedComponents.components(c2e, "u", "v"))
     val l2 = gens
       .join(l1.select(col("doc_id"), col("lbl").as("p1")),
         Seq("doc_id"), "left")
@@ -1714,8 +1711,8 @@ object CurationQueries {
     * mass below the conventional k = 5 / k = 10 bars, and minimum
     * l-diversity of the order-priority sensitive attribute (a class
     * whose members all share one sensitive value leaks it even at
-    * high k — the homogeneity attack). l-diversity convention
-    * (ADVICE r10): the class census LEFT-joins orders, so classes of
+    * high k — the homogeneity attack). l-diversity convention: the
+    * class census LEFT-joins orders, so classes of
     * zero-order customers are counted explicitly in
     * `classes_no_sensitive` — for them there is no sensitive value to
     * leak, so they are EXCLUDED from `l_div_min` (which is therefore
@@ -1846,7 +1843,7 @@ object CurationQueries {
     val P = Portable.P
     val theta = 2
     val dfCap = 256
-    QueryDef.sql(
+    QueryDef.pinned(
       "e161_video_neardup",
       s"""WITH reps AS (SELECT text, min(doc_id) AS doc_id FROM documents
          |  WHERE len(text) > 0 GROUP BY text),
@@ -1899,7 +1896,7 @@ object CurationQueries {
          |FROM inter i JOIN nsh na ON na.doc_id = i.doc_a
          |  JOIN nsh nb ON nb.doc_id = i.doc_b
          |WHERE 10000 * i.n_inter // (na.n_sh + nb.n_sh - i.n_inter) >= 5000
-         |ORDER BY i.doc_a, i.doc_b""".stripMargin) { (s, dir) =>
+         |ORDER BY i.doc_a, i.doc_b""".stripMargin) { (p, s, dir) =>
       import s.implicits._
       import graft.operators.Media
       // exact-clone collapse FIRST (the e155 invariant): min doc_id per
@@ -1929,15 +1926,15 @@ object CurationQueries {
         .agg(((count(lit(1)) * 1000003L + sum(col("energy"))) % P)
           .as("sig"))
       val seqW = Window.partitionBy(col("doc_id")).orderBy(col("shot"))
-      val shg = shots
+      // feeds postings, verify sides, and nsh
+      val shg = p.checkpoint(shots
         .withColumn("s1", lead(col("sig"), 1).over(seqW))
         .withColumn("s2", lead(col("sig"), 2).over(seqW))
         .filter(col("s2").isNotNull)
         .select(col("doc_id"),
           (((col("sig") * 1000003L + col("s1")) % P * 1000003L
             + col("s2")) % P).as("sh"))
-        .distinct()
-        .localCheckpoint(true) // feeds postings, verify sides, and nsh
+        .distinct())
       val hot = shg.groupBy("sh").agg(count(lit(1)).as("df"))
         .filter(col("df") > dfCap).select("sh")
       val post = shg.join(hot, Seq("sh"), "left_anti")
@@ -1994,7 +1991,7 @@ object CurationQueries {
     * (index-ordered sums, identical on both engines).
     */
   private def e167IvfResplit = {
-    QueryDef.sql(
+    QueryDef.pinned(
       "e167_ivf_resplit",
       s"""WITH all0 AS (SELECT vec_id, embedding,
          |    sqrt(${dotCols("embedding", "embedding")}) AS nrm
@@ -2032,13 +2029,13 @@ object CurationQueries {
          |  CAST(sum(mv) AS BIGINT) AS n_moved,
          |  CAST(sum(mv) * 10000 // n_before AS BIGINT) AS moved_bp
          |FROM re GROUP BY list_id, n_before, far_id
-         |ORDER BY cid""".stripMargin) { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
+         |ORDER BY cid""".stripMargin) { (p, s, dir) =>
+      // feeds assignment, seed lookup, re-join
+      val emb = p.checkpoint(Tables.embeddings(s, dir)
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("emb"))
         .withColumn("nrm", sqrt(F.array_dot(col("emb"), col("emb"))))
-        .filter(col("vec_id").isNotNull)
-        .localCheckpoint(true) // feeds assignment, seed lookup, re-join
+        .filter(col("vec_id").isNotNull))
       val cent = emb.filter(col("vec_id") % 67 === 3)
         .select(col("vec_id").as("cid"), col("emb").as("cemb"),
           col("nrm").as("cnrm"))

@@ -533,7 +533,7 @@ object ExtensionQueries {
     * reachable set — an independent formulation of the same fixpoint.
     */
   private def e32DedupClusters =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e32_dedup_clusters",
       s"""WITH RECURSIVE ${minhashPairsDuck.stripPrefix("WITH ")},
          |pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.2),
@@ -549,12 +549,12 @@ object ExtensionQueries {
          |FROM comp c
          |JOIN (SELECT cluster, count(*) AS cluster_size FROM comp
          |      GROUP BY cluster) s USING (cluster)
-         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |ORDER BY doc_id""".stripMargin) { (p, s, dir) =>
       val pairs = minhashVerifiedPairs(s, dir)
         .filter(col("jaccard") >= 0.2)
         .select("doc_a", "doc_b")
-      val comp = graft.operators.ConnectedComponents
-        .components(pairs, "doc_a", "doc_b")
+      val comp = p.own(graft.operators.ConnectedComponents
+        .components(pairs, "doc_a", "doc_b"))
       val sizes = comp.groupBy(col("comp").as("cluster"))
         .agg(count(lit(1)).as("cluster_size"))
       comp.select(col("node").as("doc_id"), col("comp").as("cluster"))
@@ -577,7 +577,7 @@ object ExtensionQueries {
     * aggregations of the node-bounded label table plus a 1-row total
     * broadcast (the e22 pattern).
     */
-  private def e133ClusterCensus = QueryDef.sql(
+  private def e133ClusterCensus = QueryDef.pinned(
     "e133_cluster_census",
     s"""WITH RECURSIVE ${minhashPairsDuck.stripPrefix("WITH ")},
        |pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.2),
@@ -595,12 +595,12 @@ object ExtensionQueries {
        |  CAST(count(*) * m AS BIGINT) AS n_docs,
        |  CAST(count(*) * m * 10000 // tot.n AS BIGINT) AS doc_share_bp
        |FROM sz CROSS JOIN tot GROUP BY m, tot.n
-       |ORDER BY cluster_size""".stripMargin) { (s, dir) =>
+       |ORDER BY cluster_size""".stripMargin) { (p, s, dir) =>
     val pairs = minhashVerifiedPairs(s, dir)
       .filter(col("jaccard") >= 0.2)
       .select("doc_a", "doc_b")
-    val sz = graft.operators.ConnectedComponents
-      .components(pairs, "doc_a", "doc_b")
+    val sz = p.own(graft.operators.ConnectedComponents
+      .components(pairs, "doc_a", "doc_b"))
       .groupBy(col("comp")).agg(count(lit(1)).as("m"))
     val tot = sz.agg(sum(col("m")).as("n"))
     sz.groupBy("m")
@@ -650,7 +650,7 @@ object ExtensionQueries {
          |    < $t80 THEN 'train'
          |  WHEN ${graft.gen.MockData.hashLongDuck(seed, "split", key)}
          |    < $t90 THEN 'val' ELSE 'test' END""".stripMargin
-    QueryDef.sql(
+    QueryDef.pinned(
       "e135_cluster_split",
       s"""WITH RECURSIVE ${minhashPairsDuck.stripPrefix("WITH ")},
          |pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.2),
@@ -689,15 +689,14 @@ object ExtensionQueries {
          |FROM asg a CROSS JOIN tot CROSS JOIN crossc cc
          |LEFT JOIN within w ON w.split = a.split
          |GROUP BY a.split, tot.n
-         |ORDER BY a.split""".stripMargin) { (s, dir) =>
-      val pairs = minhashVerifiedPairs(s, dir)
+         |ORDER BY a.split""".stripMargin) { (p, s, dir) =>
+      // comp (CC) + the two audit joins all read the pair list; cut
+      // once so the banding pipeline runs once (the e132 discipline)
+      val pairs = p.checkpoint(minhashVerifiedPairs(s, dir)
         .filter(col("jaccard") >= 0.2)
-        .select("doc_a", "doc_b")
-        // comp (CC) + the two audit joins all read the pair list; cut
-        // once so the banding pipeline runs once (the e132 discipline)
-        .localCheckpoint(true)
-      val comp = graft.operators.ConnectedComponents
-        .components(pairs, "doc_a", "doc_b")
+        .select("doc_a", "doc_b"))
+      val comp = p.own(graft.operators.ConnectedComponents
+        .components(pairs, "doc_a", "doc_b"))
       def splitOf(key: Column): Column = {
         val draw = graft.gen.MockData.hashLong(seed, "split", key)
         when(draw < t80, "train").when(draw < t90, "val")
@@ -756,7 +755,7 @@ object ExtensionQueries {
     * exact agreement between the two operators on adversarial graphs.
     */
   private def e46CcStar =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e46_cc_star",
       s"""WITH RECURSIVE ${minhashPairsDuck.stripPrefix("WITH ")},
          |pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.2),
@@ -772,12 +771,12 @@ object ExtensionQueries {
          |FROM comp c
          |JOIN (SELECT cluster, count(*) AS cluster_size FROM comp
          |      GROUP BY cluster) s USING (cluster)
-         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |ORDER BY doc_id""".stripMargin) { (p, s, dir) =>
       val pairs = minhashVerifiedPairs(s, dir)
         .filter(col("jaccard") >= 0.2)
         .select("doc_a", "doc_b")
-      val comp = graft.operators.StarComponents
-        .components(pairs, "doc_a", "doc_b")
+      val comp = p.own(graft.operators.StarComponents
+        .components(pairs, "doc_a", "doc_b"))
       val sizes = comp.groupBy(col("comp").as("cluster"))
         .agg(count(lit(1)).as("cluster_size"))
       comp.select(col("node").as("doc_id"), col("comp").as("cluster"))
@@ -902,7 +901,7 @@ object ExtensionQueries {
     * join over the corpus regardless of cluster structure.
     */
   private def e45DedupApply =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e45_dedup_apply",
       s"""WITH RECURSIVE ${minhashPairsDuck.stripPrefix("WITH ")},
          |pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.2),
@@ -918,12 +917,12 @@ object ExtensionQueries {
          |  count(CASE WHEN l.doc_id IS NULL THEN 1 END) AS n_kept,
          |  count(l.doc_id) AS n_dropped
          |FROM documents d LEFT JOIN losers l ON d.doc_id = l.doc_id
-         |GROUP BY d.lang ORDER BY d.lang""".stripMargin) { (s, dir) =>
+         |GROUP BY d.lang ORDER BY d.lang""".stripMargin) { (p, s, dir) =>
       val pairs = minhashVerifiedPairs(s, dir)
         .filter(col("jaccard") >= 0.2)
         .select("doc_a", "doc_b")
-      val losers = graft.operators.ConnectedComponents
-        .components(pairs, "doc_a", "doc_b")
+      val losers = p.own(graft.operators.ConnectedComponents
+        .components(pairs, "doc_a", "doc_b"))
         .filter(col("node") =!= col("comp"))
         .select(col("node").as("doc_id"), lit(1).as("dropped"))
       Tables.documents(s, dir).select("doc_id", "lang")
@@ -952,7 +951,7 @@ object ExtensionQueries {
     * #sources-row rollup. Chars are int64 sums — exact to 9.2×10¹⁸
     * chars, comfortably past 100 TB of text.
     */
-  private def e71DedupYield = QueryDef.sql(
+  private def e71DedupYield = QueryDef.pinned(
     "e71_dedup_yield",
     s"""WITH RECURSIVE ${minhashPairsDuck.stripPrefix("WITH ")},
        |pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.2),
@@ -979,16 +978,16 @@ object ExtensionQueries {
        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
        |  CAST(sum(CASE WHEN ex = 0 AND nr = 0 THEN n_chars ELSE 0 END)
        |    AS BIGINT) AS chars_kept
-       |FROM cls GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
+       |FROM cls GROUP BY source ORDER BY source""".stripMargin) { (p, s, dir) =>
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("n_chars"),
         sha2(col("text"), 256).as("dig"))
     val firsts = docs.groupBy("dig").agg(min(col("doc_id")).as("first_id"))
-    val nearLosers = graft.operators.ConnectedComponents
+    val nearLosers = p.own(graft.operators.ConnectedComponents
       .components(
         minhashVerifiedPairs(s, dir).filter(col("jaccard") >= 0.2)
           .select("doc_a", "doc_b"),
-        "doc_a", "doc_b")
+        "doc_a", "doc_b"))
       .filter(col("node") =!= col("comp"))
       .select(col("node").as("doc_id"), lit(1).as("near"))
     docs.join(firsts, "dig")
@@ -1021,7 +1020,7 @@ object ExtensionQueries {
     * struct ORDERING is not engine-portable, argmax VALUES are).
     */
   private def e65DedupBest =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e65_dedup_best",
       s"""WITH RECURSIVE ${minhashPairsDuck.stripPrefix("WITH ")},
          |pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.2),
@@ -1043,12 +1042,12 @@ object ExtensionQueries {
          |  GROUP BY cluster)
          |SELECT s.cluster, s.survivor, b.survivor_chars, z.cluster_size
          |FROM surv s JOIN best b USING (cluster) JOIN sz z USING (cluster)
-         |ORDER BY s.cluster""".stripMargin) { (s, dir) =>
+         |ORDER BY s.cluster""".stripMargin) { (p, s, dir) =>
       val pairs = minhashVerifiedPairs(s, dir)
         .filter(col("jaccard") >= 0.2)
         .select("doc_a", "doc_b")
-      val comp = graft.operators.ConnectedComponents
-        .components(pairs, "doc_a", "doc_b")
+      val comp = p.own(graft.operators.ConnectedComponents
+        .components(pairs, "doc_a", "doc_b"))
       val m = comp
         .join(Tables.documents(s, dir).select(
           col("doc_id").as("node"), col("n_chars")), "node")
@@ -1475,7 +1474,7 @@ object ExtensionQueries {
       s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
          |      list_transform(range(1, 65), i -> $x[i] * $y[i])),
          |      (s, v) -> s + v)""".stripMargin
-    QueryDef.sql(
+    QueryDef.pinned(
       "e5b_cosine_topk_int8",
       s"""WITH b AS (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -1512,8 +1511,10 @@ object ExtensionQueries {
          |QUALIFY row_number() OVER (PARTITION BY query_id
          |  ORDER BY cosine DESC, neighbor_id) <= $K
          |ORDER BY query_id, cosine DESC, neighbor_id""".stripMargin) {
-      (s, dir) =>
-        val r = Tables.embeddings(s, dir)
+      (p, s, dir) =>
+        // reused by the score join (code side) and the bounded float
+        // rerank side
+        val r = p.checkpoint(Tables.embeddings(s, dir)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v"))
           .withColumn("nrm", sqrt(F.array_dot(col("v"), col("v"))))
@@ -1522,9 +1523,7 @@ object ExtensionQueries {
           .withColumn("scale", F.int8_scale(col("uv")))
           .filter(col("scale") > 0)
           .select(col("vec_id"), col("uv"), col("scale"),
-            F.int8_pack(col("uv")).as("code"))
-          .localCheckpoint(true) // reused by the score join (code side)
-                                 // and the bounded float rerank side
+            F.int8_pack(col("uv")).as("code")))
         val q = r.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("query_id"), col("code").as("qc"),
             col("scale").as("qs"))
@@ -1881,7 +1880,7 @@ object ExtensionQueries {
       s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
          |      list_transform(range(1, 65), i -> $x[i] * $y[i])),
          |      (s, v) -> s + v)""".stripMargin
-    QueryDef.sql(
+    QueryDef.pinned(
       "e125b_mutual_knn_int8",
       s"""WITH s0 AS (SELECT vec_id, embedding, ${lshSigDuck(bits)} AS sig
          |  FROM embeddings),
@@ -1933,13 +1932,13 @@ object ExtensionQueries {
          |SELECT vec_a, vec_b, cosine, rank_ab, rank_ba,
          |  CAST(round((qcos - cosine) * 10000) AS BIGINT) AS err_t
          |FROM ex ORDER BY vec_a, vec_b""".stripMargin) {
-      (s, dir) =>
+      (p, s, dir) =>
         val embD = col("embedding").cast("array<double>")
         val sig = lshSigSpark(bits, embD)
         // N-row bounded base table, checkpointed once: the pair join
         // reads ONLY (code, scale) from it; uv re-enters at the
         // bounded mutual-survivor rerank
-        val base = Tables.embeddings(s, dir)
+        val base = p.checkpoint(Tables.embeddings(s, dir)
           .select(col("vec_id"), embD.as("v"), sig.as("sig"))
           .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
           .filter(col("nrm") > 0)
@@ -1947,8 +1946,7 @@ object ExtensionQueries {
           .withColumn("scale", F.int8_scale(col("uv")))
           .filter(col("scale") > 0)
           .select(col("vec_id"), col("sig"), col("uv"), col("scale"),
-            F.int8_pack(col("uv")).as("code"))
-          .localCheckpoint(true)
+            F.int8_pack(col("uv")).as("code")))
         val cnts = base.groupBy("sig").agg(count(lit(1)).as("cnt"))
         val nsplits = floor(
           (col("cnt") + lit(bucketCap - 1)) / lit(bucketCap)).cast("long")
@@ -2527,7 +2525,7 @@ object ExtensionQueries {
          |      list_transform(range(1, 65),
          |        i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE))),
          |      (s, v) -> s + v)""".stripMargin
-    QueryDef.sql(
+    QueryDef.pinned(
       "e170_ivf_resplit_persist",
       s"""WITH all0 AS (SELECT vec_id, embedding,
          |    sqrt(${dotCols("embedding", "embedding")}) AS nrm
@@ -2568,8 +2566,8 @@ object ExtensionQueries {
          |  FROM re GROUP BY list_id, far_id)
          |SELECT src_cid, cid, n_vecs, CAST(is_new AS INT) AS is_new
          |FROM (SELECT * FROM keepc UNION ALL SELECT * FROM newc)
-         |ORDER BY src_cid, is_new""".stripMargin) { (s, dir) =>
-      ivfResplitPersist(s, dir)._2
+         |ORDER BY src_cid, is_new""".stripMargin) { (p, s, dir) =>
+      ivfResplitPersist(p, s, dir)._2
     }
   }
 
@@ -2591,7 +2589,7 @@ object ExtensionQueries {
   }
 
   private[queries] def ivfResplitPersist(
-      s: SparkSession, dir: String): (String, DataFrame) = {
+      p: Pins, s: SparkSession, dir: String): (String, DataFrame) = {
     val base = embBase(s, dir)
     val prePath = ivfIndexPath(s, dir)
     // e64's index build, fingerprint-amortized — same path, same table
@@ -2618,37 +2616,33 @@ object ExtensionQueries {
     // eager checkpoint: mem (the hot cells' members — the bounded
     // maintenance working set) feeds THREE consumers (far, moved, and
     // transitively the census mapping); without it the full-index
-    // scoring join re-executes per action. It dies with the scope once
-    // the rewrite (the last eager consumer) has run, so repeated
+    // scoring join re-executes per action. It is released once the
+    // rewrite (the last eager consumer) has run, so repeated
     // maintenance invocations don't pin one hot-cell frame per run for
     // the session. `far` is checkpointed too — it is hot-CELL-grain
     // tiny (one row per split cell) and the lazily-returned census
     // still needs it after mem is gone.
     val postPath = prePath + "_split"
-    val far =
-      Pins.scope { p =>
-        val mem = p.checkpoint(scored.join(hot, "list_id"))
-        val farCk = mem.groupBy("list_id")
-          .agg(min(struct(col("cs"), col("vec_id"))).as("f"))
-          .select(col("list_id"), col("f.vec_id").as("far_id"))
-          .localCheckpoint(true)
-        val c2 = farCk.join(
-          idx.select(col("vec_id").as("far_id"), col("emb").as("femb"),
-            col("nrm").as("fnrm")), "far_id")
-        val moved = mem
-          .join(idx.select(col("vec_id"), col("emb"), col("nrm")),
-            "vec_id")
-          .join(broadcast(c2), "list_id")
-          .where(dot(col("emb"), col("femb")) / (col("nrm") * col("fnrm"))
-            > col("cs"))
-          .select(col("vec_id"), col("far_id").as("new_list"))
-        val postIdx = idx.join(moved, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("emb"), col("nrm"),
-            coalesce(col("new_list"), col("list_id")).as("list_id"))
-        graft.sources.Layout.writePartitioned(postIdx, postPath,
-          Seq("list_id"))
-        farCk
-      }
+    val mem = p.checkpoint(scored.join(hot, "list_id"))
+    val far = p.checkpoint(mem.groupBy("list_id")
+      .agg(min(struct(col("cs"), col("vec_id"))).as("f"))
+      .select(col("list_id"), col("f.vec_id").as("far_id")))
+    val c2 = far.join(
+      idx.select(col("vec_id").as("far_id"), col("emb").as("femb"),
+        col("nrm").as("fnrm")), "far_id")
+    val moved = mem
+      .join(idx.select(col("vec_id"), col("emb"), col("nrm")),
+        "vec_id")
+      .join(broadcast(c2), "list_id")
+      .where(dot(col("emb"), col("femb")) / (col("nrm") * col("fnrm"))
+        > col("cs"))
+      .select(col("vec_id"), col("far_id").as("new_list"))
+    val postIdx = idx.join(moved, Seq("vec_id"), "left")
+      .select(col("vec_id"), col("emb"), col("nrm"),
+        coalesce(col("new_list"), col("list_id")).as("list_id"))
+    graft.sources.Layout.writePartitioned(postIdx, postPath,
+      Seq("list_id"))
+    p.release(mem)
     // census read BACK from the rewritten table — the roundtrip proof
     val mapping = far
       .select(col("list_id").as("src_cid"), col("list_id").as("cid"),
@@ -3666,7 +3660,7 @@ object ExtensionQueries {
   private def e172GateVerifyStored = QueryDef.sql(
     "e172_gate_verify_stored", gateVerifyDuckSql) { (s, dir) =>
     gateVerifyImpl(s, dir, store = Some("e172-admission"))
-  }.withBuildOnly((s, dir) =>
+  }.withBuildOnly((_, s, dir) =>
     // the STEADY-STATE admission leg: artifact writes
     // are fingerprint-amortized, so the first invocation builds the
     // store and every later one reads only — ProbeMain's warmup pays
@@ -3839,7 +3833,7 @@ object ExtensionQueries {
     * class; the argmax is a map-side struct max, no window.
     */
   private def e163LpaCommunities =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e163_lpa_communities",
       s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id,
          |    CAST(count(*) AS BIGINT) AS n_clones, text
@@ -3859,21 +3853,21 @@ object ExtensionQueries {
          |  CAST(l.lbl <> c.cluster AS INT) AS split
          |FROM comp c JOIN l4 l ON l.node = c.node
          |JOIN reps r2 ON r2.doc_id = c.node
-         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val reps = Tables.documents(s, dir)
+         |ORDER BY doc_id""".stripMargin) { (p, s, dir) =>
+      // feeds the pair machinery AND n_clones
+      val reps = p.checkpoint(Tables.documents(s, dir)
         .filter(length(col("text")) > 0)
         .groupBy("text")
         .agg(min(col("doc_id")).as("doc_id"),
-          count(lit(1)).as("n_clones"))
-        .localCheckpoint(true) // feeds the pair machinery AND n_clones
-      val pairs = minhashVerifiedPairsFrom(reps.select("doc_id", "text"))
+          count(lit(1)).as("n_clones")))
+      // feeds BOTH the CC and the LPA legs
+      val pairs = p.checkpoint(minhashVerifiedPairsFrom(reps.select("doc_id", "text"))
         .filter(col("jaccard") >= 0.2)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(true) // feeds BOTH the CC and the LPA legs
-      val comp = graft.operators.ConnectedComponents
-        .components(pairs, "doc_a", "doc_b")
-      val comm = graft.operators.LabelPropagation
-        .communities(pairs, "doc_a", "doc_b", rounds = 4)
+        .select("doc_a", "doc_b"))
+      val comp = p.own(graft.operators.ConnectedComponents
+        .components(pairs, "doc_a", "doc_b"))
+      val comm = p.own(graft.operators.LabelPropagation
+        .communities(pairs, "doc_a", "doc_b", rounds = 4))
       comp.select(col("node"), col("comp").as("cluster"))
         .join(comm, "node")
         .join(reps.select(col("doc_id").as("node"), col("n_clones")),
@@ -3937,7 +3931,7 @@ object ExtensionQueries {
     * claim is IN the hash-matched result, not in prose.
     */
   private def e163bLpaRegions =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e163b_lpa_regions",
       s"""WITH RECURSIVE $regionCliqueDuck,
          |reach(node, r) AS (
@@ -3952,13 +3946,13 @@ object ExtensionQueries {
          |  CAST(min(c.comp) AS BIGINT) AS cc_comp, tot.n_components
          |FROM l4 l JOIN comp c ON c.node = l.node CROSS JOIN tot
          |GROUP BY l.lbl, tot.n_components
-         |ORDER BY community""".stripMargin) { (s, dir) =>
-      val edges = regionCliqueEdges(s, dir)
-        .localCheckpoint(true) // feeds both legs
-      val comp = graft.operators.ConnectedComponents
-        .components(edges, "u", "v")
-      val comm = graft.operators.LabelPropagation
-        .communities(edges, "u", "v", rounds = 4)
+         |ORDER BY community""".stripMargin) { (p, s, dir) =>
+      // feeds both legs
+      val edges = p.checkpoint(regionCliqueEdges(s, dir))
+      val comp = p.own(graft.operators.ConnectedComponents
+        .components(edges, "u", "v"))
+      val comm = p.own(graft.operators.LabelPropagation
+        .communities(edges, "u", "v", rounds = 4))
       val tot = comp.agg(countDistinct(col("comp")).as("n_components"))
       comm.join(comp, "node")
         .groupBy(col("community"))
@@ -4066,7 +4060,7 @@ object ExtensionQueries {
     * twin where LPA strictly wins at every SF.
     */
   private def e175Modularity =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e175_modularity",
       s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, text
          |  FROM documents WHERE len(text) > 0 GROUP BY text),
@@ -4082,20 +4076,20 @@ object ExtensionQueries {
          |    ON e.u = reach.r),
          |ccl AS (SELECT node, min(r) AS lbl FROM reach GROUP BY node),
          |${lpaRoundsDuck(4)},
-         |$modularityDuckTail""".stripMargin) { (s, dir) =>
+         |$modularityDuckTail""".stripMargin) { (p, s, dir) =>
       val reps = Tables.documents(s, dir)
         .filter(length(col("text")) > 0)
         .groupBy("text").agg(min(col("doc_id")).as("doc_id"))
         .select("doc_id", "text")
-      val pairs = minhashVerifiedPairsFrom(reps)
+      // feeds CC, LPA, and three metric legs
+      val pairs = p.checkpoint(minhashVerifiedPairsFrom(reps)
         .filter(col("jaccard") >= 0.2)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(true) // feeds CC, LPA, and three metric legs
-      val ccl = graft.operators.ConnectedComponents
-        .components(pairs, "doc_a", "doc_b")
+        .select("doc_a", "doc_b"))
+      val ccl = p.own(graft.operators.ConnectedComponents
+        .components(pairs, "doc_a", "doc_b"))
         .select(col("node"), col("comp").as("lbl"))
-      val lpa = graft.operators.LabelPropagation
-        .communities(pairs, "doc_a", "doc_b", rounds = 4)
+      val lpa = p.own(graft.operators.LabelPropagation
+        .communities(pairs, "doc_a", "doc_b", rounds = 4))
         .select(col("node"), col("community").as("lbl"))
       modularityRow("cc", pairs, ccl)
         .unionByName(modularityRow("lpa", pairs, lpa))
@@ -4111,7 +4105,7 @@ object ExtensionQueries {
     * the strict inequality.
     */
   private def e175bModularityRegions =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e175b_modularity_regions",
       s"""WITH RECURSIVE $regionCliqueDuck,
          |pairs AS (SELECT u AS doc_a, v AS doc_b FROM base),
@@ -4122,15 +4116,14 @@ object ExtensionQueries {
          |    ON e.u = reach.r),
          |ccl AS (SELECT node, min(r) AS lbl FROM reach GROUP BY node),
          |${lpaRoundsDuck(4)},
-         |$modularityDuckTail""".stripMargin) { (s, dir) =>
-      val pairs = regionCliqueEdges(s, dir)
-        .select(col("u").as("doc_a"), col("v").as("doc_b"))
-        .localCheckpoint(true)
-      val ccl = graft.operators.ConnectedComponents
-        .components(pairs, "doc_a", "doc_b")
+         |$modularityDuckTail""".stripMargin) { (p, s, dir) =>
+      val pairs = p.checkpoint(regionCliqueEdges(s, dir)
+        .select(col("u").as("doc_a"), col("v").as("doc_b")))
+      val ccl = p.own(graft.operators.ConnectedComponents
+        .components(pairs, "doc_a", "doc_b"))
         .select(col("node"), col("comp").as("lbl"))
-      val lpa = graft.operators.LabelPropagation
-        .communities(pairs, "doc_a", "doc_b", rounds = 4)
+      val lpa = p.own(graft.operators.LabelPropagation
+        .communities(pairs, "doc_a", "doc_b", rounds = 4))
         .select(col("node"), col("community").as("lbl"))
       modularityRow("cc", pairs, ccl)
         .unionByName(modularityRow("lpa", pairs, lpa))
@@ -4213,7 +4206,7 @@ object ExtensionQueries {
     * join e3 already pays.
     */
   private def e164CommunityDedupApply =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e164_community_dedup_apply",
       s"""WITH RECURSIVE reps AS (SELECT min(doc_id) AS doc_id, text
          |  FROM documents GROUP BY text),
@@ -4248,7 +4241,7 @@ object ExtensionQueries {
          |  CAST(count(*) - sum(ex) - sum(nr) AS BIGINT) AS n_kept,
          |  CAST(sum(resc) AS BIGINT) AS n_rescued
          |FROM cls GROUP BY source ORDER BY source""".stripMargin) {
-      (s, dir) =>
+      (p, s, dir) =>
         // (text, source)-GRAIN classification (measured lever):
         // the report is per-source AGGREGATES, so no per-doc row ever
         // needs to move — the first form joined every doc to a digest
@@ -4259,22 +4252,22 @@ object ExtensionQueries {
         // the rep grain. A fleet deployment keys this exchange by a
         // content digest instead of the text value (the e161
         // convention); the text key keeps the oracle byte-exact.
-        val g = Tables.documents(s, dir)
+        // feeds reps AND the classification
+        val g = p.checkpoint(Tables.documents(s, dir)
           .groupBy("text", "source")
           .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("src_min"))
           .withColumn("rep_id",
-            min(col("src_min")).over(Window.partitionBy(col("text"))))
-          .localCheckpoint(true) // feeds reps AND the classification
+            min(col("src_min")).over(Window.partitionBy(col("text")))))
         val reps = g.where(col("src_min") === col("rep_id"))
           .select(col("rep_id").as("doc_id"), col("text"))
-        val pairs = minhashVerifiedPairsFrom(reps)
+        // feeds BOTH the CC and the LPA legs
+        val pairs = p.checkpoint(minhashVerifiedPairsFrom(reps)
           .filter(col("jaccard") >= 0.2)
-          .select("doc_a", "doc_b")
-          .localCheckpoint(true) // feeds BOTH the CC and the LPA legs
-        val comp = graft.operators.ConnectedComponents
-          .components(pairs, "doc_a", "doc_b")
-        val comm = graft.operators.LabelPropagation
-          .communities(pairs, "doc_a", "doc_b", rounds = 4)
+          .select("doc_a", "doc_b"))
+        val comp = p.own(graft.operators.ConnectedComponents
+          .components(pairs, "doc_a", "doc_b"))
+        val comm = p.own(graft.operators.LabelPropagation
+          .communities(pairs, "doc_a", "doc_b", rounds = 4))
         val surv = comm.groupBy("community").agg(min(col("node")).as("s"))
         val st = comm.join(comp, "node").join(surv, "community")
           .select(col("node").as("rep_id"),
@@ -4312,7 +4305,7 @@ object ExtensionQueries {
     * canonical, and whether only community scoping saved it.
     */
   private def e164bCommunityApplyRegions =
-    QueryDef.sql(
+    QueryDef.pinned(
       "e164b_community_apply_regions",
       s"""WITH RECURSIVE $regionCliqueDuck,
          |reach(node, r) AS (
@@ -4326,13 +4319,13 @@ object ExtensionQueries {
          |  CAST(min(c.cluster) AS BIGINT) AS cc_comp,
          |  CAST(min(l.node) <> min(c.cluster) AS INT) AS rescued
          |FROM l4 l JOIN comp c ON c.node = l.node
-         |GROUP BY l.lbl ORDER BY community""".stripMargin) { (s, dir) =>
-      val edges = regionCliqueEdges(s, dir)
-        .localCheckpoint(true) // feeds both legs
-      val comp = graft.operators.ConnectedComponents
-        .components(edges, "u", "v")
-      val comm = graft.operators.LabelPropagation
-        .communities(edges, "u", "v", rounds = 4)
+         |GROUP BY l.lbl ORDER BY community""".stripMargin) { (p, s, dir) =>
+      // feeds both legs
+      val edges = p.checkpoint(regionCliqueEdges(s, dir))
+      val comp = p.own(graft.operators.ConnectedComponents
+        .components(edges, "u", "v"))
+      val comm = p.own(graft.operators.LabelPropagation
+        .communities(edges, "u", "v", rounds = 4))
       comm.join(comp, "node")
         .groupBy("community")
         .agg(min(col("node")).as("survivor"),
@@ -4464,7 +4457,7 @@ object ExtensionQueries {
         .filter(col("jaccard") >= 0.2)
         .select("doc_a", "doc_b")
     }
-    QueryDef.sql(
+    QueryDef.pinned(
       "e165_neighborhood_fn",
       s"""WITH reps AS (SELECT min(doc_id) AS doc_id, text
          |  FROM documents WHERE len(text) > 0 GROUP BY text),
@@ -4473,12 +4466,12 @@ object ExtensionQueries {
          |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
          |          UNION SELECT doc_b, doc_a FROM pairs),
          |${anfRoundsDuck(rounds)}
-         |${anfSelectDuck(rounds)}""".stripMargin) { (s, dir) =>
-      graft.operators.NeighborhoodFunction
-        .neighborhood(edges(s, dir), "doc_a", "doc_b", rounds)
-    }.withBuildOnly { (s, dir) =>
-      graft.operators.NeighborhoodFunction
-        .hllOnly(edges(s, dir), "doc_a", "doc_b", rounds)
+         |${anfSelectDuck(rounds)}""".stripMargin) { (p, s, dir) =>
+      p.own(graft.operators.NeighborhoodFunction
+        .neighborhood(edges(s, dir), "doc_a", "doc_b", rounds))
+    }.withBuildOnly { (p, s, dir) =>
+      p.own(graft.operators.NeighborhoodFunction
+        .hllOnly(edges(s, dir), "doc_a", "doc_b", rounds))
     }
   }
 
@@ -4496,13 +4489,13 @@ object ExtensionQueries {
     */
   private def e165bNeighborhoodRegions = {
     val rounds = 10
-    QueryDef.sql(
+    QueryDef.pinned(
       "e165b_neighborhood_regions",
       s"""WITH $regionCliqueDuck,
          |${anfRoundsDuck(rounds)}
-         |${anfSelectDuck(rounds)}""".stripMargin) { (s, dir) =>
-      graft.operators.NeighborhoodFunction
-        .neighborhood(regionCliqueEdges(s, dir), "u", "v", rounds)
+         |${anfSelectDuck(rounds)}""".stripMargin) { (p, s, dir) =>
+      p.own(graft.operators.NeighborhoodFunction
+        .neighborhood(regionCliqueEdges(s, dir), "u", "v", rounds))
     }
   }
 
@@ -4519,21 +4512,21 @@ object ExtensionQueries {
     * gen B covers a smaller fraction of its final mass, i.e. its
     * distance curve got fatter-tailed — the diameter-growth flag).
     */
-  private def diameterDrift(
+  private def diameterDrift(p: Pins,
       s: SparkSession, leaf: String,
       edgesA: DataFrame, edgesB: DataFrame,
       aCol: String, bCol: String, rounds: Int): DataFrame = {
     import graft.operators.NeighborhoodFunction
     val regPath = Scratch.dir(s, leaf)
-    // the largest relation of the leg dies with the scope, even when
-    // the write fails
-    Pins.scope { p =>
+    // the largest relation of the leg is released once written
+    val regs =
       p.own(NeighborhoodFunction.hllRegisters(edgesA, aCol, bCol, rounds))
-        .write.mode("overwrite").parquet(regPath)
-    }
+    regs.write.mode("overwrite").parquet(regPath)
+    p.release(regs)
     val estA = NeighborhoodFunction
       .summarizeRegisters(s.read.parquet(regPath))
-    val estB = NeighborhoodFunction.hllOnly(edgesB, aCol, bCol, rounds)
+    val estB =
+      p.own(NeighborhoodFunction.hllOnly(edgesB, aCol, bCol, rounds))
     val lastA = estA.filter(col("round") === rounds)
       .select(col("est_pairs").as("na_last"))
     val lastB = estB.filter(col("round") === rounds)
@@ -4603,7 +4596,7 @@ object ExtensionQueries {
         .filter(col("jaccard") >= 0.2)
         .select("doc_a", "doc_b")
     }
-    QueryDef.sql(
+    QueryDef.pinned(
       "e169_diameter_drift",
       s"""WITH repsa AS (SELECT min(doc_id) AS doc_id, text
          |  FROM documents WHERE len(text) > 0 AND doc_id % 5 <> 4
@@ -4620,9 +4613,9 @@ object ExtensionQueries {
          |           UNION SELECT doc_b, doc_a FROM pb),
          |${anfHllDuckPfx(rounds, "a", "edgesa")},
          |${anfHllDuckPfx(rounds, "b", "edgesb")}
-         |${driftSelectDuck(rounds)}""".stripMargin) { (s, dir) =>
+         |${driftSelectDuck(rounds)}""".stripMargin) { (p, s, dir) =>
       val docs = Tables.documents(s, dir)
-      diameterDrift(s, "e169_regs",
+      diameterDrift(p, s, "e169_regs",
         repEdges(docs.filter(col("doc_id") % 5 =!= 4)), repEdges(docs),
         "doc_a", "doc_b", rounds)
     }
@@ -4641,15 +4634,15 @@ object ExtensionQueries {
     */
   private def e169bDiameterRegions = {
     val rounds = 10
-    QueryDef.sql(
+    QueryDef.pinned(
       "e169b_diameter_regions",
       s"""WITH $regionCliqueDuck,
          |edgesa AS (SELECT u, v FROM cl UNION SELECT v, u FROM cl),
          |${anfHllDuckPfx(rounds, "a", "edgesa")},
          |${anfHllDuckPfx(rounds, "b", "edges")}
-         |${driftSelectDuck(rounds)}""".stripMargin) { (s, dir) =>
+         |${driftSelectDuck(rounds)}""".stripMargin) { (p, s, dir) =>
       val (cl, full) = regionCliqueSplit(s, dir)
-      diameterDrift(s, "e169b_regs", cl, full, "u", "v", rounds)
+      diameterDrift(p, s, "e169b_regs", cl, full, "u", "v", rounds)
     }
   }
 }

@@ -15,7 +15,7 @@ import graft.sources.Tables
 /** Driver-visible queries over the ENGINE itself (generator, ingest
   * pipeline, staging/mart models, data-quality suite). The generator
   * queries (g1/g2) carry DuckDB twins built from the same affine-modular
-  * coefficients, and since r11 p1 (the full scratch-db pipeline run) is
+  * coefficients, and p1 (the full scratch-db pipeline run) is
   * oracle-proven too — its DuckDB twin replays both batches' generators,
   * the 20 declared dbt tests, and the mart counts end to end (see
   * [[p1OracleSql]]); the ScalaTest suite (IngestSpec, ModelsSpec,
@@ -136,7 +136,7 @@ object PipelineQueries {
     }
   }
 
-  /** The generator itself, oracle-proven (VERDICT r7 item 3): one full
+  /** The generator itself, oracle-proven: one full
     * customers+orders batch (mock_data.py:40-68 twin, seed 42, batch
     * 2026-01-01) dumped row-by-row — the ACTUAL [[MockData.customers]] /
     * [[MockData.orders]] code paths, not a re-derivation — against a
@@ -441,15 +441,15 @@ object PipelineQueries {
   /** Bootstrap + refresh + dbt-run + dbt-test end to end
     * (refresh_source_data DAG ↦ dbt run ↦ dbt test, SURVEY §3): returns
     * one row per declared data test plus mart row counts. Materialized
-    * eagerly so the scratch database can be dropped. Oracle-proven
-    * since r11 (VERDICT r10 item 5): [[p1OracleSql]] replays the whole
+    * eagerly so the scratch database can be dropped. Oracle-proven:
+    * [[p1OracleSql]] replays the whole
     * two-batch pipeline — generators, staging semantics, tests — in
     * DuckDB, upgrading p1 from rows-only to hash-matched and leaving
     * q12 (the impl-specific Bernoulli sampler) the only spark-only
     * entry.
     */
-  private def p1PipelineE2e = QueryDef.sql(
-    "p1_pipeline_e2e", p1OracleSql) { (s, _) =>
+  private def p1PipelineE2e = QueryDef.pinned(
+    "p1_pipeline_e2e", p1OracleSql) { (p, s, _) =>
     val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val rawDb = s"graft_raw_$suffix"
     val martDb = s"graft_mart_$suffix"
@@ -469,8 +469,9 @@ object PipelineQueries {
         .reduce(_ unionByName _)
         .collect().map(r => (r.getString(0), 1L, r.getLong(1))).toSeq
       import s.implicits._
-      (testRows ++ martRows).toDF("check", "passed", "n").orderBy("check")
-        .localCheckpoint() // materialize before dropping the scratch dbs
+      // materialize before dropping the scratch dbs
+      p.checkpoint((testRows ++ martRows).toDF("check", "passed", "n")
+        .orderBy("check"))
     } finally {
       s.sql(s"DROP DATABASE IF EXISTS $martDb CASCADE")
       s.sql(s"DROP DATABASE IF EXISTS $rawDb CASCADE")

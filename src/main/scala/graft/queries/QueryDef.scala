@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Pins
+
 /** One driver-checkable query: a Spark implementation plus (when the
   * semantics are ANSI-SQL-expressible and deterministic) an equivalent
   * DuckDB oracle query over the same parquet tables.
@@ -28,6 +30,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * negative (cosines, means) carries `+ 0` in the ORACLE SQL to normalize
   * -0.0 to +0.0 (IEEE: -0.0 + 0 == +0.0), applied BEFORE any ranking so
   * tie order can't diverge either.
+  *
+  * Pin rule: a builder checkpoints or persists only through a
+  * [[graft.operators.Pins]] scope, and a pin that rides its returned
+  * plan (an operator's result included) belongs to the scope that
+  * [[QueryDef.pinned]] hands it, the slot named after the query.
   */
 final case class QueryDef(
     name: String,
@@ -38,14 +45,12 @@ final case class QueryDef(
   /** Registers the PRODUCTION plan of a query whose oracle-checked
     * form carries an exact-truth AUDIT leg (e147's anchor recall,
     * e156's from-scratch CC recompute): the same build with the audit
-    * dropped. "Production drops the audit" was prose in SCALING.md
-    * until r11's verdict asked for it mechanized — ProbeMain's
-    * PROBE_BUILD_ONLY mode times these, so SCALING.md rows carry a
-    * measured build-only number instead of a claim. Not registered in
+    * dropped, so a probe times what production runs. It pins like a
+    * [[QueryDef.pinned]] query, in a slot of its own. Not registered in
     * SparkEntry.queries (no oracle — the audit leg IS the check).
     */
-  def withBuildOnly(fn: (SparkSession, String) => DataFrame): QueryDef =
-    copy(buildOnly = Some(fn))
+  def withBuildOnly(fn: (Pins, SparkSession, String) => DataFrame): QueryDef =
+    copy(buildOnly = Some(QueryDef.inSlot(s"$name (production)", fn)))
 }
 
 object QueryDef {
@@ -53,10 +58,18 @@ object QueryDef {
       run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, Some(oracle))
 
-  /** Spark-only query: driver records a weaker rows-only check. */
-  def sparkOnly(name: String)(
-      run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None)
+  /** A query whose returned plan reads pinned frames. `run` pins every
+    * one of them in `p`, the scope of the [[Pins.slot]] named after the
+    * query: a call frees what the previous call of the query pinned,
+    * and a call that throws frees its own pins at once.
+    */
+  def pinned(name: String, oracle: String)(
+      run: (Pins, SparkSession, String) => DataFrame): QueryDef =
+    QueryDef(name, inSlot(name, run), Some(oracle))
+
+  private def inSlot(key: String,
+      run: (Pins, SparkSession, String) => DataFrame) =
+    (s: SparkSession, dir: String) => Pins.slot(key)(run(_, s, dir))
 }
 
 /** Session-scoped scratch paths for queries that materialize an

@@ -1772,7 +1772,7 @@ object ReferenceQueries {
     // 2024-01-01T00Z .. 2024-01-30T23Z as hours-since-epoch
     val hr0 = 1704067200L / 3600
     val hrN = hr0 + 720
-    QueryDef.sql(
+    QueryDef.pinned(
       "q44_interpolate",
       s"""WITH spine AS (SELECT unnest(range($hr0, $hrN)) AS hr),
          |obs AS (SELECT epoch_us(ts) // 3600000000 AS hr,
@@ -1796,7 +1796,7 @@ object ReferenceQueries {
          |  CASE WHEN obs_cents IS NOT NULL THEN CAST(obs_cents AS DOUBLE)
          |    ELSE round(ffill_cents + (next_v - ffill_cents) * (hr - prev_hr)
          |      / CAST(next_hr - prev_hr AS DOUBLE), 4) END AS interp_cents
-         |FROM w ORDER BY hr""".stripMargin) { (s, dir) =>
+         |FROM w ORDER BY hr""".stripMargin) { (p, s, dir) =>
       val obs = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .groupBy((unix_micros(col("ts")) / 3600000000L).cast("long").as("hr"))
@@ -1811,10 +1811,8 @@ object ReferenceQueries {
       // non-equi extrema joins — hr is unique, so max/min over
       // (hr, value) structs are exactly the last/first observations.
       // 720-row spine, materialized once: the within-window, day-summary
-      // and day-spine branches all read it. The pin rides the returned
-      // plan, one per query, not one per call.
-      val jd = graft.operators.Pins.slot("q44_interpolate")(
-        _.checkpoint(j.withColumn("__d", expr("hr div 24"))))
+      // and day-spine branches all read it.
+      val jd = p.checkpoint(j.withColumn("__d", expr("hr div 24")))
       val back = Window.partitionBy("__d").orderBy("hr")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val fwd = Window.partitionBy("__d").orderBy("hr")

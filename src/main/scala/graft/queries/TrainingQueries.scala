@@ -1326,7 +1326,7 @@ object TrainingQueries {
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
          |      // $budget AS BIGINT) AS shard
          |  FROM $src""".stripMargin
-    QueryDef.sql(
+    QueryDef.pinned(
       "e77_shard_stability",
       s"""WITH w AS (SELECT doc_id,
          |    len(${Portable.wordsDuck}) AS n_tok,
@@ -1352,17 +1352,16 @@ object TrainingQueries {
          |    CAST(sum(CASE WHEN bs.shard != fs.shard THEN 1 ELSE 0 END)
          |      * 10000 // count(*) AS BIGINT) AS moved_bp
          |  FROM bs JOIN fs USING (doc_id))
-         |ORDER BY mode""".stripMargin) { (s, dir) =>
+         |ORDER BY mode""".stripMargin) { (p, s, dir) =>
       // tokenize ONCE: all four prefix-sum runs read this 24-byte/doc
       // projection, not the text — materialized eagerly so the corpus
       // scan + word extraction never repeats (measured 51 → ~15 s on
       // the 100× probe replica; at fleet scale the frame is ~24 B/doc,
       // disk-spillable, vs 4 full-text rescans)
-      val w = Tables.documents(s, dir)
+      val w = p.checkpoint(Tables.documents(s, dir)
         .select(col("doc_id"),
           size(expr(Portable.wordsSpark)).cast("long").as("n_tok"),
-          MockData.hashLong(seed, "stab", col("doc_id")).as("draw"))
-        .localCheckpoint(true)
+          MockData.hashLong(seed, "stab", col("doc_id")).as("draw")))
       // one-row count pulled as the base/delta threshold scalar — the
       // e33 discipline (a constant of the run; relational would be a
       // 1-row BNLJ for no gain)
@@ -1485,7 +1484,7 @@ object TrainingQueries {
          |      AS pad_bp,
          |    CAST(max(n * mx - tok) AS BIGINT) AS max_batch_pad
          |  FROM $src""".stripMargin
-    QueryDef.sql(
+    QueryDef.pinned(
       "e79_length_buckets",
       s"""WITH w AS (SELECT doc_id,
          |    len(${Portable.wordsDuck}) AS n_tok
@@ -1503,12 +1502,11 @@ object TrainingQueries {
          |    sum(n_tok) AS tok FROM s GROUP BY batch)
          |SELECT * FROM (${regimeDuck("arrival", "ab")}
          |  UNION ALL ${regimeDuck("sorted", "sb")})
-         |ORDER BY mode""".stripMargin) { (s, dir) =>
-      val w = Tables.documents(s, dir)
+         |ORDER BY mode""".stripMargin) { (p, s, dir) =>
+      val w = p.checkpoint(Tables.documents(s, dir)
         .select(col("doc_id"),
           size(expr(Portable.wordsSpark)).cast("long").as("n_tok"))
-        .where(col("n_tok") > 0)
-        .localCheckpoint(true)
+        .where(col("n_tok") > 0))
       def batches(key: Column): DataFrame =
         graft.operators.Indexing
           .withRunningTotal(w, key, lit(1L), "rank")
@@ -2102,7 +2100,7 @@ object TrainingQueries {
     * unpartitioned window and the two 1-row broadcasts ride
     * construction-bounded frames (named PlanLint allowances).
     */
-  private def e76CurriculumBins = QueryDef.sql(
+  private def e76CurriculumBins = QueryDef.pinned(
     "e76_curriculum_bins",
     s"""WITH sc AS (SELECT doc_id,
        |    len(${Portable.wordsDuck}) AS n_words,
@@ -2130,7 +2128,7 @@ object TrainingQueries {
        |  CAST(sum(wsum) AS BIGINT) AS n_words,
        |  min(score_bp) AS lo_score_bp, max(score_bp) AS hi_score_bp
        |FROM cum CROSS JOIN cuts
-       |GROUP BY bin ORDER BY bin""".stripMargin) { (s, dir) =>
+       |GROUP BY bin ORDER BY bin""".stripMargin) { (p, s, dir) =>
     val words = expr(Portable.wordsSpark)
     val sc = Tables.documents(s, dir)
       .where(size(words) > 0)
@@ -2143,11 +2141,9 @@ object TrainingQueries {
     // 10 001 rows by the basis-point codomain, never the corpus; the
     // two-level bucketed prefix keeps it off a single task. The table
     // feeds both prefix branches, the totals and the binning, so it is
-    // checkpointed once; the pin rides the returned plan, one per
-    // query, not one per call.
-    val freq = graft.operators.Pins.slot("e76_curriculum_bins")(
-      _.checkpoint(sc.groupBy("score_bp")
-        .agg(count(lit(1)).as("cnt"), sum(col("n_words")).as("wsum"))))
+    // checkpointed once.
+    val freq = p.checkpoint(sc.groupBy("score_bp")
+      .agg(count(lit(1)).as("cnt"), sum(col("n_words")).as("wsum")))
     val cum = graft.operators.BoundedPrefix.cumsum(
       freq, "score_bp", expr("score_bp div 64"), Seq("cnt" -> "cum"))
     val tot = freq.agg(sum(col("cnt")).as("n"))

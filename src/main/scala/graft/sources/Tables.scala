@@ -29,8 +29,8 @@ object Tables {
     * unit — Spark normalizes ms/µs to internal micros), else the explicit
     * `ts BIGINT` schema reads the raw nanos and rebuilds microseconds —
     * without the session-wide `spark.sql.legacy.parquet.nanosAsLong`
-    * mutation (VERDICT r2 item 9 — a read should not flip conf for every
-    * later read in the session). Both paths are lossless for the oracle
+    * mutation (a read should not flip conf for every later read in the
+    * session). Both paths are lossless for the oracle
     * compare (DuckDB TIMESTAMP is micros).
     */
   private val eventsRaw = StructType(Seq(

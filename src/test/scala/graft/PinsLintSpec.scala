@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * [[graft.operators.Pins]] is the one owner of the pin lifecycle. Outside
   * `Pins.scala`, no code line of `src/main` unpersists a frame or an RDD,
-  * or reaches into a plan for the RDDs behind its checkpoints.
+  * or reaches into a plan for the RDDs behind its checkpoints; nor does
+  * one checkpoint, cache or persist a frame except through a scope's
+  * `p.persist`.
   *
   * Every object in [[graft.streaming]] has a caller: a code line of
   * `src/main` outside that package names it, or a live streaming object
@@ -27,13 +29,10 @@ class PinsLintSpec extends AnyFunSuite {
   /** Streaming objects kept without a `src/main` caller, each with the
     * ROADMAP item that decides whether it stays: item 7 measures the
     * serve path (kNN attach and IVF probe), item 5 weighs the
-    * `AvailableNow` load against `Ingest.stageAndLoad`, and item 9
-    * deletes the last uncalled stateful operators with their specs.
+    * `AvailableNow` load against `Ingest.stageAndLoad`.
     */
   private val held = Map(
-    "StreamKnnFold" -> 7, "StreamIvfProbe" -> 7, "StreamingIngest" -> 5) ++
-    Seq("CustomerState", "StreamCusum", "StreamDedup",
-      "StreamRollingDistinct").map(_ -> 9)
+    "StreamKnnFold" -> 7, "StreamIvfProbe" -> 7, "StreamingIngest" -> 5)
 
   private def scalaFiles(roots: Seq[Path]): Seq[Path] = roots.flatMap { r =>
     val s = Files.walk(r)
@@ -53,14 +52,20 @@ class PinsLintSpec extends AnyFunSuite {
     }
   }
 
+  /** Code lines of `files` outside `Pins.scala` that `bad` matches. */
+  private def hits(files: Seq[Path])(bad: String => Boolean): Seq[String] =
+    for {
+      f <- files if f.getFileName.toString != "Pins.scala"
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if bad(code(line))
+    } yield s"$f:${i + 1}: ${line.trim}"
+
   /** Code lines of `files` that release a pin by hand. */
-  private def releases(files: Seq[Path]): Seq[String] = for {
-    f <- files if f.getFileName.toString != "Pins.scala"
-    (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-    c = code(line)
-    if c.contains("unpersist(") || c.contains("LogicalRDD") ||
-      c.contains("Pins.free(")
-  } yield s"$f:${i + 1}: ${line.trim}"
+  private def releases(files: Seq[Path]): Seq[String] = hits(files)(c =>
+    c.contains("unpersist(") || c.contains("LogicalRDD") ||
+      c.contains("Pins.free("))
+
+  private val scopePersist = """\bp\.persist\(""".r
 
   test("only Pins releases pins in operators and queries") {
     val sources = scalaFiles(roots)
@@ -75,6 +80,17 @@ class PinsLintSpec extends AnyFunSuite {
     assert(sources.size > 20, s"source root not found: $root")
     val hits = releases(sources)
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("only Pins checkpoints or persists in src/main") {
+    val sources = scalaFiles(Seq(root))
+    assert(sources.size > 20, s"source root not found: $root")
+    val pins = hits(sources) { line =>
+      val c = scopePersist.replaceAllIn(line, "")
+      c.contains("localCheckpoint(") || c.contains(".cache()") ||
+        c.contains(".persist(")
+    }
+    assert(pins.isEmpty, pins.mkString("\n", "\n", ""))
   }
 
   test("every streaming object has a caller in src/main or is held") {

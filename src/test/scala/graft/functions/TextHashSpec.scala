@@ -96,6 +96,12 @@ class TextHashSpec extends AnyFunSuite {
       }.sum
       assert(TextHash.simHash(UTF8String.fromString(s)) === wantSim)
     }
+    // a light edit (casing, punctuation) keeps the word-hash multiset
+    // and so the simhash; different text does not
+    def sim(s: String): Long = TextHash.simHash(UTF8String.fromString(s))
+    assert(sim("The QUICK, brown fox!") === sim("the quick brown fox"))
+    assert(sim("an entirely different document body") !==
+      sim("the quick brown fox"))
   }
 
   test("minHashes: affine min per coefficient pair") {

@@ -15,6 +15,12 @@ import graft.{SparkEntry, SparkSpecBase}
   * The spec also fails when an ALLOWANCE goes stale (the query now
   * returns rows): an allowance that no longer fires must be deleted so
   * the list stays an honest census of known-empty results.
+  *
+  * The same pass checks that every pin a query leaves behind belongs
+  * to a [[graft.operators.Pins.slot]]: with every returned frame still
+  * reachable (so Spark's ContextCleaner cannot free an unowned pin
+  * first), closing all slots must return the persisted RDDs to their
+  * pre-pass baseline.
   */
 class DegeneracySpec extends SparkSpecBase {
 
@@ -31,18 +37,24 @@ class DegeneracySpec extends SparkSpecBase {
       java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
         val th = new Thread(r, "graft-degeneracy"); th.setDaemon(true); th
       }))
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
     val checks = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) => Future {
-        val empty =
-          try fn(spark, dir).isEmpty
-          catch { case e: Throwable =>
-            fail(s"$name failed to run at sf0.01: ${e.getMessage}")
-          }
-        name -> empty
+        try {
+          val df = fn(spark, dir)
+          (name, df, df.isEmpty)
+        } catch { case e: Throwable =>
+          fail(s"$name failed to run at sf0.01: ${e.getMessage}")
+        }
       }
     }
-    val empties = Await.result(Future.sequence(checks), Duration.Inf)
-      .collect { case (name, true) => name }.toSet
+    val results = Await.result(Future.sequence(checks), Duration.Inf)
+    graft.operators.Pins.closeSlots()
+    val unowned = (sc.getPersistentRDDs.keySet -- baseline).toSeq.sorted
+      .map(sc.getPersistentRDDs(_))
+    java.lang.ref.Reference.reachabilityFence(results)
+    val empties = results.collect { case (name, _, true) => name }.toSet
 
     val unexpected = (empties -- SparkEntry.emptyAllowed).toSeq.sorted
     assert(unexpected.isEmpty,
@@ -54,5 +66,8 @@ class DegeneracySpec extends SparkSpecBase {
     assert(stale.isEmpty,
       s"stale emptyAllowed entries (no longer empty at sf0.01): " +
         s"${stale.mkString(", ")} — delete them so the census stays honest")
+
+    assert(unowned.isEmpty,
+      s"pins no slot owns: ${unowned.mkString(", ")}")
   }
 }

@@ -117,7 +117,8 @@ class E142RunSpec extends SparkSpecBase {
         // and (4, 9) reverse which side holds which digest
         (3L, 10L, 0.5), (4L, 9L, 0.5), (9L, 10L, 0.5))
       .toDF("doc_a", "doc_b", "jaccard")
-    val got = AnalysisQueries.sharedRunStats(spark, dir, vp).collect()
+    val got = graft.operators.Pins.scope(p =>
+        AnalysisQueries.sharedRunStats(p, spark, dir, vp).collect())
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(3), r.getLong(4))).toMap
     // 30-word passage at the same offset: one island of 28 grams

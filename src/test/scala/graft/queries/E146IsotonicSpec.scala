@@ -38,9 +38,9 @@ class E146IsotonicSpec extends SparkSpecBase {
 
   private def runBins(bins: Seq[(Long, Long, Long)]): Seq[(Long, Long)] = {
     import spark.implicits._
-    AnalysisQueries.isotonicFromBins(
+    graft.operators.Pins.scope(p => AnalysisQueries.isotonicFromBins(p,
         bins.toDF("q", "n", "pos"))
-      .collect().map(r => (r.getLong(0), r.getLong(4))).toSeq
+      .collect().map(r => (r.getLong(0), r.getLong(4))).toSeq)
   }
 
   test("closed form equals exact-rational PAV on the sf0.01 curve") {

@@ -23,8 +23,8 @@ class IvfPersistSpec extends SparkSpecBase {
     // invocation may pin only the tiny cell-grain `far` frame the
     // lazily-returned census still needs, never the member working set
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
-    val (postPath, censusDf) =
-      ExtensionQueries.ivfResplitPersist(spark, dir)
+    val (postPath, censusDf) = graft.operators.Pins.slot("IvfPersistSpec")(
+      ExtensionQueries.ivfResplitPersist(_, spark, dir))
     assert(spark.sparkContext.getPersistentRDDs.size <= pinnedBefore + 1,
       "ivfResplitPersist pinned more than the cell-grain far frame")
     val census = censusDf.collect()

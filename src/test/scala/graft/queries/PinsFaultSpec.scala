@@ -12,11 +12,12 @@ import graft.SparkSpecBase
 import graft.operators._
 
 /** Injected failures on every operator that pins frames through
-  * [[Pins]]: a listener cancels the k-th job of a call (k = 1, a middle
-  * job and the last-but-one job of an uninjected run), and the call
-  * must throw, leave `getPersistentRDDs` at its baseline and leave no
-  * `graft-overlap-*` thread running; an uninjected call made next must
-  * still return the uninjected rows. A case may count only the jobs of
+  * [[Pins]], and on one whole registered query: a listener cancels the
+  * k-th job of a call (k = 1, a middle job and the last-but-one job of
+  * an uninjected run), and the call must throw, leave
+  * `getPersistentRDDs` at its baseline and leave no `graft-overlap-*`
+  * thread running; an uninjected call made next must still return the
+  * uninjected rows. A case may count only the jobs of
   * one leg, such as the NN-Descent anchor-truth leg that runs on an
   * overlap thread.
   */
@@ -193,11 +194,11 @@ class PinsFaultSpec extends SparkSpecBase with Eventually {
   // site runs through NnDescent.anchorTruth on the overlap thread
   faultTest("AnalysisQueries.nndAudit's anchor-truth leg", minJobs = 1,
       pick = _.stageInfos.exists(_.details.contains("anchorTruth"))) { () =>
-    val r = AnalysisQueries.nndAudit("pins-fault-nnd", emb, NnDescent.Float,
-        K = 4, anchors = 8) { v =>
+    val r = Pins.slot("pins-fault-nnd")(AnalysisQueries.nndAudit(_, emb,
+        NnDescent.Float, K = 4, anchors = 8) { v =>
       val (knns, pools) = NnDescent.plainBuild(v, 4, 2)
       (knns, Seq("n_scored" -> (0L +: pools)))
-    }
+    })
     Out(Seq(r), () => rows(r))
   }
 
@@ -217,4 +218,12 @@ class PinsFaultSpec extends SparkSpecBase with Eventually {
           legs.foldFreshCounts, legs.scratchInitCount,
           legs.scratchFreshCounts))
     }
+
+  // a whole query: its pins ride the slot named after it, which the
+  // next call frees, so the call hands the caller no frame to free
+  faultTest("e163_lpa_communities") { () =>
+    val df = graft.SparkEntry.queries("e163_lpa_communities")(spark,
+      "/root/testdata/sf0.001")
+    Out(Nil, () => rows(df))
+  }
 }

@@ -3,11 +3,12 @@ package graft.queries
 import graft.SparkSpecBase
 
 /** Queries whose checkpointed input rides the returned plan hold it in
-  * a [[graft.operators.Pins.slot]] keyed by the query name: a repeated
+  * the [[graft.operators.Pins.slot]] named after the query: a repeated
   * call releases the previous call's pins, so a benchmark's timed
   * passes hold one set of pins per query instead of one per call. The
   * NN-Descent queries are checked in both forms: the audited run and
-  * the production plan (`buildOnlyQueries`); e173 in its audited form.
+  * the production plan (`buildOnlyQueries`); e173, e156 and e163 in
+  * their audited form.
   */
 class SlotPinSpec extends SparkSpecBase {
 
@@ -18,7 +19,8 @@ class SlotPinSpec extends SparkSpecBase {
 
   private val forms =
     (Seq("e117_conformal_select", "e76_curriculum_bins", "q44_interpolate",
-      "e173_knn_persist_fold") ++ nnDescent)
+      "e173_knn_persist_fold", "e156_incremental_cc",
+      "e163_lpa_communities") ++ nnDescent)
       .map(n => n -> graft.SparkEntry.queries(n)) ++
     nnDescent.map(n =>
       s"$n (production)" -> graft.SparkEntry.buildOnlyQueries(n))

@@ -104,7 +104,8 @@ object StreamServeProbe {
 
     // ---- IVF serve leg --------------------------------------------------
     if (!sys.env.get("PROBE_SKIP_IVF").contains("1")) {
-      val (idxPath, _) = ExtensionQueries.ivfResplitPersist(spark, dir)
+      val (idxPath, _) = graft.operators.Pins.scope(
+        ExtensionQueries.ivfResplitPersist(_, spark, dir))
       val idx = spark.read.parquet(idxPath)
       val cents = idx.filter(col("vec_id") % 67 === 3)
         .select(col("vec_id").as("cid"), col("emb").as("cemb"),
