@@ -168,10 +168,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
+      val s = Graft.builder(Some(cpus.toInt))
         .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       s.sparkContext.setLogLevel("ERROR")

@@ -408,7 +408,7 @@ object MockData {
     val r = hashUnit(seed, "pp", pairKey(strKey(col("order_id")), col("item_idx")))
     exploded
       .withColumn("r", r)
-      .join(broadcast(cumDf), col("r") >= col("lo") && col("r") < col("hi"))
+      .join(cumDf, col("r") >= col("lo") && col("r") < col("hi"))
       .select(
         uuidFromParts(seed, "order_product", col("order_id"), col("item_idx"))
           .as("id"),

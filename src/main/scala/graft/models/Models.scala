@@ -123,11 +123,11 @@ object Models {
   }
 
   /** fct_order_products.sql:13-33 (J1+J2): fact left-joins the two
-    * dims. Products is STATIC (96 rows forever, ST5) ⇒ broadcast hint is
-    * always right. Orders GROWS with the fact (~0.67x its rows), so no
-    * hint there — AQE/threshold picks broadcast while it fits and
-    * shuffled-hash beyond, instead of a forced broadcast that OOMs at
-    * 100x.
+    * dims. Products is STATIC (96 rows forever, ST5), so the planner
+    * broadcasts it from its size without a hint. Orders GROWS with the
+    * fact (~0.67x its rows) — AQE/threshold picks broadcast while it
+    * fits and shuffled-hash beyond, instead of a forced broadcast that
+    * OOMs at 100x.
     */
   val fctOrderProducts: Model = Model(
     "fct_order_products",
@@ -138,7 +138,7 @@ object Models {
     val p = up("stg_bike_shop__products")
     val o = up("stg_bike_shop__orders")
     op
-      .join(broadcast(p.select("product_id", "product_price", "product_cost")),
+      .join(p.select("product_id", "product_price", "product_cost"),
         Seq("product_id"), "left")
       .join(o.select("order_id", "customer_id", "order_date"),
         Seq("order_id"), "left")

@@ -8,33 +8,32 @@ import org.apache.spark.sql.functions.broadcast
   * iterative families.
   *
   * A checkpointed frame ([[Pins.checkpoint]], the one way a frame is
-  * checkpointed) reports NO size statistics, so Catalyst
-  * plans every join against it as a sort-merge join; AQE converts to a
-  * broadcast join at runtime, but only AFTER paying the map side of the
-  * checkpoint's exchange — and an iterative loop pays that map stage
-  * once per join per round (e147's profile: ~0.3-0.6 s per round just
-  * re-shuffling the vector table `r` whose true size is 1.2 MB).
+  * checkpointed) carries the size estimate of the plan it was
+  * checkpointed from, and estimates inflate through joins: a join's
+  * size is the product of its sides'. So a loop frame built by joins
+  * (NN-Descent's round graph, whose true size is rows × 48 B) reports
+  * far more than the session's broadcast threshold, and Catalyst plans
+  * every join against it as a sort-merge join; AQE converts to a
+  * broadcast join at runtime, but only AFTER paying the map side of
+  * the exchange — once per join per round.
   *
   * [[bcastIfSmall]] makes the decision the planner cannot: the caller
   * passes a MEASURED row count (these loops all count their frames
   * anyway) and a schema-derived row width, and the frame is hinted
   * broadcast only when the estimate fits the session's own
   * `spark.sql.autoBroadcastJoinThreshold`. At 100 TB the vector/label
-  * tables blow the threshold and the plan is byte-identical to today's
-  * (shuffle join, AQE free to re-plan); at small deltas the loop joins
-  * go straight to BHJ with no exchange on either side. Results are
-  * unaffected (inner/left equi-joins are strategy-independent).
+  * tables blow the threshold and the plan is a shuffle join (AQE free
+  * to re-plan); at small deltas the loop joins go straight to BHJ with
+  * no exchange on either side. Results are unaffected (inner/left
+  * equi-joins are strategy-independent).
   */
 object Adaptive extends org.apache.spark.internal.Logging {
 
   /** Session broadcast threshold in bytes; <= 0 disables broadcasting
-    * (mirrors Spark's own contract for autoBroadcastJoinThreshold).
+    * (Spark's own contract for autoBroadcastJoinThreshold).
     */
   private[graft] def broadcastThreshold(df: DataFrame): Long =
-    try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      df.sparkSession.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", "10485760"))
-    catch { case _: Throwable => 10L * 1024 * 1024 }
+    df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
 
   /** @param df          the candidate build side
     * @param rows        measured (or bounded-above) row count

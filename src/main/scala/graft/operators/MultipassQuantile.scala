@@ -84,11 +84,11 @@ object MultipassQuantile {
         (p, lo, hi, w)
       }
       val tgt = spark.createDataFrame(active).toDF("p_bp", "lo", "hi", "w")
-      // 3-row broadcast build side; the non-equi range condition makes
-      // this a BNLJ whose build side is bounded by construction
-      // (|psBp| rows — the PlanLintSpec allowance class).
+      // |psBp|-row local frame, sized exactly by the planner: the
+      // non-equi range condition makes this a BNLJ that broadcasts it
+      // (the PlanLintSpec allowance class).
       val hist = x
-        .join(broadcast(tgt), col("x") >= col("lo") && col("x") <= col("hi"))
+        .join(tgt, col("x") >= col("lo") && col("x") <= col("hi"))
         .groupBy(col("p_bp"), expr("(x - lo) div w").as("b"))
         .agg(count(lit(1)).as("cnt"))
         .collect() // <= |psBp| * buckets rows
@@ -202,10 +202,10 @@ object MultipassQuantile {
       val tgt = spark.createDataFrame(active)
         .toDF("gi", "p_bp", "lo", "hi", "w")
       // group-keyed broadcast hash join (equi on the dictionary id),
-      // the range condition a post-join filter; build side =
-      // |groups|·|psBp| rows.
+      // the range condition a post-join filter; build side = the
+      // |groups|·|psBp|-row local frame.
       val hist = x
-        .join(broadcast(tgt), Seq("gi"))
+        .join(tgt, Seq("gi"))
         .filter(col("x") >= col("lo") && col("x") <= col("hi"))
         .groupBy(col("gi"), col("p_bp"), expr("(x - lo) div w").as("b"))
         .agg(count(lit(1)).as("cnt"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -14,8 +14,9 @@ import org.apache.spark.storage.StorageLevel
   * the frames it hands back. On exit, normal or thrown, the scope
   * waits for the bodies it started through [[overlap]], then releases
   * everything else. Pins that ride a result across calls have one
-  * owner per key instead, a [[Pins.slot]]; every registered query
-  * runs in the slot named after it (`QueryDef.pinned`).
+  * owner per session and key instead, a [[Pins.slot]]; every
+  * registered query runs in the slot named after it
+  * (`QueryDef.pinned`).
   */
 final class Pins private () {
 
@@ -104,35 +105,46 @@ object Pins {
     try body(p) finally p.close()
   }
 
-  private val slots =
-    new java.util.concurrent.ConcurrentHashMap[String, Pins]()
+  // per session, so two sessions calling one query hold their own
+  // pins; weakly keyed, so a dropped session's slots go with it and
+  // Spark's ContextCleaner frees their checkpoints (a persisted pin
+  // holds its frame, and so its session, as Spark's cache does)
+  private val slots = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, Pins]]())
 
   // names the jobs and RDDs a thread creates while set
   private val CallSiteKey = "callSite.short"
   private val calls = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The one owner per `key` of the pins that ride a result across
-    * calls: releases what the previous same-key call pinned, then runs
-    * `build` with a fresh scope that stays open until the next same-key
-    * call instead of closing when `build` returns. When `build` throws,
-    * the scope closes at once. Same-key calls must be sequential, each
-    * consuming its result before the next starts.
+  /** The one owner per session and `key` of the pins that ride a
+    * result across calls: releases what the previous call with the same
+    * session and key pinned, then runs `build` with a fresh scope that
+    * stays open until that next call instead of closing when `build`
+    * returns. When `build` throws, the scope closes at once. Within one
+    * session, same-key calls must be sequential, each consuming its
+    * result before the next starts; other sessions' calls never free
+    * this session's pins.
     */
-  def slot[T](key: String)(build: Pins => T): T = {
-    val prev = slots.remove(key)
+  def slot[T](s: SparkSession, key: String)(build: Pins => T): T = {
+    val mine = slots.computeIfAbsent(s,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, Pins]())
+    val prev = mine.remove(key)
     if (prev != null) prev.close()
     val p = new Pins
     val built = try build(p) catch {
       case t: Throwable => p.close(); throw t
     }
     p.dropFrames()
-    slots.put(key, p)
+    mine.put(key, p)
     built
   }
 
-  /** Closes every slot, as the next same-key call of each would. */
+  /** Closes every slot of every session, as the next call of each would. */
   private[graft] def closeSlots(): Unit =
-    slots.keySet.forEach(k => Option(slots.remove(k)).foreach(_.close()))
+    slots.synchronized(new java.util.ArrayList(slots.values)).forEach(
+      mine => mine.keySet.forEach(k =>
+        Option(mine.remove(k)).foreach(_.close())))
 
   /** The undirected edge set (u, v) of `edges`: endpoints cast to long,
     * NULL endpoints and self-loops dropped, both orientations, distinct.

@@ -747,7 +747,7 @@ object AnalysisQueries {
     val out = p.checkpoint(audit("prefix", candp)
       .union(audit("lsh", lshc))
       .union(audit("winnow", winc))
-      .crossJoin(broadcast(tc)))
+      .crossJoin(tc))
     Seq(sets, candp, truth).foreach(p.release)
     out
   }
@@ -1422,7 +1422,7 @@ object AnalysisQueries {
         col("cnt").as("n_a"))), "brand_a")
       .join(broadcast(bc.select(col("p_brand").as("brand_b"),
         col("cnt").as("n_b"))), "brand_b")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(col("brand_a"), col("brand_b"), col("n_both"),
         col("n_a"), col("n_b"), col("n_orders"),
         expr("n_both * 10000 div n_orders").as("support_bp"),
@@ -1759,9 +1759,9 @@ object AnalysisQueries {
     val capPost = tok.join(kept.select("h"), "h")
     val withActual =
       census("dfcap100", kept)
-        .crossJoin(broadcast(pairCount(capPost)))
+        .crossJoin(pairCount(capPost))
         .unionByName(
-          census("prefix35", pdf).crossJoin(broadcast(pairCount(pre))))
+          census("prefix35", pdf).crossJoin(pairCount(pre)))
     census("raw", dfc)
       .withColumn("distinct_pairs", lit(null).cast("long"))
       .unionByName(withActual)
@@ -1965,6 +1965,8 @@ object AnalysisQueries {
     val n = e.groupBy("event_type", "wk").agg(count(lit(1)).as("n"))
     val spine = e.select("event_type").distinct()
     val wks = e.filter(col("wk") > 0).select("wk").distinct()
+    // the bs hints also stop the optimizer from moving these cross
+    // joins below the equi-joins that follow
     val bs = s.range(10).select(col("id").as("b"))
     val grid = spine.crossJoin(broadcast(wks)).crossJoin(broadcast(bs))
     val share = (coalesce(col("c"), lit(0L)) + lit(1.0)) /
@@ -2066,7 +2068,7 @@ object AnalysisQueries {
           col("v3.doc_a") === col("v1.doc_b") &&
             col("v3.doc_b") === col("v2.doc_b"))
         .agg(count(lit(1)).as("n_triangles"))
-      stats.crossJoin(broadcast(ne)).crossJoin(broadcast(tri))
+      stats.crossJoin(ne).crossJoin(tri)
         .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
           col("n_triangles"),
           when(col("n_wedges") > 0,
@@ -2144,26 +2146,26 @@ object AnalysisQueries {
         val jr = cal.agg(count(lit(1)).as("n_calib"))
           .select(col("n_calib"),
             expr("(n_calib + 10) div 10").as("j"))
-        // bp ∈ [0, 10000] → ≤ 157 buckets of 64 bp: the partitioned
-        // two-level prefix replaces the unpartitioned cumulative window
-        // (single-task sort + WindowExec warning). Both prefix branches
+        // bp ∈ [0, 10000] → ≤ 157 buckets of 64 bp: a partitioned
+        // two-level prefix, not an unpartitioned cumulative window (a
+        // single-task sort). Both prefix branches
         // read the frequency table, so it is checkpointed once
         val freq = p.checkpoint(cal.groupBy("bp").agg(count(lit(1)).as("c")))
         val cum = BoundedPrefix.cumsum(
           freq, "bp", expr("bp div 64"), Seq("c" -> "cum"))
-        val tau = cum.crossJoin(broadcast(jr))
+        val tau = cum.crossJoin(jr)
           .filter(col("cum") >= col("j"))
           .agg(min(col("bp")).as("tau_bp"))
         val test = q0.filter(!col("is_cal")).select("bp")
-        val tn = test.crossJoin(broadcast(tau))
+        val tn = test.crossJoin(tau)
           .agg(count(lit(1)).as("n_test"),
             sum(when(col("bp") >= col("tau_bp"), 1L).otherwise(0L))
               .as("n_kept"))
-        val ck = cal.crossJoin(broadcast(tau))
+        val ck = cal.crossJoin(tau)
           .agg(sum(when(col("bp") >= col("tau_bp"), 1L).otherwise(0L))
             .as("cal_kept"))
-        jr.crossJoin(broadcast(tau)).crossJoin(broadcast(tn))
-          .crossJoin(broadcast(ck))
+        jr.crossJoin(tau).crossJoin(tn)
+          .crossJoin(ck)
           .select(col("n_calib"), col("j").as("j_rank"), col("tau_bp"),
             col("n_test"), col("n_kept"),
             expr("n_kept * 10000 div n_test").as("keep_share_bp"),
@@ -2708,7 +2710,7 @@ object AnalysisQueries {
       // variance (Σw = 0 — fixed-width record feeds), Neyman is
       // undefined; fall back to proportional weights rather than
       // dividing by zero into an all-NULL allocation.
-      val base = iw.crossJoin(broadcast(t))
+      val base = iw.crossJoin(t)
         .withColumn("ew", when(col("tw") > 0, col("w"))
           .otherwise(col("n_docs")))
         .withColumn("ed", when(col("tw") > 0, col("tw"))
@@ -2735,7 +2737,7 @@ object AnalysisQueries {
         .agg((count(col("b.source")) + lit(1L)).as("rn"))
       val rk = base
         .join(broadcast(rnf), "source")
-        .crossJoin(broadcast(fls))
+        .crossJoin(fls)
         .withColumn("deficit", lit(1000L) - col("sfl"))
       rk.select(col("source"), col("n_docs"),
           col("w").as("sigma_n_scaled"),
@@ -2806,7 +2808,7 @@ object AnalysisQueries {
           .select(expr(firstDigit.replace("//", "div")).as("digit"))
           .groupBy("digit").agg(count(lit(1)).as("n_orders"))
         val t = c.agg(sum(col("n_orders")).as("tot"))
-        c.crossJoin(broadcast(t))
+        c.crossJoin(t)
           .select(col("digit"), col("n_orders"),
             expr("n_orders * 1000000 div tot").as("obs_ppm"),
             expr(expPpm).as("exp_ppm"),
@@ -4348,7 +4350,7 @@ object AnalysisQueries {
       val pf = ev.groupBy("pseudo_id").agg(count(lit(1)).as("n_events"))
         .groupBy("n_events").agg(count(lit(1)).as("n_users_pseudo"))
       rf.join(pf, Seq("n_events"), "full_outer")
-        .crossJoin(broadcast(coll))
+        .crossJoin(coll)
         .select(col("n_events").as("events_per_user"),
           coalesce(col("n_users_raw"), lit(0L)).as("n_users_raw"),
           coalesce(col("n_users_pseudo"), lit(0L)).as("n_users_pseudo"),
@@ -4415,7 +4417,7 @@ object AnalysisQueries {
       // dead once pt materializes.
       val vp = p.checkpoint(ExtensionQueries.minhashVerifiedPairs(s, dir)
         .filter(col("jaccard") >= 0.3))
-      val pt = p.checkpoint(vp.join(broadcast(thrDf),
+      val pt = p.checkpoint(vp.join(thrDf,
           col("jaccard") >= col("thr_bp").cast("double") / 10000)
         .select(col("thr_bp"), col("doc_a"), col("doc_b")))
       p.release(vp)
@@ -6159,7 +6161,7 @@ object AnalysisQueries {
             coalesce(sum(col("n")), lit(0L)).as("n_border_pts"))
           .select(lit(-1L).as("cluster"), col("n_cells"),
             lit(0L).as("n_core_pts"), col("n_border_pts")))
-      out.crossJoin(broadcast(tot))
+      out.crossJoin(tot)
         .select(col("cluster"), col("n_cells"), col("n_core_pts"),
           col("n_border_pts"),
           expr("(n_core_pts + n_border_pts) * 10000 div np").as("share_bp"))
@@ -6461,7 +6463,7 @@ object AnalysisQueries {
       .withColumn("cum_s", sum(col("c")).over(ws))
       .filter(col("nxt").isNotNull)
       .join(nsrc, "source")
-      .crossJoin(broadcast(ntot))
+      .crossJoin(ntot)
       .select(col("source"), col("ns"), col("nt"),
         (abs(col("cum_s") * col("nt") - col("cumg") * col("ns"))
           .cast("decimal(38,0)") * (col("nxt") - col("v"))).as("num"))
@@ -6711,7 +6713,7 @@ object AnalysisQueries {
     val gaps = p.checkpoint(spine
       .withColumn("cum_s", sum(col("c")).over(ws))
       .join(nsrc, "source")
-      .crossJoin(broadcast(ntot))
+      .crossJoin(ntot)
       .select(col("source"), col("v"), col("ns"), col("nt"),
         abs(col("cum_s").cast(dec) * col("nt")
           - col("cumg").cast(dec) * col("ns")).as("gap")))

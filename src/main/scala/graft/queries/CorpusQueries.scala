@@ -7,7 +7,7 @@ import graft.functions.{F, Portable}
 import graft.functions.sketches
 import graft.sources.Tables
 
-/** Corpus indexing & layout operators (round 7): inverted-index posting
+/** Corpus indexing & layout operators: inverted-index posting
   * lists, per-language robust outlier flagging, per-document
   * distinctive-term extraction (integer tf-idf ranking), and Z-order
   * tiling for multi-dimensional data layout.
@@ -286,7 +286,7 @@ object CorpusQueries {
       td.filter(col("term").isin(qTerms: _*))
         .join(broadcast(dfq), "term")
         .join(dl, "doc_id")
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .withColumn("idf6",
           expr("((2*n_docs - 2*df + 1) * 1000000) div (2*df + 1)"))
         .withColumn("dlnorm3", expr("(dl * 1000 * n_docs) div n_terms"))

@@ -548,14 +548,16 @@ object CurationQueries {
     val counts = pe.agg(
       sum(when(!col("delta"), 1L).otherwise(0L)).as("n_edges_base"),
       sum(when(col("delta"), 1L).otherwise(0L)).as("n_edges_delta"))
+    // every side is one row; unhinted, the planner builds the smaller
+    // estimate, the left, on this first join
     newf.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(broadcast(counts))
-      .crossJoin(broadcast(stage2Nodes))
-      .crossJoin(broadcast(
-        incr.agg(countDistinct(col("lbl")).as("n_comp_incr"))))
-      .crossJoin(broadcast(
-        full.agg(countDistinct(col("lbl")).as("n_comp_full"))))
-      .crossJoin(broadcast(mism))
+      .crossJoin(stage2Nodes)
+      .crossJoin(
+        incr.agg(countDistinct(col("lbl")).as("n_comp_incr")))
+      .crossJoin(
+        full.agg(countDistinct(col("lbl")).as("n_comp_full")))
+      .crossJoin(mism)
       .select(col("n_nodes"), col("n_edges_base"), col("n_edges_delta"),
         col("n_stage2_nodes"), col("n_comp_incr"), col("n_comp_full"),
         col("n_mismatch"))
@@ -784,15 +786,16 @@ object CurationQueries {
     val mism = l2.as("i").join(full.as("f"), Seq("doc_id"))
       .filter(col("i.lbl") =!= col("f.lbl"))
       .agg(count(lit(1)).as("n_mismatch"))
+    // one-row sides: as in e156, the hint keeps the build side right
     gens.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(broadcast(counts))
-      .crossJoin(broadcast(stageNodes(c1e, "n_stage1_nodes")))
-      .crossJoin(broadcast(stageNodes(c2e, "n_stage2_nodes")))
-      .crossJoin(broadcast(
-        l2.agg(countDistinct(col("lbl")).as("n_comp_incr"))))
-      .crossJoin(broadcast(
-        full.agg(countDistinct(col("lbl")).as("n_comp_full"))))
-      .crossJoin(broadcast(mism))
+      .crossJoin(stageNodes(c1e, "n_stage1_nodes"))
+      .crossJoin(stageNodes(c2e, "n_stage2_nodes"))
+      .crossJoin(
+        l2.agg(countDistinct(col("lbl")).as("n_comp_incr")))
+      .crossJoin(
+        full.agg(countDistinct(col("lbl")).as("n_comp_full")))
+      .crossJoin(mism)
       .select(col("n_nodes"), col("n_edges_g0"), col("n_edges_g1"),
         col("n_edges_g2"), col("n_stage1_nodes"), col("n_stage2_nodes"),
         col("n_comp_incr"), col("n_comp_full"), col("n_mismatch"))
@@ -1086,7 +1089,7 @@ object CurationQueries {
         .agg(when(count(lit(1)) >= k + 1, min(col("priority")))
           .otherwise(0L).as("tau"))
       p.orderBy(col("priority").desc, col("doc_id")).limit(k)
-        .crossJoin(broadcast(tau))
+        .crossJoin(tau)
         .select(col("doc_id"), col("n_chars").as("weight"), col("priority"),
           greatest(col("n_chars") * 1000, col("tau")).as("w_est_milli"))
         .orderBy(col("priority").desc, col("doc_id"))
@@ -1793,7 +1796,7 @@ object CurationQueries {
           .as("rows_below_k10"))
       .withColumn("rows_below_k5_bp",
         expr("rows_below_k5 * 10000 div n_rows"))
-      .crossJoin(broadcast(ldiv))
+      .crossJoin(ldiv)
       .select(col("n_rows"), col("n_classes"), col("k_anon"),
         col("singleton_classes"), col("rows_below_k5"),
         col("rows_below_k5_bp"), col("rows_below_k10"),
@@ -2053,7 +2056,7 @@ object CurationQueries {
         .agg(count(lit(1)).as("n_before"))
       val cap = counts.agg(
         expr("sum(n_before) div count(1)").as("cap"))
-      val hot = counts.crossJoin(broadcast(cap))
+      val hot = counts.crossJoin(cap)
         .where(col("n_before") > col("cap"))
         .select("list_id", "n_before")
       val mem = asg.join(hot, "list_id")

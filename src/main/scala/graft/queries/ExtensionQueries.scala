@@ -605,7 +605,7 @@ object ExtensionQueries {
     val tot = sz.agg(sum(col("m")).as("n"))
     sz.groupBy("m")
       .agg(count(lit(1)).as("n_clusters"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("m").as("cluster_size"), col("n_clusters"),
         (col("n_clusters") * col("m")).as("n_docs"),
         expr("n_clusters * m * 10000 div n").as("doc_share_bp"))
@@ -732,8 +732,8 @@ object ExtensionQueries {
       asg.groupBy("split")
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("cluster")).as("n_clusters"))
-        .crossJoin(broadcast(tot))
-        .crossJoin(broadcast(crossc))
+        .crossJoin(tot)
+        .crossJoin(crossc)
         .join(broadcast(within), Seq("split"), "left")
         .select(col("split"), col("n_docs"), col("n_clusters"),
           expr("n_docs * 10000 div n").as("share_bp"),
@@ -2610,7 +2610,7 @@ object ExtensionQueries {
     val counts = scored.groupBy("list_id")
       .agg(count(lit(1)).as("n_before"))
     val cap = counts.agg(expr("sum(n_before) div count(1)").as("cap"))
-    val hot = counts.crossJoin(broadcast(cap))
+    val hot = counts.crossJoin(cap)
       .where(col("n_before") > col("cap"))
       .select("list_id", "n_before")
     // eager checkpoint: mem (the hot cells' members — the bounded
@@ -2873,7 +2873,7 @@ object ExtensionQueries {
           round(dot(col("qe"), col("b.emb")) / (col("qn") * col("b.nrm")),
             4).as("cosine"))
       val levels = Seq(1, 2, 4).toDF("nprobe")
-      val cl = cand.join(broadcast(levels), col("crank") <= col("nprobe"))
+      val cl = cand.join(levels, col("crank") <= col("nprobe"))
         .select("nprobe", "qid", "nid", "cosine")
       val wL = Window.partitionBy(col("nprobe"), col("qid"))
         .orderBy(col("cosine").desc, col("nid"))
@@ -2891,7 +2891,7 @@ object ExtensionQueries {
         .groupBy("nprobe").agg(count(lit(1)).as("n_hits"))
       val nq = base.filter(col("vec_id") % 97 === 5)
         .agg(count(lit(1)).as("n_queries"))
-      levels.crossJoin(broadcast(nq))
+      levels.crossJoin(nq)
         .join(cc, Seq("nprobe"), "left")
         .join(hits, Seq("nprobe"), "left")
         .select(col("nprobe").cast("long").as("nprobe"),
@@ -3957,7 +3957,7 @@ object ExtensionQueries {
       comm.join(comp, "node")
         .groupBy(col("community"))
         .agg(count(lit(1)).as("n_members"), min(col("comp")).as("cc_comp"))
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .select(col("community"), col("n_members"), col("cc_comp"),
           col("n_components"))
         .orderBy("community")

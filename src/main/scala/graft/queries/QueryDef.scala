@@ -59,9 +59,10 @@ object QueryDef {
     QueryDef(name, run, Some(oracle))
 
   /** A query whose returned plan reads pinned frames. `run` pins every
-    * one of them in `p`, the scope of the [[Pins.slot]] named after the
-    * query: a call frees what the previous call of the query pinned,
-    * and a call that throws frees its own pins at once.
+    * one of them in `p`, the scope of the calling session's
+    * [[Pins.slot]] named after the query: a call frees what the same
+    * session's previous call of the query pinned, and a call that
+    * throws frees its own pins at once.
     */
   def pinned(name: String, oracle: String)(
       run: (Pins, SparkSession, String) => DataFrame): QueryDef =
@@ -69,7 +70,7 @@ object QueryDef {
 
   private def inSlot(key: String,
       run: (Pins, SparkSession, String) => DataFrame) =
-    (s: SparkSession, dir: String) => Pins.slot(key)(run(_, s, dir))
+    (s: SparkSession, dir: String) => Pins.slot(s, key)(run(_, s, dir))
 }
 
 /** Session-scoped scratch paths for queries that materialize an

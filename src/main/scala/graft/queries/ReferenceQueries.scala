@@ -692,9 +692,10 @@ object ReferenceQueries {
 
   /** TPC-H-Q5-shaped local-supplier volume: six-table join through the
     * full snowflake. nation and region are FIXED-cardinality dims (25 /
-    * 5 rows at every SF) — the only joins in the suite where an explicit
-    * `broadcast()` hint is correct at any scale; customer, orders,
-    * lineitem and supplier all scale and stay unhinted. The
+    * 5 rows at every SF), so the planner sizes them small at any scale
+    * and broadcasts them without a hint; customer, orders, lineitem and
+    * supplier all scale and are never hinted. A `broadcast()` hint
+    * stays only where it changes the plan the planner would pick. The
     * c_nationkey = s_nationkey predicate ("local" supplier) rides the
     * lineitem-supplier join as a residual.
     */
@@ -725,9 +726,9 @@ object ReferenceQueries {
         .join(Tables.supplier(s, dir),
           col("l_suppkey") === col("s_suppkey") &&
             col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(Tables.nation(s, dir)),
+        .join(Tables.nation(s, dir),
           col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
+        .join(Tables.region(s, dir).filter(col("r_name") === "ASIA"),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("n_name"))
         .agg(revenueT(col("l_extendedprice"), col("l_discount")).as("t"))
@@ -994,11 +995,11 @@ object ReferenceQueries {
       .join(Tables.customer(s, dir)
           .select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, dir)
-          .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))),
+      .join(Tables.nation(s, dir)
+          .select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
         col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)
-          .select(col("r_regionkey"), col("r_name"))),
+      .join(Tables.region(s, dir)
+          .select(col("r_regionkey"), col("r_name")),
         col("n_regionkey") === col("r_regionkey"))
       .rollup(col("r_name"), col("n_name"))
       // The rollup's () cell is an UNGROUPED global revenue sum — the
@@ -1734,11 +1735,11 @@ object ReferenceQueries {
         .join(Tables.customer(s, dir)
             .select(col("c_custkey"), col("c_nationkey")),
           col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, dir)
-            .select(col("n_nationkey"), col("n_regionkey"))),
+        .join(Tables.nation(s, dir)
+            .select(col("n_nationkey"), col("n_regionkey")),
           col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir)
-            .select(col("r_regionkey"), col("r_name"))),
+        .join(Tables.region(s, dir)
+            .select(col("r_regionkey"), col("r_name")),
           col("n_regionkey") === col("r_regionkey"))
         .cube(col("r_name"), col("o_orderstatus"))
         .agg(
@@ -1958,7 +1959,7 @@ object ReferenceQueries {
     // `div` (IntegralDivide) returns BIGINT on both engines' surfaces.
     val np = rev.agg(count(lit(1)).as("n_parts"),
       sum(col("rev_t").cast("decimal(38,0)")).as("total_t"))
-    rev.crossJoin(broadcast(np))
+    rev.crossJoin(np)
       .filter(col("rev_t").cast("decimal(38,0)") * col("n_parts") * 10
         >= lit(14) * col("total_t"))
       .select(col("l_partkey"), col("rev_t"),
@@ -2013,9 +2014,9 @@ object ReferenceQueries {
       .agg(revenueT(col("l_extendedprice"), col("l_discount")).as("rev_t"))
     val mx = rev.agg(max(col("rev_t")).as("m"))
     // The argmax survivors (≤ #ties rows by construction) are the side
-    // to broadcast — supplier is fact-proportional, so hinting IT is
-    // the q2/q50 scale mistake.
-    val winners = rev.crossJoin(broadcast(mx))
+    // to broadcast — supplier is fact-proportional, so it is never
+    // hinted.
+    val winners = rev.crossJoin(mx)
       .filter(col("rev_t") === col("m"))
     Tables.supplier(s, dir)
       .select(col("s_suppkey"), col("s_name"))
@@ -2068,6 +2069,8 @@ object ReferenceQueries {
       val n2 = Tables.nation(s, dir)
         .select(col("n_nationkey").as("ck"),
           col("n_name").as("cust_nation"))
+      // nation is broadcast either way; unhinted, the null filters the
+      // optimizer infers on n1/n2 come out in another order
       Tables.lineitem(s, dir)
         .join(Tables.supplier(s, dir)
             .select(col("s_suppkey"), col("s_nationkey")),
@@ -2135,6 +2138,7 @@ object ReferenceQueries {
        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin) {
     (s, dir) =>
       val (l, o) = bucketedFacts(s, dir)
+      // n1/n2 hinted as in q50
       val n1 = Tables.nation(s, dir)
         .select(col("n_nationkey").as("sk"),
           col("n_name").as("supp_nation"))
@@ -2578,7 +2582,7 @@ object ReferenceQueries {
       .filter(col("o_orderdate")
         >= lit("2000-01-01 00:00:00").cast("timestamp"))
       .select(col("o_custkey").as("c_custkey"))
-    c.crossJoin(broadcast(g))
+    c.crossJoin(g)
       .filter(col("bal_c") * col("n_pos") > col("tot_c"))
       .join(recent, Seq("c_custkey"), "left_anti")
       .groupBy("c_mktsegment")
@@ -2723,10 +2727,12 @@ object ReferenceQueries {
        |      AND r2.r_name = 'EUROPE')
        |ORDER BY p_partkey, s_suppkey""".stripMargin) { (s, dir) =>
     val euroNations = Tables.nation(s, dir)
-      .join(broadcast(Tables.region(s, dir)
-          .filter(col("r_name") === "EUROPE")),
+      .join(Tables.region(s, dir)
+          .filter(col("r_name") === "EUROPE"),
         col("r_regionkey") === col("n_regionkey"))
       .select(col("n_nationkey"), col("n_name"))
+    // a join's estimate is the product of its sides', so unhinted the
+    // planner would broadcast supplier instead of the 5 nations
     val euroSupp = Tables.supplier(s, dir)
       .join(broadcast(euroNations),
         col("n_nationkey") === col("s_nationkey"))
@@ -2864,8 +2870,8 @@ object ReferenceQueries {
        |GROUP BY o_year
        |ORDER BY o_year""".stripMargin) { (s, dir) =>
     val asiaNations = Tables.nation(s, dir)
-      .join(broadcast(Tables.region(s, dir)
-          .filter(col("r_name") === "ASIA")),
+      .join(Tables.region(s, dir)
+          .filter(col("r_name") === "ASIA"),
         col("r_regionkey") === col("n_regionkey"))
       .select(col("n_nationkey").as("cnk"))
     val n2 = Tables.nation(s, dir)
@@ -2887,11 +2893,11 @@ object ReferenceQueries {
       .join(Tables.customer(s, dir)
           .select(col("c_custkey"), col("c_nationkey")),
         col("c_custkey") === col("o_custkey"))
-      .join(broadcast(asiaNations), col("cnk") === col("c_nationkey"))
+      .join(asiaNations, col("cnk") === col("c_nationkey"))
       .join(Tables.supplier(s, dir)
           .select(col("s_suppkey"), col("s_nationkey")),
         col("s_suppkey") === col("l_suppkey"))
-      .join(broadcast(n2), col("snk") === col("s_nationkey"))
+      .join(n2, col("snk") === col("s_nationkey"))
       .groupBy(col("o_year"))
       .agg(
         sum(when(col("nation") === "NATION_12", col("volume_t"))

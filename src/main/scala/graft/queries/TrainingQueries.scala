@@ -300,7 +300,7 @@ object TrainingQueries {
       ex.join(freq, "h")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_tokens"), sum(col("c")).as("s_freq"))
-        .crossJoin(broadcast(tot))
+        .crossJoin(tot)
         .select(col("doc_id"), col("n_tokens"), col("s_freq"),
           round(log((col("n_total") * col("n_tokens")).cast("double") /
             col("s_freq")), 4).as("rarity"))
@@ -380,7 +380,7 @@ object TrainingQueries {
       .agg(countDistinct(col("h")).as("v"))
     ex.join(c12, Seq("w1", "w2"))
       .join(c1, Seq("w1"))
-      .crossJoin(broadcast(vocab))
+      .crossJoin(vocab)
       .groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(expr("((c1 + v) * 1000) div (c12 + 1)")).as("surprisal"))
@@ -935,7 +935,7 @@ object TrainingQueries {
           sort_array(collect_list(sqrt(col("n_tokens").cast("double")))),
           lit(0.0), (acc, x) => acc + x).as("z"))
       val w = sqrt(col("n_tokens").cast("double")) / col("z")
-      src.crossJoin(broadcast(tot))
+      src.crossJoin(tot)
         .select(col("source"), col("n_docs"), col("n_tokens"),
           round(w, 6).as("weight"),
           floor(w * budget).cast("long").as("quota_tokens"))
@@ -991,7 +991,7 @@ object TrainingQueries {
       val quota = floor(
         sqrt(col("n_tokens").cast("double")) / col("z") * budget)
         .cast("long")
-      src.crossJoin(broadcast(tot))
+      src.crossJoin(tot)
         .select(col("source"), col("n_tokens"), quota.as("quota_tokens"))
         .select(col("source"), col("n_tokens"), col("quota_tokens"),
           expr("quota_tokens * 10000 div n_tokens").as("epochs_bp"),
@@ -2150,12 +2150,12 @@ object TrainingQueries {
     val cutCols = (1 to 9).map(p =>
       min(when(col("cum") >= expr(s"($p*n + 9) div 10"),
         col("score_bp"))).as(s"c$p"))
-    val cuts = cum.crossJoin(broadcast(tot))
+    val cuts = cum.crossJoin(tot)
       .agg(cutCols.head, cutCols.tail: _*)
     val bin = (1 to 9).map(p =>
       when(col("score_bp") > col(s"c$p"), 1).otherwise(0))
       .reduce(_ + _)
-    cum.crossJoin(broadcast(cuts))
+    cum.crossJoin(cuts)
       .groupBy(bin.as("bin"))
       .agg(sum(col("cnt")).as("n_docs"), sum(col("wsum")).as("n_words"),
         min(col("score_bp")).as("lo_score_bp"),

@@ -250,13 +250,13 @@ object Layout {
     * `_graft_fingerprint` discipline). [[writeZOrdered]],
     * [[writeBloomFiltered]] and [[writePartitioned]] record WHAT
     * physical property their write paid for, so maintenance passes can
-    * re-establish it instead of silently flattening it: through r12,
-    * [[compact]] rewrote every table as a plain round-robin
-    * repartition — run on a bloom-filtered table it dropped the
-    * per-row-group filters (no `parquet.bloom.filter.*` options on the
-    * rewrite), run on a z-ordered table it scattered the Morton
-    * clustering — both SILENT degradations (results stay correct, scans
-    * go full) in exactly the pass that runs constantly at 100 TB.
+    * re-establish it instead of silently flattening it. A [[compact]]
+    * that rewrote every table as a plain round-robin repartition would
+    * drop a bloom-filtered table's per-row-group filters (no
+    * `parquet.bloom.filter.*` options on the rewrite) and scatter a
+    * z-ordered table's Morton clustering — both SILENT degradations
+    * (results stay correct, scans go full) in exactly the pass that
+    * runs constantly at 100 TB.
     */
   private val LayoutMarkerName = "_graft_layout"
 
@@ -548,7 +548,7 @@ object Layout {
         if (depth == 1) {
           // heal orphaned aside dirs BEFORE collecting this level's
           // leaves, so a restored partition is compacted this pass.
-          // unescLeaf is the identity on names the PRE-r15 code wrote
+          // unescLeaf is the identity on names older code wrote
           // (raw `_old_lang=lang1`, no percent escapes), so legacy
           // crash state from the old naming heals through the same
           // branches — critical because a POPULATED raw name breaks

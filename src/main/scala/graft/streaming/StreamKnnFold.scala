@@ -44,9 +44,9 @@ import graft.operators.Pins
   * stored edge list) are persisted once at wiring time — a
   * stream-static join re-evaluates its static side per micro-batch; the
   * scoring projection is a lazy view over the ONE persisted base frame.
-  * They ride the [[Pins.slot]] `StreamKnnFold`, so a wiring releases
-  * the previous wiring's statics and repeated wirings in one session
-  * pin one set. Nothing is persisted until the whole plan resolves, so
+  * They ride the session's [[Pins.slot]] `StreamKnnFold`, so a wiring
+  * releases the previous wiring's statics and repeated wirings in one
+  * session pin one set. Nothing is persisted until the whole plan resolves, so
   * a wiring that fails leaves the cache as it found it.
   *
   * Scale: per arriving vector the work is `tables` O(1) bucket probes,
@@ -148,7 +148,7 @@ object StreamKnnFold {
           .cast("long").as("cos_t"))
     // the plan has resolved; the base goes first so that each band
     // table's cache is built over the cached base
-    Pins.slot("StreamKnnFold")(p =>
+    Pins.slot(base.sparkSession, "StreamKnnFold")(p =>
       (base +: bandTables :+ edges).foreach(p.persist))
     scored
   }

@@ -48,10 +48,7 @@ class FewPartitionSpec extends SparkSpecBase {
     val s32 = at(32)
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
-      // a query's next call frees the pins its previous result reads,
-      // so the first result is copied into a local relation first
-      val first = fn(s4, dir)
-      val a = s4.createDataFrame(first.collectAsList(), first.schema)
+      val a = fn(s4, dir)
       val b = fn(s32, dir)
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
         s"$n differs between 4 and 32 shuffle partitions")

@@ -194,7 +194,7 @@ class PinsFaultSpec extends SparkSpecBase with Eventually {
   // site runs through NnDescent.anchorTruth on the overlap thread
   faultTest("AnalysisQueries.nndAudit's anchor-truth leg", minJobs = 1,
       pick = _.stageInfos.exists(_.details.contains("anchorTruth"))) { () =>
-    val r = Pins.slot("pins-fault-nnd")(AnalysisQueries.nndAudit(_, emb,
+    val r = Pins.slot(spark, "pins-fault-nnd")(AnalysisQueries.nndAudit(_, emb,
         NnDescent.Float, K = 4, anchors = 8) { v =>
       val (knns, pools) = NnDescent.plainBuild(v, 4, 2)
       (knns, Seq("n_scored" -> (0L +: pools)))

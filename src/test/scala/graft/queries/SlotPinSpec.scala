@@ -40,4 +40,19 @@ class SlotPinSpec extends SparkSpecBase {
       assert(second === first)
       assert(afterSecond <= afterFirst, s"$name pinned a frame per call")
     }
+
+  test("a second session's call keeps the first session's pins") {
+    val run = graft.SparkEntry.queries("e163_lpa_communities")
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    val df1 = run(s1, dir)
+    val pinned = df1.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }
+    assert(pinned.nonEmpty)
+    val df2 = run(s2, dir)
+    val live = spark.sparkContext.getPersistentRDDs.keySet
+    assert(pinned.forall(live), "the second session freed the first's pins")
+    assert(df1.collect().toSeq.sortBy(_.toString) ===
+      df2.collect().toSeq.sortBy(_.toString))
+  }
 }
